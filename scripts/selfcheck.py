@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Local mirror of the driver's correctness gate: for each query result
-dumped by graft.Verify, run the matching oracleSql in DuckDB over the
-same sf parquet tables and compare row count, schema width, and exact
-values (rows sorted, columns sorted by name — like the driver).
+"""Local mirror of the driver's correctness gate: for each query named in
+graft.Verify's queries.json, run the matching oracleSql in DuckDB over
+the same sf parquet tables and compare row count, schema width, and
+exact values (rows sorted, columns sorted by name — like the driver).
+A named query with no dump is a FAIL, and any FAIL exits 1.
 
 Usage: python3 scripts/selfcheck.py <sfDir> <verifyOutDir> [skipCsv]
 
@@ -260,11 +261,15 @@ def main(sf_dir, out_dir, skip=()):
     results = {}
     def record(name, ok, rows=None, detail=""):
         results[name] = {"pass": ok, "rows": rows, "detail": detail}
-    for name in sorted(os.listdir(out_dir)):
+    # fail closed: every name Verify was asked to dump is checked, and
+    # one with no dump is a FAIL — walking the output directory instead
+    # would silently pass a query that died in the dump phase
+    for name in sorted(json.load(open(os.path.join(out_dir, "queries.json")))):
         d = os.path.join(out_dir, name)
-        # "_"-prefixed dirs are runner scratch (the staged-oracle
-        # pipeline outputs), not query dumps
-        if not os.path.isdir(d) or name.startswith("_"):
+        if not glob.glob(f"{d}/*.parquet"):
+            n_fail += 1
+            print(f"  FAIL {name}: no dump in {d}")
+            record(name, False, detail="no dump")
             continue
         partitioned = None
         if name in skip:

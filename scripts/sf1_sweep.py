@@ -115,10 +115,10 @@ def main():
             queries[name] = {"pass": bool(res["pass"]), "rows": res.get("rows"),
                              "mode": mode, "detail": res.get("detail", "")}
     # completeness: every registered query must have produced a compare
-    # result — graft.Verify swallows per-query exceptions (no dump
-    # dir), and selfcheck only visits dirs that exist, so a query that
-    # died in the dump phase would otherwise VANISH from the artifact
-    # while n_pass == n_queries still holds. Keyed on the FULL registry
+    # result — a selfcheck results file cut short must not let a query
+    # VANISH from the artifact while n_pass == n_queries still holds
+    # (a failed dump already stops the sweep at step 2, and selfcheck
+    # FAILs a listed name without a dump). Keyed on the FULL registry
     # (queries.json covers rows-only queries too; oracle_sql.json is
     # the fallback for dumps that predate it).
     qreg = os.path.join(OUT, "queries.json")

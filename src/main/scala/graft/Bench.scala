@@ -231,23 +231,26 @@ object Bench {
     // machine-relative sweep pins: bench_pins_sf001.json holds each
     // query's cal-normalized engine units from the round that wrote
     // it; a query breaching units × slack (or crashing) is a sweep
-    // regression. Missing file → sweep runs unpinned (first round).
+    // regression. A missing, unreadable or pin-less file ABORTS the
+    // sweep — running unpinned would silently switch the alarm off.
+    // "slack" and "_"-prefixed keys are file metadata, never pins.
     // Parsed BEFORE the sweep loop so breach candidates can earn
     // rescue attempts.
-    val (sweepPins, sweepSlack): (Map[String, Double], Double) = {
-      val p = Paths.get("bench_pins_sf001.json")
-      if (!Files.isRegularFile(p)) (Map.empty, 0.0)
-      else try {
-        val txt = Files.readString(p)
+    val (sweepPins, sweepSlack): (Map[String, Double], Double) =
+      if (!sweepOn) (Map.empty, 0.0) else {
+        val p = Paths.get("bench_pins_sf001.json")
+        val txt = try Files.readString(p) catch { case e: java.io.IOException =>
+          throw new IllegalStateException(s"[bench] pins file $p unreadable: $e", e) }
         val slack = "\"slack\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(txt)
           .map(_.group(1).toDouble).getOrElse(2.5)
         val entry = "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
         val units = entry.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._1 != "slack").toMap
+          .filter { case (k, _) => k != "slack" && !k.startsWith("_") }.toMap
+        if (units.isEmpty)
+          throw new IllegalStateException(s"[bench] pins file $p holds no pins")
         (units, slack)
-      } catch { case _: Exception => (Map.empty, 0.0) }
-    }
+      }
     // 1.0-cal-unit noise floor: sub-200ms spans jitter 2-3×
     // multiplicatively (JIT/GC/disk cache), so a tiny query only
     // breaches once it grows past a span that can't be jitter — still
@@ -419,7 +422,19 @@ object Bench {
     val isoByName = isolated.map(r => r._1 -> r._2).toMap
     val fixedQs = fixedReport.flatMap(k => isoByName.get(k).flatten.map(v =>
       "\"" + k + "\":" + fmt2(v))).mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fixedQs,"n_queries":${results.size},"isolated":$iso,"engine":$engJson,"sweep":$sweepSummary,"sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir","queries_file":"BENCH_full_latest.json"}""")
+    val finalLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fixedQs,"n_queries":${results.size},"isolated":$iso,"engine":$engJson,"sweep":$sweepSummary,"sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir","queries_file":"BENCH_full_latest.json"}"""
     swSpark.stop()
+    // the parsed line must fit the ~2000-char stdout tail whole: an
+    // overflow (fixedReport or the core maps growing) fails loudly
+    // instead of reintroducing silent truncation
+    if (finalLine.length >= FinalLineMaxChars) {
+      System.err.println(s"[bench] FAILED: final line is ${finalLine.length} chars " +
+        s"(limit $FinalLineMaxChars) — shrink the fixed report")
+      sys.exit(1)
+    }
+    println(finalLine)
   }
+
+  /** Exclusive length bound of Bench's driver-parsed final stdout line. */
+  private val FinalLineMaxChars = 1800
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, Html, Links, MapReduceOps, Multimodal, Relational, Scoring, Similarity, TextAnalysis}
+import graft.operators.{AnnSpec, Curation, Dedup, Html, Links, MapReduceOps, Multimodal, Relational, Scoring, Similarity, TextAnalysis}
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.sources.Tables
 
@@ -1194,18 +1194,9 @@ object SparkEntry {
     // driver SFs, 8 at sf1's 20k vectors, bounded buckets forever
     "dedup_embedding" -> ((s, d) =>
       Similarity.embeddingPairsAuto(Tables.embeddings(s, d), "vec_id", "embedding", 0.3)),
-    "knn_bruteforce" -> ((s, d) =>
-      Similarity.knnBruteForce(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
     "knn_lsh" -> ((s, d) =>
       Similarity.knnLsh(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    "knn_ivf" -> ((s, d) =>
-      Similarity.knnIvf(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // fixed-k TRAINED coarse quantizer (C74): centroid count no longer
-    // scales with the corpus — the 100 TB IVF configuration
-    "knn_ivf_trained" -> ((s, d) =>
-      Similarity.knnIvfTrained(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // PQ family (Jégou et al. 2011): corpus → m-byte codes (C55), ADC
-    // top-k over the code table with a broadcast distance table (C56)
+    // PQ encoding (Jégou et al. 2011): corpus → m-byte codes (C55);
     // portable projection: codes array → CSV string, decimal → double
     // (driver compare is pandas-based — list/DECIMAL output columns
     // hash-mismatch or fail to sort; library API keeps the array form)
@@ -1214,24 +1205,6 @@ object SparkEntry {
         .select(col("vec_id"),
           concat_ws(",", col("codes").cast("array<string>")).as("codes"),
           col("recon_err").cast("double").as("recon_err"))),
-    "knn_pq" -> ((s, d) =>
-      Similarity.knnPq(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // PQ with Lloyd-trained subspace codebooks — the production
-    // configuration; sampled codebooks are only the init (C103)
-    "knn_pq_trained" -> ((s, d) =>
-      Similarity.knnPqTrained(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // IVF cells restrict the candidates, PQ codes score them (C59)
-    "knn_ivfpq" -> ((s, d) =>
-      Similarity.knnIvfPq(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // full IVFADC: residual re-encoding per cell (C72)
-    "knn_ivfpq_residual" -> ((s, d) =>
-      Similarity.knnIvfPqResidual(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // FAISS-default IVFADC: residuals against TRAINED cells (C75)
-    "knn_ivfpq_residual_trained" -> ((s, d) =>
-      Similarity.knnIvfPqResidualTrained(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
-    // exact re-rank of the ADC shortlist — the FAISS refine stage (C77)
-    "knn_ivfpq_refine" -> ((s, d) =>
-      Similarity.knnIvfPqResidualRefined(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5)),
     // embedding-space eval decontamination (C61) — benchmark fixture is
     // fixed-cardinality at any SF, the broadcast contract
     "decontaminate_semantic" -> ((s, d) => {
@@ -2124,32 +2097,6 @@ object SparkEntry {
          |  SELECT query_id, neighbor_id, score,
          |    cast(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS integer) AS rnk
          |  FROM scored) WHERE rnk <= 5""".stripMargin,
-    "knn_ivf" ->
-      s"""WITH centroids AS (SELECT vec_id AS centroid_id, embedding AS cv
-         |  FROM embeddings WHERE vec_id % 50 = 0),
-         |ranked AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${cosSql("e.embedding", "c.cv")} DESC, c.centroid_id) AS crnk
-         |  FROM embeddings e CROSS JOIN centroids c),
-         |assigned AS (SELECT vec_id, embedding, centroid_id FROM ranked WHERE crnk = 1),
-         |probed AS (SELECT vec_id, embedding, centroid_id FROM ranked WHERE crnk <= 4),
-         |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    round(${cosSql("q.embedding", "c.embedding")}, 6) AS score
-         |  FROM probed q JOIN assigned c ON q.centroid_id = c.centroid_id
-         |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)
-         |SELECT query_id, neighbor_id, score, rnk FROM (
-         |  SELECT query_id, neighbor_id, score,
-         |    cast(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS integer) AS rnk
-         |  FROM scored) WHERE rnk <= 5""".stripMargin,
-    "knn_bruteforce" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-         |scored AS (SELECT query_id, neighbor_id, round(${cosSql("qv", "nv")}, 6) AS score
-         |  FROM q CROSS JOIN c WHERE query_id <> neighbor_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id, score,
-         |    cast(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS integer) AS rnk
-         |  FROM scored) WHERE rnk <= 5""".stripMargin,
     "lang_id" ->
       s"""SELECT doc_id, score_en, score_es, score_fr, score_de,
          |  CASE
@@ -2869,12 +2816,6 @@ object SparkEntry {
     "embedding_project" -> Similarity.randomProjectOracleSql(),
     "embedding_quantize" -> Similarity.quantizeInt8OracleSql(),
     "embedding_pq" -> Similarity.pqEncodeOracleSql(),
-    "knn_pq" -> Similarity.knnPqOracleSql(),
-    "knn_pq_trained" -> Similarity.knnPqTrainedOracleSql(),
-    "knn_ivfpq" -> Similarity.knnIvfPqOracleSql(),
-    "knn_ivfpq_residual" -> Similarity.knnIvfPqResidualOracleSql(),
-    "knn_ivf_trained" -> Similarity.knnIvfOracleSql(
-      centroidsHead = Some(Similarity.trainedCentroidsCte(16, 2, 64))),
     "html_extract" -> Html.htmlExtractOracleSql(),
     "robots_gate" -> Html.robotsGateOracleSql,
     "robots_txt_filter" -> Html.robotsTxtFilterOracleSql,
@@ -3020,9 +2961,6 @@ object SparkEntry {
     // politeness_schedule_quota's oracle is not listed here: oracleSql
     // DERIVES it (the unbounded schedule's SQL + "WHERE slot < 7") so
     // the twins can never drift
-    "knn_ivfpq_residual_trained" -> Similarity.knnIvfPqResidualOracleSql(
-      centroidsHead = Some(Similarity.trainedCentroidsCte(16, 2, 64))),
-    "knn_ivfpq_refine" -> Similarity.knnIvfPqRefineOracleSql(),
     "decontaminate_semantic" ->
       s"""WITH ev AS (SELECT vec_id AS eval_id, embedding AS e
          |  FROM embeddings WHERE vec_id % 50 = 7),
@@ -3411,9 +3349,41 @@ object SparkEntry {
         |FROM olds FULL OUTER JOIN news ON olds.fingerprint = news.fingerprint""".stripMargin,
   )
 
+  /** The nearest-neighbour ladder as [[AnnSpec]] values: each name is
+    * `Similarity.knn` over the first 10 ids (top 5) with its spec, and
+    * its oracle is `Similarity.knnOracleSql` of the same spec.
+    */
+  private val AnnQueries: Seq[(String, AnnSpec)] = {
+    import AnnSpec.{Code, Coarse}
+    Seq(
+      // exact cosine — the correctness baseline (C6)
+      "knn_bruteforce" -> AnnSpec(),
+      // IVF over the `id % 50` subsample cells (C7b)
+      "knn_ivf" -> AnnSpec(Coarse.Mod()),
+      // fixed-k TRAINED coarse quantizer (C74): centroid count no longer
+      // scales with the corpus — the 100 TB IVF configuration
+      "knn_ivf_trained" -> AnnSpec(Coarse.Trained()),
+      // exhaustive ADC over PQ codes with broadcast distance tables (C56)
+      "knn_pq" -> AnnSpec(code = Code.Pq()),
+      // PQ with Lloyd-trained subspace codebooks — the production
+      // configuration; sampled codebooks are only the init (C103)
+      "knn_pq_trained" -> AnnSpec(code = Code.Pq(trainIters = 2)),
+      // IVF cells restrict the candidates, PQ codes score them (C59)
+      "knn_ivfpq" -> AnnSpec(Coarse.Mod(), Code.Pq()),
+      // full IVFADC: residual re-encoding per cell (C72)
+      "knn_ivfpq_residual" -> AnnSpec(Coarse.Mod(), Code.ResidualPq()),
+      // FAISS-default IVFADC: residuals against TRAINED cells (C75)
+      "knn_ivfpq_residual_trained" -> AnnSpec(Coarse.Trained(), Code.ResidualPq()),
+      // exact re-rank of the ADC shortlist — the FAISS refine stage (C77)
+      "knn_ivfpq_refine" -> AnnSpec(Coarse.Mod(), Code.ResidualPq(), refine = Some(20)))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    aQueries ++ bQueries ++ cQueries
+    aQueries ++ bQueries ++ cQueries ++ AnnQueries.map { case (name, spec) =>
+      name -> ((s: SparkSession, d: String) =>
+        Similarity.knn(Tables.embeddings(s, d), "vec_id", "embedding", 10, 5, spec))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables — every query, including the sketch one
@@ -3441,7 +3411,8 @@ object SparkEntry {
   }
 
   def oracleSql: Map[String, String] = {
-    val m = aOracles ++ bOracles ++ cOracles ++ cOracles2
+    val m = aOracles ++ bOracles ++ cOracles ++ cOracles2 ++
+      AnnQueries.map { case (name, spec) => name -> Similarity.knnOracleSql(spec, 10, 5) }
     // the quota'd schedule's oracle IS the unbounded schedule's at
     // slot < maxPerHost — derived by textual append; the helper
     // ENFORCES the bare-`FROM w` tail the append depends on, so an

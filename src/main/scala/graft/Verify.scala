@@ -8,9 +8,8 @@ object Verify {
     // optional third arg: comma-separated query names — dump only
     // those (incremental re-verification after adding queries; the
     // driver's two-arg form still dumps everything). Unknown names
-    // are a hard error: a typo would otherwise dump nothing, and the
-    // downstream selfcheck skips missing dirs — a silently vacuous
-    // PASS for a query that was never re-verified.
+    // are a hard error: a typo would otherwise dump nothing — a
+    // silently vacuous PASS for a query that was never re-verified.
     val only = args.lift(2).map(_.split(',').toSet)
     only.foreach { names =>
       val unknown = names.diff(SparkEntry.queries.keySet)
@@ -35,6 +34,7 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val futures = SparkEntry.queries.toSeq.filter(q => included(q._1))
       .map { case (name, fn) =>
       scala.concurrent.Future {
@@ -42,6 +42,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed.add(name)
         }
       }
     }
@@ -64,12 +65,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // the FULL registry (oracle-checked AND rows-only queries): the
-    // sweep's vanished-query completeness check keys on this — a
-    // rows-only query dying in the dump phase must not disappear from
-    // the artifact just because it has no oracle_sql entry
+    // every name this run was asked to dump (oracle-checked AND
+    // rows-only): selfcheck fails each one that has no dump, so a query
+    // dying in the dump phase can never vanish into a silent pass
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      SparkEntry.queries.keys.toSeq.filter(included).sorted.map(q).mkString("[", ",", "]"))
     // partitioned-oracle pipelines (the three sf>=1 single-SQL-infeasible
     // twins): stage list per query, executed by scripts/selfcheck.py
     val stages = SparkEntry.oracleStages.map { case (k, ss) =>
@@ -81,5 +81,11 @@ object Verify {
     // per-query monitoring snapshot (rows / scanned bytes / time)
     Files.writeString(Paths.get(s"$outDir/metrics.json"), listener.json)
     spark.stop()
+    // fail closed: a query that could not be dumped is a failed run
+    if (!failed.isEmpty) {
+      val names = failed.toArray(Array.empty[String]).sorted
+      System.err.println(s"[verify] FAILED ${names.length} queries: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

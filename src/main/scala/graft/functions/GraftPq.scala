@@ -117,9 +117,9 @@ object GraftPq {
   }
 
   /** The per-query ADC distance table: array of (m, code, d2) rows,
-    * d2 = round(‖q_m − c_j‖², 6) as decimal(18,6) — the broadcastable
-    * dimension [[graft.operators.Similarity.knnPq]] joins the code
-    * table against.
+    * d2 = round(‖q_m − c_j‖², 6) as decimal(18,6) — the broadcast
+    * side every ADC search ([[graft.operators.Similarity.knn]]) scores
+    * the code table against.
     */
   def distTable(vec: ArrayData, cb: Array[Array[Array[Double]]],
                 cc: Array[Array[Double]]): ArrayData = {

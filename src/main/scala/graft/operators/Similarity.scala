@@ -188,7 +188,15 @@ object Similarity {
     * never change cardinality, so unwrapping them is safe; any other
     * node (Filter, Join, …) falls back to a real count(). The value is
     * bit-identical to count(*) — the oracle twins' plane-count CASE
-    * ladders key on count(*) of the same parquet files.
+    * ladders key on count(*) of the same parquet files. Two more rules
+    * fall back to count():
+    *  - `ignoreCorruptFiles` / `ignoreMissingFiles` on (session conf or
+    *    read option): count() then SKIPS an unreadable or vanished file
+    *    while a footer read would throw or count it, so only count()
+    *    keeps count()'s semantics;
+    *  - a scan listing more than [[FooterCountMaxFiles]] files: footers
+    *    open serially on the driver, so driver work stays bounded and a
+    *    wide listing pays one distributed count() instead.
     */
   private[graft] def exactRowCount(df: DataFrame): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -198,14 +206,21 @@ object Similarity {
       case Project(_, child) => unwrap(child)
       case other             => other
     }
+    val conf = df.sparkSession.conf
+    def ignoring(fs: HadoopFsRelation): Boolean =
+      Seq("ignoreCorruptFiles", "ignoreMissingFiles").exists { k =>
+        fs.options.get(k).orElse(conf.getOption(s"spark.sql.files.$k"))
+          .exists(_.trim.equalsIgnoreCase("true"))
+      }
     unwrap(df.queryExecution.optimizedPlan) match {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-          val conf = df.sparkSession.sessionState.newHadoopConf()
+            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] &&
+            !ignoring(fs) && fs.location.inputFiles.length <= FooterCountMaxFiles =>
+          val hconf = df.sparkSession.sessionState.newHadoopConf()
           fs.location.inputFiles.map { f =>
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+              .fromPath(new org.apache.hadoop.fs.Path(f), hconf)
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
             try r.getRecordCount finally r.close()
           }.sum
@@ -214,6 +229,9 @@ object Similarity {
       case _ => df.count()
     }
   }
+
+  /** File-count ceiling of [[exactRowCount]]'s driver-side footer sum. */
+  private val FooterCountMaxFiles = 64
 
   /** [[embeddingPairs]] with the hyperplane count sized to the corpus
     * AND an oracle-compatible fixed plane layout — the form the
@@ -276,25 +294,6 @@ object Similarity {
       GraftPlanFactory.expression(vecCol), centroids.map(_.clone()), nProbes))
   }
 
-  /** Pre-round-15 composed form of [[kmeansProbeCellsExpr]] — spec
-    * parity reference (see [[kmeansAssignExprComposed]]).
-    */
-  private[graft] def kmeansProbeCellsExprComposed(vecCol: Column,
-                                                  centroids: Array[Array[Double]],
-                                                  nProbes: Int): Column = {
-    require(centroids.nonEmpty)
-    val structs = centroids.zipWithIndex.map { case (c, j) =>
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      struct(
-        (lit(cc) - lit(2.0) * call_function("graft_dot", vecCol, typedLit(c.toSeq)))
-          .as("s"),
-        lit(j).as("c"))
-    }
-    transform(
-      slice(array_sort(array(structs.toIndexedSeq: _*)), 1, nProbes),
-      x => x.getField("c"))
-  }
-
   /** Cosine-near pairs via IVF cells — the CLUSTERED-corpus scale path
     * for pair mining. Sign-hyperplane LSH splits UNIFORM directional
     * mass; a clustered corpus concentrates into a few sign patterns,
@@ -348,237 +347,6 @@ object Similarity {
       .filter(col("cosine") >= minCosine)
   }
 
-  /** Brute-force all-pairs verifier (quadratic, small tables / specs
-    * only — C5 ships [[embeddingPairs]]).
-    */
-  def embeddingPairsBrute(emb: DataFrame, idCol: String, vecCol: String,
-                          minCosine: Double): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val par = emb.sparkSession.sparkContext.defaultParallelism
-    val a = emb.select(col(idCol).as("vec_a"), col(vecCol).as("va")).repartition(par)
-    val b = emb.select(col(idCol).as("vec_b"), col(vecCol).as("vb"))
-    a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(VectorFunctions.cosineNative(col("va"), col("vb")), 6).as("cosine"))
-      .filter(col("cosine") >= minCosine)
-  }
-
-  /** C6: brute-force cosine top-k neighbors for a query subset.
-    * The per-query top-k is a rank window partitioned by query id —
-    * scales with queries × corpus via the broadcast of the query side.
-    */
-  def knnBruteForce(emb: DataFrame, idCol: String, vecCol: String,
-                    nQueries: Int, k: Int): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val par = emb.sparkSession.sparkContext.defaultParallelism
-    val queries = emb.filter(col(idCol) < nQueries)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-      .repartition(par)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    broadcast(queries).join(corpus, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Collect a (centroid_id, cv) codebook table into kernel arrays —
-    * the codebook-scalar convention (the table was already broadcast-
-    * sized; collecting it is the same data the old broadcast shipped).
-    * Ids are read generically (any integral type) so a non-long idCol
-    * fails with a named error instead of a ClassCastException.
-    */
-  private[graft] def centroidArrays(centroids: DataFrame): (Array[Long], Array[Array[Float]]) = {
-    val rows = centroids.select(col("centroid_id"), col("cv")).collect()
-    val ids = rows.map(r => r.get(0) match {
-      case l: java.lang.Long => l.longValue
-      case i: java.lang.Integer => i.longValue
-      case s: java.lang.Short => s.longValue
-      case b: java.lang.Byte => b.longValue
-      case other => throw new IllegalArgumentException(
-        "centroidArrays: centroid_id must be integral, got " +
-          (if (other == null) "NULL" else other.getClass.getName))
-    })
-    val vecs = rows.map(_.getSeq[Float](1).toArray)
-    (ids, vecs)
-  }
-
-  /** Corpus-side (probes=1) IVF cell assignment — ONE map pass per row
-    * through the [[graft.plans.ArgMaxCosineBroadcast]] kernel, ZERO
-    * shuffle, zero row multiplication. This replaces the
-    * broadcast-cross-join + per-id `row_number` window the IVF family
-    * used through round 8 (a corpus × centroids hash exchange carrying
-    * vector payloads — THE scale-killer on the 100 TB build path); the
-    * window form survives on the query side (rows = nQueries) and as
-    * the kernel's spec-pinned parity reference. Returns `df` with a
-    * `centroid_id` (bigint) column appended; an empty codebook yields
-    * the empty frame the old join form produced.
-    */
-  private[graft] def ivfAssignCells(df: DataFrame, vecCol: String,
-                                    centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    val ca = centroidArrays(centroids)
-    if (ca._1.isEmpty)
-      return df.withColumn("centroid_id", lit(null).cast("bigint")).limit(0)
-    val bc = df.sparkSession.sparkContext.broadcast(ca)
-    df.withColumn("centroid_id",
-      GraftPlanFactory.column(graft.plans.ArgMaxCosineBroadcast(bc,
-        GraftPlanFactory.expression(col(vecCol)))).getField("id"))
-  }
-
-  /** Per-cell occupancy of a persisted IVF index — recomputed into
-    * `path/cellstats` on build AND append. Counting groups the codes
-    * scan's PARTITION column only, so parquet column pruning makes the
-    * refresh a footer-cheap pass even on a 100 TB index. A hot cell
-    * (duplicate-flood vector, degenerate codebook) concentrates probe
-    * cost toward linear scan; per the house rule the guard WARNS and
-    * records — it never drops rows silently (an index must answer for
-    * every vector it was given).
-    */
-  private[graft] def refreshIvfCellStats(spark: org.apache.spark.sql.SparkSession,
-                                         path: String,
-                                         warnFrac: Double = 0.2): Unit = {
-    spark.read.parquet(s"$path/codes")
-      .groupBy(col("centroid_id")).agg(count(lit(1)).as("n"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
-    val rows = spark.read.parquet(s"$path/cellstats").collect()
-    if (rows.length > 1) {
-      val total = rows.map(_.getLong(1)).sum
-      val hot = rows.maxBy(_.getLong(1))
-      val frac = if (total == 0) 0.0 else hot.getLong(1).toDouble / total
-      if (frac > warnFrac)
-        System.err.println(s"[graft] WARNING: IVF index $path hot cell " +
-          s"${hot.get(0)} holds ${hot.getLong(1)} of $total rows " +
-          f"($frac%.2f > $warnFrac%.2f bound) — probes on it pay near-linear " +
-          "cost; train a larger coarse codebook or dedup the flood upstream")
-    }
-  }
-
-  /** The index build/append scan: zero-shuffle cell assignment plus
-    * residual computation — (__id, __v, centroid_id, cv, rv), one row
-    * per input row, NO exchange anywhere (kernel argmax + broadcast
-    * hash join for the winning centroid vector). This is the shape
-    * that must stay shuffle-free at 100 TB: [[buildIvfPqIndex]] is
-    * the one IVF op that scans the whole corpus. PlanAuditSpec pins
-    * the no-Exchange property.
-    */
-  private[graft] def ivfResidualRows(emb: DataFrame, idCol: String, vecCol: String,
-                                     centroids: DataFrame): DataFrame =
-    ivfAssignCells(
-        emb.select(col(idCol).as("__id"), col(vecCol).as("__v")), "__v", centroids)
-      .join(broadcast(centroids), Seq("centroid_id"))
-      .withColumn("rv", zip_with(col("__v"), col("cv"), (x, y) => x - y))
-
-  /** Fixed-k trained coarse quantizer as a centroid TABLE
-    * (centroid_id bigint = 0..k-1, cv array<float>): the
-    * [[kmeansCentroids]] codebook (deterministic Lloyd on the
-    * fixed-point grid), float-cast so the IVF family's downstream
-    * arithmetic (kernel cosines, REAL−REAL residuals) is identical to
-    * the `id % mod` path. `trainMod` strides the training sample —
-    * codebook quality needs only a sample; the full corpus pays its
-    * k×dims cosines once, at assignment.
-    */
-  def trainedCentroidTable(emb: DataFrame, idCol: String, vecCol: String,
-                           k: Int, iters: Int = 2, trainMod: Int = 1): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val train = if (trainMod == 1) emb else emb.filter(col(idCol) % trainMod === 0)
-    kmeansCentroids(train, idCol, vecCol, k, iters).zipWithIndex
-      .map { case (c, j) => (j.toLong, c.map(_.toFloat).toSeq) }
-      .toSeq.toDF("centroid_id", "cv")
-      .select(col("centroid_id"), col("cv").cast("array<float>"))
-  }
-
-  /** The trained-codebook centroids CTE head for the IVF oracles —
-    * [[kmeansCtePrefix]] (bit-exact Lloyd replica) capped with the
-    * same double→REAL cast [[trainedCentroidTable]] applies.
-    */
-  def trainedCentroidsCte(kCoarse: Int, iters: Int = 2, dims: Int = 64): String =
-    kmeansCtePrefix(kCoarse, iters, dims) +
-      s""",
-         |centroids AS (SELECT cid AS centroid_id,
-         |  list_transform(cv, x -> x::REAL) AS cv FROM c$iters)""".stripMargin
-
-  /** IVF-style ANN: a deterministic subsample acts as the centroid
-    * codebook (`vec_id % centroidMod == 0`), every vector is assigned
-    * to its nearest centroid (one broadcast pass), and queries probe
-    * their `nProbes` nearest centroids' inverted lists. At 100 TB the
-    * codebook stays broadcast-sized while the assignment and probe
-    * stages are embarrassingly parallel scans; nProbes is the standard
-    * IVF compute↔recall lever (each extra probe joins one more
-    * inverted list per query). The default of 4 probes is the
-    * documented high-recall setting — SimilaritySpec pins the
-    * recall-vs-nProbes curve as monotone with a ≥ 0.5 floor at the
-    * default (a 1-probe scan is the cheap setting, not the default).
-    */
-  def knnIvf(emb: DataFrame, idCol: String, vecCol: String,
-             nQueries: Int, k: Int, centroidMod: Int = 50,
-             nProbes: Int = 4): DataFrame =
-    knnIvfWith(emb, idCol, vecCol, nQueries, k, nProbes,
-      emb.filter(col(idCol) % centroidMod === 0)
-        .select(col(idCol).as("centroid_id"), col(vecCol).as("cv")))
-
-  /** [[knnIvf]] with a FIXED-k sample-trained coarse quantizer — the
-    * 100 TB configuration. The `id % centroidMod` subsample codebook
-    * grows WITH the corpus (n/mod centroids → assignment cosines
-    * O(n²/mod), a corpus-proportional broadcast); a k-means codebook
-    * trained on a `trainMod`-strided sample keeps the codebook at a
-    * chosen k forever, like [[embeddingPairsIvf]] already does for
-    * pair mining. Centroids are float-cast so every downstream shape
-    * (kernel cosines, REAL residuals) is identical to the mod path,
-    * and the DuckDB twin ([[knnIvfTrainedOracleSql]]) replays the
-    * same train→cast chain bit-exactly.
-    */
-  def knnIvfTrained(emb: DataFrame, idCol: String, vecCol: String,
-                    nQueries: Int, k: Int, kCoarse: Int = 16,
-                    iters: Int = 2, nProbes: Int = 4,
-                    trainMod: Int = 1): DataFrame =
-    knnIvfWith(emb, idCol, vecCol, nQueries, k, nProbes,
-      trainedCentroidTable(emb, idCol, vecCol, kCoarse, iters, trainMod))
-
-  /** Core of the IVF scan family: caller supplies the coarse codebook
-    * TABLE (centroid_id, cv array<float>) — the mod subsample, a
-    * trained fixed-k codebook, or a stored index's centroids.
-    */
-  def knnIvfWith(emb: DataFrame, idCol: String, vecCol: String,
-                 nQueries: Int, k: Int, nProbes: Int,
-                 centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(emb.sparkSession)
-    def assign(df: DataFrame, id: String, vec: String, probes: Int): DataFrame = {
-      val wa = Window.partitionBy(col(id))
-        .orderBy(col("csim").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(id), col(vec),
-          col("centroid_id"),
-          VectorFunctions.cosineNative(col(vec), col("cv")).as("csim"))
-        .withColumn("crnk", row_number().over(wa))
-        .filter(col("crnk") <= probes)
-        .select(col(id), col(vec), col("centroid_id"))
-    }
-    // corpus vectors live in exactly one inverted list; queries fan out
-    // to nProbes lists, so (query, neighbor) pairs are already unique.
-    // Corpus side is probes=1 = an argmax → the zero-shuffle kernel;
-    // the window `assign` stays on the query side only (nQueries rows).
-    val corpus = ivfAssignCells(
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
-      "nv", centroids)
-    val queries = assign(
-      emb.filter(col(idCol) < nQueries).select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "query_id", "qv", probes = nProbes)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    broadcast(queries).join(corpus, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
   /** Deterministic distributed k-means (Lloyd) over the embedding
     * column — the semantic-clustering primitive curation pipelines use
     * for cluster-balanced sampling and coarse semantic dedup. Returns
@@ -612,29 +380,6 @@ object Similarity {
     import org.apache.spark.sql.classic.GraftPlanFactory
     GraftPlanFactory.column(graft.plans.KmeansArgminExpr(
       GraftPlanFactory.expression(vecCol), centroids.map(_.clone())))
-  }
-
-  /** The pre-round-15 composed form of [[kmeansAssignExpr]] — a
-    * `least()` fold over (‖c‖²−2·v·c, j) structs with the centroid
-    * norms as codegen-source literals. Kept as the kernel's spec-pinned
-    * parity reference: every Lloyd iteration changes the centroid
-    * constants, so this form recompiles its k×dims janino class per
-    * iteration (and at k×dims past the 64 KB method limit falls back
-    * to interpreted evaluation), which is why the reference-object
-    * kernel replaced it on the query path.
-    */
-  private[graft] def kmeansAssignExprComposed(vecCol: Column,
-                                              centroids: Array[Array[Double]]): Column = {
-    require(centroids.nonEmpty)
-    val structs = centroids.zipWithIndex.map { case (c, j) =>
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as dotSql
-      struct(
-        (lit(cc) - lit(2.0) * call_function("graft_dot", vecCol, typedLit(c.toSeq)))
-          .as("s"),
-        lit(j).as("c"))
-    }
-    (if (structs.length == 1) structs.head
-     else least(structs.toIndexedSeq: _*)).getField("c")
   }
 
   /** The trained codebook alone (cluster id = array index) — collect it
@@ -852,8 +597,8 @@ object Similarity {
     // most k tasks no matter the cluster — and AQE's skew splitter
     // never fires because all k partitions are EQUALLY oversized (no
     // 5×-median outlier). Side A gets a deterministic salt
-    // pmod(id, S); side B is replicated S ways, so every pair still
-    // meets exactly once (at salt = ida mod S) — the result set is
+    // pmod(xxhash64(id), S); side B is replicated S ways, so every
+    // pair still meets exactly once (at side A's salt) — the result set is
     // bit-identical, only the partitioning changes. S derives from the
     // session's parallelism (a partitioning knob, like
     // shuffle.partitions — never affects values); the B-side payload
@@ -864,12 +609,14 @@ object Similarity {
     // capped at 64 so the replication stays bounded on wide clusters
     // (where the REAL lever is scaling k with the corpus, per the
     // scaladoc above — the k = 8 here is the oracle-pinned driver
-    // configuration).
+    // configuration). The salt hashes the id (xxhash64 takes any
+    // type): a string id would give pmod a NULL salt, and NULL keys
+    // never meet — every pair, and so every drop, would vanish.
     val salts = math.min(64, math.max(1,
       emb.sparkSession.sparkContext.defaultParallelism * 8 / math.max(k, 1)))
     val a = assigned.join(vecs, Seq("vec_id"))
       .select(col("cluster_id"),
-        pmod(col("vec_id"), lit(salts.toLong)).cast("int").as("__salt"),
+        pmod(xxhash64(col("vec_id")), lit(salts.toLong)).cast("int").as("__salt"),
         col("vec_id").as("__ida"), col("__v").as("__va"))
     val b = assigned.join(vecs, Seq("vec_id"))
       .select(col("cluster_id"),
@@ -1169,11 +916,11 @@ object Similarity {
     * of the beyond-reference pipeline surface). Codebook entries are
     * the subspace slices of the `ksub` hash-ordered seed vectors — the
     * same deterministic seed rule as [[kmeansCentroids]] init and the
-    * same sampled-codebook trade [[knnIvf]] makes (a production build
-    * would refine each with the per-subspace Lloyd this file already
-    * ships; the sampled form keeps the DuckDB twin tractable).
-    * Driver-side state is m×ksub×dsub doubles — broadcast-sized at any
-    * corpus size.
+    * same sampled-codebook trade the `id % mod` IVF cells make
+    * ([[pqCodebooksTrained]] refines them with per-subspace Lloyd).
+    * Generic over the seeded table: the residual IVFADC codebook is the
+    * same rule over the seed vectors' RESIDUALS. Driver-side state is
+    * m×ksub×dsub doubles — broadcast-sized at any corpus size.
     */
   private[graft] def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
                                  m: Int = 16, ksub: Int = 32): Array[Array[Array[Double]]] = {
@@ -1202,8 +949,8 @@ object Similarity {
     * entry). Scale shape: one partial-agg'd shuffle of at most
     * m×ksub×dsub rows per partition per iteration; driver state stays
     * m×ksub×dsub doubles — broadcast-sized at any corpus size.
-    * `trainMod` strides the training sample like
-    * [[trainedCentroidTable]] (codebook quality needs only a sample).
+    * `trainMod` strides the training sample like the trained coarse
+    * quantizer (codebook quality needs only a sample).
     */
   private[graft] def pqCodebooksTrained(emb: DataFrame, idCol: String, vecCol: String,
                                         m: Int = 16, ksub: Int = 32,
@@ -1346,567 +1093,319 @@ object Similarity {
         .reduce(_ + _).cast("decimal(28,6)").as("recon_err"))
   }
 
-  /** C56: PQ asymmetric-distance (ADC) top-k search — the query side
-    * stays exact while the corpus is scanned as codes. The per-query
-    * distance table (m × ksub entries of ‖q_m − c_j‖², 6dp decimal) is
-    * computed map-side over the query batch and BROADCAST like a
-    * dimension; each code row then evaluates its approximate distance
-    * in one kernel lookup-sum ([[adcTopK]] — no unnest, no join
-    * fan-out, no shuffle before the TopKPerKey cut). At 100 TB the
-    * code table is 32× smaller than the vectors it replaces and
-    * composes with the IVF cell assignment this file ships (probe
-    * cells first, ADC within) — documented composition, measured here
-    * in its exhaustive form against [[knnBruteForce]].
-    */
-  def knnPq(emb: DataFrame, idCol: String, vecCol: String,
-            nQueries: Int = 10, k: Int = 5,
-            m: Int = 16, ksub: Int = 32): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val cbs = pqCodebooks(emb, idCol, vecCol, m, ksub)
-    // Materialized: under the ADC scan + top-k cut the composite plan
-    // is what the optimizer re-copies per rule (the pre-kernel
-    // least()-tree form measured OOMing an 8 GB driver at m=16/
-    // ksub=32). The cut caps plan size AND is the production shape:
-    // encode once, search the code table many times ([[pqEncode]]'s
-    // output is what a store would persist).
-    val codes = pqEncodeWith(emb, idCol, vecCol, cbs).materialized
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-    adcTopK(codes, emb.filter(col(idCol) < nQueries), idCol, vecCol, cbs, k)
-  }
+  // ---- ANN family: one spec, one query path, one index ----------------------
 
-  /** [[knnPq]] with Lloyd-TRAINED subspace codebooks
-    * ([[pqCodebooksTrained]]) — the production PQ configuration: the
-    * sampled codebook is only the k-means init, and two refinement
-    * rounds cut reconstruction MSE and lift ADC recall (both
-    * spec-pinned against the sampled form). Search shape is identical
-    * to [[knnPq]] — encode once through the kernel, broadcast the
-    * per-query distance tables, TopKPerKey cut — only the codebook
-    * literals differ, so everything the plan audit proves about the
-    * sampled path holds here too.
+  /** Collect a (centroid_id, cv) codebook table into kernel arrays —
+    * the codebook-scalar convention (the table was already broadcast-
+    * sized; collecting it is the same data the old broadcast shipped).
+    * Ids are read generically (any integral type) so a non-long idCol
+    * fails with a named error instead of a ClassCastException.
     */
-  def knnPqTrained(emb: DataFrame, idCol: String, vecCol: String,
-                   nQueries: Int = 10, k: Int = 5,
-                   m: Int = 16, ksub: Int = 32, iters: Int = 2): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val cbs = pqCodebooksTrained(emb, idCol, vecCol, m, ksub, iters)
-    val codes = pqEncodeWith(emb, idCol, vecCol, cbs).materialized
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-    adcTopK(codes, emb.filter(col(idCol) < nQueries), idCol, vecCol, cbs, k)
-  }
-
-  /** The ADC scan: each code row × each (broadcast) query evaluates
-    * Σ_m dt[m][codes[m]] in ONE kernel call (graft.plans.AdcSumExpr) —
-    * no unnest, no join fan-out, NO shuffle before the per-query top-k
-    * cut through TopKPerKey (final exchange O(queries × k × partitions)
-    * rows). The previous shape — posexplode to (vector, m, code) rows,
-    * equi-join the exploded distance table, partial-agg a Q×N-row
-    * decimal sum shuffle — measured 35.7 s for 10 queries over 2M
-    * codes; this scan shape answers the identical result from the same
-    * inputs with the shuffle gone (values bit-equal: the kernel sums
-    * the same 6dp decimals as unscaled longs). The rank window runs
-    * AFTER the cut, over queries × k rows.
-    */
-  private def adcTopK(codes: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String,
-                      cbs: Array[Array[Array[Double]]], k: Int): DataFrame = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    import org.apache.spark.sql.expressions.Window
-    val qdt = queries.select(col(idCol).as("query_id"),
-      GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-        GraftPlanFactory.expression(col(vecCol)), cbs)).as("__dt"))
-    val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
-      GraftPlanFactory.expression(col("codes")),
-      GraftPlanFactory.expression(col("__dt"))))
-    val scored = codes.crossJoin(broadcast(qdt))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adist.as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    // cut and rank on the exact decimal; EMIT double — final query
-    // outputs must be pandas-portable types (the driver reads Spark
-    // parquet via pyarrow, which keeps DECIMAL as object(Decimal),
-    // while DuckDB's .df() converts DECIMAL to float64 — equal values,
-    // unequal hashes). decimal(28,6)→double is correctly rounded and
-    // identical on both engines.
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq("adist", "neighbor_id"), k, descending = false)
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("adist", col("adist").cast("double"))
-  }
-
-  /** The unnest-join-groupBy formulation of the ADC search — parity
-    * reference only (shuffles Q×N partial-sum rows; the scan shape
-    * above replaces it).
-    */
-  private[graft] def knnPqJoinForm(emb: DataFrame, idCol: String, vecCol: String,
-                                   nQueries: Int = 10, k: Int = 5,
-                                   m: Int = 16, ksub: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(emb.sparkSession)
-    val cbs = pqCodebooks(emb, idCol, vecCol, m, ksub)
-    val codes = pqEncodeWith(emb, idCol, vecCol, cbs).materialized
-      .select(col("vec_id").as("neighbor_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-    val dtab = pqDistTable(emb.filter(col(idCol) < nQueries), idCol, vecCol, cbs)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    codes.join(broadcast(dtab), Seq("m", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2")).cast("decimal(28,6)").as("adist"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .withColumn("adist", col("adist").cast("double"))
-  }
-
-  /** The per-query ADC distance table (query_id, m, code, d2) — one
-    * native kernel call per query row (graft.plans.PqDistTableExpr),
-    * exploded to the broadcastable dimension [[knnPq]] joins against.
-    * [[pqDistTableExprForm]] is the composed-expression parity
-    * reference (512 literal structs — also past the 64 KB codegen
-    * limit, harmless at query-batch cardinality but kept off the API).
-    */
-  private[graft] def pqDistTable(queries: DataFrame, idCol: String, vecCol: String,
-                                 cbs: Array[Array[Array[Double]]]): DataFrame = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    val dt = GraftPlanFactory.column(
-      graft.plans.PqDistTableExpr(GraftPlanFactory.expression(col(vecCol)), cbs))
-    queries.select(col(idCol).as("query_id"), dt.as("__dt"))
-      .select(col("query_id"), explode(col("__dt")).as("e"))
-      .select(col("query_id"), col("e.m").as("m"),
-        col("e.code").as("code"), col("e.d2").as("d2"))
-  }
-
-  /** Expression-composed reference form of [[pqDistTable]] — parity
-    * spec only.
-    */
-  private[graft] def pqDistTableExprForm(queries: DataFrame, idCol: String, vecCol: String,
-                                         cbs: Array[Array[Array[Double]]]): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
-    val m = cbs.length
-    val ksub = cbs.head.length
-    val dsub = cbs.head.head.length
-    val entries = for (mi <- 0 until m; j <- 0 until ksub) yield {
-      val c = cbs(mi)(j)
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as dotSql
-      val vm = col(s"__q$mi")
-      struct(lit(mi).as("m"), lit(j).as("code"),
-        round((lit(cc) - lit(2.0) * call_function("graft_dot", vm, typedLit(c.toSeq)))
-          + call_function("graft_dot", vm, vm.cast("array<double>")), 6)
-          .cast("decimal(18,6)").as("d2"))
-    }
-    queries
-      .select(col(idCol).as("query_id") +: (0 until m).map { mi =>
-        slice(col(vecCol), mi * dsub + 1, dsub).as(s"__q$mi")
-      }: _*)
-      .select(col("query_id"), explode(array(entries: _*)).as("e"))
-      .select(col("query_id"), col("e.m").as("m"),
-        col("e.code").as("code"), col("e.d2").as("d2"))
-  }
-
-  /** C59: the IVF × PQ composition (the FAISS IVFADC shape, minus
-    * residual re-encoding): the inverted-file cell assignment restricts
-    * candidates to each query's `nProbes` cells, and scoring inside
-    * them is the kernel ADC sum over the code table — the composition
-    * [[knnIvf]] and [[knnPq]] each document toward, materialized as one
-    * operator. Corpus side is ONE scan emitting (id, cell, codes) —
-    * cell via the same broadcast-centroid rank [[knnIvf]] uses, codes
-    * via PqEncodeExpr — materialized once; queries fan out to their
-    * probe cells and ride the broadcast WITH their kernel distance
-    * tables, so after the corpus scan no float vector is ever read
-    * again (a residual-codebook refinement would cut ADC error further
-    * and slots in at the codebook layer unchanged). Shuffle budget:
-    * the TopKPerKey cut's O(queries × k × partitions) — candidate
-    * scoring itself is shuffle-free.
-    */
-  def knnIvfPq(emb: DataFrame, idCol: String, vecCol: String,
-               nQueries: Int = 10, k: Int = 5, centroidMod: Int = 50,
-               nProbes: Int = 4, m: Int = 16, ksub: Int = 32): DataFrame =
-    knnIvfPqWith(emb, idCol, vecCol, nQueries, k, nProbes, m, ksub,
-      emb.filter(col(idCol) % centroidMod === 0)
-        .select(col(idCol).as("centroid_id"), col(vecCol).as("cv")))
-
-  /** [[knnIvfPq]] with a fixed-k trained coarse quantizer (see
-    * [[knnIvfTrained]] for why the mod subsample doesn't scale).
-    */
-  def knnIvfPqTrained(emb: DataFrame, idCol: String, vecCol: String,
-                      nQueries: Int = 10, k: Int = 5, kCoarse: Int = 16,
-                      iters: Int = 2, nProbes: Int = 4, m: Int = 16,
-                      ksub: Int = 32, trainMod: Int = 1): DataFrame =
-    knnIvfPqWith(emb, idCol, vecCol, nQueries, k, nProbes, m, ksub,
-      trainedCentroidTable(emb, idCol, vecCol, kCoarse, iters, trainMod))
-
-  def knnIvfPqWith(emb: DataFrame, idCol: String, vecCol: String,
-                   nQueries: Int, k: Int, nProbes: Int, m: Int, ksub: Int,
-                   centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(emb.sparkSession)
-    val cbs = pqCodebooks(emb, idCol, vecCol, m, ksub)
-    def assign(df: DataFrame, id: String, vec: String, probes: Int): DataFrame = {
-      val wa = Window.partitionBy(col(id))
-        .orderBy(col("csim").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(id), col(vec), col("centroid_id"),
-          VectorFunctions.cosineNative(col(vec), col("cv")).as("csim"))
-        .withColumn("crnk", row_number().over(wa))
-        .filter(col("crnk") <= probes)
-        .select(col(id), col(vec), col("centroid_id"))
-    }
-    val encCol = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
-      GraftPlanFactory.expression(col("nv")), cbs))
-    // corpus probes=1 → zero-shuffle argmax kernel (see [[ivfAssignCells]])
-    val corpus = ivfAssignCells(
-        emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
-        "nv", centroids)
-      .select(col("neighbor_id"), col("centroid_id"),
-        encCol.getField("codes").as("codes"))
-      .materialized
-    val qdtCol = GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-      GraftPlanFactory.expression(col("qv")), cbs))
-    val queries = assign(
-        emb.filter(col(idCol) < nQueries)
-          .select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        "query_id", "qv", probes = nProbes)
-      .select(col("query_id"), col("centroid_id"), qdtCol.as("__dt"))
-    val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
-      GraftPlanFactory.expression(col("codes")),
-      GraftPlanFactory.expression(col("__dt"))))
-    // corpus rows live in exactly one list, so (query, neighbor) pairs
-    // are already unique — no dedup stage
-    val scored = corpus.join(broadcast(queries), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adist.as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    // rank on the exact decimal, emit double (see [[adcTopK]] note)
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq("adist", "neighbor_id"), k, descending = false)
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("adist", col("adist").cast("double"))
-  }
-
-  /** C72: IVFADC with RESIDUAL re-encoding — the full Jégou et al.
-    * 2011 §IV composition [[knnIvfPq]] deliberately skipped: each
-    * corpus vector is PQ-encoded as its residual v − c(v) against its
-    * cell centroid, and each query builds a distance table from its
-    * OWN residual per probed cell. Residuals are centered near zero
-    * (much smaller norms than raw vectors), so the same m×ksub
-    * codebook budget quantizes them with less error — the reason
-    * FAISS's IVFADC default re-encodes residuals.
-    *
-    * Scale shape: identical to [[knnIvfPq]] — ONE corpus scan emits
-    * (id, cell, residual codes), scoring is the broadcast
-    * distance-table join + kernel ADC sum, shuffle-free before the
-    * TopKPerKey cut. The residual subtraction is a float zip_with in
-    * the same scan (DuckDB REAL−REAL is the identical correctly-
-    * rounded float — bit-portable). The residual codebooks follow the
-    * house sampled-seed rule (hash-ordered ksub seeds, their
-    * RESIDUALS sliced per subspace). The query side carries nProbes
-    * distance tables per query (one per probed cell) — still
-    * broadcast-sized: queries × nProbes × m × ksub decimals.
-    */
-  def knnIvfPqResidual(emb: DataFrame, idCol: String, vecCol: String,
-                       nQueries: Int = 10, k: Int = 5, centroidMod: Int = 50,
-                       nProbes: Int = 4, m: Int = 16, ksub: Int = 32): DataFrame =
-    knnIvfPqResidualWith(emb, idCol, vecCol, nQueries, k, nProbes, m, ksub,
-      emb.filter(col(idCol) % centroidMod === 0)
-        .select(col(idCol).as("centroid_id"), col(vecCol).as("cv")))
-
-  /** [[knnIvfPqResidual]] with a fixed-k trained coarse quantizer (see
-    * [[knnIvfTrained]]) — residuals against trained centroids are the
-    * FAISS-default IVFADC configuration: trained cells center their
-    * members better than an arbitrary subsample, so residual norms
-    * (and thus quantization error) drop further.
-    */
-  def knnIvfPqResidualTrained(emb: DataFrame, idCol: String, vecCol: String,
-                              nQueries: Int = 10, k: Int = 5, kCoarse: Int = 16,
-                              iters: Int = 2, nProbes: Int = 4, m: Int = 16,
-                              ksub: Int = 32, trainMod: Int = 1): DataFrame =
-    knnIvfPqResidualWith(emb, idCol, vecCol, nQueries, k, nProbes, m, ksub,
-      trainedCentroidTable(emb, idCol, vecCol, kCoarse, iters, trainMod))
-
-  def knnIvfPqResidualWith(emb: DataFrame, idCol: String, vecCol: String,
-                           nQueries: Int, k: Int, nProbes: Int, m: Int,
-                           ksub: Int, centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(emb.sparkSession)
-    if (emb.isEmpty)
-      return emb.select(col(idCol).as("query_id"), col(idCol).as("neighbor_id"),
-        lit(0d).as("adist"), lit(0).as("rnk")).limit(0)
-    require(!centroids.isEmpty,
-      "knnIvfPqResidualWith: no centroids (empty codebook table) — IVF cells " +
-        "are undefined; supply a non-empty codebook (mod subsample or trained)")
-    // like [[knnIvfPq]]'s assign, but the winning centroid VECTOR
-    // rides along — residuals need it
-    def assign(df: DataFrame, id: String, vec: String, probes: Int): DataFrame = {
-      val wa = Window.partitionBy(col(id))
-        .orderBy(col("csim").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(id), col(vec), col("centroid_id"), col("cv"),
-          VectorFunctions.cosineNative(col(vec), col("cv")).as("csim"))
-        .withColumn("crnk", row_number().over(wa))
-        .filter(col("crnk") <= probes)
-        .select(col(id), col(vec), col("centroid_id"), col("cv"))
-    }
-    // corpus probes=1 → zero-shuffle argmax kernel; the winning
-    // centroid VECTOR comes from a broadcast hash join back onto the
-    // codebook table (1 row in → 1 row out, no exchange)
-    val corpusRes = ivfAssignCells(
-        emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
-        "nv", centroids)
-      .join(broadcast(centroids), Seq("centroid_id"))
-      .withColumn("rv", zip_with(col("nv"), col("cv"), (x, y) => x - y))
-    // residual codebooks: the SAME hash-ordered ksub seed rule as
-    // [[pqCodebooks]], over the seed vectors' residuals (ksub-row
-    // collect — codebook-scalar convention)
-    val seeds = corpusRes
-      .select(col("neighbor_id").as("sid"), col("rv"),
-        graft.functions.PortableHash.portableHash(col("neighbor_id")).as("__h"))
-      .orderBy(col("__h"), col("sid")).limit(ksub).collect()
-    val rvecs = seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
-    val dims = rvecs.headOption.map(_.length).getOrElse(0)
-    require(rvecs.nonEmpty && dims % m == 0, s"dims $dims not divisible by m=$m")
-    val dsub = dims / m
-    val cbs = Array.tabulate(m)(mi => rvecs.map(v => v.slice(mi * dsub, (mi + 1) * dsub)))
-    val encCol = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
-      GraftPlanFactory.expression(col("rv")), cbs))
-    val corpus = corpusRes
-      .select(col("neighbor_id"), col("centroid_id"),
-        encCol.getField("codes").as("codes"))
-      .materialized
-    val qdtCol = GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-      GraftPlanFactory.expression(col("qrv")), cbs))
-    val queries = assign(
-        emb.filter(col(idCol) < nQueries)
-          .select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        "query_id", "qv", probes = nProbes)
-      .withColumn("qrv", zip_with(col("qv"), col("cv"), (x, y) => x - y))
-      .select(col("query_id"), col("centroid_id"), qdtCol.as("__dt"))
-    val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
-      GraftPlanFactory.expression(col("codes")),
-      GraftPlanFactory.expression(col("__dt"))))
-    val scored = corpus.join(broadcast(queries), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adist.as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq("adist", "neighbor_id"), k, descending = false)
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("adist", col("adist").cast("double"))
-  }
-
-  /** Exact re-ranking on the ADC shortlist — the FAISS "refine" stage
-    * (Jégou et al. 2011 §V.: verify a short ADC candidate list with
-    * exact distances): take the residual IVFADC's top `rerankFrom`
-    * per query, re-score JUST those (query, neighbor) pairs with the
-    * exact fused cosine, and emit the exact top `k`. Buys back most
-    * of the quantization-induced recall loss for the price of
-    * nQueries × rerankFrom exact distances.
-    *
-    * Scale shape: the shortlist is broadcast-sized (nQueries ×
-    * rerankFrom id pairs), so both vector fetches are broadcast hash
-    * joins against the corpus scan — no shuffle beyond what the ADC
-    * stage already does; the final rank window partitions by query
-    * over ≤ rerankFrom rows each.
-    */
-  def knnIvfPqResidualRefined(emb: DataFrame, idCol: String, vecCol: String,
-                              nQueries: Int = 10, k: Int = 5,
-                              rerankFrom: Int = 20, centroidMod: Int = 50,
-                              nProbes: Int = 4, m: Int = 16,
-                              ksub: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val short = knnIvfPqResidual(emb, idCol, vecCol, nQueries, rerankFrom,
-        centroidMod, nProbes, m, ksub)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = emb.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val nv = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    broadcast(short).join(qv, Seq("query_id")).join(nv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
-  }
-
-  /** Persist the residual-IVFADC index — the production "vector
-    * database" shape of [[knnIvfPqResidual]]: the code table lands
-    * under `path/codes` DIRECTORY-PARTITIONED BY CELL (a probe reads
-    * only its probed cells' partitions — the IVF promise materialized
-    * as partition pruning), centroids under `path/centroids`, the
-    * residual codebook under `path/codebook`, and params pin the
-    * build-time geometry so a probe can never run against mismatched
-    * codebooks. Build cost = the one assign+encode scan every ad-hoc
-    * query pays; after it, corpus vectors are never read again.
-    */
-  def buildIvfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
-                      path: String, centroidMod: Int = 50,
-                      m: Int = 16, ksub: Int = 32,
-                      coarseK: Int = 0, coarseIters: Int = 2,
-                      trainMod: Int = 1): Unit = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    val spark = emb.sparkSession
-    GraftFunctions.register(spark)
-    // coarseK > 0 → fixed-k TRAINED coarse quantizer (the 100 TB
-    // configuration: centroid count decoupled from corpus size);
-    // 0 → the mod-subsample scheme. params record which, so a reader
-    // can tell how the cells were defined without guessing.
-    val centroids = if (coarseK > 0)
-      trainedCentroidTable(emb, idCol, vecCol, coarseK, coarseIters, trainMod)
-    else emb.filter(col(idCol) % centroidMod === 0)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("cv"))
-    require(!centroids.isEmpty,
-      s"buildIvfPqIndex: no centroids (coarseK=$coarseK, centroidMod=$centroidMod) " +
-        "— refusing to write an unprobeable index")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val corpusRes = ivfResidualRows(emb, idCol, vecCol, centroids)
-    val seeds = corpusRes
-      .select(col("__id").as("sid"), col("rv"),
-        graft.functions.PortableHash.portableHash(col("__id")).as("__h"))
-      .orderBy(col("__h"), col("sid")).limit(ksub).collect()
-    val rvecs = seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
-    val dims = rvecs.headOption.map(_.length).getOrElse(0)
-    require(rvecs.nonEmpty && dims % m == 0, s"dims $dims not divisible by m=$m")
-    val dsub = dims / m
-    val cbs = Array.tabulate(m)(mi => rvecs.map(v => v.slice(mi * dsub, (mi + 1) * dsub)))
-    val encCol = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
-      GraftPlanFactory.expression(col("rv")), cbs))
-    corpusRes
-      .select(col("__id").as("vec_id"), col("centroid_id"),
-        encCol.getField("codes").as("codes"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    import spark.implicits._
-    cbs.zipWithIndex.flatMap { case (cbm, mi) =>
-      cbm.zipWithIndex.map { case (cv, j) => (mi, j, cv.toSeq) }
-    }.toSeq.toDF("m", "code", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((m, ksub, dsub, centroidMod,
-        if (coarseK > 0) "trained" else "mod", coarseK))
-      .toDF("m", "ksub", "dsub", "centroid_mod", "coarse_src", "coarse_k")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-    refreshIvfCellStats(spark, path)
-  }
-
-  /** Append a batch to a persisted residual-IVFADC index — the
-    * continuous-ingestion path: the batch assigns against the INDEX's
-    * stored centroids and encodes with its stored residual codebook
-    * (never re-sampled geometry — probes must keep answering over one
-    * consistent code space), then its code rows append into the cell
-    * partitions. Same crash semantics as [[appendToPqIndex]]: a
-    * replayed partial append duplicates code rows — rebuild or re-id
-    * after a mid-append failure.
-    */
-  def appendToIvfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    import org.apache.spark.sql.expressions.Window
-    val spark = emb.sparkSession
-    GraftFunctions.register(spark)
-    val cbs = readPqCodebook(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    // fail fast on mis-dimensioned batches: the stored codebook pins
-    // m×dsub geometry, and a wrong-width vector would silently encode
-    // a TRUNCATED residual into the shared code space
-    val params = spark.read.parquet(s"$path/params").collect()(0)
-    val (pm, pdsub) = (params.getAs[Number]("m").intValue,
-      params.getAs[Number]("dsub").intValue)
-    emb.select(size(col(vecCol))).limit(1).collect().headOption.foreach { r =>
-      val dims = r.getInt(0)
-      require(dims == pm * pdsub,
-        s"appendToIvfPqIndex: batch vector dims $dims != stored geometry " +
-          s"m*dsub = $pm*$pdsub = ${pm * pdsub} — refusing to corrupt the index")
-    }
-    val batchRes = ivfResidualRows(emb, idCol, vecCol, centroids)
-    val encCol = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
-      GraftPlanFactory.expression(col("rv")), cbs))
-    batchRes
-      .select(col("__id").as("vec_id"), col("centroid_id"),
-        encCol.getField("codes").as("codes"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    refreshIvfCellStats(spark, path)
-  }
-
-  /** Probe a persisted residual-IVFADC index ([[buildIvfPqIndex]]):
-    * queries assign against the STORED centroids, build residual
-    * distance tables per probed cell, and the code scan carries a
-    * LITERAL cell filter (the probed cells collected driver-side —
-    * queries × nProbes ints, the codebook-scalar convention) so
-    * partition pruning reads only those cells' files. Same answer as
-    * [[knnIvfPqResidual]] on identical parameters (spec-pinned);
-    * corpus vectors are never read.
-    */
-  /** Collect a one-column integral DataFrame of probed cell ids
-    * driver-side (queries × nProbes ints — the codebook-scalar
-    * convention). Generic over the stored integral width.
-    */
-  private[graft] def collectCellIds(cellsDf: DataFrame, caller: String): Array[Long] =
-    cellsDf.distinct().collect().map(_.get(0) match {
+  private def centroidArrays(centroids: DataFrame): (Array[Long], Array[Array[Float]]) = {
+    val rows = centroids.select(col("centroid_id"), col("cv")).collect()
+    val ids = rows.map(r => r.get(0) match {
       case l: java.lang.Long => l.longValue
       case i: java.lang.Integer => i.longValue
       case s: java.lang.Short => s.longValue
       case b: java.lang.Byte => b.longValue
       case other => throw new IllegalArgumentException(
-        s"$caller: stored centroid_id must be integral, got " +
+        "centroidArrays: centroid_id must be integral, got " +
           (if (other == null) "NULL" else other.getClass.getName))
     })
-
-  /** Read the persisted PQ code table restricted to `cells` via a
-    * LITERAL isin on the partition column, converted to the SCAN's
-    * inferred partition-column type — an implicit cast on the
-    * partition column itself would defeat the PartitionFilters pruning
-    * this index exists for. Returns (vec_id, centroid_id BIGINT,
-    * codes); only the named cells' directories are ever read.
-    */
-  private[graft] def readCodesPruned(spark: org.apache.spark.sql.SparkSession,
-                                     path: String, cells: Array[Long]): DataFrame = {
-    val codesRaw = spark.read.parquet(s"$path/codes")
-    val cellLits: Seq[Any] = codesRaw.schema("centroid_id").dataType match {
-      case org.apache.spark.sql.types.IntegerType => cells.toIndexedSeq.map(_.toInt)
-      case org.apache.spark.sql.types.ShortType => cells.toIndexedSeq.map(_.toShort)
-      case _ => cells.toIndexedSeq
-    }
-    codesRaw.filter(col("centroid_id").isin(cellLits: _*))
-      .select(col("vec_id"),
-        col("centroid_id").cast("bigint").as("centroid_id"), col("codes"))
+    val vecs = rows.map(_.getSeq[Float](1).toArray)
+    (ids, vecs)
   }
 
-  def knnIvfPqProbe(spark: org.apache.spark.sql.SparkSession, path: String,
-                    queries: DataFrame, idCol: String, vecCol: String,
-                    k: Int, nProbes: Int = 4): DataFrame = {
+  /** IVF cells: the coarse codebook TABLE (centroid_id, cv array<float>)
+    * plus its kernel broadcast, collected ONCE and shared by both sides
+    * of every IVF search. Both assignments are one map pass per row,
+    * ZERO shuffle:
+    *  - corpus side ([[assign]]): each vector's nearest cell through
+    *    [[graft.plans.ArgMaxCosineBroadcast]] — no corpus × centroids
+    *    hash exchange carrying vector payloads on the 100 TB build path;
+    *  - query side ([[probe]]): the `nProbes` nearest cells through
+    *    [[graft.plans.ProbeCellsBroadcast]], exploded to one row per
+    *    probed cell — ≡ the window `crnk <= nProbes` (spec-pinned with
+    *    the argmax kernel, NaN zero-vectors and exact ties included).
+    */
+  private[graft] final class Cells(table: DataFrame,
+      bc: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Float]])]) {
     import org.apache.spark.sql.classic.GraftPlanFactory
+    def assign(df: DataFrame, vecCol: String): DataFrame =
+      df.withColumn("centroid_id", GraftPlanFactory.column(graft.plans.ArgMaxCosineBroadcast(
+        bc, GraftPlanFactory.expression(col(vecCol)))).getField("id"))
+    def probe(df: DataFrame, vecCol: String, nProbes: Int): DataFrame =
+      df.withColumn("centroid_id", explode(GraftPlanFactory.column(
+        graft.plans.ProbeCellsBroadcast(bc, nProbes, GraftPlanFactory.expression(col(vecCol))))))
+    /** The residual `vecCol − cv` of each row against its cell centroid,
+      * as `rvCol` (float arithmetic, the DuckDB REAL−REAL twin); the
+      * centroid vector comes from a broadcast hash join on the codebook
+      * table — 1 row in, 1 row out, no exchange.
+      */
+    def residual(df: DataFrame, vecCol: String, rvCol: String): DataFrame =
+      df.join(broadcast(table), Seq("centroid_id"))
+        .withColumn(rvCol, zip_with(col(vecCol), col("cv"), (x, y) => x - y))
+  }
+
+  /** The [[Cells]] of a codebook table — None when it holds no centroid. */
+  private[graft] def ivfCells(centroids: DataFrame): Option[Cells] = {
+    val ca = centroidArrays(centroids)
+    if (ca._1.isEmpty) None
+    else Some(new Cells(centroids, centroids.sparkSession.sparkContext.broadcast(ca)))
+  }
+
+  /** Corpus-side cell assignment alone: `df` with a `centroid_id`
+    * (bigint) column appended; an empty codebook yields the empty frame.
+    */
+  private[graft] def ivfAssignCells(df: DataFrame, vecCol: String,
+                                    centroids: DataFrame): DataFrame =
+    ivfCells(centroids).fold(df.withColumn("centroid_id", lit(null).cast("bigint")).limit(0))(
+      _.assign(df, vecCol))
+
+  /** The residual-IVF corpus scan: (neighbor_id, nv, centroid_id, cv,
+    * rv), one row per input row, NO exchange anywhere (kernel argmax +
+    * broadcast hash join for the winning centroid vector). This is the
+    * shape that must stay shuffle-free at 100 TB — the ad-hoc residual
+    * search, [[buildAnnIndex]] and [[appendToAnnIndex]] all encode it.
+    * SimilaritySpec pins the no-Exchange property.
+    */
+  private[graft] def residualRows(emb: DataFrame, idCol: String, vecCol: String,
+                           cells: Cells): DataFrame =
+    cells.residual(cells.assign(
+      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")), "nv"), "nv", "rv")
+
+  /** Per-cell occupancy of a persisted IVF index — recomputed into
+    * `path/cellstats` on build AND append. Counting groups the codes
+    * scan's PARTITION column only, so parquet column pruning makes the
+    * refresh a footer-cheap pass even on a 100 TB index. A hot cell
+    * (duplicate-flood vector, degenerate codebook) concentrates probe
+    * cost toward linear scan; per the house rule the guard WARNS and
+    * records — it never drops rows silently (an index must answer for
+    * every vector it was given).
+    */
+  private[graft] def refreshIvfCellStats(spark: org.apache.spark.sql.SparkSession,
+                                         path: String,
+                                         warnFrac: Double = 0.2): Unit = {
+    spark.read.parquet(s"$path/codes")
+      .groupBy(col("centroid_id")).agg(count(lit(1)).as("n"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
+    val rows = spark.read.parquet(s"$path/cellstats").collect()
+    if (rows.length > 1) {
+      val total = rows.map(_.getLong(1)).sum
+      val hot = rows.maxBy(_.getLong(1))
+      val frac = if (total == 0) 0.0 else hot.getLong(1).toDouble / total
+      if (frac > warnFrac)
+        System.err.println(s"[graft] WARNING: IVF index $path hot cell " +
+          s"${hot.get(0)} holds ${hot.getLong(1)} of $total rows " +
+          f"($frac%.2f > $warnFrac%.2f bound) — probes on it pay near-linear " +
+          "cost; train a larger coarse codebook or dedup the flood upstream")
+    }
+  }
+
+  /** The coarse codebook TABLE of a cellular spec (centroid_id, cv
+    * array<float>):
+    *  - [[AnnSpec.Coarse.Mod]]: the `id % centroidMod == 0` subsample —
+    *    grows WITH the corpus (n/mod centroids → assignment cosines
+    *    O(n²/mod), a corpus-proportional broadcast);
+    *  - [[AnnSpec.Coarse.Trained]]: the [[kmeansCentroids]] codebook
+    *    (deterministic Lloyd on the fixed-point grid) trained on a
+    *    `trainMod`-strided sample, float-cast so every downstream shape
+    *    (kernel cosines, REAL residuals) is identical to the mod path —
+    *    k cells at any corpus size, the 100 TB configuration.
+    */
+  private def centroidTable(emb: DataFrame, idCol: String, vecCol: String,
+                            coarse: AnnSpec.Coarse): DataFrame = coarse match {
+    case AnnSpec.Coarse.Mod(mod) =>
+      emb.filter(col(idCol) % mod === 0)
+        .select(col(idCol).as("centroid_id"), col(vecCol).as("cv"))
+    case AnnSpec.Coarse.Trained(k, iters, trainMod) =>
+      val spark = emb.sparkSession
+      import spark.implicits._
+      val train = if (trainMod == 1) emb else emb.filter(col(idCol) % trainMod === 0)
+      kmeansCentroids(train, idCol, vecCol, k, iters).zipWithIndex
+        .map { case (c, j) => (j.toLong, c.map(_.toFloat).toSeq) }
+        .toSeq.toDF("centroid_id", "cv")
+        .select(col("centroid_id"), col("cv").cast("array<float>"))
+    case AnnSpec.Coarse.Flat =>
+      throw new IllegalArgumentException("centroidTable: a Flat spec has no cells")
+  }
+
+  /** The PQ codebook of a [[AnnSpec.Code.Pq]] spec: sampled seeds, or
+    * seeds refined by `trainIters` per-subspace Lloyd rounds.
+    */
+  private def pqCodebooksFor(emb: DataFrame, idCol: String, vecCol: String,
+                             pq: AnnSpec.Code.Pq): Array[Array[Array[Double]]] =
+    if (pq.trainIters > 0) pqCodebooksTrained(emb, idCol, vecCol, pq.m, pq.ksub, pq.trainIters)
+    else pqCodebooks(emb, idCol, vecCol, pq.m, pq.ksub)
+
+  private def pqCodes(vecCol: String, cbs: Array[Array[Array[Double]]]): Column = {
+    import org.apache.spark.sql.classic.GraftPlanFactory
+    GraftPlanFactory.column(graft.plans.PqEncodeExpr(
+      GraftPlanFactory.expression(col(vecCol)), cbs)).getField("codes")
+  }
+
+  /** C6/C7b/C56/C59/C72/C75/C77: top-`k` neighbours of the first
+    * `nQueries` ids (`id < nQueries`) under one [[AnnSpec]] — the FAISS
+    * index ladder as one operator, every rung shuffle-free before its
+    * per-query cut:
+    *  - Flat + Raw: brute-force exact cosine (the correctness baseline)
+    *    — broadcast query batch × corpus, rank window per query;
+    *  - Mod/Trained + Raw: IVF — the corpus assigned to its nearest cell
+    *    and the queries fanned out to their `nProbes` nearest cells
+    *    ([[Cells]], both map-side kernels), exact cosine inside the
+    *    probed inverted lists (corpus vectors live in exactly one list,
+    *    so (query, neighbor) pairs are already unique — no dedup);
+    *  - Flat + Pq: exhaustive ADC — the corpus encoded once through the
+    *    PQ kernel and materialized (encode once, search the code table
+    *    many times; the cut also caps the plan the optimizer re-copies
+    *    per rule), each code row scored against the broadcast per-query
+    *    distance tables in one kernel lookup-sum;
+    *  - Mod/Trained + Pq: IVF-PQ — the same code table with cells; the
+    *    queries ride the broadcast WITH their distance tables, so after
+    *    the corpus scan no float vector is read again;
+    *  - Mod/Trained + ResidualPq: IVFADC — each vector encoded as its
+    *    residual against its cell centroid, each query building one
+    *    distance table per probed cell from its OWN residual; the
+    *    residual codebook follows the sampled-seed rule over the seed
+    *    vectors' residuals. Residuals are centered near zero, so the
+    *    same m×ksub budget quantizes them with less error (the FAISS
+    *    IVFADC default);
+    *  - `refine = Some(r)`: the top `r` of the spec's own search per
+    *    query re-scored with the exact cosine (both vector fetches are
+    *    broadcast hash joins — the shortlist is queries × r ids).
+    *
+    * nProbes is the IVF compute↔recall lever; the default of 4 is the
+    * documented high-recall setting (SimilaritySpec pins recall vs
+    * nProbes monotone with floors at the default). A cellular spec over
+    * a non-empty corpus with no centroid (ids that never hit the
+    * modulus) fails fast — cells are undefined; an empty corpus gives
+    * an empty answer.
+    */
+  def knn(emb: DataFrame, idCol: String, vecCol: String,
+          nQueries: Int = 10, k: Int = 5, spec: AnnSpec = AnnSpec()): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    spec.refine match {
+      case Some(r) =>
+        val short = knn(emb, idCol, vecCol, nQueries, r, spec.copy(refine = None))
+          .select(col("query_id"), col("neighbor_id"))
+        exactTopK(broadcast(short)
+          .join(emb.select(col(idCol).as("query_id"), col(vecCol).as("qv")), Seq("query_id"))
+          .join(emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
+            Seq("neighbor_id")), k)
+      case None =>
+        val queries = emb.filter(col(idCol) < nQueries)
+          .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+        val vectors = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
+        val flat = spec.coarse == AnnSpec.Coarse.Flat
+        val cells = if (flat) None else ivfCells(centroidTable(emb, idCol, vecCol, spec.coarse))
+        (spec.code, cells) match {
+          case (_, None) if !flat =>
+            require(emb.isEmpty, s"knn: no centroids for ${spec.coarse} (empty codebook " +
+              "table) — IVF cells are undefined; supply a non-empty codebook")
+            emb.select(col(idCol).as("query_id"), col(idCol).as("neighbor_id"),
+              lit(0d).as(if (spec.code == AnnSpec.Code.Raw) "score" else "adist"),
+              lit(0).as("rnk")).limit(0)
+          case (AnnSpec.Code.Raw, None) =>
+            val par = emb.sparkSession.sparkContext.defaultParallelism
+            exactTopK(broadcast(queries).join(vectors.repartition(par),
+              col("query_id") =!= col("neighbor_id")), k)
+          case (AnnSpec.Code.Raw, Some(c)) =>
+            exactTopK(broadcast(c.probe(queries, "qv", spec.nProbes))
+              .join(c.assign(vectors, "nv"), Seq("centroid_id"))
+              .filter(col("query_id") =!= col("neighbor_id")), k)
+          case (pq: AnnSpec.Code.Pq, None) =>
+            val cbs = pqCodebooksFor(emb, idCol, vecCol, pq)
+            val codes = pqEncodeWith(emb, idCol, vecCol, cbs).materialized
+              .select(col("vec_id").as("neighbor_id"), col("codes"))
+            adcTopK(adcScored(codes, distTables(queries, "qv", cbs), cellular = false), k)
+          case (pq: AnnSpec.Code.Pq, Some(c)) =>
+            val cbs = pqCodebooksFor(emb, idCol, vecCol, pq)
+            val codes = c.assign(vectors, "nv")
+              .select(col("neighbor_id"), col("centroid_id"), pqCodes("nv", cbs).as("codes"))
+              .materialized
+            adcTopK(adcScored(codes,
+              distTables(c.probe(queries, "qv", spec.nProbes), "qv", cbs), cellular = true), k)
+          case (rp: AnnSpec.Code.ResidualPq, Some(c)) =>
+            val rows = residualRows(emb, idCol, vecCol, c)
+            val cbs = pqCodebooks(rows, "neighbor_id", "rv", rp.m, rp.ksub)
+            val codes = rows
+              .select(col("neighbor_id"), col("centroid_id"), pqCodes("rv", cbs).as("codes"))
+              .materialized
+            adcTopK(adcScored(codes, residualDistTables(c, queries, spec.nProbes, cbs),
+              cellular = true), k)
+          case (code, _) => // AnnSpec rejects residual codes without cells
+            throw new IllegalStateException(s"knn: $code without cells")
+        }
+    }
+  }
+
+  /** Exact scoring tail: round(cosine, 6) per (query, neighbor) pair
+    * of `pairs` (query_id, neighbor_id, qv, nv), rank window per query
+    * (score desc, lower neighbor id first), cut at `k`.
+    */
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(spark)
-    val cbs = readPqCodebook(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probed = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .join(broadcast(centroids))
-      .select(col("query_id"), col("qv"), col("centroid_id"), col("cv"),
-        VectorFunctions.cosineNative(col("qv"), col("cv")).as("csim"))
-      .withColumn("crnk", row_number().over(wa))
-      .filter(col("crnk") <= nProbes)
-      .withColumn("qrv", zip_with(col("qv"), col("cv"), (x, y) => x - y))
-    val qdtCol = GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-      GraftPlanFactory.expression(col("qrv")), cbs))
-    val qTab = probed.select(col("query_id"), col("centroid_id"), qdtCol.as("__dt"))
-    // literal cell list → PartitionFilters on the code scan (see
-    // collectCellIds / readCodesPruned)
-    val cells = collectCellIds(probed.select(col("centroid_id")), "knnIvfPqProbe")
-    val codes = readCodesPruned(spark, path, cells)
-      .select(col("vec_id").as("neighbor_id"), col("centroid_id"), col("codes"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id"))
+    pairs.select(col("query_id"), col("neighbor_id"),
+        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+  }
+
+  /** Per-query ADC distance tables (query_id[, centroid_id], __dt) —
+    * one native kernel call per query row (graft.plans.PqDistTableExpr:
+    * m × ksub entries of ‖q_m − c_j‖², 6dp decimal).
+    */
+  private def distTables(queries: DataFrame, vecCol: String,
+                         cbs: Array[Array[Array[Double]]]): DataFrame = {
+    import org.apache.spark.sql.classic.GraftPlanFactory
+    val keys = Seq("query_id", "centroid_id").filter(queries.columns.contains).map(col)
+    queries.select(keys :+ GraftPlanFactory.column(graft.plans.PqDistTableExpr(
+      GraftPlanFactory.expression(col(vecCol)), cbs)).as("__dt"): _*)
+  }
+
+  /** The residual query side: (query, vector) rows fanned out to their
+    * `nProbes` nearest cells, one distance table per probed cell built
+    * from the query's OWN residual against that cell's centroid —
+    * broadcast-sized: queries × nProbes × m × ksub decimals.
+    */
+  private def residualDistTables(cells: Cells, queries: DataFrame, nProbes: Int,
+                                 cbs: Array[Array[Array[Double]]]): DataFrame =
+    distTables(cells.residual(cells.probe(queries, "qv", nProbes), "qv", "qrv")
+      .select(col("query_id"), col("centroid_id"), col("qrv")), "qrv", cbs)
+
+  /** The ADC scan: each code row × each (broadcast) query table of its
+    * cell — or of every query when not `cellular` — evaluates
+    * Σ_m dt[m][codes[m]] in ONE kernel call (graft.plans.AdcSumExpr):
+    * no unnest, no join fan-out, NO shuffle before the per-query top-k
+    * cut. The unnest-join-groupBy form it replaced shuffled Q×N
+    * partial-sum rows (measured 35.7 s for 10 queries over 2M codes);
+    * values are bit-equal (the kernel sums the same 6dp decimals as
+    * unscaled longs).
+    */
+  private def adcScored(codes: DataFrame, tables: DataFrame, cellular: Boolean): DataFrame = {
+    import org.apache.spark.sql.classic.GraftPlanFactory
     val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
       GraftPlanFactory.expression(col("codes")),
       GraftPlanFactory.expression(col("__dt"))))
-    val scored = codes.join(broadcast(qTab), Seq("centroid_id"))
+    (if (cellular) codes.join(broadcast(tables), Seq("centroid_id"))
+     else codes.crossJoin(broadcast(tables)))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), adist.as("adist"))
+  }
+
+  /** The per-query ADC cut through TopKPerKey (final exchange
+    * O(queries × k × partitions) rows), ranked AFTER the cut. Cut and
+    * rank on the exact decimal; EMIT double — final query outputs must
+    * be pandas-portable types (the driver reads Spark parquet via
+    * pyarrow, which keeps DECIMAL as object(Decimal), while DuckDB's
+    * .df() converts DECIMAL to float64 — equal values, unequal hashes).
+    * decimal(28,6)→double is correctly rounded and identical on both
+    * engines.
+    */
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adist").asc, col("neighbor_id"))
     graft.plans.TopK.perKey(scored, Seq("query_id"),
@@ -1915,204 +1414,354 @@ object Similarity {
       .withColumn("adist", col("adist").cast("double"))
   }
 
-  /** DuckDB twin of [[knnIvfPqResidual]] — the IVF cell CTEs with
-    * residual vectors threaded through the PQ seed/codebook/encode/
-    * distance-table chain (cell-local residual per side).
+  // ---- Persisted ANN index ---------------------------------------------------
+
+  /** Persist the index of `spec` at `path` — the encode-once/search-many
+    * production shape; after the build, probes never touch a float
+    * vector again. Two on-disk layouts:
+    *  - Flat + [[AnnSpec.Code.Pq]]: the code table (vec_id, codes,
+    *    recon_err) under `path/codes` (32× smaller than the vectors it
+    *    replaces), the codebook under `path/codebook` (m×ksub rows of
+    *    double slices — bit-exact parquet round trip), params
+    *    (m, ksub, dsub);
+    *  - Mod/Trained + [[AnnSpec.Code.ResidualPq]]: the residual code
+    *    table DIRECTORY-PARTITIONED BY CELL (a probe reads only its
+    *    probed cells' partitions — the IVF promise materialized as
+    *    partition pruning), centroids under `path/centroids`, the
+    *    residual codebook, params (m, ksub, dsub, centroid_mod,
+    *    coarse_src, coarse_k) and per-cell occupancy
+    *    ([[refreshIvfCellStats]]).
+    * Params pin the build-time geometry so a probe can never run
+    * against mismatched codebooks. Other specs have no persisted form.
     */
-  /** DuckDB twin of [[knnIvfWith]] — the cell-assignment CTEs with a
-    * pluggable centroids head (mod subsample by default; pass
-    * [[trainedCentroidsCte]] for the trained-codebook variant).
-    */
-  def knnIvfOracleSql(nQueries: Int = 10, k: Int = 5, centroidMod: Int = 50,
-                      nProbes: Int = 4,
-                      centroidsHead: Option[String] = None): String = {
-    def cos(a: String, b: String) = VectorFunctions.cosineSql(a, b)
-    val head = centroidsHead.getOrElse(
-      s"""WITH centroids AS (SELECT vec_id AS centroid_id, embedding AS cv
-         |  FROM embeddings WHERE vec_id % $centroidMod = 0)""".stripMargin)
-    s"""$head,
-       |ranked AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY ${cos("e.embedding", "c.cv")} DESC, c.centroid_id) AS crnk
-       |  FROM embeddings e CROSS JOIN centroids c),
-       |assigned AS (SELECT vec_id, embedding, centroid_id FROM ranked WHERE crnk = 1),
-       |probed AS (SELECT vec_id, embedding, centroid_id FROM ranked WHERE crnk <= $nProbes),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    round(${cos("q.embedding", "c.embedding")}, 6) AS score
-       |  FROM probed q JOIN assigned c ON q.centroid_id = c.centroid_id
-       |  WHERE q.vec_id < $nQueries AND q.vec_id <> c.vec_id)
-       |SELECT query_id, neighbor_id, score, rnk FROM (
-       |  SELECT query_id, neighbor_id, score,
-       |    cast(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS integer) AS rnk
-       |  FROM scored) WHERE rnk <= $k""".stripMargin
+  def buildAnnIndex(emb: DataFrame, idCol: String, vecCol: String, path: String,
+                    spec: AnnSpec): Unit = {
+    val spark = emb.sparkSession
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    def writeCodebook(cbs: Array[Array[Array[Double]]]): Unit =
+      cbs.zipWithIndex.flatMap { case (cbm, mi) =>
+        cbm.zipWithIndex.map { case (cv, j) => (mi, j, cv.toSeq) }
+      }.toSeq.toDF("m", "code", "cv")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    (spec.coarse, spec.code) match {
+      case (AnnSpec.Coarse.Flat, pq: AnnSpec.Code.Pq) =>
+        // the stored codebook IS the probe codebook, trained or not
+        val cbs = pqCodebooksFor(emb, idCol, vecCol, pq)
+        pqEncodeWith(emb, idCol, vecCol, cbs)
+          .write.mode("overwrite").parquet(s"$path/codes")
+        writeCodebook(cbs)
+        Seq((pq.m, pq.ksub, cbs.head.head.length)).toDF("m", "ksub", "dsub")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+      case (coarse, rp: AnnSpec.Code.ResidualPq) =>
+        val centroids = centroidTable(emb, idCol, vecCol, coarse)
+        val cells = ivfCells(centroids).getOrElse(throw new IllegalArgumentException(
+          s"buildAnnIndex: no centroids ($coarse) — refusing to write an unprobeable index"))
+        centroids.write.mode("overwrite").parquet(s"$path/centroids")
+        val rows = residualRows(emb, idCol, vecCol, cells)
+        val cbs = pqCodebooks(rows, "neighbor_id", "rv", rp.m, rp.ksub)
+        rows.select(col("neighbor_id").as("vec_id"), col("centroid_id"),
+            pqCodes("rv", cbs).as("codes"))
+          .write.mode("overwrite").partitionBy("centroid_id")
+          .parquet(s"$path/codes")
+        writeCodebook(cbs)
+        // centroid_mod keeps the Mod default on trained indexes and
+        // coarse_k is 0 on mod ones: the params layout predates the spec
+        val (mod, src, coarseK) = coarse match {
+          case AnnSpec.Coarse.Trained(kc, _, _) => (AnnSpec.Coarse.Mod().centroidMod, "trained", kc)
+          case AnnSpec.Coarse.Mod(cm) => (cm, "mod", 0)
+          case AnnSpec.Coarse.Flat => throw new IllegalStateException("unreachable")
+        }
+        Seq((rp.m, rp.ksub, cbs.head.head.length, mod, src, coarseK))
+          .toDF("m", "ksub", "dsub", "centroid_mod", "coarse_src", "coarse_k")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+        refreshIvfCellStats(spark, path)
+      case _ => throw new IllegalArgumentException(s"buildAnnIndex: $spec has no " +
+        "persisted layout — indexes are Flat + Pq or cellular + ResidualPq")
+    }
   }
 
-  private def residualScoredCtes(nQueries: Int, centroidMod: Int, nProbes: Int,
-                                 m: Int, ksub: Int, dims: Int,
-                                 centroidsHead: Option[String]): String = {
+  /** A persisted index's geometry: params row, codebook, and (IVF only)
+    * its stored cells.
+    */
+  private final case class StoredIndex(params: org.apache.spark.sql.Row,
+                                       cbs: Array[Array[Array[Double]]],
+                                       cells: Option[Cells])
+
+  private def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): StoredIndex = {
+    val params = spark.read.parquet(s"$path/params").collect()(0)
+    val (m, ksub) = (params.getInt(0), params.getInt(1))
+    val rows = spark.read.parquet(s"$path/codebook")
+      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
+    // doubles round-trip parquet bit-exactly: probe arithmetic ≡ build-time
+    val cbs = Array.tabulate(m)(mi => Array.tabulate(ksub)(j => rows((mi, j))))
+    val cells = if (!params.schema.fieldNames.contains("coarse_src")) None
+      else Some(ivfCells(spark.read.parquet(s"$path/centroids")
+        .select(col("centroid_id").cast("bigint").as("centroid_id"), col("cv")))
+        .getOrElse(throw new IllegalArgumentException(
+          s"IVF index at $path has no centroids — nothing is probeable")))
+    StoredIndex(params, cbs, cells)
+  }
+
+  /** Append a batch to a persisted index — the continuous-ingestion
+    * path: the batch assigns against the INDEX's stored centroids and
+    * encodes with its stored codebook (never re-sampled geometry —
+    * probes must keep answering over one consistent code space), then
+    * its code rows append (into the cell partitions for an IVF index,
+    * whose cellstats are refreshed). A batch whose vector width differs
+    * from the stored m×dsub fails fast instead of encoding a TRUNCATED
+    * vector into the shared code space. No existing row is touched, so
+    * appends are cheap at any index size. Crash semantics: a replayed
+    * partial append duplicates code rows (repeated neighbors in top-k)
+    * — rebuild or re-id after a mid-append failure, don't blind-retry.
+    */
+  def appendToAnnIndex(emb: DataFrame, idCol: String, vecCol: String,
+                       path: String): Unit = {
+    val spark = emb.sparkSession
+    GraftFunctions.register(spark)
+    val ix = readIndex(spark, path)
+    val (pm, pdsub) = (ix.params.getAs[Number]("m").intValue,
+      ix.params.getAs[Number]("dsub").intValue)
+    emb.select(size(col(vecCol))).limit(1).collect().headOption.foreach { r =>
+      val dims = r.getInt(0)
+      require(dims == pm * pdsub,
+        s"appendToAnnIndex: batch vector dims $dims != stored geometry " +
+          s"m*dsub = $pm*$pdsub = ${pm * pdsub} — refusing to corrupt the index")
+    }
+    ix.cells match {
+      case None =>
+        pqEncodeWith(emb, idCol, vecCol, ix.cbs)
+          .write.mode("append").parquet(s"$path/codes")
+      case Some(cells) =>
+        residualRows(emb, idCol, vecCol, cells)
+          .select(col("neighbor_id").as("vec_id"), col("centroid_id"),
+            pqCodes("rv", ix.cbs).as("codes"))
+          .write.mode("append").partitionBy("centroid_id")
+          .parquet(s"$path/codes")
+        refreshIvfCellStats(spark, path)
+    }
+  }
+
+  /** The persisted IVF code table as (neighbor_id, centroid_id BIGINT,
+    * codes), restricted to `cells` when given via a LITERAL isin on the
+    * partition column, converted to the SCAN's inferred partition-column
+    * type — an implicit cast on the partition column itself would
+    * defeat the PartitionFilters pruning this index exists for: only
+    * the named cells' directories are ever read.
+    */
+  private def readCellCodes(spark: org.apache.spark.sql.SparkSession, path: String,
+                            cells: Option[Array[Long]]): DataFrame = {
+    val codesRaw = spark.read.parquet(s"$path/codes")
+    def lits(cs: Array[Long]): Seq[Any] = codesRaw.schema("centroid_id").dataType match {
+      case org.apache.spark.sql.types.IntegerType => cs.toIndexedSeq.map(_.toInt)
+      case org.apache.spark.sql.types.ShortType => cs.toIndexedSeq.map(_.toShort)
+      case _ => cs.toIndexedSeq
+    }
+    cells.fold(codesRaw)(cs => codesRaw.filter(col("centroid_id").isin(lits(cs): _*)))
+      .select(col("vec_id").as("neighbor_id"),
+        col("centroid_id").cast("bigint").as("centroid_id"), col("codes"))
+  }
+
+  /** ADC-scored (query_id, neighbor_id, adist decimal) pairs of a probe
+    * batch (any (id, vector) frame, not necessarily index members —
+    * identical ids on both sides are excluded as self-matches) against
+    * a persisted index: the distance tables come from the STORED
+    * codebook (and, for an IVF index, the stored cells and residuals),
+    * and the corpus vectors are never read — they need not exist
+    * anymore. With `prune` (needs a non-streaming batch) the IVF code
+    * scan carries a LITERAL cell filter — the probed cells collected
+    * driver-side — so partition pruning reads only those cells' files;
+    * without it the scan reads the whole code table (the stream-static
+    * form [[graft.streaming.DocStreams.annAlerts]] uses per micro-batch).
+    */
+  private[graft] def probeScored(spark: org.apache.spark.sql.SparkSession, path: String,
+                                 queries: DataFrame, idCol: String, vecCol: String,
+                                 nProbes: Int, prune: Boolean): DataFrame = {
+    GraftFunctions.register(spark)
+    val ix = readIndex(spark, path)
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    ix.cells match {
+      case None =>
+        adcScored(spark.read.parquet(s"$path/codes")
+            .select(col("vec_id").as("neighbor_id"), col("codes")),
+          distTables(q, "qv", ix.cbs), cellular = false)
+      case Some(cells) =>
+        val tables = residualDistTables(cells, q, nProbes, ix.cbs)
+        // the probed cells, driver-side: queries × nProbes bigints
+        val probed = if (!prune) None
+          else Some(tables.select(col("centroid_id")).distinct().collect().map(_.getLong(0)))
+        adcScored(readCellCodes(spark, path, probed), tables, cellular = true)
+    }
+  }
+
+  /** Top-`k` ADC neighbors for a PROBE batch against a persisted index
+    * ([[buildAnnIndex]]): the same scan and cut as [[knn]] over the
+    * stored codes, partition-pruned to the probed cells on an IVF index
+    * (`nProbes` nearest stored cells per query). Same answer as [[knn]]
+    * with the build spec on identical data (spec-pinned).
+    */
+  def knnProbe(spark: org.apache.spark.sql.SparkSession, path: String,
+               queries: DataFrame, idCol: String, vecCol: String,
+               k: Int, nProbes: Int = 4): DataFrame =
+    adcTopK(probeScored(spark, path, queries, idCol, vecCol, nProbes, prune = true), k)
+
+  // ---- ANN DuckDB twin -----------------------------------------------------
+
+  /** PQ codebook + encode WITH-chain over `src(vec_id, <vec>)`:
+    * hash-ordered seeds (`pseeds`) → per-subspace seed slices (`cb0`),
+    * `trainIters` per-subspace Lloyd rounds replaying
+    * [[pqCodebooksTrained]] bit-exactly (same (score, code) argmin
+    * struct, same 2^-20 fixed-point long-sum means, same empty-code
+    * carry via LEFT JOIN + coalesce — the kmeansCtePrefix pattern per
+    * subspace) → `cb`, per-vector subspace slices (`sub`) and argmin
+    * codes (`enc`). Every dot is [[VectorFunctions.dotSql]] (the
+    * Spark-fold replica); CTE names avoid the kmeans chain's so the two
+    * compose in one WITH list.
+    */
+  private def pqChainCtes(src: String, vec: String, m: Int, ksub: Int, trainIters: Int,
+                          dims: Int): Seq[String] = {
     val dsub = dims / m
     val ph = graft.functions.PortableHash.duckdb("cast(vec_id AS varchar)")
     def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
-    def cos(a: String, b: String) = VectorFunctions.cosineSql(a, b)
-    val head = centroidsHead.getOrElse(
-      s"""WITH centroids AS (SELECT vec_id AS centroid_id, embedding AS cv
-         |  FROM embeddings WHERE vec_id % $centroidMod = 0)""".stripMargin)
-    s"""$head,
-       |cranked AS (SELECT e.vec_id, c.centroid_id,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY ${cos("e.embedding", "c.cv")} DESC, c.centroid_id) AS crnk
-       |  FROM embeddings e CROSS JOIN centroids c),
-       |assigned AS (SELECT vec_id, centroid_id FROM cranked WHERE crnk = 1),
-       |res AS (SELECT e.vec_id, a.centroid_id,
-       |    list_transform(range(1, ${dims + 1}),
-       |      i -> e.embedding[i] - c.cv[i]) AS rv
-       |  FROM embeddings e JOIN assigned a USING (vec_id)
-       |  JOIN centroids c USING (centroid_id)),
-       |rseeds AS (SELECT vec_id, rv,
-       |    row_number() OVER (ORDER BY $ph, vec_id) AS rn FROM res),
-       |cb AS (SELECT t.m, cast(s.rn - 1 AS integer) AS code,
-       |    list_transform(s.rv[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS cv
-       |  FROM rseeds s CROSS JOIN range(0, $m) t(m) WHERE s.rn <= $ksub),
-       |sub AS (SELECT r.vec_id, r.centroid_id, t.m,
-       |    list_transform(r.rv[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS vm
-       |  FROM res r CROSS JOIN range(0, $m) t(m)),
-       |enc AS (SELECT s.vec_id, s.centroid_id, s.m,
-       |    min(struct_pack(s := ${dot("c.cv", "c.cv")} - (2.0 * ${dot("s.vm", "c.cv")}),
-       |                    c := c.code)) AS st
-       |  FROM sub s JOIN cb c ON c.m = s.m
-       |  GROUP BY s.vec_id, s.centroid_id, s.m),
-       |probed AS (SELECT vec_id, centroid_id FROM cranked
-       |  WHERE crnk <= $nProbes AND vec_id < $nQueries),
-       |qres AS (SELECT p.vec_id AS query_id, p.centroid_id,
-       |    list_transform(range(1, ${dims + 1}),
-       |      i -> e.embedding[i] - c.cv[i]) AS qrv
-       |  FROM probed p JOIN embeddings e ON e.vec_id = p.vec_id
-       |  JOIN centroids c USING (centroid_id)),
-       |qsub AS (SELECT query_id, centroid_id, t.m,
-       |    list_transform(qrv[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS vm
-       |  FROM qres CROSS JOIN range(0, $m) t(m)),
-       |dtab AS (SELECT q.query_id, q.centroid_id, q.m, c.code,
-       |    cast(round((${dot("c.cv", "c.cv")} - (2.0 * ${dot("q.vm", "c.cv")}))
-       |      + ${dot("q.vm", "q.vm")}, 6) AS decimal(18,6)) AS d2
-       |  FROM qsub q JOIN cb c ON c.m = q.m),
-       |scored AS (SELECT d.query_id, e.vec_id AS neighbor_id,
-       |    cast(sum(d.d2) AS decimal(28,6)) AS adist
-       |  FROM enc e JOIN dtab d ON d.centroid_id = e.centroid_id
-       |    AND d.m = e.m AND d.code = e.st.c
-       |  WHERE d.query_id <> e.vec_id
-       |  GROUP BY 1, 2)""".stripMargin
+    def slice(v: String) = s"list_transform($v[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE)"
+    val argmin =
+      s"""min(struct_pack(s := ${dot("c.cv", "c.cv")} - (2.0 * ${dot("s.vm", "c.cv")}),
+         |                    c := c.code))""".stripMargin
+    def step(i: Int): Seq[String] = Seq(
+      s"""pa$i AS (SELECT s.vec_id, s.m, $argmin.c AS code
+         |  FROM sub s JOIN cb$i c ON c.m = s.m GROUP BY s.vec_id, s.m)""".stripMargin,
+      s"""pm$i AS (SELECT a.m, a.code, t.pos,
+         |    sum(cast(floor(((s.vm[t.pos])::DOUBLE) * 1048576.0 + 0.5) AS bigint)) AS s,
+         |    count(*) AS n
+         |  FROM sub s JOIN pa$i a ON a.vec_id = s.vec_id AND a.m = s.m,
+         |    range(1, ${dsub + 1}) t(pos)
+         |  GROUP BY a.m, a.code, t.pos)""".stripMargin,
+      s"""cb${i + 1}l AS (SELECT p.m, p.code, p.pos,
+         |    coalesce((cast(mm.s AS double) / 1048576.0) / mm.n, p.cval) AS cval
+         |  FROM cb${i}l p LEFT JOIN pm$i mm
+         |    ON p.m = mm.m AND p.code = mm.code AND p.pos = mm.pos)""".stripMargin,
+      s"""cb${i + 1} AS (SELECT m, code, list(cval ORDER BY pos) AS cv
+         |  FROM cb${i + 1}l GROUP BY m, code)""".stripMargin)
+    Seq(
+      s"""pseeds AS (SELECT vec_id, $vec AS v,
+         |    row_number() OVER (ORDER BY $ph, vec_id) AS rn FROM $src)""".stripMargin,
+      s"""sub AS (SELECT e.vec_id, t.m, ${slice(s"e.$vec")} AS vm
+         |  FROM $src e CROSS JOIN range(0, $m) t(m))""".stripMargin,
+      s"""cb0 AS (SELECT t.m, cast(s.rn - 1 AS integer) AS code, ${slice("s.v")} AS cv
+         |  FROM pseeds s CROSS JOIN range(0, $m) t(m) WHERE s.rn <= $ksub)""".stripMargin) ++
+    (if (trainIters == 0) Nil
+     else s"""cb0l AS (SELECT m, code, pos, cv[pos] AS cval
+             |  FROM cb0, range(1, ${dsub + 1}) t(pos))""".stripMargin +:
+       (0 until trainIters).flatMap(step)) ++
+    Seq(s"cb AS (SELECT m, code, cv FROM cb$trainIters)",
+      s"""enc AS (SELECT s.vec_id, s.m, $argmin AS st
+         |  FROM sub s JOIN cb c ON c.m = s.m GROUP BY s.vec_id, s.m)""".stripMargin)
   }
 
-  /** DuckDB twin of [[knnIvfPqResidualWith]] — the residual CTE chain
-    * plus the rank/emit tail.
+  /** DuckDB twin of [[knn]] for any spec over the `embeddings` table —
+    * the same cells (row_number window ≡ the kernels' ordering: cosine
+    * desc, ties → lower centroid id), codebooks, distance tables and
+    * cuts as CTEs:
+    *  - candidates `cand` (query_id, neighbor_id[, centroid_id]): every
+    *    other vector, or the members of each probed cell;
+    *  - `scored`: exact round(cosine, 6), or the ADC sum of 6dp decimal
+    *    table entries (per query, or per (query, probed cell) from the
+    *    query's residual);
+    *  - `refine`: the ADC shortlist re-scored exactly;
+    *  - the rank/emit tail (adist emitted as double, rnk as integer).
+    * A Trained coarse spec replays [[kmeansCtePrefix]] (bit-exact Lloyd)
+    * capped with the same double→REAL cast [[centroidTable]] applies,
+    * over the full corpus (`trainMod` 1).
     */
-  def knnIvfPqResidualOracleSql(nQueries: Int = 10, k: Int = 5,
-                                centroidMod: Int = 50, nProbes: Int = 4,
-                                m: Int = 16, ksub: Int = 32,
-                                dims: Int = 64,
-                                centroidsHead: Option[String] = None): String =
-    s"""${residualScoredCtes(nQueries, centroidMod, nProbes, m, ksub, dims, centroidsHead)}
-       |SELECT query_id, neighbor_id, cast(adist AS double) AS adist, rnk FROM (
-       |  SELECT query_id, neighbor_id, adist,
-       |    cast(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, neighbor_id) AS integer) AS rnk
-       |  FROM scored) WHERE rnk <= $k""".stripMargin
-
-  /** DuckDB twin of [[knnIvfPqResidualRefined]] — the residual ADC
-    * chain cut at `rerankFrom`, then exact-cosine re-ranking.
-    */
-  def knnIvfPqRefineOracleSql(nQueries: Int = 10, k: Int = 5,
-                              rerankFrom: Int = 20,
-                              centroidMod: Int = 50, nProbes: Int = 4,
-                              m: Int = 16, ksub: Int = 32,
-                              dims: Int = 64,
-                              centroidsHead: Option[String] = None): String = {
-    def cos(a: String, b: String) = VectorFunctions.cosineSql(a, b)
-    s"""${residualScoredCtes(nQueries, centroidMod, nProbes, m, ksub, dims, centroidsHead)},
-       |short AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, neighbor_id) AS srnk
-       |  FROM scored) WHERE srnk <= $rerankFrom),
-       |ref AS (SELECT s.query_id, s.neighbor_id,
-       |    round(${cos("q.embedding", "n.embedding")}, 6) AS score
-       |  FROM short s JOIN embeddings q ON q.vec_id = s.query_id
-       |  JOIN embeddings n ON n.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, score, rnk FROM (
-       |  SELECT query_id, neighbor_id, score,
-       |    cast(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, neighbor_id) AS integer) AS rnk
-       |  FROM ref) WHERE rnk <= $k""".stripMargin
-  }
-
-  /** DuckDB twin of [[knnIvfPq]] — the [[knnIvf]] oracle's cell CTEs
-    * spliced onto the [[knnPqOracleSql]] ADC chain.
-    */
-  def knnIvfPqOracleSql(nQueries: Int = 10, k: Int = 5, centroidMod: Int = 50,
-                        nProbes: Int = 4, m: Int = 16, ksub: Int = 32,
-                        dims: Int = 64): String = {
+  def knnOracleSql(spec: AnnSpec, nQueries: Int = 10, k: Int = 5, dims: Int = 64): String = {
     def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
     def cos(a: String, b: String) = VectorFunctions.cosineSql(a, b)
-    s"""WITH ${pqCtePrefix(m, ksub, dims)},
-       |centroids AS (SELECT vec_id AS centroid_id, embedding AS cv
-       |  FROM embeddings WHERE vec_id % $centroidMod = 0),
-       |cranked AS (SELECT e.vec_id, c.centroid_id,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY ${cos("e.embedding", "c.cv")} DESC, c.centroid_id) AS crnk
-       |  FROM embeddings e CROSS JOIN centroids c),
-       |assigned AS (SELECT vec_id, centroid_id FROM cranked WHERE crnk = 1),
-       |probed AS (SELECT vec_id, centroid_id FROM cranked
-       |  WHERE crnk <= $nProbes AND vec_id < $nQueries),
-       |q AS (SELECT vec_id AS query_id, m, vm FROM sub WHERE vec_id < $nQueries),
-       |dtab AS (
-       |  SELECT q.query_id, q.m, c.code,
-       |    cast(round((${dot("c.cv", "c.cv")} - (2.0 * ${dot("q.vm", "c.cv")}))
-       |      + ${dot("q.vm", "q.vm")}, 6) AS decimal(18,6)) AS d2
-       |  FROM q JOIN cb c ON c.m = q.m),
-       |cand AS (SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
-       |  FROM probed p JOIN assigned a ON p.centroid_id = a.centroid_id
-       |  WHERE p.vec_id <> a.vec_id),
-       |scored AS (
-       |  SELECT d.query_id, e.vec_id AS neighbor_id,
-       |    cast(sum(d.d2) AS decimal(28,6)) AS adist
-       |  FROM enc e JOIN dtab d ON d.m = e.m AND d.code = e.st.c
-       |  JOIN cand ON cand.query_id = d.query_id AND cand.neighbor_id = e.vec_id
-       |  GROUP BY 1, 2)
-       |SELECT query_id, neighbor_id, cast(adist AS double) AS adist, rnk FROM (
-       |  SELECT query_id, neighbor_id, adist,
-       |    cast(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, neighbor_id) AS integer) AS rnk
-       |  FROM scored) WHERE rnk <= $k""".stripMargin
-  }
-
-  /** Shared WITH-chain for the PQ DuckDB twins: hash-ordered seeds →
-    * per-subspace codebook slices (`cb`) → per-vector subspace slices
-    * (`sub`) → argmin codes (`enc`). Every dot is [[VectorFunctions.dotSql]]
-    * (the Spark-fold replica) and the argmin is the min-struct pattern
-    * the kmeans oracle proved engine-exact.
-    */
-  private def pqCtePrefix(m: Int = 16, ksub: Int = 32, dims: Int = 64): String = {
-    val dsub = dims / m
-    val ph = graft.functions.PortableHash.duckdb("cast(vec_id AS varchar)")
-    def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
-    s"""seeds AS (
-       |  SELECT vec_id, embedding,
-       |    row_number() OVER (ORDER BY $ph, vec_id) AS rn
-       |  FROM embeddings),
-       |cb AS (
-       |  SELECT t.m, cast(s.rn - 1 AS integer) AS code,
-       |    list_transform(s.embedding[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS cv
-       |  FROM seeds s CROSS JOIN range(0, $m) t(m) WHERE s.rn <= $ksub),
-       |sub AS (
-       |  SELECT e.vec_id, t.m,
-       |    list_transform(e.embedding[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS vm
-       |  FROM embeddings e CROSS JOIN range(0, $m) t(m)),
-       |enc AS (
-       |  SELECT s.vec_id, s.m,
-       |    min(struct_pack(s := ${dot("c.cv", "c.cv")} - (2.0 * ${dot("s.vm", "c.cv")}),
-       |                    c := c.code)) AS st
-       |  FROM sub s JOIN cb c ON c.m = s.m
-       |  GROUP BY s.vec_id, s.m)""".stripMargin
+    def residualOf(v: String) = s"list_transform(range(1, ${dims + 1}), i -> $v[i] - c.cv[i])"
+    val (head, centroids) = spec.coarse match {
+      case AnnSpec.Coarse.Flat => ("WITH ", Nil)
+      case AnnSpec.Coarse.Mod(mod) => ("WITH ", Seq(
+        s"""centroids AS (SELECT vec_id AS centroid_id, embedding AS cv
+           |  FROM embeddings WHERE vec_id % $mod = 0)""".stripMargin))
+      case AnnSpec.Coarse.Trained(kc, iters, trainMod) =>
+        require(trainMod == 1, "knnOracleSql: the Lloyd replay trains on the full corpus")
+        (kmeansCtePrefix(kc, iters, dims) + ",\n", Seq(
+          s"""centroids AS (SELECT cid AS centroid_id,
+             |  list_transform(cv, x -> x::REAL) AS cv FROM c$iters)""".stripMargin))
+    }
+    val cand = if (centroids.isEmpty) Seq(
+      s"""cand AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
+         |  FROM embeddings q CROSS JOIN embeddings n
+         |  WHERE q.vec_id < $nQueries AND q.vec_id <> n.vec_id)""".stripMargin)
+    else Seq(
+      s"""cranked AS (SELECT e.vec_id, c.centroid_id,
+         |    row_number() OVER (PARTITION BY e.vec_id
+         |      ORDER BY ${cos("e.embedding", "c.cv")} DESC, c.centroid_id) AS crnk
+         |  FROM embeddings e CROSS JOIN centroids c)""".stripMargin,
+      "assigned AS (SELECT vec_id, centroid_id FROM cranked WHERE crnk = 1)",
+      s"""probed AS (SELECT vec_id, centroid_id FROM cranked
+         |  WHERE crnk <= ${spec.nProbes} AND vec_id < $nQueries)""".stripMargin,
+      """cand AS (SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id, p.centroid_id
+        |  FROM probed p JOIN assigned a ON p.centroid_id = a.centroid_id
+        |  WHERE p.vec_id <> a.vec_id)""".stripMargin)
+    def exact(from: String) =
+      s"""SELECT p.query_id, p.neighbor_id,
+         |    round(${cos("x.embedding", "y.embedding")}, 6) AS score
+         |  FROM $from p JOIN embeddings x ON x.vec_id = p.query_id
+         |    JOIN embeddings y ON y.vec_id = p.neighbor_id""".stripMargin
+    // ADC: query subspace slices `qsub` (query_id[, centroid_id], m, vm)
+    // → distance table `dtab` → per-candidate sum over the codes
+    def adc(perCell: Boolean): Seq[String] = {
+      val cellCol = if (perCell) " q.centroid_id," else ""
+      Seq(
+        s"""dtab AS (SELECT q.query_id,$cellCol q.m, c.code,
+           |    cast(round((${dot("c.cv", "c.cv")} - (2.0 * ${dot("q.vm", "c.cv")}))
+           |      + ${dot("q.vm", "q.vm")}, 6) AS decimal(18,6)) AS d2
+           |  FROM qsub q JOIN cb c ON c.m = q.m)""".stripMargin,
+        s"""scored AS (SELECT p.query_id, p.neighbor_id,
+           |    cast(sum(d.d2) AS decimal(28,6)) AS adist
+           |  FROM cand p JOIN enc e ON e.vec_id = p.neighbor_id
+           |  JOIN dtab d ON d.query_id = p.query_id AND d.m = e.m AND d.code = e.st.c
+           |    ${if (perCell) "AND d.centroid_id = p.centroid_id" else ""}
+           |  GROUP BY 1, 2)""".stripMargin)
+    }
+    val scoring = spec.code match {
+      case AnnSpec.Code.Raw => Seq(s"scored AS (${exact("cand")})")
+      case AnnSpec.Code.Pq(m, ksub, trainIters) =>
+        pqChainCtes("embeddings", "embedding", m, ksub, trainIters, dims) ++
+          (s"qsub AS (SELECT vec_id AS query_id, m, vm FROM sub WHERE vec_id < $nQueries)" +:
+            adc(perCell = false))
+      case AnnSpec.Code.ResidualPq(m, ksub) =>
+        val dsub = dims / m
+        (s"""res AS (SELECT a.vec_id, ${residualOf("e.embedding")} AS rv
+            |  FROM assigned a JOIN embeddings e USING (vec_id)
+            |  JOIN centroids c USING (centroid_id))""".stripMargin +:
+          pqChainCtes("res", "rv", m, ksub, 0, dims)) ++
+          Seq(s"""qres AS (SELECT p.vec_id AS query_id, p.centroid_id,
+                 |    ${residualOf("e.embedding")} AS qrv
+                 |  FROM probed p JOIN embeddings e ON e.vec_id = p.vec_id
+                 |  JOIN centroids c USING (centroid_id))""".stripMargin,
+            s"""qsub AS (SELECT query_id, centroid_id, t.m,
+               |    list_transform(qrv[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS vm
+               |  FROM qres CROSS JOIN range(0, $m) t(m))""".stripMargin) ++
+          adc(perCell = true)
+    }
+    // rank order of an exact (cosine) or ADC score column
+    def order(exact: Boolean) = if (exact) "score DESC" else "adist ASC"
+    val refine = spec.refine.toSeq.flatMap(r => Seq(
+      s"""short AS (SELECT query_id, neighbor_id FROM (
+         |  SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id
+         |    ORDER BY ${order(spec.code == AnnSpec.Code.Raw)}, neighbor_id) AS srnk
+         |  FROM scored) WHERE srnk <= $r)""".stripMargin,
+      s"refined AS (${exact("short")})"))
+    val exactOut = spec.code == AnnSpec.Code.Raw || refine.nonEmpty
+    val (col, emit) = if (exactOut) ("score", "score") else ("adist", "cast(adist AS double) AS adist")
+    head + (centroids ++ cand ++ scoring ++ refine).mkString(",\n") +
+      s"""
+         |SELECT query_id, neighbor_id, $emit, rnk FROM (
+         |  SELECT query_id, neighbor_id, $col,
+         |    cast(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY ${order(exactOut)}, neighbor_id) AS integer) AS rnk
+         |  FROM ${if (refine.nonEmpty) "refined" else "scored"}) WHERE rnk <= $k""".stripMargin
   }
 
   /** DuckDB twin of the portable [[pqEncode]] projection (codes
@@ -2122,7 +1771,7 @@ object Similarity {
     */
   def pqEncodeOracleSql(m: Int = 16, ksub: Int = 32, dims: Int = 64): String = {
     def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
-    s"""WITH ${pqCtePrefix(m, ksub, dims)},
+    s"""WITH ${pqChainCtes("embeddings", "embedding", m, ksub, 0, dims).mkString(",\n")},
        |per AS (
        |  SELECT e.vec_id, e.m, e.st.c AS code,
        |    cast(round(e.st.s + ${dot("s.vm", "s.vm")}, 6) AS decimal(18,6)) AS err
@@ -2132,105 +1781,7 @@ object Similarity {
        |FROM per GROUP BY vec_id""".stripMargin
   }
 
-  /** The exhaustive ADC tail shared by the sampled and trained PQ
-    * twins — expects `sub` / `cb` / `enc` from the prefix.
-    */
-  private def adcTailSql(nQueries: Int, k: Int): String = {
-    def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
-    s"""q AS (SELECT vec_id AS query_id, m, vm FROM sub WHERE vec_id < $nQueries),
-       |dtab AS (
-       |  SELECT q.query_id, q.m, c.code,
-       |    cast(round((${dot("c.cv", "c.cv")} - (2.0 * ${dot("q.vm", "c.cv")}))
-       |      + ${dot("q.vm", "q.vm")}, 6) AS decimal(18,6)) AS d2
-       |  FROM q JOIN cb c ON c.m = q.m),
-       |scored AS (
-       |  SELECT d.query_id, e.vec_id AS neighbor_id,
-       |    cast(sum(d.d2) AS decimal(28,6)) AS adist
-       |  FROM enc e JOIN dtab d ON d.m = e.m AND d.code = e.st.c
-       |  WHERE d.query_id <> e.vec_id
-       |  GROUP BY 1, 2)
-       |SELECT query_id, neighbor_id, cast(adist AS double) AS adist, rnk FROM (
-       |  SELECT query_id, neighbor_id, adist,
-       |    cast(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adist ASC, neighbor_id) AS integer) AS rnk
-       |  FROM scored) WHERE rnk <= $k""".stripMargin
-  }
-
-  /** DuckDB twin of [[knnPq]]. */
-  def knnPqOracleSql(nQueries: Int = 10, k: Int = 5,
-                     m: Int = 16, ksub: Int = 32, dims: Int = 64): String =
-    s"""WITH ${pqCtePrefix(m, ksub, dims)},
-       |${adcTailSql(nQueries, k)}""".stripMargin
-
-  /** Trained-codebook WITH-chain for the PQ twins — [[pqCtePrefix]]'s
-    * hash-ordered seed slices as the round-0 codebooks, then `iters`
-    * per-subspace Lloyd rounds replaying [[pqCodebooksTrained]]
-    * bit-exactly (same (score, code) argmin struct, same 2^-20
-    * fixed-point long-sum means, same empty-code carry via LEFT JOIN +
-    * coalesce — the kmeansCtePrefix pattern per subspace). Ends in the
-    * same `sub` / `cb` / `enc` names as the sampled prefix so
-    * [[adcTailSql]] splices unchanged.
-    */
-  private def pqTrainedCtePrefix(m: Int = 16, ksub: Int = 32, iters: Int = 2,
-                                 dims: Int = 64): String = {
-    val dsub = dims / m
-    val ph = graft.functions.PortableHash.duckdb("cast(vec_id AS varchar)")
-    def dot(a: String, b: String) = VectorFunctions.dotSql(a, b)
-    def step(i: Int): String =
-      s"""a$i AS (
-         |  SELECT s.vec_id, s.m,
-         |    min(struct_pack(s := ${dot("c.cv", "c.cv")} - (2.0 * ${dot("s.vm", "c.cv")}),
-         |                    c := c.code)).c AS code
-         |  FROM sub s JOIN cb$i c ON c.m = s.m
-         |  GROUP BY s.vec_id, s.m),
-         |m$i AS (
-         |  SELECT a.m, a.code, t.pos,
-         |    sum(cast(floor(((s.vm[t.pos])::DOUBLE) * 1048576.0 + 0.5) AS bigint)) AS s,
-         |    count(*) AS n
-         |  FROM sub s JOIN a$i a ON a.vec_id = s.vec_id AND a.m = s.m,
-         |    range(1, ${dsub + 1}) t(pos)
-         |  GROUP BY a.m, a.code, t.pos),
-         |cb${i + 1}l AS (
-         |  SELECT p.m, p.code, p.pos,
-         |    coalesce((cast(mm.s AS double) / 1048576.0) / mm.n, p.cval) AS cval
-         |  FROM cb${i}l p LEFT JOIN m$i mm
-         |    ON p.m = mm.m AND p.code = mm.code AND p.pos = mm.pos),
-         |cb${i + 1} AS (
-         |  SELECT m, code, list(cval ORDER BY pos) AS cv
-         |  FROM cb${i + 1}l GROUP BY m, code)""".stripMargin
-    val steps = (0 until iters).map(step).mkString(",\n")
-    s"""seeds AS (
-       |  SELECT vec_id, embedding,
-       |    row_number() OVER (ORDER BY $ph, vec_id) AS rn
-       |  FROM embeddings),
-       |sub AS (
-       |  SELECT e.vec_id, t.m,
-       |    list_transform(e.embedding[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS vm
-       |  FROM embeddings e CROSS JOIN range(0, $m) t(m)),
-       |cb0 AS (
-       |  SELECT t.m, cast(s.rn - 1 AS integer) AS code,
-       |    list_transform(s.embedding[t.m*$dsub+1 : t.m*$dsub+$dsub], x -> x::DOUBLE) AS cv
-       |  FROM seeds s CROSS JOIN range(0, $m) t(m) WHERE s.rn <= $ksub),
-       |cb0l AS (SELECT m, code, pos, cv[pos] AS cval
-       |         FROM cb0, range(1, ${dsub + 1}) t(pos)),
-       |$steps,
-       |cb AS (SELECT m, code, cv FROM cb$iters),
-       |enc AS (
-       |  SELECT s.vec_id, s.m,
-       |    min(struct_pack(s := ${dot("c.cv", "c.cv")} - (2.0 * ${dot("s.vm", "c.cv")}),
-       |                    c := c.code)) AS st
-       |  FROM sub s JOIN cb c ON c.m = s.m
-       |  GROUP BY s.vec_id, s.m)""".stripMargin
-  }
-
-  /** DuckDB twin of [[knnPqTrained]]. */
-  def knnPqTrainedOracleSql(nQueries: Int = 10, k: Int = 5,
-                            m: Int = 16, ksub: Int = 32, iters: Int = 2,
-                            dims: Int = 64): String =
-    s"""WITH ${pqTrainedCtePrefix(m, ksub, iters, dims)},
-       |${adcTailSql(nQueries, k)}""".stripMargin
-
-  // ---- Persisted ANN index -------------------------------------------------
+  // ---- Persisted LSH index -------------------------------------------------
 
   /** Build and persist the LSH index for `emb` at `path` — the
     * production form of the per-query bucketing scan: the bucket table
@@ -2292,84 +1843,6 @@ object Similarity {
     * self-matches. Same answer as [[knnLsh]] on identical parameters
     * (spec-pinned).
     */
-  /** Build and persist the PQ index for `emb` at `path` — the
-    * production form of the encode-once/search-many contract
-    * [[knnPq]]'s scaladoc promises: the code table (32× smaller than
-    * the vectors it replaces) lands under `path/codes`, the codebook
-    * under `path/codebook` (m×ksub rows of double slices — bit-exact
-    * parquet round trip), and the parameters under `path/params` so a
-    * probe can never run against mismatched codebooks. The build costs
-    * the one kernel-encode scan every ad-hoc ADC query pays anyway;
-    * after it, probes never touch a float vector again.
-    */
-  def buildPqIndex(emb: DataFrame, idCol: String, vecCol: String, path: String,
-                   m: Int = 16, ksub: Int = 32, trainIters: Int = 0): Unit = {
-    val spark = emb.sparkSession
-    // trainIters > 0 refines the sampled seeds with per-subspace Lloyd
-    // ([[pqCodebooksTrained]]) before anything is encoded — the stored
-    // codebook IS the probe codebook either way, so a trained index
-    // stays self-consistent without the probe side knowing
-    val cbs =
-      if (trainIters > 0) pqCodebooksTrained(emb, idCol, vecCol, m, ksub, trainIters)
-      else pqCodebooks(emb, idCol, vecCol, m, ksub)
-    pqEncodeWith(emb, idCol, vecCol, cbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    import spark.implicits._
-    cbs.zipWithIndex.flatMap { case (cbm, mi) =>
-      cbm.zipWithIndex.map { case (cv, j) => (mi, j, cv.toSeq) }
-    }.toSeq.toDF("m", "code", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((m, ksub, cbs.head.head.length)).toDF("m", "ksub", "dsub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** The persisted codebook, reassembled in (m, code) order — exactly
-    * the array [[buildPqIndex]] wrote (doubles round-trip parquet
-    * bit-exactly, so probe arithmetic is identical to build-time).
-    */
-  private[graft] def readPqCodebook(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Array[Array[Array[Double]]] = {
-    val p = spark.read.parquet(s"$path/params").collect()(0)
-    val (m, ksub) = (p.getInt(0), p.getInt(1))
-    val rows = spark.read.parquet(s"$path/codebook")
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
-    Array.tabulate(m)(mi => Array.tabulate(ksub)(j => rows((mi, j))))
-  }
-
-  /** Append a new batch of vectors to a persisted PQ index — the
-    * continuous-ingestion path: the batch is encoded with the INDEX's
-    * stored codebook (never a re-sampled one), and its code rows are
-    * appended. No existing row is touched, so appends are cheap at any
-    * index size. Same crash semantics as [[appendToLshIndex]]: a
-    * replayed partial append duplicates code rows (repeated neighbors
-    * in top-k) — rebuild or re-id after a mid-append failure, don't
-    * blind-retry.
-    */
-  def appendToPqIndex(emb: DataFrame, idCol: String, vecCol: String,
-                      path: String): Unit = {
-    val cbs = readPqCodebook(emb.sparkSession, path)
-    pqEncodeWith(emb, idCol, vecCol, cbs)
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** ADC top-k for a PROBE batch against a persisted PQ index: the
-    * per-query distance table is computed map-side from the STORED
-    * codebook (a scan of the probe batch only) and broadcast; the
-    * stored code table unnests and equi-joins it — the corpus vectors
-    * are never read (they need not even exist anymore). `queries` is
-    * any (id, vector) DataFrame; identical ids on both sides are
-    * excluded as self-matches. Same answer as [[knnPq]] on identical
-    * parameters (spec-pinned).
-    */
-  def knnPqProbe(spark: org.apache.spark.sql.SparkSession, path: String,
-                 queries: DataFrame, idCol: String, vecCol: String,
-                 k: Int): DataFrame = {
-    val cbs = readPqCodebook(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-    adcTopK(codes, queries, idCol, vecCol, cbs, k)
-  }
-
   def knnLshProbe(spark: org.apache.spark.sql.SparkSession, path: String,
                   queries: DataFrame, idCol: String, vecCol: String,
                   k: Int): DataFrame = {

@@ -153,15 +153,15 @@ case class MaxCosineBroadcast(
 
 /** Nearest centroid of an `array<float>` vector against a BROADCAST
   * centroid codebook, as a (cos, id) struct — the zero-shuffle IVF
-  * cell assignment. The corpus side of every IVF-family operator
-  * (knnIvf / knnIvfPq / knnIvfPqResidual / buildIvfPqIndex /
-  * appendToIvfPqIndex) is a probes=1 assignment, i.e. an argmax —
+  * cell assignment. The corpus side of every IVF search and index
+  * build (graft.operators.Similarity.knn / buildAnnIndex /
+  * appendToAnnIndex) is a probes=1 assignment, i.e. an argmax —
   * this kernel computes it in ONE map pass per row, replacing the
   * broadcast-cross-join (corpus × centroids row multiplication with
   * vector payloads) + per-id `row_number` window (a full hash
   * exchange of the multiplied rows) that form is built from. The
-  * window form survives on the query side (rows = nQueries) and as
-  * this kernel's spec-pinned parity reference (SimilaritySpec).
+  * window form survives as this kernel's spec-pinned parity
+  * reference (SimilaritySpec).
   *
   * Unlike [[MaxCosineBroadcast]] there is NO 6dp rounding: the window
   * form ranks on the raw `graft_cosine` double, so the kernel
@@ -201,10 +201,11 @@ case class ArgMaxCosineBroadcast(
 
 /** Top-`nProbes` nearest centroid ids (array<bigint>, best first) of an
   * `array<float>` vector against a BROADCAST codebook — the multi-probe
-  * sibling of [[ArgMaxCosineBroadcast]] for STREAMING probes, where the
-  * per-id rank window the batch query side uses isn't expressible in
-  * append mode. Same ordering contract: unrounded fused cosines,
-  * Double.compare, ties → lower centroid id (≡ `crnk <= nProbes`).
+  * sibling of [[ArgMaxCosineBroadcast]], the query side of every IVF
+  * search: batch, persisted-index probe and streaming alerts (where a
+  * per-id rank window isn't expressible in append mode). Same ordering
+  * contract: unrounded fused cosines, Double.compare, ties → lower
+  * centroid id (≡ the window `crnk <= nProbes`, spec-pinned).
   */
 case class ProbeCellsBroadcast(
     cents: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Float]])],

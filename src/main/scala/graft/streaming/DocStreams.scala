@@ -397,8 +397,8 @@ object DocStreams {
   }
 
   /** Streaming ANN alerting against a persisted residual-IVFADC index
-    * ([[graft.operators.Similarity.buildIvfPqIndex]]) — the continuous
-    * twin of the batch [[graft.operators.Similarity.knnIvfPqProbe]],
+    * ([[graft.operators.Similarity.buildAnnIndex]]) — the continuous
+    * twin of the batch [[graft.operators.Similarity.knnProbe]],
     * completing the build/append/probe loop the way [[bm25Alerts]]
     * does for the BM25 index: each arriving vector probes its
     * `nProbes` nearest stored cells and emits every indexed neighbor
@@ -407,106 +407,27 @@ object DocStreams {
     * adist the batch probe ranks on, so replay parity is exact on the
     * thresholded set).
     *
-    * Shape per micro-batch, all stateless: cell assignment is the
-    * map-side [[graft.plans.ProbeCellsBroadcast]] kernel (stored
-    * centroids collected once at stream setup — codebook-scalar
-    * convention, same as bm25Alerts' df map), residual distance
-    * tables are per-row expressions, and candidate scoring is a
-    * stream-static INNER join on `centroid_id` against the code
-    * table. Scale note: Spark re-reads the static side each batch —
-    * the code table is the PQ-compressed form (m bytes/vector, ~12×
-    * smaller than the vectors) and the join reads only (vec_id,
-    * centroid_id, codes); for a fixed known query set prefer
-    * [[annAlertsPruned]], whose literal cell filter partition-prunes
-    * the code scan to exactly the probed cells (spec-pinned ≡ this
-    * operator on the same query set).
+    * Shape per micro-batch, all stateless and shared with the batch
+    * probe: cell assignment is the map-side
+    * [[graft.plans.ProbeCellsBroadcast]] kernel (stored centroids
+    * collected once at setup — codebook-scalar convention, same as
+    * bm25Alerts' df map), residual distance tables are per-row
+    * expressions, and candidate scoring is a stream-static join on
+    * `centroid_id` against the code table. Spark re-reads the static
+    * side each micro-batch — the PQ-compressed (vec_id, centroid_id,
+    * codes) columns only. A NON-streaming `vecs` (a registered, fixed
+    * query set) knows its probed cells before any code is read: they
+    * are collected driver-side and the code scan carries a LITERAL cell
+    * filter, so partition pruning reads only those cells' files
+    * (spec-pinned ≡ the thresholded batch probe, pruned scan asserted).
     */
   def annAlerts(vecs: DataFrame, idCol: String, vecCol: String,
                 indexPath: String, maxDist: Double,
-                nProbes: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    val spark = vecs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val cbs = Similarity.readPqCodebook(spark, indexPath)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val ca = Similarity.centroidArrays(centroids)
-    require(ca._1.nonEmpty,
-      s"annAlerts: index at $indexPath has no centroids — nothing is probeable")
-    val bc = spark.sparkContext.broadcast(ca)
-    val cellsCol = GraftPlanFactory.column(graft.plans.ProbeCellsBroadcast(bc,
-      nProbes, GraftPlanFactory.expression(col("qv"))))
-    val probed = vecs.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("centroid_id", explode(cellsCol))
-      .join(broadcast(centroids.withColumn("centroid_id",
-        col("centroid_id").cast("bigint"))), Seq("centroid_id"))
-      .withColumn("qrv", zip_with(col("qv"), col("cv"), (x, y) => x - y))
-    val qdtCol = GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-      GraftPlanFactory.expression(col("qrv")), cbs))
-    val qTab = probed.select(col("query_id"), col("centroid_id"), qdtCol.as("__dt"))
-    val codes = spark.read.parquet(s"$indexPath/codes")
-      .select(col("vec_id").as("neighbor_id"),
-        col("centroid_id").cast("bigint").as("centroid_id"), col("codes"))
-    val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
-      GraftPlanFactory.expression(col("codes")),
-      GraftPlanFactory.expression(col("__dt"))))
-    qTab.join(codes, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adist.cast("double").as("adist"))
+                nProbes: Int = 4): DataFrame =
+    graft.operators.Similarity.probeScored(vecs.sparkSession, indexPath, vecs,
+        idCol, vecCol, nProbes, prune = !vecs.isStreaming)
+      .select(col("query_id"), col("neighbor_id"), col("adist").cast("double").as("adist"))
       .filter(col("adist") <= maxDist)
-  }
-
-  /** Fixed-query-set BATCH alternative to [[annAlerts]]: the streaming
-    * form re-reads the full code table every micro-batch (stream-static
-    * join, documented there); when the alert queries are REGISTERED up
-    * front the probed cells are knowable before any code is read, so
-    * this form computes them with the SAME
-    * [[graft.plans.ProbeCellsBroadcast]] kernel, collects the cell ids
-    * driver-side (queries × nProbes ints — the codebook-scalar
-    * convention) and reads the code table through a LITERAL cell
-    * filter: the index is directory-partitioned BY CELL, so
-    * PartitionFilters prune the scan to exactly the probed cells'
-    * files. Emits the identical (query_id, neighbor_id, adist ≤
-    * maxDist) alert set — SimilaritySpec pins ≡ [[annAlerts]] on the
-    * same query set and asserts the pruned scan.
-    */
-  def annAlertsPruned(queries: DataFrame, idCol: String, vecCol: String,
-                      indexPath: String, maxDist: Double,
-                      nProbes: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.classic.GraftPlanFactory
-    val spark = queries.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    val cbs = Similarity.readPqCodebook(spark, indexPath)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val ca = Similarity.centroidArrays(centroids)
-    require(ca._1.nonEmpty,
-      s"annAlertsPruned: index at $indexPath has no centroids — nothing is probeable")
-    val bc = spark.sparkContext.broadcast(ca)
-    val cellsCol = GraftPlanFactory.column(graft.plans.ProbeCellsBroadcast(bc,
-      nProbes, GraftPlanFactory.expression(col("qv"))))
-    val probed = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("centroid_id", explode(cellsCol))
-      .join(broadcast(centroids.withColumn("centroid_id",
-        col("centroid_id").cast("bigint"))), Seq("centroid_id"))
-      .withColumn("qrv", zip_with(col("qv"), col("cv"), (x, y) => x - y))
-    val qdtCol = GraftPlanFactory.column(graft.plans.PqDistTableExpr(
-      GraftPlanFactory.expression(col("qrv")), cbs))
-    val qTab = probed.select(col("query_id"), col("centroid_id"), qdtCol.as("__dt"))
-    val cells = Similarity.collectCellIds(
-      probed.select(col("centroid_id")), "annAlertsPruned")
-    val codes = Similarity.readCodesPruned(spark, indexPath, cells)
-      .select(col("vec_id").as("neighbor_id"), col("centroid_id"), col("codes"))
-    val adist = GraftPlanFactory.column(graft.plans.AdcSumExpr(
-      GraftPlanFactory.expression(col("codes")),
-      GraftPlanFactory.expression(col("__dt"))))
-    codes.join(broadcast(qTab), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adist.cast("double").as("adist"))
-      .filter(col("adist") <= maxDist)
-  }
 
   /** Streaming line-clean admission — the continuous twin of
     * [[graft.operators.Dedup.lineDedupIndexed]] against a persisted

@@ -266,8 +266,11 @@ object Cli {
   }
 
   private def index(kind: String, sfDir: String, path: String): Unit = {
+    import graft.operators.AnnSpec, AnnSpec.{Code, Coarse}
     val spark = session()
     val t0 = System.nanoTime()
+    def annIndex(spec: AnnSpec): Unit = graft.operators.Similarity.buildAnnIndex(
+      graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding", path, spec)
     kind match {
       case "minhash" => graft.operators.Dedup.buildMinhashIndex(
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text", path)
@@ -277,14 +280,10 @@ object Cli {
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text", path)
       case "bm25" => graft.operators.TextAnalysis.buildBm25Index(
         graft.sources.Tables.documents(spark, sfDir), "doc_id", "text", path)
-      case "pq" => graft.operators.Similarity.buildPqIndex(
-        graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding", path)
-      case "ivfpq" => graft.operators.Similarity.buildIvfPqIndex(
-        graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding", path)
+      case "pq" => annIndex(AnnSpec(code = Code.Pq()))
+      case "ivfpq" => annIndex(AnnSpec(Coarse.Mod(), Code.ResidualPq()))
       // trained fixed-k coarse codebook (the 100 TB configuration)
-      case "ivfpq-trained" => graft.operators.Similarity.buildIvfPqIndex(
-        graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        path, coarseK = 16)
+      case "ivfpq-trained" => annIndex(AnnSpec(Coarse.Trained(), Code.ResidualPq()))
       // line-digest index for incremental line dedup / the streaming
       // line-clean admission (C81)
       case "line" => graft.operators.Dedup.buildLineIndex(

@@ -598,7 +598,8 @@ object SoakBench {
     println(f"""{"metric":"soak_pq_encode_ab","vectors":$nVec,"input_mb":$vecMb%.0f,"kernel_sec":$ek%.2f,"expr_sec":$ee%.2f,"speedup":${ee / ek}%.2f,"kernel_mb_per_sec":${vecMb / ek}%.1f,"reps_kernel_expr":[$encAll]}""")
     val pqIdx = "target/soak_pq_idx"
     val tpb = System.nanoTime()
-    graft.operators.Similarity.buildPqIndex(bigEmb, "vec_id", "embedding", pqIdx)
+    graft.operators.Similarity.buildAnnIndex(bigEmb, "vec_id", "embedding", pqIdx,
+      graft.operators.AnnSpec(code = graft.operators.AnnSpec.Code.Pq()))
     val secPb = (System.nanoTime() - tpb) / 1e9
     val codesMb = dirBytes(s"$pqIdx/codes") / 1e6
     println(f"""{"metric":"soak_pq_build","vectors":$nVec,"input_mb":$vecMb%.0f,"sec":$secPb%.1f,"codes_mb":$codesMb%.1f,"compression":${vecMb / codesMb}%.1f}""")
@@ -609,7 +610,7 @@ object SoakBench {
     val pqMeter = new InputMeter
     spark.sparkContext.addSparkListener(pqMeter)
     def pqProbe(): Unit = graft.operators.Similarity
-      .knnPqProbe(spark, pqIdx, probeQ, "vec_id", "embedding", 10)
+      .knnProbe(spark, pqIdx, probeQ, "vec_id", "embedding", 10)
       .write.format("noop").mode("overwrite").save()
     pqProbe() // warm
     pqMeter.reset()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Curation, Dedup, MapReduceOps, Similarity, TextAnalysis}
+import graft.operators.{AnnSpec, Curation, Dedup, MapReduceOps, Similarity, TextAnalysis}
 
 /** Operators must degrade cleanly: empty inputs → empty outputs with
   * the right schema, single-row inputs → no pair explosions, documents
@@ -155,7 +155,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       StructField("embedding", ArrayType(FloatType))))
     val emptyEmb = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq.empty[Row], 2), schema)
-    assert(Similarity.knnBruteForce(emptyEmb, "vec_id", "embedding", 10, 5).count() == 0)
+    assert(Similarity.knn(emptyEmb, "vec_id", "embedding", 10, 5).count() == 0)
     assert(Similarity.kmeans(emptyEmb, "vec_id", "embedding").count() == 0)
     // fewer vectors than k: every vector still assigned, ids within range
     import org.apache.spark.sql.functions._
@@ -212,13 +212,15 @@ class EdgeCaseSpec extends AnyFunSuite {
       StructField("embedding", ArrayType(FloatType))))
     val emptyEmb = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq.empty[Row], 2), schema)
-    assert(Similarity.knnIvfPqResidual(emptyEmb, "vec_id", "embedding").count() == 0)
+    assert(Similarity.knn(emptyEmb, "vec_id", "embedding",
+      spec = AnnSpec(AnnSpec.Coarse.Mod(), AnnSpec.Code.ResidualPq())).count() == 0)
     // ids that never hit the centroid modulus: cells are undefined —
     // a clear refusal beats a confusing dims-divisibility error
     val odd = sources.Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 2 === 1)
     val ex = intercept[IllegalArgumentException] {
-      Similarity.knnIvfPqResidual(odd, "vec_id", "embedding", centroidMod = 2)
+      Similarity.knn(odd, "vec_id", "embedding",
+        spec = AnnSpec(AnnSpec.Coarse.Mod(centroidMod = 2), AnnSpec.Code.ResidualPq()))
     }
     assert(ex.getMessage.contains("no centroids"))
   }

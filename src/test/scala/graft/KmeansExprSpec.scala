@@ -45,7 +45,7 @@ class KmeansExprSpec extends AnyFunSuite {
     val cs = centroids(6)
     val got = df.select(col("vec_id"),
         Similarity.kmeansAssignExpr(col("embedding"), cs).as("a"),
-        Similarity.kmeansAssignExprComposed(col("embedding"), cs).as("b"))
+        ReferenceForms.kmeansAssignExprComposed(col("embedding"), cs).as("b"))
       .filter(col("a") =!= col("b"))
     assert(got.count() == 0, got.collect().mkString(", "))
   }
@@ -56,7 +56,7 @@ class KmeansExprSpec extends AnyFunSuite {
     Seq(1, 2, 4, 6, 9).foreach { p => // 9 > k exercises the clamp
       val got = df.select(col("vec_id"),
           Similarity.kmeansProbeCellsExpr(col("embedding"), cs, p).as("a"),
-          Similarity.kmeansProbeCellsExprComposed(col("embedding"), cs, p).as("b"))
+          ReferenceForms.kmeansProbeCellsExprComposed(col("embedding"), cs, p).as("b"))
         .filter(not(col("a") === col("b")))
       assert(got.count() == 0, s"probes=$p: " + got.collect().mkString(", "))
     }

@@ -69,6 +69,23 @@ class RetrievalSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  test("semantic dedup salt is type-agnostic: string ids keep the long-id survivors") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sf)
+    // k = 1: one cell, so k-means seeding (which hashes the id's string
+    // form) cannot tell the encodings apart; zero-padded ids keep the
+    // numeric order the drop rule (the higher id goes) follows
+    val byLong = Similarity.semanticDedup(emb, "vec_id", "embedding", k = 1)
+      .select("vec_id").as[Long].collect().toSet
+    val strEmb = emb.select(format_string("v%08d", col("vec_id")).as("vec_id"),
+      col("embedding"))
+    val byStr = Similarity.semanticDedup(strEmb, "vec_id", "embedding", k = 1)
+      .select("vec_id").as[String].collect().map(_.drop(1).toLong).toSet
+    assert(byLong.size < emb.count(), "fixture must drop near-duplicates")
+    assert(byStr == byLong, s"string-id survivors diverged: ${byStr.diff(byLong).take(5)} / " +
+      s"${byLong.diff(byStr).take(5)}")
+  }
+
   test("ngram novelty: replicated docs hit fraction 1.0, short docs keep a zero row") {
     import spark.implicits._
     val docs = Seq(

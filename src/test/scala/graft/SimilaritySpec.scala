@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{AnnSpec, Similarity}
+import graft.operators.AnnSpec.{Code, Coarse}
 import graft.sources.Tables
 
 /** C5 ships the LSH-candidate plan; the brute-force all-pairs form is
@@ -19,7 +20,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"all-pairs plan leaked into C5:\n$plan")
     val got = lsh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Similarity.embeddingPairsBrute(emb, "vec_id", "embedding", 0.3)
+    val want = ReferenceForms.embeddingPairsBrute(emb, "vec_id", "embedding", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.subsetOf(want), "LSH produced a pair brute force did not")
     val recall = got.size.toDouble / want.size
@@ -37,7 +38,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"all-pairs plan leaked into the IVF miner:\n$plan")
     val got = ivf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Similarity.embeddingPairsBrute(emb, "vec_id", "embedding", 0.3)
+    val want = ReferenceForms.embeddingPairsBrute(emb, "vec_id", "embedding", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.subsetOf(want), "IVF produced a pair brute force did not")
     val recall = got.size.toDouble / want.size
@@ -54,9 +55,9 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF recall-vs-nProbes curve: monotone, with a floor at the default") {
     val emb = Tables.embeddings(spark, sf)
     def hits(nProbes: Int): Set[(Long, Long)] =
-      Similarity.knnIvf(emb, "vec_id", "embedding", 10, 5, nProbes = nProbes)
+      Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(Coarse.Mod(), nProbes = nProbes))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = Seq(1, 2, 4, 8).map(p => p -> (hits(p) & truth).size.toDouble / truth.size)
     info("IVF recall@5: " + recall.map { case (p, r) => f"$p probes $r%.2f" }.mkString(", "))
@@ -68,6 +69,13 @@ class SimilaritySpec extends AnyFunSuite {
     // clears a real floor — 1 probe is the cheap setting, not the default
     val rDefault = recall.toMap.apply(4)
     assert(rDefault >= 0.5, f"default-probe recall $rDefault%.2f below 0.5 floor")
+    // the multi-table LSH ANN (knn_lsh's shipped 5 planes × 8 tables)
+    // against the same truth: measured 0.40 on this fixture
+    val lsh = Similarity.knnLsh(emb, "vec_id", "embedding", 10, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rLsh = (lsh & truth).size.toDouble / truth.size
+    info(f"LSH recall@5: $rLsh%.2f")
+    assert(rLsh >= 0.3, f"LSH recall $rLsh%.2f below 0.3 floor")
   }
 
   test("pqEncode: total, codes in range, seed vectors reconstruct exactly, map-side plan") {
@@ -94,7 +102,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("knnPq: ADC recall vs brute force, no all-pairs plan, code table not vectors") {
     val emb = Tables.embeddings(spark, sf)
-    val pq = Similarity.knnPq(emb, "vec_id", "embedding", 10, 5)
+    val pq = Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(code = Code.Pq()))
     val plan = pq.queryExecution.executedPlan.toString
     // the ADC scan is DELIBERATELY codes × broadcast-query-batch (it
     // is exhaustive by design); what must never appear is a
@@ -103,7 +111,7 @@ class SimilaritySpec extends AnyFunSuite {
       s"non-broadcast product leaked into ADC:\n$plan")
     assert(plan.contains("TopKPerKey"), s"ADC cut fell off TopKPerKey:\n$plan")
     val got = pq.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (got & truth).size.toDouble / truth.size
     info(f"PQ ADC recall@5 vs exact cosine: $recall%.3f (${(got & truth).size}/${truth.size})")
@@ -127,14 +135,15 @@ class SimilaritySpec extends AnyFunSuite {
       f"(${(1 - e1 / e0) * 100}%.1f%% lower)")
     assert(e1 < e0,
       f"Lloyd refinement must cut reconstruction error: $e1%.2f !< $e0%.2f")
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(df: org.apache.spark.sql.DataFrame): Double = {
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (got & truth).size.toDouble / truth.size
     }
-    val rSampled = recall(Similarity.knnPq(emb, "vec_id", "embedding", 10, 5))
-    val rTrained = recall(Similarity.knnPqTrained(emb, "vec_id", "embedding", 10, 5))
+    val rSampled = recall(Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(code = Code.Pq())))
+    val rTrained = recall(Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(code = Code.Pq(trainIters = 2))))
     info(f"ADC recall@5: sampled $rSampled%.3f -> trained $rTrained%.3f")
     assert(rTrained >= rSampled,
       f"trained recall $rTrained%.3f fell below sampled $rSampled%.3f")
@@ -151,14 +160,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(kEnc.exceptAll(eEnc).isEmpty && eEnc.exceptAll(kEnc).isEmpty,
       "pqEncode kernel diverged from the expression form")
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
-    val kDt = Similarity.pqDistTable(q, "vec_id", "embedding", cbs)
-    val eDt = Similarity.pqDistTableExprForm(q, "vec_id", "embedding", cbs)
+    val kDt = ReferenceForms.pqDistTable(q, "vec_id", "embedding", cbs)
+    val eDt = ReferenceForms.pqDistTableExprForm(q, "vec_id", "embedding", cbs)
     assert(kDt.exceptAll(eDt).isEmpty && eDt.exceptAll(kDt).isEmpty,
       "pqDistTable kernel diverged from the expression form")
     // and the ADC scan shape (kernel lookup-sum, no shuffle) answers
     // exactly like the unnest-join-groupBy formulation it replaced
-    val scan = Similarity.knnPq(emb, "vec_id", "embedding", 10, 5)
-    val join = Similarity.knnPqJoinForm(emb, "vec_id", "embedding", 10, 5)
+    val scan = Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(code = Code.Pq()))
+    val join = ReferenceForms.knnPqJoinForm(emb, "vec_id", "embedding", 10, 5)
     assert(scan.exceptAll(join).isEmpty && join.exceptAll(scan).isEmpty,
       "ADC scan shape diverged from the join formulation")
   }
@@ -203,7 +212,7 @@ class SimilaritySpec extends AnyFunSuite {
     val auto = Similarity.embeddingPairsAuto(emb, "vec_id", "embedding", 0.4,
         targetBucket = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Similarity.embeddingPairsBrute(emb, "vec_id", "embedding", 0.4)
+    val want = ReferenceForms.embeddingPairsBrute(emb, "vec_id", "embedding", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto.subsetOf(want), "auto form produced a pair brute force did not")
     assert(auto.nonEmpty, "np>5 bucketing lost every true pair on the fixture")
@@ -225,6 +234,20 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val mem = Seq(1L, 2L, 3L).toDF("x") // no file source at all
     assert(Similarity.exactRowCount(mem) == 3L)
+    // a corrupt file under ignoreCorruptFiles: count() skips it, so the
+    // footer sum (which would throw opening it) must not be taken
+    val dir = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
+    Tables.embeddings(spark, sf).limit(7).write.mode("overwrite").parquet(dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    val key = "spark.sql.files.ignoreCorruptFiles"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val withCorrupt = spark.read.parquet(dir)
+      assert(Similarity.exactRowCount(withCorrupt) == withCorrupt.count())
+      assert(withCorrupt.count() == 7L)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("minhashLsh ids-only band join ≡ the sig-carrying reference form (r16 restructure)") {
@@ -375,7 +398,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("knnIvfPq: cell-restricted ADC agrees with exhaustive ADC on shared pairs") {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
-    val ivfpq = Similarity.knnIvfPq(emb, "vec_id", "embedding", 10, 5)
+    val ivfpq = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Mod(), Code.Pq()))
     val plan = ivfpq.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("TopKPerKey"), s"IVFPQ cut fell off TopKPerKey:\n$plan")
@@ -383,7 +407,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows.nonEmpty && rows.map(_.getLong(0)).distinct.length == 10)
     // same codes + same distance tables ⇒ any (query, neighbor) pair
     // both searches emit must carry the IDENTICAL approximate distance
-    val full = Similarity.knnPq(emb, "vec_id", "embedding", 10, 5)
+    val full = Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(code = Code.Pq()))
       .select(col("query_id"), col("neighbor_id"), col("adist").as("adist_full"))
     val joined = ivfpq.join(full, Seq("query_id", "neighbor_id"))
     assert(joined.filter(col("adist") =!= col("adist_full")).count() == 0,
@@ -394,15 +418,16 @@ class SimilaritySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqidx").toString
-    Similarity.buildPqIndex(emb, "vec_id", "embedding", dir)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", dir, AnnSpec(code = Code.Pq()))
     // probe batch as in-memory rows — so the plan below proves the
     // CORPUS vectors are never read (probes need not be index members)
     import spark.implicits._
     val queries = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
       .toSeq.toDF("vec_id", "embedding")
-    val got = Similarity.knnPqProbe(spark, dir, queries, "vec_id", "embedding", k = 5)
-    val want = Similarity.knnPq(emb, "vec_id", "embedding", nQueries = 10, k = 5)
+    val got = Similarity.knnProbe(spark, dir, queries, "vec_id", "embedding", k = 5)
+    val want = Similarity.knn(emb, "vec_id", "embedding", nQueries = 10, k = 5,
+      spec = AnnSpec(code = Code.Pq()))
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // the probe reads the persisted CODE table; the corpus parquet
@@ -417,13 +442,15 @@ class SimilaritySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqidx_t").toString
-    Similarity.buildPqIndex(emb, "vec_id", "embedding", dir, trainIters = 2)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", dir,
+      AnnSpec(code = Code.Pq(trainIters = 2)))
     import spark.implicits._
     val queries = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
       .toSeq.toDF("vec_id", "embedding")
-    val got = Similarity.knnPqProbe(spark, dir, queries, "vec_id", "embedding", k = 5)
-    val want = Similarity.knnPqTrained(emb, "vec_id", "embedding", nQueries = 10, k = 5)
+    val got = Similarity.knnProbe(spark, dir, queries, "vec_id", "embedding", k = 5)
+    val want = Similarity.knn(emb, "vec_id", "embedding", nQueries = 10, k = 5,
+      spec = AnnSpec(code = Code.Pq(trainIters = 2)))
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "trained-index probe diverged from ad-hoc trained ADC")
@@ -435,8 +462,8 @@ class SimilaritySpec extends AnyFunSuite {
     val first = emb.filter(col("vec_id") % 2 === 0)
     val batch = emb.filter(col("vec_id") % 2 =!= 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqidx_a").toString
-    Similarity.buildPqIndex(first, "vec_id", "embedding", dir)
-    Similarity.appendToPqIndex(batch, "vec_id", "embedding", dir)
+    Similarity.buildAnnIndex(first, "vec_id", "embedding", dir, AnnSpec(code = Code.Pq()))
+    Similarity.appendToAnnIndex(batch, "vec_id", "embedding", dir)
     // the grown index must answer exactly like the union encoded under
     // the FIRST half's codebook (PQ codebooks are data-dependent, so
     // "rebuild on the union" would sample different seeds — the append
@@ -490,13 +517,14 @@ class SimilaritySpec extends AnyFunSuite {
   test("knnIvfPqResidual: recall floor vs brute force; residual quantization beats raw on seed cells") {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf)
-    val res = Similarity.knnIvfPqResidual(emb, "vec_id", "embedding", 10, 5)
+    val res = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     val got = res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (got & truth).size.toDouble / truth.size
     info(f"residual IVFADC recall@5 vs exact cosine: $recall%.3f")
-    // cell restriction caps recall like knnIvfPq; random 64-dim
+    // cell restriction caps recall like IVF-PQ; random 64-dim
     // embeddings with sampled codebooks are PQ's hard case — the floor
     // is above random chance, parity with the non-residual form's bar
     assert(recall >= 0.1, f"residual ADC recall $recall%.3f below floor")
@@ -512,13 +540,15 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     val probeQ = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val probe = Similarity.knnIvfPqProbe(spark, path, probeQ,
+    val probe = Similarity.knnProbe(spark, path, probeQ,
       "vec_id", "embedding", 5, nProbes = 4)
-    val direct = Similarity.knnIvfPqResidual(emb, "vec_id", "embedding", 10, 5)
+    val direct = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     assert(probe.exceptAll(direct).isEmpty && direct.exceptAll(probe).isEmpty,
       "index probe diverged from the direct residual IVFADC")
     // the probed-cells literal must reach the code scan as a
@@ -533,14 +563,15 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx_probes"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     val probeQ = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def hits(p: Int): Set[(Long, Long)] =
-      Similarity.knnIvfPqProbe(spark, path, probeQ, "vec_id", "embedding", 5, nProbes = p)
+      Similarity.knnProbe(spark, path, probeQ, "vec_id", "embedding", 5, nProbes = p)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = Seq(1, 2, 4).map(p => p -> (hits(p) & truth).size.toDouble / truth.size)
     info("residual IVFADC probe recall@5: " +
@@ -562,15 +593,16 @@ class SimilaritySpec extends AnyFunSuite {
     val old = emb.filter(col("vec_id") % 5 =!= 4)
     val batch = emb.filter(col("vec_id") % 5 === 4)
     val path = "target/test_ivfpq_idx_append"
-    Similarity.buildIvfPqIndex(old, "vec_id", "embedding", path)
+    Similarity.buildAnnIndex(old, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     val cbsBefore = spark.read.parquet(s"$path/codebook").collect().toSet
-    Similarity.appendToIvfPqIndex(batch, "vec_id", "embedding", path)
+    Similarity.appendToAnnIndex(batch, "vec_id", "embedding", path)
     // geometry untouched: append must never re-sample centroids/codebook
     assert(spark.read.parquet(s"$path/codebook").collect().toSet == cbsBefore)
     val probeQ = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val got = Similarity.knnIvfPqProbe(spark, path, probeQ,
+    val got = Similarity.knnProbe(spark, path, probeQ,
       "vec_id", "embedding", 5, nProbes = 4)
     // appended vectors are probe-visible...
     val batchIds = batch.select("vec_id").as[Long].collect().toSet
@@ -644,11 +676,13 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ADC-shortlist exact re-rank: recall never below the plain residual IVFADC") {
     val emb = Tables.embeddings(spark, sf)
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = Similarity.knnIvfPqResidual(emb, "vec_id", "embedding", 10, 5)
+    val plain = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refined = Similarity.knnIvfPqResidualRefined(emb, "vec_id", "embedding", 10, 5)
+    val refined = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq(), refine = Some(20)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val rp = (plain & truth).size.toDouble / truth.size
     val rr = (refined & truth).size.toDouble / truth.size
@@ -663,10 +697,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("trained coarse quantizer: recall-vs-nProbes monotone with a floor at the default") {
     val emb = Tables.embeddings(spark, sf)
-    val truth = Similarity.knnBruteForce(emb, "vec_id", "embedding", 10, 5)
+    val truth = Similarity.knn(emb, "vec_id", "embedding", 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def hits(p: Int): Set[(Long, Long)] =
-      Similarity.knnIvfTrained(emb, "vec_id", "embedding", 10, 5, nProbes = p)
+      Similarity.knn(emb, "vec_id", "embedding", 10, 5, AnnSpec(Coarse.Trained(), nProbes = p))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = Seq(1, 2, 4).map(p => p -> (hits(p) & truth).size.toDouble / truth.size)
     info("trained-IVF recall@5: " +
@@ -682,16 +716,18 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx_trained"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path, coarseK = 16)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Trained(kCoarse = 16), Code.ResidualPq()))
     val params = spark.read.parquet(s"$path/params").collect()(0)
     assert(params.getAs[String]("coarse_src") == "trained")
     assert(params.getAs[Int]("coarse_k") == 16)
     val probeQ = emb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val probe = Similarity.knnIvfPqProbe(spark, path, probeQ,
+    val probe = Similarity.knnProbe(spark, path, probeQ,
       "vec_id", "embedding", 5, nProbes = 4)
-    val direct = Similarity.knnIvfPqResidualTrained(emb, "vec_id", "embedding", 10, 5)
+    val direct = Similarity.knn(emb, "vec_id", "embedding", 10, 5,
+      AnnSpec(Coarse.Trained(), Code.ResidualPq()))
     assert(probe.exceptAll(direct).isEmpty && direct.exceptAll(probe).isEmpty,
       "trained-index probe diverged from the ad-hoc trained IVFADC")
   }
@@ -703,12 +739,13 @@ class SimilaritySpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx_alerts"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path, coarseK = 16)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Trained(kCoarse = 16), Code.ResidualPq()))
     val queries = emb.filter(col("vec_id") < 10)
     val n = emb.count().toInt
     // batch truth: the full candidate set (k = corpus) cut at a
     // threshold that keeps a non-trivial alert set
-    val all = Similarity.knnIvfPqProbe(spark, path,
+    val all = Similarity.knnProbe(spark, path,
       queries, "vec_id", "embedding", n, nProbes = 4)
     val maxDist = all.select("adist").as[Double].collect().sorted.apply(30)
     val expected = all.filter(col("adist") <= maxDist)
@@ -733,26 +770,27 @@ class SimilaritySpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("annAlertsPruned == annAlerts on a fixed query set, scanning ONLY probed cells") {
+  test("batch annAlerts == thresholded index probe, scanning ONLY probed cells") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx_alerts_pruned"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path, coarseK = 16)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Trained(kCoarse = 16), Code.ResidualPq()))
     val queries = emb.filter(col("vec_id") < 10)
     val n = emb.count().toInt
-    val all = Similarity.knnIvfPqProbe(spark, path,
+    val all = Similarity.knnProbe(spark, path,
       queries, "vec_id", "embedding", n, nProbes = 4)
     val maxDist = all.select("adist").as[Double].collect().sorted.apply(30)
-    // annAlerts on a batch frame: the stream-static join collapses to a
-    // plain join over the FULL code table — the semantics reference
-    val full = graft.streaming.DocStreams.annAlerts(
-      queries, "vec_id", "embedding", path, maxDist, nProbes = 4)
-    val pruned = graft.streaming.DocStreams.annAlertsPruned(
+    val expected = all.filter(col("adist") <= maxDist)
+      .select("query_id", "neighbor_id", "adist")
+    // a non-streaming query set knows its probed cells up front: the
+    // code scan is pruned to them instead of the stream-static full read
+    val pruned = graft.streaming.DocStreams.annAlerts(
       queries, "vec_id", "embedding", path, maxDist, nProbes = 4)
     assert(pruned.count() > 0, "pruned alert set is empty")
-    assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty,
-      "pruned alert set diverged from annAlerts on the same query set")
+    assert(pruned.exceptAll(expected).isEmpty && expected.exceptAll(pruned).isEmpty,
+      "pruned alert set diverged from the thresholded batch probe")
     // the point of the operator: the code scan carries a LITERAL
     // partition filter on centroid_id (only probed cells' files read)
     val plan = pruned.queryExecution.executedPlan.toString
@@ -800,6 +838,21 @@ class SimilaritySpec extends AnyFunSuite {
     val plan = kernel.queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllMatchIn(plan).isEmpty,
       s"kernel assignment shuffles:\n$plan")
+    // the multi-probe query side: ProbeCellsBroadcast ≡ crnk <= nProbes
+    val cells = Similarity.ivfCells(centroids).get
+    Seq(2, 4).foreach { p =>
+      val probed = cells.probe(emb.select(col("vec_id"), col("embedding")), "embedding", p)
+        .select(col("vec_id"), col("centroid_id"))
+      val windowP = emb.join(broadcast(centroids))
+        .select(col("vec_id"), col("centroid_id"),
+          graft.functions.VectorFunctions.cosineNative(col("embedding"), col("cv")).as("csim"))
+        .withColumn("crnk", org.apache.spark.sql.functions.row_number().over(wa))
+        .filter(col("crnk") <= p)
+        .select(col("vec_id"), col("centroid_id"))
+      assert(probed.exceptAll(windowP).isEmpty && windowP.exceptAll(probed).isEmpty,
+        s"probe kernel diverged from the window form at nProbes=$p")
+      assert(probed.count() == emb.count() * p, s"nProbes=$p must fan out to $p cells")
+    }
   }
 
   test("ivfResidualRows (index build scan) has no shuffle exchange") {
@@ -807,7 +860,8 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val centroids = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val rows = Similarity.ivfResidualRows(emb, "vec_id", "embedding", centroids)
+    val rows = Similarity.residualRows(emb, "vec_id", "embedding",
+      Similarity.ivfCells(centroids).get)
     assert(rows.count() == emb.count(), "build scan must keep every vector")
     val plan = rows.queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllMatchIn(plan).isEmpty,
@@ -829,9 +883,9 @@ class SimilaritySpec extends AnyFunSuite {
     val errBuf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
     System.setErr(new java.io.PrintStream(errBuf, true))
-    try Similarity.buildIvfPqIndex(
+    try Similarity.buildAnnIndex(
       emb.select(col("vec_id"), col("embedding")).unionByName(flood),
-      "vec_id", "embedding", path)
+      "vec_id", "embedding", path, AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     finally System.setErr(realErr)
     val stats = spark.read.parquet(s"$path/cellstats")
     val total = stats.agg(sum("n")).first().getLong(0)
@@ -848,11 +902,12 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
     val path = "target/test_ivfpq_idx_dims"
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path)
+    Similarity.buildAnnIndex(emb, "vec_id", "embedding", path,
+      AnnSpec(Coarse.Mod(), Code.ResidualPq()))
     val bad = Seq((800000L, Seq.fill(16)(0.5f))).toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfPqIndex(bad, "vec_id", "embedding", path)
+      Similarity.appendToAnnIndex(bad, "vec_id", "embedding", path)
     }
     assert(e.getMessage.contains("dims"), e.getMessage)
   }
