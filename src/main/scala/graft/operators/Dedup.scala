@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -454,7 +455,7 @@ object Dedup {
   def appendToMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
                            path: String): Unit = {
     val spark = docs.sparkSession
-    val p = spark.read.parquet(s"$path/params").collect()(0)
+    val p = Tables.read(spark, s"$path/params").collect()(0)
     val (k, bands) = (p.getInt(0), p.getInt(1))
     docs.select(md5(col(textCol).cast("binary")).as("fp")).distinct()
       .write.mode("append").parquet(s"$path/fingerprints")
@@ -479,9 +480,9 @@ object Dedup {
                          textCol: String, minEst: Double = 0.5,
                          maxBucket: Int = Int.MaxValue): DataFrame = {
     val spark = batch.sparkSession
-    val p = spark.read.parquet(s"$path/params").collect()(0)
+    val p = Tables.read(spark, s"$path/params").collect()(0)
     val (k, bands) = (p.getInt(0), p.getInt(1))
-    val refFp = spark.read.parquet(s"$path/fingerprints")
+    val refFp = Tables.read(spark, s"$path/fingerprints")
       .select(col("fp").as("__fp"))
     val exactKept = materialize(batch
       .withColumn("__fp", md5(col(textCol).cast("binary")))
@@ -492,7 +493,7 @@ object Dedup {
     val bSigs = materialize(minhashSignatures(exactKept, idCol, textCol, k))
     val bBands = bandRows(bSigs, bands, k / bands)
       .select(col("doc_id"), col("band"), col("bkey"))
-    val rBands = capBuckets(spark.read.parquet(s"$path/bands"), maxBucket)
+    val rBands = capBuckets(Tables.read(spark, s"$path/bands"), maxBucket)
     // candidate pairs are ids only (deduped across bands BEFORE the
     // signature fetch, so each pair's agreement is evaluated once)
     val candIds = bBands.as("x")
@@ -500,7 +501,7 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
       .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
       .distinct()
-    val rSigs = spark.read.parquet(s"$path/signatures")
+    val rSigs = Tables.read(spark, s"$path/signatures")
       .select(col("doc_id").as("ref_id"), col("sig").as("sig_b"))
     val nearDrops = candIds
       .join(bSigs.select(col("doc_id"), col("sig").as("sig_a")), Seq("doc_id"))
@@ -651,10 +652,10 @@ object Dedup {
                             textCol: String,
                             minFrac: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
-    val anchorMod = spark.read.parquet(s"$path/params").collect()(0).getInt(0)
+    val anchorMod = Tables.read(spark, s"$path/params").collect()(0).getInt(0)
     cdcContainmentAgainst(
       cdcChunkTable(batch, idCol, textCol, anchorMod),
-      spark.read.parquet(s"$path/chunks"), minFrac)
+      Tables.read(spark, s"$path/chunks"), minFrac)
   }
 
   /** C4: exact n-gram Jaccard on a deterministic sample (quadratic
@@ -984,7 +985,7 @@ object Dedup {
     */
   def lineDedupIndexed(batch: DataFrame, path: String,
                        idCol: String, textCol: String): DataFrame = {
-    val refH = batch.sparkSession.read.parquet(s"$path/linehashes")
+    val refH = Tables.read(batch.sparkSession, s"$path/linehashes")
       .select(col("h").as("__h"))
     val occ = lineOccurrences(batch, idCol, textCol)
     val winners = occ.groupBy(col("__h"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -527,8 +528,8 @@ object Scoring {
                      path: String): DataFrame = {
     val spark = docs.sparkSession
     nbScore(docTokenCounts(docs, idCol, textCol, None),
-      spark.read.parquet(s"$path/terms"),
-      spark.read.parquet(s"$path/meta"), idCol)
+      Tables.read(spark, s"$path/terms"),
+      Tables.read(spark, s"$path/meta"), idCol)
   }
 
   /** C73: per-document Shannon token entropy (nats) — the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
@@ -1186,10 +1187,10 @@ object Similarity {
   private[graft] def refreshIvfCellStats(spark: org.apache.spark.sql.SparkSession,
                                          path: String,
                                          warnFrac: Double = 0.2): Unit = {
-    spark.read.parquet(s"$path/codes")
+    Tables.read(spark, s"$path/codes")
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
-    val rows = spark.read.parquet(s"$path/cellstats").collect()
+    val rows = Tables.read(spark, s"$path/cellstats").collect()
     if (rows.length > 1) {
       val total = rows.map(_.getLong(1)).sum
       val hot = rows.maxBy(_.getLong(1))
@@ -1489,14 +1490,14 @@ object Similarity {
                                        cells: Option[Cells])
 
   private def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): StoredIndex = {
-    val params = spark.read.parquet(s"$path/params").collect()(0)
+    val params = Tables.read(spark, s"$path/params").collect()(0)
     val (m, ksub) = (params.getInt(0), params.getInt(1))
-    val rows = spark.read.parquet(s"$path/codebook")
+    val rows = Tables.read(spark, s"$path/codebook")
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
     // doubles round-trip parquet bit-exactly: probe arithmetic ≡ build-time
     val cbs = Array.tabulate(m)(mi => Array.tabulate(ksub)(j => rows((mi, j))))
     val cells = if (!params.schema.fieldNames.contains("coarse_src")) None
-      else Some(ivfCells(spark.read.parquet(s"$path/centroids")
+      else Some(ivfCells(Tables.read(spark, s"$path/centroids")
         .select(col("centroid_id").cast("bigint").as("centroid_id"), col("cv")))
         .getOrElse(throw new IllegalArgumentException(
           s"IVF index at $path has no centroids — nothing is probeable")))
@@ -1551,7 +1552,7 @@ object Similarity {
     */
   private def readCellCodes(spark: org.apache.spark.sql.SparkSession, path: String,
                             cells: Option[Array[Long]]): DataFrame = {
-    val codesRaw = spark.read.parquet(s"$path/codes")
+    val codesRaw = Tables.read(spark, s"$path/codes")
     def lits(cs: Array[Long]): Seq[Any] = codesRaw.schema("centroid_id").dataType match {
       case org.apache.spark.sql.types.IntegerType => cs.toIndexedSeq.map(_.toInt)
       case org.apache.spark.sql.types.ShortType => cs.toIndexedSeq.map(_.toShort)
@@ -1582,7 +1583,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     ix.cells match {
       case None =>
-        adcScored(spark.read.parquet(s"$path/codes")
+        adcScored(Tables.read(spark, s"$path/codes")
             .select(col("vec_id").as("neighbor_id"), col("codes")),
           distTables(q, "qv", ix.cbs), cellular = false)
       case Some(cells) =>
@@ -1824,7 +1825,7 @@ object Similarity {
                        path: String): Unit = {
     val spark = emb.sparkSession
     GraftFunctions.register(spark)
-    val p = spark.read.parquet(s"$path/params").collect()(0)
+    val p = Tables.read(spark, s"$path/params").collect()(0)
     val (nPlanes, nTables, dims) = (p.getInt(0), p.getInt(1), p.getInt(2))
     bucketRows(emb, idCol, vecCol, nPlanes, nTables, dims)
       .write.mode("append").partitionBy("table").parquet(s"$path/buckets")
@@ -1848,9 +1849,9 @@ object Similarity {
                   k: Int): DataFrame = {
     GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
-    val p = spark.read.parquet(s"$path/params").collect()(0)
+    val p = Tables.read(spark, s"$path/params").collect()(0)
     val (nPlanes, nTables, dims) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val corpus = spark.read.parquet(s"$path/buckets")
+    val corpus = Tables.read(spark, s"$path/buckets")
       .select(col("id").as("neighbor_id"), col("table"), col("bucket"))
     val qb = bucketRows(queries, idCol, vecCol, nPlanes, nTables, dims)
       .select(col("id").as("query_id"), col("table"), col("bucket"))
@@ -1859,7 +1860,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
       .distinct()
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val nv = spark.read.parquet(s"$path/vectors")
+    val nv = Tables.read(spark, s"$path/vectors")
       .select(col("id").as("neighbor_id"), col("vec").as("nv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -592,7 +593,7 @@ object TextAnalysis {
     * before the meta table existed default to [[Bm25Buckets]].
     */
   private def bucketsOf(spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    try spark.read.parquet(s"$path/meta").collect()(0).getInt(0)
+    try Tables.read(spark, s"$path/meta").collect()(0).getInt(0)
     catch { case _: org.apache.spark.sql.AnalysisException => Bm25Buckets }
 
   /** Build the persisted BM25 index — the production form of
@@ -642,7 +643,7 @@ object TextAnalysis {
       .repartition(col("tkey"))
       .sortWithinPartitions(col("tkey"), col("token"))
       .write.mode("overwrite").partitionBy("tkey").parquet(s"$path/postings")
-    spark.read.parquet(s"$path/postings") // token column only — pruned scan
+    Tables.read(spark, s"$path/postings") // token column only — pruned scan
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path/df")
     docs.select(size(tokens(col(textCol))).cast("long").as("__l"))
@@ -695,13 +696,13 @@ object TextAnalysis {
     val terms = queries.flatMap(_._2).distinct.sorted
     val buckets = bucketsOf(spark, path)
     val tkeys = terms.map(tkeyOf(_, buckets)).distinct
-    val pairs = spark.read.parquet(s"$path/postings")
+    val pairs = Tables.read(spark, s"$path/postings")
       .filter(col("tkey").isin(tkeys: _*) && col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"), col("tf"), col("dl"))
-    val dfreq = spark.read.parquet(s"$path/df")
+    val dfreq = Tables.read(spark, s"$path/df")
       .filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = Tables.read(spark, s"$path/stats")
       .agg(sum(col("__n")).as("__n"), sum(col("__tot")).as("__tot"))
     bm25Score(pairs, dfreq, stats, queries, k)
   }

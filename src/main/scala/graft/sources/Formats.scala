@@ -14,7 +14,7 @@ object Formats {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite")

@@ -56,7 +56,7 @@ object Layouts {
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 
   /** Write as a bucketed managed table (requires a warehouse-enabled
     * session). `nBuckets` should match downstream shuffle parallelism.
@@ -143,9 +143,9 @@ object Layouts {
     */
   def verifyTrainingShards(spark: SparkSession, path: String,
                            idCol: String, textCol: String): (Long, Long) = {
-    val mani = spark.read.parquet(s"$path/manifest")
+    val mani = Tables.read(spark, s"$path/manifest")
       .select(col("shard_id"), col("n_docs"), col("n_tokens"), col("digest"))
-    val data = spark.read.parquet(s"$path/data")
+    val data = Tables.read(spark, s"$path/data")
     val derived = graft.operators.Curation.shardManifest(
       data.select(col(idCol),
         size(graft.functions.TextFunctions.tokens(col(textCol)))
@@ -168,7 +168,7 @@ object Layouts {
     val before = parquetFileCount(src)
     val bytes = parquetBytes(src)
     val nFiles = math.max(1, math.ceil(bytes / (targetMb * 1e6)).toInt)
-    spark.read.parquet(src).coalesce(nFiles)
+    Tables.read(spark, src).coalesce(nFiles)
       .write.mode("overwrite").parquet(dest)
     (before, parquetFileCount(dest))
   }

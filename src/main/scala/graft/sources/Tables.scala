@@ -1,21 +1,83 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's star schema + text/vector tables.
   *
   * One parquet file per table under an `sf` directory (TESTDATA.md).
-  * Reads are plain `spark.read.parquet` so Catalyst pushes filters and
-  * prunes columns into the scan; at 100 TB the same code reads a
-  * partitioned parquet/lakehouse layout unchanged.
+  * Every library parquet read goes through [[read]]: a file-source
+  * parquet scan, so Catalyst pushes filters and prunes columns into
+  * it, whose schema is inferred once per unchanged set of files; at
+  * 100 TB the same code reads a partitioned parquet/lakehouse layout
+  * unchanged.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Parquet at `path`, with the schema Spark's own inference returned
+    * for the same files the last time. Inference is a Spark job (one
+    * footer-reading task) on every bare parquet read, which dominates
+    * a small query's driver floor; a repeat read passes the remembered
+    * schema instead and launches no job.
+    *
+    * The memo answers only when everything inference depends on is
+    * unchanged: it is keyed by `path` and the session's
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` settings
+    * (the `events` nanos encoding reads as BIGINT or not by
+    * `nanosAsLong`), and an entry holds only while the read's own file
+    * listing — qualified root paths, each leaf file's path, length and
+    * modification time — equals the listing it was inferred from. So a
+    * hit lists the files once, like a plain read; an overwritten or
+    * appended table re-infers. Failures are never remembered: a read
+    * that cannot be inferred throws what a plain parquet read throws,
+    * every time.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    })
+    Option(inferred.get(key))
+      .flatMap { case (files, schema) =>
+        scala.util.Try(spark.read.schema(schema).parquet(path)).toOption
+          .filter(df => listing(df).contains(files))
+      }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        listing(df).foreach(files => inferred.put(key, (files, df.schema)))
+        df
+      }
+  }
+
+  /** Bound of [[read]]'s memo, in entries (least recently used out). */
+  private val InferredMaxEntries = 1024
+
+  private type Listing = (Seq[String], Set[(String, Long, Long)])
+
+  private val inferred = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Map[String, String]), (Listing, StructType)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Map[String, String]), (Listing, StructType)]): Boolean =
+        size() > InferredMaxEntries
+    })
+
+  /** The file listing the read's relation was built on, if it has one. */
+  private def listing(df: DataFrame): Option[Listing] =
+    Some(df.queryExecution.analyzed)
+      .collect { case lr: LogicalRelation => lr.relation }
+      .collect { case fs: HadoopFsRelation => fs.location }
+      .collect { case ix: PartitioningAwareFileIndex =>
+        (ix.rootPaths.map(_.toString),
+          ix.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet)
+      }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

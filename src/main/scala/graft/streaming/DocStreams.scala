@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -223,7 +224,7 @@ object DocStreams {
     import org.apache.spark.unsafe.types.UTF8String
     val spark = docs.sparkSession
     // DECIMAL(18,6) × 10⁶ is exact → fixed-point longs
-    val capped = spark.read.parquet(s"$modelPath/terms")
+    val capped = Tables.read(spark, s"$modelPath/terms")
       .select(col("token"), (col("term") * 1000000L).cast("long").as("micros"))
       .orderBy(abs(col("micros")).desc, col("token")).limit(topK)
       .collect()
@@ -231,7 +232,7 @@ object DocStreams {
     capped.foreach(r => map.put(UTF8String.fromString(r.getString(0)),
       java.lang.Long.valueOf(r.getLong(1))))
     val bc = spark.sparkContext.broadcast(map)
-    val metaRow = spark.read.parquet(s"$modelPath/meta")
+    val metaRow = Tables.read(spark, s"$modelPath/meta")
       .select((col("prior") * 1000000L).cast("long")).collect()(0)
     require(!metaRow.isNullAt(0),
       "NB model has no defined prior (trained on a single class) — refusing to gate on it")
@@ -269,7 +270,7 @@ object DocStreams {
                   maxCe: Double = 10.0): DataFrame = {
     import org.apache.spark.unsafe.types.UTF8String
     val spark = docs.sparkSession
-    val capped = spark.read.parquet(s"$modelPath/terms")
+    val capped = Tables.read(spark, s"$modelPath/terms")
       .select(col("gram"), (col("term") * 1000000L).cast("long").as("micros"),
         col("c2"))
       .orderBy(col("c2").desc, col("gram")).limit(topK)
@@ -278,7 +279,7 @@ object DocStreams {
     capped.foreach(r => map.put(UTF8String.fromString(r.getString(0)),
       java.lang.Long.valueOf(r.getLong(1))))
     val bc = spark.sparkContext.broadcast(map)
-    val oovRow = spark.read.parquet(s"$modelPath/meta")
+    val oovRow = Tables.read(spark, s"$modelPath/meta")
       .select((col("oov_penalty") * 1000000L).cast("long")).collect()(0)
     require(!oovRow.isNullAt(0),
       "LM model has no OOV penalty (trained on a corpus with no 2-token doc) — refusing to gate on it")
@@ -337,7 +338,7 @@ object DocStreams {
                         evalPath: String, minCos: Double = 0.9): DataFrame = {
     import org.apache.spark.sql.classic.GraftPlanFactory
     val spark = vecs.sparkSession
-    val evalRows = spark.read.parquet(evalPath)
+    val evalRows = Tables.read(spark, evalPath)
       .select(col(idCol).cast("long"), col(vecCol)).collect()
     require(evalRows.nonEmpty,
       s"semanticAdmission: eval set at $evalPath is empty — an empty gate " +
@@ -362,11 +363,11 @@ object DocStreams {
     val terms = queries.flatMap(_._2).distinct.sorted
     // df/stats are stored as per-batch PARTIALS (append-friendly) —
     // aggregate them exactly like the batch probe does
-    val dfMap = spark.read.parquet(s"$indexPath/df")
+    val dfMap = Tables.read(spark, s"$indexPath/df")
       .filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val st = spark.read.parquet(s"$indexPath/stats")
+    val st = Tables.read(spark, s"$indexPath/stats")
       .agg(sum(col("__n")).as("__n"), sum(col("__tot")).as("__tot"))
       .collect()(0)
     val (n, tot) = (st.getLong(0), st.getLong(1))
@@ -475,7 +476,7 @@ object DocStreams {
                         indexPath: String, idCol: String, urlCol: String,
                         tsCol: String, watermark: String = "2 hours"): DataFrame = {
     import graft.operators.Html
-    val seen = urls.sparkSession.read.parquet(s"$indexPath/urls")
+    val seen = Tables.read(urls.sparkSession, s"$indexPath/urls")
       .select(col("canonical_url").as("__seen"))
     val canon = urls
       .withWatermark(tsCol, watermark)
@@ -548,7 +549,7 @@ object DocStreams {
     */
   def fetchDedupStream(fetches: DataFrame, uriCol: String,
                        blockCol: String, indexPath: String): DataFrame = {
-    val idx = fetches.sparkSession.read.parquet(indexPath)
+    val idx = Tables.read(fetches.sparkSession, indexPath)
       .select(col("target_uri").as("__iu"), col("digest").as("prev_digest"))
     val carry = fetches.columns.filter(c => c != blockCol && c != uriCol).map(col)
     fetches
@@ -602,7 +603,7 @@ object DocStreams {
                          watermark: String = "2 hours",
                          window: String = "1 minute"): DataFrame = {
     import graft.operators.Dedup
-    val refH = docs.sparkSession.read.parquet(s"$indexPath/linehashes")
+    val refH = Tables.read(docs.sparkSession, s"$indexPath/linehashes")
       .select(col("h").as("__h"))
     val arr = Dedup.lineArr(textCol)
     // (line_no, line) pairs surviving the within-doc first-occurrence

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -39,7 +40,7 @@ object EventStreams {
     */
   def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val observedTs = spark.read.parquet(s"$sfDir/events.parquet")
+    val observedTs = Tables.read(spark, s"$sfDir/events.parquet")
       .schema("ts").dataType
     val raw = spark.readStream
       .schema(rawSchema(observedTs))

@@ -48,13 +48,17 @@ class PlanAuditSpec extends AnyFunSuite {
   test("hint policy: no compile-time broadcast hint on any SF-growing table, all queries") {
     import org.apache.spark.sql.catalyst.plans.logical.{ResolvedHint, BROADCAST}
     val growKeys = Set("c_custkey", "s_suppkey", "o_orderkey", "l_orderkey")
+    // a query that throws is recorded as an offender, and the audit
+    // goes on to the rest: one failure must not hide the others
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      fn(spark, sf).queryExecution.analyzed.collect {
-        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
-          val hit = h.child.output.map(_.name).toSet.intersect(growKeys)
-          if (hit.nonEmpty) Some(s"$name: broadcast hint on subtree carrying ${hit.mkString(",")}")
-          else None
-      }.flatten
+      scala.util.Try(fn(spark, sf).queryExecution.analyzed).fold(
+        e => Seq(s"$name: threw $e"),
+        _.collect {
+          case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+            val hit = h.child.output.map(_.name).toSet.intersect(growKeys)
+            if (hit.nonEmpty) Some(s"$name: broadcast hint on subtree carrying ${hit.mkString(",")}")
+            else None
+        }.flatten)
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

@@ -250,6 +250,23 @@ class SimilaritySpec extends AnyFunSuite {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("exactRowCount: 64 files sum footers, 65 files take the count() fallback") {
+    def rowsAndJobs(nFiles: Int): (Long, Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_rowcount_files")
+        .resolve("t").toString
+      spark.range(0, 2L * nFiles, 1, nFiles).write.parquet(dir)
+      val df = spark.read.parquet(dir)
+      assert(df.inputFiles.length == nFiles)
+      var n = 0L
+      val jobs = JobCount.during(spark) { n = Similarity.exactRowCount(df) }
+      (n, jobs)
+    }
+    assert(rowsAndJobs(64) == ((128L, 0)))
+    val (n, jobs) = rowsAndJobs(65)
+    assert(n == 130L)
+    assert(jobs >= 1, "a 65-file scan must count with a job, not 65 driver footer reads")
+  }
+
   test("minhashLsh ids-only band join ≡ the sig-carrying reference form (r16 restructure)") {
     // round 16 rebuilt minhashLsh so the band self-join ships
     // (doc_id, band, bkey) only and the agreement kernel runs once per
