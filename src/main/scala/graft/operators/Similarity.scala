@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.sources.Tables
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.plans.GraftFunctions
@@ -354,12 +357,12 @@ object Similarity {
     * (vec_id, cluster_id).
     *
     * Scale shape (the classic Spark k-means): centroids are a k×dims
-    * driver-side codebook (tiny); each iteration is ONE map-side
-    * assignment scan (argmin over k literal centroids — codegen'd
-    * `graft_dot`, no shuffle, no join) plus ONE partial-agg'd
-    * (cluster, dim) shuffle of at most k×dims rows per partition for
-    * the mean recompute. Nothing driver-side ever exceeds k×dims
-    * numbers.
+    * driver-side codebook (tiny); each iteration is ONE map-only job
+    * ([[lloydRound]]) over a vector scan planned once per training
+    * call: every partition folds its rows' assignments (the
+    * [[kmeansAssignExpr]] kernel) into a dense k×dims accumulator and
+    * the driver sums the partials. No shuffle, no join, no per-round
+    * planning; each partial is 3×k×dims longs.
     *
     * Determinism (DuckDB-oracle bit-parity):
     *  - init: the k vectors with the smallest (portable md5 hash, id);
@@ -370,7 +373,8 @@ object Similarity {
     *    any order) — double-sum nondeterminism and engine-specific
     *    decimal rounding both sidestepped; the tiny quantization is
     *    irrelevant to cluster semantics and documented here;
-    *  - empty clusters keep their previous centroid.
+    *  - empty clusters, and components whose elements are all null,
+    *    keep their previous value.
     */
   /** Map-side cluster assignment against a fixed centroid codebook —
     * the "predict" half of [[kmeans]], usable on ANY DataFrame or
@@ -385,11 +389,11 @@ object Similarity {
 
   /** The trained codebook alone (cluster id = array index) — collect it
     * once, then classify batches or streams with [[kmeansAssignExpr]].
+    * A vector longer than the centroid it is assigned to fails the call.
     */
   def kmeansCentroids(emb: DataFrame, idCol: String, vecCol: String,
                       k: Int = 8, iters: Int = 2): Array[Array[Double]] = {
     GraftFunctions.register(emb.sparkSession)
-    val Q = 1048576.0 // 2^20
     val seeds = emb
       .select(col(idCol).as("sid"), col(vecCol).as("sv"),
         graft.functions.PortableHash.portableHash(col(idCol)).as("__h"))
@@ -398,41 +402,78 @@ object Similarity {
     var centroids: Array[Array[Double]] =
       seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
     val dims = centroids.headOption.map(_.length).getOrElse(0)
-
-    // argmin via least() on (score, cid) structs — one expression, each
-    // child evaluated once. (A when(b < a, b).otherwise(a) fold copies
-    // the accumulated tree at every step: 2^k duplicates of the first
-    // struct, blowing past codegen limits into exponential interpreted
-    // evaluation — measured 19.8s vs 1.3s for this k=8 assignment.)
-    // NOTE (round 15): the optimizer collapses the assignment ABOVE
-    // the Generate here, so the argmin kernel re-runs per EXPLODED row
-    // (dims× per vector). For PQ training (2048 mults + struct/Decimal
-    // allocation per eval) that recompute dominated and
-    // pqCodebooksTrained moved the kernel into the generator argument;
-    // for THIS k=8×64 argmin the recompute is ~50 ms/iteration at
-    // sf0.1 while the alternative (dims per-position sum aggregates
-    // under the assignment key) measured 0.27 s/iteration SLOWER —
-    // the 129-buffer HashAggregate costs more than the recompute it
-    // saves. Measured both; the explode form stays.
-    var it = 0
-    while (it < iters && dims > 0) {
-      val sums = emb
-        .select(kmeansAssignExpr(col(vecCol), centroids).as("cid"),
-          posexplode(col(vecCol)).as(Seq("pos", "v")))
-        .select(col("cid"), col("pos"),
-          floor(col("v").cast("double") * Q + lit(0.5)).cast("long").as("q"))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = centroids.map(_.clone())
-      sums.foreach { r =>
-        val cid = r.getInt(0); val pos = r.getInt(1)
-        next(cid)(pos) = r.getLong(2).toDouble / Q / r.getLong(3)
-      }
-      centroids = next
-      it += 1
+    if (iters <= 0 || dims == 0) return centroids
+    val vecs = emb.select(col(vecCol)).queryExecution.toRdd
+    val width = centroids.map(_.length).max
+    (0 until iters).foreach { _ =>
+      val cs = centroids
+      val cc = cs.map(_.foldLeft(0.0)((acc, x) => acc + x * x)) // KmeansArgminExpr's ‖c‖²
+      centroids = lloydRound(vecs, cs, width, v => {
+        val cid = graft.functions.GraftKmeans.argmin(v, cs, cc)
+        require(v.numElements() <= cs(cid).length, s"a ${v.numElements()}-element " +
+          s"vector is longer than its ${cs(cid).length}-element centroid $cid")
+        Array(cid)
+      })
     }
     centroids
+  }
+
+  /** One Lloyd round as ONE map-only job over `vecs`, the planned-once
+    * scan of a single `array<float>` column. `prev` is the table of
+    * cells (`prev(c)(j)` = component j of cell c); `cellsOf` assigns a
+    * non-null vector's consecutive `width`-element slices to cells (one
+    * cell per slice, elements past the last slice are ignored). Every
+    * partition folds its rows into a dense (cell, component)
+    * accumulator — the sum of `floor(v·2²⁰ + 0.5)` longs over non-null
+    * elements, the element count (nulls included) and the non-null
+    * count — and the driver sums the partials. Long sums are exact in
+    * any order (and throw on overflow, like the SQL `sum`), so the new
+    * means `sum / 2²⁰ / count` do not depend on the partitioning. A
+    * (cell, component) with no non-null element keeps `prev`'s value.
+    *
+    * Each round re-runs the scan, not its planning: the RDD is built
+    * once per training call, and an exchange inside it is materialized
+    * once and read again by each round.
+    */
+  private def lloydRound(vecs: RDD[InternalRow], prev: Array[Array[Double]], width: Int,
+                         cellsOf: ArrayData => Array[Int]): Array[Array[Double]] = {
+    val Q = 1048576.0 // 2^20
+    val n = prev.length * width
+    val partials = vecs.mapPartitions { rows =>
+      val acc = new Array[Long](3 * n) // [sum | count | non-null count]
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val v = r.getArray(0)
+          val cells = cellsOf(v)
+          var s = 0
+          while (s < cells.length) {
+            val off = s * width
+            val base = cells(s) * width - off
+            val end = math.min(v.numElements(), off + width)
+            var p = off
+            while (p < end) {
+              val i = base + p
+              acc(n + i) += 1
+              if (!v.isNullAt(p)) {
+                acc(i) = Math.addExact(acc(i), math.floor(v.getFloat(p).toDouble * Q + 0.5).toLong)
+                acc(2 * n + i) += 1
+              }
+              p += 1
+            }
+            s += 1
+          }
+        }
+      }
+      Iterator.single(acc)
+    }.collect()
+    val acc = new Array[Long](3 * n)
+    partials.foreach(a => (0 until 3 * n).foreach(i => acc(i) = Math.addExact(acc(i), a(i))))
+    Array.tabulate(prev.length) { c =>
+      Array.tabulate(prev(c).length) { j =>
+        val i = c * width + j
+        if (acc(2 * n + i) == 0L) prev(c)(j) else acc(i).toDouble / Q / acc(n + i)
+      }
+    }
   }
 
   def kmeans(emb: DataFrame, idCol: String, vecCol: String, k: Int = 8,
@@ -940,72 +981,37 @@ object Similarity {
   /** [[pqCodebooks]] refined with per-subspace Lloyd — the TRAINED
     * configuration (Jégou et al. 2011 §III.A: PQ codebooks are k-means
     * codebooks per subspace; the sampled form above is only the init).
-    * Each iteration assigns every training vector's m subspace slices
-    * to their nearest code in ONE kernel scan (graft.plans.PqEncodeExpr
-    * — the same codegen'd argmin the encode stage runs, so training
-    * and encoding can never disagree on assignment), then recomputes
-    * each (subspace, code) mean on the 2^-20 fixed-point grid exactly
-    * like [[kmeansCentroids]] (per-component longs summed — exact in
-    * any order, engine-portable; empty codes keep their previous
-    * entry). Scale shape: one partial-agg'd shuffle of at most
-    * m×ksub×dsub rows per partition per iteration; driver state stays
-    * m×ksub×dsub doubles — broadcast-sized at any corpus size.
-    * `trainMod` strides the training sample like the trained coarse
-    * quantizer (codebook quality needs only a sample).
+    * Each iteration is one [[lloydRound]] over a training scan planned
+    * once: every vector's m subspace slices are assigned to their
+    * nearest code by the encode kernel (graft.functions.GraftPq.encode
+    * — the same argmin the encode stage runs, so training and encoding
+    * can never disagree on assignment), and each (subspace, code) mean
+    * is recomputed on the 2^-20 fixed-point grid exactly like
+    * [[kmeansCentroids]] (per-component longs summed — exact in any
+    * order, engine-portable; a (subspace, code, component) with no
+    * non-null contribution keeps its previous entry). Scale shape: one
+    * map-only job per iteration, no shuffle; each partition's partial
+    * and the driver state are m×ksub×dsub numbers — broadcast-sized at
+    * any corpus size. `trainMod` strides the training sample like the
+    * trained coarse quantizer (codebook quality needs only a sample).
     */
   private[graft] def pqCodebooksTrained(emb: DataFrame, idCol: String, vecCol: String,
                                         m: Int = 16, ksub: Int = 32,
                                         iters: Int = 2,
                                         trainMod: Int = 1): Array[Array[Array[Double]]] = {
-    import org.apache.spark.sql.classic.GraftPlanFactory
     GraftFunctions.register(emb.sparkSession)
     val train = if (trainMod == 1) emb else emb.filter(col(idCol) % trainMod === 0)
     var cbs = pqCodebooks(emb, idCol, vecCol, m, ksub)
-    val dsub = cbs.head.head.length
-    val Q = 1048576.0 // 2^20, the kmeansCentroids fixed-point grid
-    var it = 0
-    // Generator-argument placement: posexplode(enc.codes) evaluates
-    // the encode kernel ONCE per input row. The previous
-    // select(enc.codes, posexplode(vec)) form let the optimizer
-    // collapse the kernel ABOVE the Generate, re-encoding every vector
-    // dims× (measured: 1.2 s/iteration on 2000 rows at sf0.1). The
-    // subspace slice sums ride dsub per-position aggregates under the
-    // (mi, code) group — bit-identical values: same floor(v·2^20+0.5)
-    // longs, same per-(mi,code,spos) counts (when-guards reproduce the
-    // explode form's ragged-vector semantics; a (mi,code,spos) cell
-    // with zero contributions keeps its previous codebook entry
-    // exactly as a missing group did).
-    while (it < iters) {
-      val enc = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
-        GraftPlanFactory.expression(col(vecCol)), cbs))
-      val aggs = (0 until dsub).flatMap { sp =>
-        val idx = col("mi") * dsub + sp + 1
-        val inRange = size(col("__v")) >= idx
-        Seq(
-          sum(when(inRange,
-            floor(element_at(col("__v"), idx).cast("double") * Q + lit(0.5))
-              .cast("long"))).as(s"s$sp"),
-          sum(when(inRange, lit(1L))).as(s"n$sp"))
-      }
-      val sums = train
-        .select(posexplode(enc.getField("codes")).as(Seq("mi", "code")),
-          col(vecCol).as("__v"))
-        .groupBy(col("mi"), col("code"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-      val next = cbs.map(_.map(_.clone()))
-      sums.foreach { r =>
-        val mi = r.getInt(0); val code = r.getInt(1)
-        var sp = 0
-        while (sp < dsub) {
-          val si = 2 + 2 * sp
-          if (!r.isNullAt(si) && r.getLong(si + 1) > 0L)
-            next(mi)(code)(sp) = r.getLong(si).toDouble / Q / r.getLong(si + 1)
-          sp += 1
-        }
-      }
-      cbs = next
-      it += 1
+    if (iters <= 0) return cbs
+    val (nCodes, dsub) = (cbs.head.length, cbs.head.head.length)
+    val vecs = train.select(col(vecCol)).queryExecution.toRdd
+    (0 until iters).foreach { _ =>
+      val cb = cbs
+      val cc = cb.map(_.map(_.foldLeft(0.0)((acc, x) => acc + x * x))) // PqEncodeExpr's ‖c‖²
+      cbs = lloydRound(vecs, cb.flatten, dsub, v => {
+        val codes = graft.functions.GraftPq.encode(v, cb, cc).getArray(0)
+        Array.tabulate(m)(mi => mi * nCodes + codes.getInt(mi))
+      }).grouped(nCodes).toArray
     }
     cbs
   }

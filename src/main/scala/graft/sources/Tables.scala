@@ -31,7 +31,9 @@ object Tables {
     * (the `events` nanos encoding reads as BIGINT or not by
     * `nanosAsLong`), and an entry holds only while the read's own file
     * listing — qualified root paths, each leaf file's path, length and
-    * modification time — equals the listing it was inferred from. So a
+    * modification time — equals the listing it was inferred from
+    * (compared by a SHA-256 of the sorted listing, so an entry does not
+    * grow with the table's file count). So a
     * hit lists the files once, like a plain read; an overwritten or
     * appended table re-infers. Failures are never remembered: a read
     * that cannot be inferred throws what a plain parquet read throws,
@@ -53,10 +55,13 @@ object Tables {
       }
   }
 
-  /** Bound of [[read]]'s memo, in entries (least recently used out). */
+  /** Bound of [[read]]'s memo, in entries (least recently used out).
+    * Each entry holds a listing digest, not the listing, so this also
+    * bounds its bytes.
+    */
   private val InferredMaxEntries = 1024
 
-  private type Listing = (Seq[String], Set[(String, Long, Long)])
+  private type Listing = Seq[Byte] // SHA-256 of the sorted listing
 
   private val inferred = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, Map[String, String]), (Listing, StructType)](
@@ -66,14 +71,24 @@ object Tables {
         size() > InferredMaxEntries
     })
 
-  /** The file listing the read's relation was built on, if it has one. */
+  /** The digest of the file listing the read's relation was built on
+    * (sorted root paths, then sorted leaf path/length/mtime lines), if
+    * it has one.
+    */
   private def listing(df: DataFrame): Option[Listing] =
     Some(df.queryExecution.analyzed)
       .collect { case lr: LogicalRelation => lr.relation }
       .collect { case fs: HadoopFsRelation => fs.location }
       .collect { case ix: PartitioningAwareFileIndex =>
-        (ix.rootPaths.map(_.toString),
-          ix.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet)
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        def add(lines: Seq[String]): Unit = lines.sorted.foreach { l =>
+          md.update(l.getBytes(java.nio.charset.StandardCharsets.UTF_8)); md.update('\n'.toByte)
+        }
+        add(ix.rootPaths.map(_.toString))
+        md.update(0.toByte) // roots end; file paths cannot contain NUL
+        add(ix.allFiles().toSeq.map(f =>
+          s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}"))
+        md.digest().toSeq
       }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =

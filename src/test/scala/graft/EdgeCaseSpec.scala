@@ -165,6 +165,23 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(a.filter(col("cluster_id") < 0 || col("cluster_id") >= 3).count() == 0)
   }
 
+  test("kmeans: a component that is null in every member keeps its previous value") {
+    // position 2 is null in every vector, so no (cluster, 2) cell ever
+    // has a non-null element: its mean is undefined and the centroid
+    // keeps the seed's component (a null seed element reads as 0.0),
+    // as the DuckDB twin's coalesce(..., p.cval) does
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    val emb = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq[Any](1.0f, 2.0f, null, 4.0f)),
+      Row(2L, Seq[Any](3.0f, 4.0f, null, 8.0f))), 2), schema)
+    val cs = Similarity.kmeansCentroids(emb, "vec_id", "embedding", k = 1, iters = 2)
+    assert(cs.map(_.toSeq).toSeq == Seq(Seq(2.0, 3.0, 0.0, 6.0)))
+    val two = Similarity.kmeansCentroids(emb, "vec_id", "embedding", k = 2, iters = 1)
+    assert(two.length == 2 && two.forall(_(2) == 0.0))
+  }
+
   test("mixture-audit ops degrade cleanly on empty/degenerate input") {
     import org.apache.spark.sql.functions._
     import graft.operators.Scoring

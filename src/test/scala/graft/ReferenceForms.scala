@@ -132,4 +132,121 @@ object ReferenceForms {
       .filter(col("rnk") <= k)
       .withColumn("adist", col("adist").cast("double"))
   }
+
+  /** The per-round re-planned form of [[Similarity.kmeansCentroids]]:
+    * each Lloyd round is a `posexplode` → `groupBy(cid, pos)` →
+    * `collect()` query (two jobs and a shuffle per round). A
+    * (cluster, position) whose elements are all null makes `sum` null
+    * and the round throws.
+    */
+  def kmeansCentroidsExplode(emb: DataFrame, idCol: String, vecCol: String,
+                              k: Int = 8, iters: Int = 2): Array[Array[Double]] = {
+    GraftFunctions.register(emb.sparkSession)
+    val Q = 1048576.0 // 2^20
+    val seeds = emb
+      .select(col(idCol).as("sid"), col(vecCol).as("sv"),
+        graft.functions.PortableHash.portableHash(col(idCol)).as("__h"))
+      .orderBy(col("__h"), col("sid")).limit(k) // TakeOrderedAndProject
+      .collect()
+    var centroids: Array[Array[Double]] =
+      seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    val dims = centroids.headOption.map(_.length).getOrElse(0)
+
+    // argmin via least() on (score, cid) structs — one expression, each
+    // child evaluated once. (A when(b < a, b).otherwise(a) fold copies
+    // the accumulated tree at every step: 2^k duplicates of the first
+    // struct, blowing past codegen limits into exponential interpreted
+    // evaluation — measured 19.8s vs 1.3s for this k=8 assignment.)
+    // NOTE (round 15): the optimizer collapses the assignment ABOVE
+    // the Generate here, so the argmin kernel re-runs per EXPLODED row
+    // (dims× per vector). For PQ training (2048 mults + struct/Decimal
+    // allocation per eval) that recompute dominated and
+    // pqCodebooksTrained moved the kernel into the generator argument;
+    // for THIS k=8×64 argmin the recompute is ~50 ms/iteration at
+    // sf0.1 while the alternative (dims per-position sum aggregates
+    // under the assignment key) measured 0.27 s/iteration SLOWER —
+    // the 129-buffer HashAggregate costs more than the recompute it
+    // saves. Measured both; the explode form stays.
+    var it = 0
+    while (it < iters && dims > 0) {
+      val sums = emb
+        .select(Similarity.kmeansAssignExpr(col(vecCol), centroids).as("cid"),
+          posexplode(col(vecCol)).as(Seq("pos", "v")))
+        .select(col("cid"), col("pos"),
+          floor(col("v").cast("double") * Q + lit(0.5)).cast("long").as("q"))
+        .groupBy(col("cid"), col("pos"))
+        .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
+        .collect()
+      val next = centroids.map(_.clone())
+      sums.foreach { r =>
+        val cid = r.getInt(0); val pos = r.getInt(1)
+        next(cid)(pos) = r.getLong(2).toDouble / Q / r.getLong(3)
+      }
+      centroids = next
+      it += 1
+    }
+    centroids
+  }
+
+  /** The per-round re-planned form of [[Similarity.pqCodebooksTrained]]:
+    * each round is a `posexplode(codes)` → `groupBy(mi, code)` query
+    * with 2×dsub guarded sum aggregates (two jobs and a shuffle per
+    * round).
+    */
+  def pqCodebooksTrainedExplode(emb: DataFrame, idCol: String, vecCol: String,
+                                  m: Int = 16, ksub: Int = 32,
+                                  iters: Int = 2,
+                                  trainMod: Int = 1): Array[Array[Array[Double]]] = {
+    import org.apache.spark.sql.classic.GraftPlanFactory
+    GraftFunctions.register(emb.sparkSession)
+    val train = if (trainMod == 1) emb else emb.filter(col(idCol) % trainMod === 0)
+    var cbs = Similarity.pqCodebooks(emb, idCol, vecCol, m, ksub)
+    val dsub = cbs.head.head.length
+    val Q = 1048576.0 // 2^20, the kmeansCentroids fixed-point grid
+    var it = 0
+    // Generator-argument placement: posexplode(enc.codes) evaluates
+    // the encode kernel ONCE per input row. The previous
+    // select(enc.codes, posexplode(vec)) form let the optimizer
+    // collapse the kernel ABOVE the Generate, re-encoding every vector
+    // dims× (measured: 1.2 s/iteration on 2000 rows at sf0.1). The
+    // subspace slice sums ride dsub per-position aggregates under the
+    // (mi, code) group — bit-identical values: same floor(v·2^20+0.5)
+    // longs, same per-(mi,code,spos) counts (when-guards reproduce the
+    // explode form's ragged-vector semantics; a (mi,code,spos) cell
+    // with zero contributions keeps its previous codebook entry
+    // exactly as a missing group did).
+    while (it < iters) {
+      val enc = GraftPlanFactory.column(graft.plans.PqEncodeExpr(
+        GraftPlanFactory.expression(col(vecCol)), cbs))
+      val aggs = (0 until dsub).flatMap { sp =>
+        val idx = col("mi") * dsub + sp + 1
+        val inRange = size(col("__v")) >= idx
+        Seq(
+          sum(when(inRange,
+            floor(element_at(col("__v"), idx).cast("double") * Q + lit(0.5))
+              .cast("long"))).as(s"s$sp"),
+          sum(when(inRange, lit(1L))).as(s"n$sp"))
+      }
+      val sums = train
+        .select(posexplode(enc.getField("codes")).as(Seq("mi", "code")),
+          col(vecCol).as("__v"))
+        .groupBy(col("mi"), col("code"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect()
+      val next = cbs.map(_.map(_.clone()))
+      sums.foreach { r =>
+        val mi = r.getInt(0); val code = r.getInt(1)
+        var sp = 0
+        while (sp < dsub) {
+          val si = 2 + 2 * sp
+          if (!r.isNullAt(si) && r.getLong(si + 1) > 0L)
+            next(mi)(code)(sp) = r.getLong(si).toDouble / Q / r.getLong(si + 1)
+          sp += 1
+        }
+      }
+      cbs = next
+      it += 1
+    }
+    cbs
+  }
 }

@@ -20,13 +20,21 @@ import graft.sources.Tables
   * marker is seen every earlier job start has been delivered too.
   */
 object JobCount {
-  def during(spark: SparkSession)(body: => Unit): Int = {
+  def during(spark: SparkSession)(body: => Unit): Int = jobsAndShuffleStages(spark)(body)._1
+
+  /** The jobs, and the shuffle-map stages among their stages. */
+  def jobsAndShuffleStages(spark: SparkSession)(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]()
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    def group(p: java.util.Properties): String =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
     val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (group(js.properties) == "graft-job-count") // all but the result stage
+          shuffleStages.addAndGet(js.stageInfos.length - 1)
+        groups.add(group(js.properties))
+      }
     }
     sc.addSparkListener(l)
     try {
@@ -38,7 +46,7 @@ object JobCount {
       while (!groups.contains("graft-job-count-marker") && System.nanoTime() < deadline)
         Thread.sleep(10)
       assert(groups.contains("graft-job-count-marker"), "listener never saw the marker job")
-      groups.asScala.count(_ == "graft-job-count")
+      (groups.asScala.count(_ == "graft-job-count"), shuffleStages.get)
     } finally sc.removeSparkListener(l)
   }
 }
