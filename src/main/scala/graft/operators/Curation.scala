@@ -146,9 +146,10 @@ object Curation {
     *
     * Scale shape: one scan to distinct (source, gram-hash) pairs
     * (materialized — it feeds the pair self-join AND the per-source
-    * size aggregation), then a gram-keyed equi-join whose fan-out is
-    * bounded by sources² per gram (sources are a fixed handful, so
-    * never a pair explosion), grouped down to one row per source pair.
+    * size aggregation), then [[PairMiner.overlap]] with the gram hash
+    * as the block key: a gram-keyed equi-join whose fan-out is bounded
+    * by sources² per gram (sources are a fixed handful, so never a pair
+    * explosion), grouped down to one row per source pair.
     */
   def sourceOverlap(docs: DataFrame, textCol: String, srcCol: String,
                     n: Int = 3): DataFrame = {
@@ -159,17 +160,9 @@ object Curation {
         conv(substring(md5(col("s")), 1, 12), 16, 10).cast("long").as("gk"))
       .distinct()
       .materialized
-    val inter = ex.as("x").join(ex.as("y"),
-        col("x.gk") === col("y.gk") && col("x.source") < col("y.source"))
-      .groupBy(col("x.source").as("src_a"), col("y.source").as("src_b"))
-      .agg(count(lit(1)).as("shared_grams"))
-    val sizes = ex.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
-    inter
-      .join(sizes.withColumnsRenamed(Map("source" -> "src_a", "n_grams" -> "na")), Seq("src_a"))
-      .join(sizes.withColumnsRenamed(Map("source" -> "src_b", "n_grams" -> "nb")), Seq("src_b"))
+    PairMiner.overlap(ex, "source", "gk", "src_a", "src_b", "shared_grams")
       .select(col("src_a"), col("src_b"), col("shared_grams"),
-        (col("shared_grams").cast("double")
-          / (col("na") + col("nb") - col("shared_grams"))).as("gram_jaccard"))
+        PairMiner.jaccard("shared_grams").as("gram_jaccard"))
   }
 
   /** Benchmark decontamination: for each training document, count the

@@ -104,14 +104,15 @@ object Dedup {
         .as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bkey"))
 
-  /** `maxBucket` (default unbounded, keeps the oracle contract) is the
+  /** Band rows are the [[PairMiner]] blocks. `maxBucket` (default unbounded, keeps the oracle contract) is the
     * skew guardrail for pathological corpora: a band bucket holding m
     * docs emits m² candidate pairs, so a flood of identical documents
     * (which share EVERY band bucket) can dominate the join. The right
     * fix is exact-dedup first — [[corpusDedup]] composes that — but
-    * when running LSH standalone over an uncurated crawl, a cap drops
-    * buckets above the threshold (bounding worst-case work) at the
-    * cost of recall only inside those flooded buckets.
+    * when running LSH standalone over an uncurated crawl,
+    * [[PairMiner.cap]] drops buckets above the threshold (bounding
+    * worst-case work) at the cost of recall only inside those flooded
+    * buckets.
     */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 16, bands: Int = 8,
@@ -122,27 +123,14 @@ object Dedup {
     // agreement fetch both read the same persisted (doc_id, sig) rows,
     // so the text scan → shingle → md5 pipeline runs exactly once.
     val sigs = materialize(minhashSignatures(docs, idCol, textCol, k))
-    // The band table is IDS ONLY (doc_id, band, bkey — three longs):
-    // the candidate self-join exchange never carries the k-long
-    // signature payload. Signatures re-attach AFTER the id-pair
-    // dedup, so the agreement kernel also runs once per UNIQUE pair
-    // instead of once per band collision. (Same ids-only-shuffle
-    // shape as the persisted index probe, incrementalIndexed.)
+    // The band table is IDS ONLY (doc_id, band, bkey — three longs), so
+    // the candidate exchange never carries the k-long signatures.
     // Materialized because it feeds both self-join sides (and, under
     // maxBucket, the bucket census too).
-    val banded0 = materialize(bandRows(sigs, bands, rows))
-    val banded = capBuckets(banded0, maxBucket)
-    val a = banded.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-    val b = banded.select(col("band"), col("bkey"), col("doc_id").as("doc_b"))
-    val cand = a.join(b, Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
+    val banded = PairMiner.cap(materialize(bandRows(sigs, bands, rows)), BandKey, maxBucket)
+    val cand = PairMiner.selfPairs(banded, BandKey, "doc_id", "doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"))
-      .distinct() // union of collisions across bands, ids only
-    cand
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
-        Seq("doc_a"))
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
-        Seq("doc_b"))
+    withSigs(cand, "doc_a", sigs, "doc_b", sigs)
       .select(col("doc_a"), col("doc_b"),
         // codegen'd agreement kernel — once per unique candidate pair
         // (the interpreted HOF form is the parity spec twin)
@@ -150,22 +138,16 @@ object Dedup {
           / lit(k.toDouble)).as("est_jaccard"))
   }
 
-  /** Drop (band, bkey) buckets whose membership exceeds `maxBucket` —
-    * the flood guard shared by every band-bucket consumer (see
-    * [[minhashLsh]]'s scaladoc for the contract: default unbounded
-    * keeps oracle parity; the cap bounds worst-case candidate work at
-    * the cost of recall only inside flooded buckets). Unbounded adds
-    * NO plan nodes. The census + semi-join re-scan `banded`, so
-    * callers materialize a computed band table before capping.
+  /** The band block key of every minhash consumer. */
+  private val BandKey = Seq("band", "bkey")
+
+  /** Signature fetch per side: `aSigs`' sig on `a` as sig_a, `bSigs`'
+    * on `b` as sig_b (both tables are (doc_id, sig)).
     */
-  private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket == Int.MaxValue) banded else {
-      val ok = banded.groupBy(col("band"), col("bkey"))
-        .agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") <= maxBucket)
-        .select(col("band"), col("bkey"))
-      banded.join(ok, Seq("band", "bkey"), "left_semi")
-    }
+  private def withSigs(pairs: DataFrame, a: String, aSigs: DataFrame,
+                       b: String, bSigs: DataFrame): DataFrame =
+    PairMiner.fetch(PairMiner.fetch(pairs, a, aSigs, "doc_id", "sig", "sig_a"),
+      b, bSigs, "doc_id", "sig", "sig_b")
 
   /** 60-bit SimHash over (frequency-weighted) tokens. Built as a SQL
     * expression string because the Scala DSL's shift functions only
@@ -209,7 +191,9 @@ object Dedup {
   /** C3: SimHash near-dup pairs. Pigeonhole blocking: 60 bits split
     * into 4 chunks of 15 — pairs within `maxHamming` ≤ 3 of each other
     * must share a chunk; wider thresholds still use chunks as a
-    * candidate filter (recall documented, exact verify after).
+    * candidate filter (recall documented, exact verify after). The
+    * [[PairMiner]] chunk blocks carry `sh` (one long: cheaper to carry
+    * than to fetch per side).
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 10): DataFrame = {
@@ -221,13 +205,10 @@ object Dedup {
         c => struct(c.as("chunk"),
           shiftright_dyn(col("sh"), c * 15).bitwiseAND(lit(32767L)).as("ckey")))).as("cc"))
       .select(col("doc_id"), col("sh"), col("cc.chunk"), col("cc.ckey")))
-    val a = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val b = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("chunk", "ckey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int").as("hamming"))
-      .distinct()
+    PairMiner.selfPairs(chunked, Seq("chunk", "ckey"), "doc_id", "doc_a", "doc_b",
+        carry = Seq("sh"),
+        extra = Seq(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int").as("hamming")))
+      .select(col("doc_a"), col("doc_b"), col("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -356,13 +337,33 @@ object Dedup {
                   textCol: String, minEst: Double = 0.5,
                   k: Int = 16, bands: Int = 8,
                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    val rows = k / bands
-    require(rows * bands == k)
-    // no distinct on the digest set: the anti-join below tolerates
+    require((k / bands) * bands == k)
+    // no distinct on the digest set: the anti-join tolerates
     // duplicates, and a distinct would add a full shuffle of the
     // reference digests before the join's own shuffle
     val refFp = reference
       .select(md5(col(textCol).cast("binary")).as("__fp"))
+    // signatures feed the band build AND the agreement fetch: sign once
+    val rSigs = materialize(minhashSignatures(reference, idCol, textCol, k))
+    val rBands = bandRows(rSigs, bands, k / bands)
+    // cap enabled: materialize first — the bucket census + semi-join
+    // would otherwise run the reference band pass twice
+    nearDupSurvivors(batch, idCol, textCol, minEst, k, bands, refFp,
+      PairMiner.cap(if (maxBucket == Int.MaxValue) rBands else materialize(rBands),
+        BandKey, maxBucket),
+      rSigs)
+  }
+
+  /** The shared tail of [[incremental]] and [[incrementalIndexed]]:
+    * `batch` minus its exact duplicates (content digest in `refFp`'s
+    * `__fp`) and near duplicates (minhash estimate ≥ `minEst` against a
+    * reference doc sharing a band bucket in `rBands`; reference
+    * signatures in `rSigs`, (doc_id, sig)). Returns surviving doc ids.
+    */
+  private def nearDupSurvivors(batch: DataFrame, idCol: String, textCol: String,
+                               minEst: Double, k: Int, bands: Int,
+                               refFp: DataFrame, rBands: DataFrame,
+                               rSigs: DataFrame): DataFrame = {
     // Materialized: the exact-kept batch feeds both the signature build
     // and the final survivor anti-join — without the cut the batch scan
     // + digest anti-join runs twice. Persisting batch text is fine
@@ -375,31 +376,16 @@ object Dedup {
     // est_jaccard ≥ minEst ⇔ signature agreements ≥ ceil(minEst·k):
     // integer threshold, no floating-point compare on the hot join.
     val minAgree = math.ceil(minEst * k).toInt
-    // Signatures materialized on both sides: each feeds its band build
-    // AND the per-pair agreement fetch, so each corpus is scanned and
-    // signed exactly once; the band join itself is IDS ONLY — the
-    // corpus-proportional reference side never ships its k-long
-    // signatures through the bucket exchange (the same ids-only shape
-    // as [[incrementalIndexed]], which is spec-pinned equal).
+    // batch signatures feed the band build AND the agreement filter
     val bSigs = materialize(minhashSignatures(exactKept, idCol, textCol, k))
-    val rSigs = materialize(minhashSignatures(reference, idCol, textCol, k))
-    val bBands = bandRows(bSigs, bands, rows)
-    val rBands0 = bandRows(rSigs, bands, rows)
-    // cap enabled: materialize first — the bucket census + semi-join
-    // would otherwise run the reference band pass twice
-    val rBands = if (maxBucket == Int.MaxValue) rBands0
-                 else capBuckets(materialize(rBands0), maxBucket)
     // candidate pairs deduped across bands BEFORE the signature fetch,
     // so each (batch doc, reference doc) agreement is evaluated once
-    val candIds = bBands.as("x")
-      .join(rBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
-      .distinct()
-    val nearDrops = candIds
-      .join(bSigs.select(col("doc_id"), col("sig").as("sig_a")), Seq("doc_id"))
-      .join(rSigs.select(col("doc_id").as("ref_id"), col("sig").as("sig_b")),
-        Seq("ref_id"))
+    val candIds = PairMiner.candidates(
+        PairMiner.side(bandRows(bSigs, bands, k / bands), BandKey, "doc_id", "doc_id"),
+        PairMiner.side(rBands, BandKey, "doc_id", "ref_id"),
+        BandKey, "doc_id", "ref_id")
+      .select(col("doc_id"), col("ref_id"))
+    val nearDrops = withSigs(candIds, "doc_id", bSigs, "ref_id", rSigs)
       .filter(sigAgree(col("sig_a"), col("sig_b")) >= lit(minAgree))
       .select(col("doc_id")) // anti-join below tolerates duplicates
     exactKept.select(col(idCol).as("doc_id"))
@@ -448,9 +434,10 @@ object Dedup {
     *
     * Crash semantics: the three appends are separate jobs. Any partial
     * or replayed state here is BENIGN for dedup correctness — extra
-    * fingerprints only strengthen exact dedup, and duplicate
-    * band/signature rows collapse in the probe's distinct steps — so a
-    * failed append may simply be retried.
+    * fingerprints only strengthen exact dedup, duplicate
+    * band/signature rows collapse in the probe's candidate dedup, and
+    * the probe's `maxBucket` cap counts a bucket's distinct docs, not
+    * its rows — so a failed append may simply be retried.
     */
   def appendToMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
                            path: String): Unit = {
@@ -482,34 +469,13 @@ object Dedup {
     val spark = batch.sparkSession
     val p = Tables.read(spark, s"$path/params").collect()(0)
     val (k, bands) = (p.getInt(0), p.getInt(1))
-    val refFp = Tables.read(spark, s"$path/fingerprints")
-      .select(col("fp").as("__fp"))
-    val exactKept = materialize(batch
-      .withColumn("__fp", md5(col(textCol).cast("binary")))
-      .join(refFp, Seq("__fp"), "left_anti")
-      .select(col(idCol), col(textCol)))
-    val minAgree = math.ceil(minEst * k).toInt
-    // batch signatures feed the band build AND the agreement filter
-    val bSigs = materialize(minhashSignatures(exactKept, idCol, textCol, k))
-    val bBands = bandRows(bSigs, bands, k / bands)
-      .select(col("doc_id"), col("band"), col("bkey"))
-    val rBands = capBuckets(Tables.read(spark, s"$path/bands"), maxBucket)
-    // candidate pairs are ids only (deduped across bands BEFORE the
-    // signature fetch, so each pair's agreement is evaluated once)
-    val candIds = bBands.as("x")
-      .join(rBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
-      .distinct()
-    val rSigs = Tables.read(spark, s"$path/signatures")
-      .select(col("doc_id").as("ref_id"), col("sig").as("sig_b"))
-    val nearDrops = candIds
-      .join(bSigs.select(col("doc_id"), col("sig").as("sig_a")), Seq("doc_id"))
-      .join(rSigs, Seq("ref_id"))
-      .filter(sigAgree(col("sig_a"), col("sig_b")) >= lit(minAgree))
-      .select(col("doc_id")) // anti-join below tolerates duplicates
-    exactKept.select(col(idCol).as("doc_id"))
-      .join(nearDrops, Seq("doc_id"), "left_anti")
+    // a bucket's members are its distinct docs: a replayed append
+    // repeats band rows, which must not push a bucket over the cap
+    nearDupSurvivors(batch, idCol, textCol, minEst, k, bands,
+      Tables.read(spark, s"$path/fingerprints").select(col("fp").as("__fp")),
+      PairMiner.cap(Tables.read(spark, s"$path/bands"), BandKey, maxBucket,
+        member = Some("doc_id")),
+      Tables.read(spark, s"$path/signatures"))
   }
 
   /** C41: content-defined chunking (CDC) + chunk-level dedup — the
@@ -662,8 +628,9 @@ object Dedup {
     * verifier — the LSH above is the scale path; this one is for
     * candidate verification / evaluation).
     *
-    * `maxShingleDf` caps a shingle's document frequency before the
-    * self-join: a 3-gram shared by m docs emits m² pairs, so one
+    * Shingle hashes are the [[PairMiner]] blocks, scored by
+    * [[PairMiner.overlap]]. `maxShingleDf` is the [[PairMiner.cap]] on
+    * a shingle's document frequency: a 3-gram shared by m docs emits m² pairs, so one
     * stop-word shingle ("one of the") in millions of documents would
     * dominate the join at corpus scale while contributing almost
     * nothing to any pair's Jaccard. Shingles above the cap are dropped
@@ -706,21 +673,11 @@ object Dedup {
       .select(col("doc_id"),
         conv(substring(md5(col("s")), 1, 12), 16, 10).cast("long").as("sk"))
       .distinct())
-    val rare = ex0.groupBy(col("sk")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxShingleDf)
-      .select(col("sk"))
-    val ex = materialize(ex0.join(rare, Seq("sk"), "left_semi"))
-    val inter = ex.as("x").join(ex.as("y"), col("x.sk") === col("y.sk") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val ex = materialize(PairMiner.cap(ex0, Seq("sk"), maxShingleDf))
     val score =
       if (containment) (col("inter").cast("double") / least(col("na"), col("nb"))).as("containment")
-      else (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard")
-    inter
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "n_sh" -> "na")), Seq("doc_a"))
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "n_sh" -> "nb")), Seq("doc_b"))
+      else PairMiner.jaccard("inter").as("jaccard")
+    PairMiner.overlap(ex, "doc_id", "sk", "doc_a", "doc_b", "inter")
       .select(col("doc_a"), col("doc_b"), score)
       .filter(col(if (containment) "containment" else "jaccard") >= minScore)
   }
@@ -740,11 +697,12 @@ object Dedup {
     * the native WinnowFpsExpr kernel hashes grams and selects window
     * minima in one flat pass per row (no explode, no sort, no window
     * exchange; the window-function formulation it replaced is kept as
-    * [[winnowOverlapWindow]], spec-pinned bit-identical). The
+    * `ReferenceForms.winnowOverlapWindow`, spec-pinned bit-identical). The
     * (doc, hash) long pairs are MATERIALIZED once for the df-cap
-    * aggregation and the pair join; `maxDf` drops boilerplate
-    * fingerprints before the self-join fan-out (the ngramOverlap
-    * guard). Never all-pairs.
+    * aggregation and the pair join, then mined by [[PairMiner]] with
+    * the fingerprint hash as the block key; `maxDf` is the
+    * [[PairMiner.cap]] that drops boilerplate fingerprints before the
+    * self-join fan-out. Never all-pairs.
     */
   def winnowOverlap(docs: DataFrame, idCol: String, textCol: String,
                     n: Int = 4, w: Int = 5, minShared: Long = 2,
@@ -753,31 +711,9 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         explode(winnowFps(tokens(col(textCol)), n, w)).as("h")))
     // no distinct: the kernel already dedups fingerprints per document
-    pairByFingerprint(fps, minShared, maxDf)
-  }
-
-  /** Window-function formulation of [[winnowOverlap]]'s fingerprint
-    * selection — the parity reference for the native kernel (one
-    * doc-keyed sort shuffle + per-doc w-row frames; NOT the hot path).
-    */
-  def winnowOverlapWindow(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 4, w: Int = 5, minShared: Long = 2,
-                          maxDf: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grams = docs
-      .select(col(idCol).as("doc_id"), shingles(tokens(col(textCol)), n).as("__sh"))
-      .select(col("doc_id"), size(col("__sh")).as("__glen"),
-        posexplode(col("__sh")).as(Seq("__p0", "__s")))
-      .select(col("doc_id"), col("__glen"), (col("__p0") + 1).as("pos"),
-        conv(substring(md5(col("__s")), 1, 12), 16, 10).cast("long").as("h"))
-    val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, w - 1)
-    val fps = materialize(grams
-      .withColumn("__m", min(struct(col("h"), (-col("pos")).as("np"))).over(frame))
-      .filter(col("pos") <= col("__glen") - (w - 1)) // full windows only
-      .select(col("doc_id"), col("__m").getField("h").as("h"))
-      .distinct())
-    pairByFingerprint(fps, minShared, maxDf)
+    PairMiner.selfPairs(materialize(PairMiner.cap(fps, Seq("h"), maxDf)), Seq("h"),
+        "doc_id", "doc_a", "doc_b", n = "shared_fps")
+      .filter(col("shared_fps") >= minShared)
   }
 
   /** C13: corpus-wide duplicated-substring spans — the ExactSubstr
@@ -1032,20 +968,6 @@ object Dedup {
        |        i -> array_to_string(list_slice($t, i * 6 + 1, i * 6 + 6), ' '))
        |    ELSE []::VARCHAR[] END),
        |    ['all rights reserved ' || $srcExpr]), chr(10))""".stripMargin
-  }
-
-  /** Shared tail: df-cap then shared-fingerprint pair counts. */
-  private def pairByFingerprint(fps: DataFrame, minShared: Long,
-                                maxDf: Int): DataFrame = {
-    val rare = fps.groupBy(col("h")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf).select(col("h"))
-    val f = materialize(fps.join(rare, Seq("h"), "left_semi"))
-    f.select(col("doc_id").as("doc_a"), col("h"))
-      .join(f.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
   }
 }
 

@@ -92,7 +92,9 @@ object Graph {
     * component. Each iteration is a distributed join + partial-agg over
     * edges checkpointed pre-partitioned on the join key (the big side
     * never reshuffles across rounds); the driver only ever collects one
-    * convergence scalar per round.
+    * convergence scalar per round. Fails closed: labels still changing
+    * after `maxIters` rounds throw an IllegalStateException naming
+    * `maxIters` rather than return split components.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     val ccT0 = System.nanoTime()
@@ -173,16 +175,16 @@ object Graph {
       iters += 1
       System.err.println(s"[graft] connectedComponents round $iters done at $ccElapsed")
     }
-    if (done)
-      System.err.println(s"[graft] connectedComponents converged in $iters rounds")
-    else
-      // soak-measured: a 48k-vertex LSH pair graph needed 25 rounds, so
-      // the old default of 20 returned silently-unfinished labels —
-      // never cap quietly
-      System.err.println(s"[graft] WARNING: connectedComponents hit " +
-        s"maxIters=$maxIters without converging — labels are incomplete " +
-        s"(components may be split); raise maxIters")
     checkpointRdd(bidir).foreach(_.unpersist(blocking = false)) // edges are dead
+    // soak-measured: a 48k-vertex LSH pair graph needed 25 rounds, so a
+    // cap of 20 would return unfinished labels (split components) —
+    // fail instead of answering wrong
+    if (!done) {
+      checkpointRdd(labels).foreach(_.unpersist(blocking = false))
+      throw new IllegalStateException(s"connectedComponents did not converge within " +
+        s"maxIters=$maxIters rounds: the labels would split components; raise maxIters")
+    }
+    System.err.println(s"[graft] connectedComponents converged in $iters rounds")
     labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 

@@ -108,9 +108,8 @@ object Similarity {
     * collision chances) or lower `nPlanes` (bigger buckets) to trade
     * verification compute for recall.
     *
-    * Scale shape: one scan to bucket, an equi-join on (table, bucket),
-    * id-pair dedup, then one vector copy re-joined per side — never an
-    * all-pairs product, never a corpus broadcast.
+    * Scale shape: one scan to bucket, then [[PairMiner]] on (table,
+    * bucket): id-pair dedup, one vector copy re-joined per side.
     *
     * SIZE nPlanes TO THE CORPUS: a table has only 2^nPlanes buckets,
     * so an average bucket holds n/2^nPlanes vectors and the candidate
@@ -120,44 +119,39 @@ object Similarity {
     * (SoakBench-measured). Pick `nPlanes ≈ log2(n / B)` for target
     * bucket size B (64-256), trading worst-pair recall (compounded
     * back via nTables) for bounded candidates; `maxBucket` is the
-    * skew guard that drops degenerate hot buckets (identical/correlated
-    * vector floods) the plane count can't predict.
+    * [[PairMiner.cap]] that drops degenerate hot buckets
+    * (identical/correlated vector floods) the plane count can't predict.
     */
   def embeddingPairs(emb: DataFrame, idCol: String, vecCol: String,
                      minCosine: Double, nPlanes: Int = 5, nTables: Int = 16,
                      dims: Int = 64, maxBucket: Int = Int.MaxValue): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    pairsFromBucketed(lshBucketed(emb, idCol, vecCol, nPlanes, nTables, dims),
-      emb, idCol, vecCol, minCosine, maxBucket)
+    cosinePairs(lshBucketed(emb, idCol, vecCol, nPlanes, nTables, dims), TableBucket,
+      maxBucket, emb, idCol, vecCol, minCosine)
   }
 
-  /** Candidate join + id-pair dedup + exact-cosine verify over an
-    * already-bucketed (id, table, bucket) table — the shared tail of
-    * [[embeddingPairs]] and [[embeddingPairsAuto]].
+  /** The LSH block key: (hash table, bucket). */
+  private val TableBucket = Seq("table", "bucket")
+
+  /** [[PairMiner]] over an (id, key…) block table, verified by cosine —
+    * the body of [[embeddingPairs]], [[embeddingPairsAuto]] and
+    * [[embeddingPairsIvf]].
     */
-  private def pairsFromBucketed(bucketed0: DataFrame, emb: DataFrame,
-                                idCol: String, vecCol: String,
-                                minCosine: Double, maxBucket: Int): DataFrame = {
-    val bucketed = if (maxBucket == Int.MaxValue) bucketed0 else {
-      val ok = bucketed0.groupBy(col("table"), col("bucket"))
-        .agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") <= maxBucket)
-        .select(col("table"), col("bucket"))
-      bucketed0.join(ok, Seq("table", "bucket"), "left_semi")
-    }
-    val a = bucketed.select(col("id").as("vec_a"), col("table"), col("bucket"))
-    val b = bucketed.select(col("id").as("vec_b"), col("table"), col("bucket"))
-    val cand = a.join(b, Seq("table", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
+  private def cosinePairs(blocks: DataFrame, keys: Seq[String], maxKey: Int,
+                          emb: DataFrame, idCol: String, vecCol: String,
+                          minCosine: Double): DataFrame = {
+    val cand = PairMiner.selfPairs(PairMiner.cap(blocks, keys, maxKey), keys,
+        "id", "vec_a", "vec_b")
       .select(col("vec_a"), col("vec_b"))
-      .distinct() // union of collisions across tables, ids only
-    val va = emb.select(col(idCol).as("vec_a"), col(vecCol).as("va"))
-    val vb = emb.select(col(idCol).as("vec_b"), col(vecCol).as("vb"))
-    cand.join(va, Seq("vec_a")).join(vb, Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(VectorFunctions.cosineNative(col("va"), col("vb")), 6).as("cosine"))
+    PairMiner.fetch(PairMiner.fetch(cand, "vec_a", emb, idCol, vecCol, "va"),
+        "vec_b", emb, idCol, vecCol, "vb")
+      .select(col("vec_a"), col("vec_b"), cosine("va", "vb").as("cosine"))
       .filter(col("cosine") >= minCosine)
   }
+
+  /** The verify of every vector pair miner: cosine rounded to 6 places. */
+  private def cosine(a: String, b: String): Column =
+    round(VectorFunctions.cosineNative(col(a), col(b)), 6)
 
   /** Plane-index stride (and plane-count ceiling) of the corpus-sized
     * LSH layout: table t always draws its planes from indices
@@ -262,7 +256,7 @@ object Similarity {
     val np = autoPlanes(exactRowCount(emb), targetBucket)
     val bucketed = bucketRows(emb, idCol, vecCol, np, nTables, dims,
       planeStride = AutoPlaneStride).materialized
-    pairsFromBucketed(bucketed, emb, idCol, vecCol, minCosine, maxBucket)
+    cosinePairs(bucketed, TableBucket, maxBucket, emb, idCol, vecCol, minCosine)
   }
 
   /** [[embeddingPairs]] with the hyperplane count SIZED TO THE CORPUS:
@@ -310,12 +304,9 @@ object Similarity {
     * the corpus: cells ≈ n / targetCell, like the paper-standard
     * SemDeDup setting).
     *
-    * Same downstream shape as [[embeddingPairs]]: cell table
-    * materialized once, id-only candidate dedup (multi-probe
-    * co-occurrence collapses), one vector copy re-joined per side,
-    * exact-cosine verification — never an all-pairs product, never a
-    * corpus broadcast. `maxCell` is the skew guard (a cell past the
-    * cap is dropped from pairing, like maxBucket).
+    * Same [[PairMiner]] body as [[embeddingPairs]] with the cell as
+    * the block key (multi-probe co-occurrence collapses in the id-pair
+    * dedup); `maxCell` is its [[PairMiner.cap]].
     */
   def embeddingPairsIvf(emb: DataFrame, idCol: String, vecCol: String,
                         minCosine: Double, k: Int = 64, iters: Int = 2,
@@ -329,26 +320,11 @@ object Similarity {
     if (centroids.isEmpty)
       return emb.select(col(idCol).as("vec_a"), col(idCol).as("vec_b"),
         lit(0.0).as("cosine")).limit(0)
-    val cells0 = emb.select(col(idCol).as("id"),
+    val cells = emb.select(col(idCol).as("id"),
         explode(kmeansProbeCellsExpr(col(vecCol), centroids, nProbes))
           .as("cell"))
       .materialized // both sides of the cell self-join
-    val cells = if (maxCell == Int.MaxValue) cells0 else {
-      val ok = cells0.groupBy(col("cell")).agg(count(lit(1)).as("__csz"))
-        .filter(col("__csz") <= maxCell).select(col("cell"))
-      cells0.join(ok, Seq("cell"), "left_semi")
-    }
-    val cand = cells.select(col("id").as("vec_a"), col("cell"))
-      .join(cells.select(col("id").as("vec_b"), col("cell")), Seq("cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
-      .distinct() // multi-probe co-occurrence collapses to one candidate
-    val va = emb.select(col(idCol).as("vec_a"), col(vecCol).as("va"))
-    val vb = emb.select(col(idCol).as("vec_b"), col(vecCol).as("vb"))
-    cand.join(va, Seq("vec_a")).join(vb, Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(VectorFunctions.cosineNative(col("va"), col("vb")), 6).as("cosine"))
-      .filter(col("cosine") >= minCosine)
+    cosinePairs(cells, Seq("cell"), maxCell, emb, idCol, vecCol, minCosine)
   }
 
   /** Deterministic distributed k-means (Lloyd) over the embedding
@@ -365,7 +341,8 @@ object Similarity {
     * planning; each partial is 3×k×dims longs.
     *
     * Determinism (DuckDB-oracle bit-parity):
-    *  - init: the k vectors with the smallest (portable md5 hash, id);
+    *  - init: the k non-null vectors with the smallest (portable md5
+    *    hash, id) ([[seedVectors]]);
     *  - argmin minimizes (‖c‖² − 2·v·c) — ‖v‖² is constant per row —
     *    with (score, cid) lexicographic tie-break;
     *  - means are computed on a 2⁻²⁰ fixed-point grid:
@@ -394,13 +371,7 @@ object Similarity {
   def kmeansCentroids(emb: DataFrame, idCol: String, vecCol: String,
                       k: Int = 8, iters: Int = 2): Array[Array[Double]] = {
     GraftFunctions.register(emb.sparkSession)
-    val seeds = emb
-      .select(col(idCol).as("sid"), col(vecCol).as("sv"),
-        graft.functions.PortableHash.portableHash(col(idCol)).as("__h"))
-      .orderBy(col("__h"), col("sid")).limit(k) // TakeOrderedAndProject
-      .collect()
-    var centroids: Array[Array[Double]] =
-      seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    var centroids: Array[Array[Double]] = seedVectors(emb, idCol, vecCol, k)
     val dims = centroids.headOption.map(_.length).getOrElse(0)
     if (iters <= 0 || dims == 0) return centroids
     val vecs = emb.select(col(vecCol)).queryExecution.toRdd
@@ -417,6 +388,18 @@ object Similarity {
     }
     centroids
   }
+
+  /** The seed rule of k-means and PQ (the twins' `seeds`/`pseeds`): the
+    * `n` non-null vectors with the smallest (portable md5 hash, id).
+    */
+  private def seedVectors(emb: DataFrame, idCol: String, vecCol: String,
+                          n: Int): Array[Array[Double]] =
+    emb.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("sid"), col(vecCol).as("sv"),
+        graft.functions.PortableHash.portableHash(col(idCol)).as("__h"))
+      .orderBy(col("__h"), col("sid")).limit(n) // TakeOrderedAndProject
+      .collect()
+      .map(_.getSeq[Float](1).toArray.map(_.toDouble))
 
   /** One Lloyd round as ONE map-only job over `vecs`, the planned-once
     * scan of a single `array<float>` column. `prev` is the table of
@@ -530,7 +513,7 @@ object Similarity {
     s"""WITH seeds AS (
        |  SELECT vec_id, embedding,
        |    row_number() OVER (ORDER BY $ph, vec_id) AS rn
-       |  FROM embeddings),
+       |  FROM embeddings WHERE embedding IS NOT NULL),
        |c0 AS (SELECT rn - 1 AS cid, list_transform(embedding, x -> x::DOUBLE) AS cv
        |       FROM seeds WHERE rn <= $k),
        |c0l AS (SELECT cid, pos, cv[pos] AS cval
@@ -693,32 +676,39 @@ object Similarity {
     * independent hash tables (distinct plane sets, offset seeds);
     * candidates are the UNION of bucket-mates across tables (the
     * standard recall lever: collision probability compounds per
-    * table), deduplicated on (query_id, neighbor_id) ids alone, then
-    * one vector copy per side is re-joined for the exact cosine + top-k
-    * — the candidate shuffle never carries 64-float payloads.
+    * table), mined by [[PairMiner]] on ids alone, then one vector copy
+    * per side is re-joined for the exact cosine + top-k — the candidate
+    * shuffle never carries 64-float payloads.
     */
   def knnLsh(emb: DataFrame, idCol: String, vecCol: String,
              nQueries: Int, k: Int, nPlanes: Int = 5, nTables: Int = 8,
              dims: Int = 64): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
     val bucketed = lshBucketed(emb, idCol, vecCol, nPlanes, nTables, dims)
-    val queries = bucketed.filter(col("id") < nQueries)
-      .select(col("id").as("query_id"), col("table"), col("bucket"))
-    val corpus = bucketed
-      .select(col("id").as("neighbor_id"), col("table"), col("bucket"))
-    val cand = broadcast(queries).join(corpus, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct() // union across tables, ids only
-    val qv = emb.filter(col(idCol) < nQueries)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val nv = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
+    lshTopK(bucketed.filter(col("id") < nQueries), bucketed,
+      emb.filter(col(idCol) < nQueries), idCol, vecCol, emb, idCol, vecCol, k)
+  }
+
+  /** The tail of [[knnLsh]] and [[knnLshProbe]]: probe buckets
+    * (broadcast) mined against corpus buckets, equal ids excluded, one
+    * vector fetch per side, cosine top-`k` (ties → lower neighbor id).
+    */
+  private def lshTopK(qBuckets: DataFrame, nBuckets: DataFrame,
+                      qVecs: DataFrame, qIdCol: String, qVecCol: String,
+                      nVecs: DataFrame, nIdCol: String, nVecCol: String,
+                      k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cand = PairMiner.candidates(
+        broadcast(PairMiner.side(qBuckets, TableBucket, "id", "query_id")),
+        PairMiner.side(nBuckets, TableBucket, "id", "neighbor_id"),
+        TableBucket, "query_id", "neighbor_id", col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id")) // union across tables, ids only
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id"))
-    cand.join(broadcast(qv), Seq("query_id")).join(nv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
+    PairMiner.fetch(
+        PairMiner.fetch(cand, "query_id", qVecs, qIdCol, qVecCol, "qv", small = true),
+        "neighbor_id", nVecs, nIdCol, nVecCol, "nv")
+      .select(col("query_id"), col("neighbor_id"), cosine("qv", "nv").as("score"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
   }
@@ -732,8 +722,9 @@ object Similarity {
     * ANN contract — raise `nTables` for recall).
     *
     * Scale shape: the bucket table is computed once (materialized — both
-    * self-join sides read it), candidate pairs are deduplicated on ids
-    * alone, ONE vector copy per side is re-joined for the exact cosine,
+    * self-join sides read it), [[PairMiner]] deduplicates candidate
+    * pairs on ids alone (both orders kept: each vector ranks its own
+    * neighbors), ONE vector copy per side is re-joined for the exact cosine,
     * and the per-vector top-k runs through the custom TopKPerKey
     * operator — the final shuffle carries O(vectors × k) rows, never
     * the full candidate fan-out, and nothing is ever all-pairs.
@@ -742,17 +733,12 @@ object Similarity {
               nPlanes: Int = 5, nTables: Int = 8, dims: Int = 64): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
     val bucketed = lshBucketed(emb, idCol, vecCol, nPlanes, nTables, dims)
-    val a = bucketed.select(col("id").as("vec_id"), col("table"), col("bucket"))
-    val b = bucketed.select(col("id").as("neighbor_id"), col("table"), col("bucket"))
-    val cand = a.join(b, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .select(col("vec_id"), col("neighbor_id"))
-      .distinct() // union across tables, ids only
-    val va = emb.select(col(idCol).as("vec_id"), col(vecCol).as("va"))
-    val vb = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("vb"))
-    val scored = cand.join(va, Seq("vec_id")).join(vb, Seq("neighbor_id"))
-      .select(col("vec_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("va"), col("vb")), 6).as("score"))
+    val cand = PairMiner.selfPairs(bucketed, TableBucket, "id", "vec_id", "neighbor_id",
+        pair = _ =!= _)
+      .select(col("vec_id"), col("neighbor_id")) // union across tables, ids only
+    val scored = PairMiner.fetch(PairMiner.fetch(cand, "vec_id", emb, idCol, vecCol, "va"),
+        "neighbor_id", emb, idCol, vecCol, "vb")
+      .select(col("vec_id"), col("neighbor_id"), cosine("va", "vb").as("score"))
     // TopKPerKey sorts one direction: descending score = ascending
     // negated score, with the ascending neighbor-id tie-break beside it
     graft.plans.TopK.perKey(scored.withColumn("__neg", -col("score")),
@@ -966,12 +952,7 @@ object Similarity {
     */
   private[graft] def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
                                  m: Int = 16, ksub: Int = 32): Array[Array[Array[Double]]] = {
-    val seeds = emb
-      .select(col(idCol).as("sid"), col(vecCol).as("sv"),
-        graft.functions.PortableHash.portableHash(col(idCol)).as("__h"))
-      .orderBy(col("__h"), col("sid")).limit(ksub) // TakeOrderedAndProject
-      .collect()
-    val vecs = seeds.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    val vecs = seedVectors(emb, idCol, vecCol, ksub)
     val dims = vecs.headOption.map(_.length).getOrElse(0)
     require(vecs.nonEmpty && dims % m == 0, s"dims $dims not divisible by m=$m")
     val dsub = dims / m
@@ -1651,7 +1632,8 @@ object Similarity {
          |  FROM cb${i + 1}l GROUP BY m, code)""".stripMargin)
     Seq(
       s"""pseeds AS (SELECT vec_id, $vec AS v,
-         |    row_number() OVER (ORDER BY $ph, vec_id) AS rn FROM $src)""".stripMargin,
+         |    row_number() OVER (ORDER BY $ph, vec_id) AS rn
+         |  FROM $src WHERE $vec IS NOT NULL)""".stripMargin,
       s"""sub AS (SELECT e.vec_id, t.m, ${slice(s"e.$vec")} AS vm
          |  FROM $src e CROSS JOIN range(0, $m) t(m))""".stripMargin,
       s"""cb0 AS (SELECT t.m, cast(s.rn - 1 AS integer) AS code, ${slice("s.v")} AS cv
@@ -1854,26 +1836,10 @@ object Similarity {
                   queries: DataFrame, idCol: String, vecCol: String,
                   k: Int): DataFrame = {
     GraftFunctions.register(spark)
-    import org.apache.spark.sql.expressions.Window
     val p = Tables.read(spark, s"$path/params").collect()(0)
     val (nPlanes, nTables, dims) = (p.getInt(0), p.getInt(1), p.getInt(2))
-    val corpus = Tables.read(spark, s"$path/buckets")
-      .select(col("id").as("neighbor_id"), col("table"), col("bucket"))
-    val qb = bucketRows(queries, idCol, vecCol, nPlanes, nTables, dims)
-      .select(col("id").as("query_id"), col("table"), col("bucket"))
-    val cand = broadcast(qb).join(corpus, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val nv = Tables.read(spark, s"$path/vectors")
-      .select(col("id").as("neighbor_id"), col("vec").as("nv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    cand.join(broadcast(qv), Seq("query_id")).join(nv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosineNative(col("qv"), col("nv")), 6).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    lshTopK(bucketRows(queries, idCol, vecCol, nPlanes, nTables, dims),
+      Tables.read(spark, s"$path/buckets"),
+      queries, idCol, vecCol, Tables.read(spark, s"$path/vectors"), "id", "vec", k)
   }
 }

@@ -237,6 +237,31 @@ class CurationSpec extends AnyFunSuite {
     assert(idxUnbounded == unbounded, idxUnbounded.toString)
   }
 
+  test("indexed incremental dedup: a replayed reference append leaves capped survivors unchanged") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // a 30-copy exact flood family: each of its band buckets holds 30
+    // docs, under the cap of 40 — unless the band rows are counted
+    // twice after the same append is replayed
+    val floodText = "boilerplate navigation header footer copyright terms privacy contact about products pages"
+    val reference = (0 until 30).map(i => (i.toLong, floodText)).toDF("doc_id", "text")
+    val batch = Seq(
+      (5000L, floodText + " extra"),
+      (5002L, "completely unrelated text about mushroom foraging in temperate forests during autumn rains"))
+      .toDF("doc_id", "text")
+    def survivors(dir: String) =
+      Dedup.incrementalIndexed(batch, dir, "doc_id", "text", maxBucket = 40)
+        .collect().map(_.getLong(0)).toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedupidx_replay").toString
+    Dedup.buildMinhashIndex(Seq((999L, "an unrelated indexed page about river ferries"))
+      .toDF("doc_id", "text"), "doc_id", "text", dir)
+    Dedup.appendToMinhashIndex(reference, "doc_id", "text", dir)
+    val once = survivors(dir)
+    assert(once == Set(5002L), once.toString)
+    Dedup.appendToMinhashIndex(reference, "doc_id", "text", dir) // the replay
+    assert(survivors(dir) == once)
+  }
+
   test("curation pipeline equals its step-by-step composition") {
     import graft.operators.{Dedup, TextAnalysis}
     val docs = Tables.documents(spark, sf)

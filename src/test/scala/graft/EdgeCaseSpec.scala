@@ -182,6 +182,19 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(two.length == 2 && two.forall(_(2) == 0.0))
   }
 
+  test("kmeans and PQ seeds skip null vectors") {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    val emb = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq(1.0f, 0.0f)), Row(2L, null), Row(3L, Seq(0.0f, 1.0f))), 2), schema)
+    val cs = Similarity.kmeansCentroids(emb, "vec_id", "embedding", k = 3, iters = 1)
+    assert(cs.map(_.toSeq).toSet == Set(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    assert(Similarity.kmeans(emb, "vec_id", "embedding", k = 3, iters = 1).count() == 3)
+    val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 2, ksub = 3)
+    assert(cbs.length == 2 && cbs.forall(_.length == 2))
+  }
+
   test("mixture-audit ops degrade cleanly on empty/degenerate input") {
     import org.apache.spark.sql.functions._
     import graft.operators.Scoring

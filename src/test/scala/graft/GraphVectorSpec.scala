@@ -49,6 +49,13 @@ class GraphVectorSpec extends AnyFunSuite {
     assert(Graph.pagerank(pairsOf()).count() == 0)
   }
 
+  test("connectedComponents fails closed when maxIters stops it before convergence") {
+    val chain = (1L until 64L).map(i => (i, i + 1))
+    val e = intercept[IllegalStateException](
+      Graph.connectedComponents(pairsOf(chain: _*), maxIters = 1))
+    assert(e.getMessage.contains("maxIters=1"), e.getMessage)
+  }
+
   test("connectedComponents: components labeled by their min id; chain collapses to one") {
     val cc = Graph.connectedComponents(pairsOf((1L, 2L), (2L, 3L), (4L, 5L)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -249,4 +249,33 @@ object ReferenceForms {
     }
     cbs
   }
+
+  /** Window-function formulation of [[graft.operators.Dedup.winnowOverlap]]'s
+    * fingerprint selection — the parity reference for the native kernel
+    * (one doc-keyed sort shuffle + per-doc w-row frames), feeding the
+    * same capped fingerprint self-join.
+    */
+  def winnowOverlapWindow(docs: DataFrame, idCol: String, textCol: String,
+                          n: Int = 4, w: Int = 5, minShared: Long = 2,
+                          maxDf: Int = 1000): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TextFunctions.{shingles, tokens}
+    import graft.operators.PairMiner
+    val grams = docs
+      .select(col(idCol).as("doc_id"), shingles(tokens(col(textCol)), n).as("__sh"))
+      .select(col("doc_id"), size(col("__sh")).as("__glen"),
+        posexplode(col("__sh")).as(Seq("__p0", "__s")))
+      .select(col("doc_id"), col("__glen"), (col("__p0") + 1).as("pos"),
+        conv(substring(md5(col("__s")), 1, 12), 16, 10).cast("long").as("h"))
+    val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.currentRow, w - 1)
+    val fps = grams
+      .withColumn("__m", min(struct(col("h"), (-col("pos")).as("np"))).over(frame))
+      .filter(col("pos") <= col("__glen") - (w - 1)) // full windows only
+      .select(col("doc_id"), col("__m").getField("h").as("h"))
+      .distinct().materialized
+    PairMiner.selfPairs(PairMiner.cap(fps, Seq("h"), maxDf).materialized, Seq("h"),
+        "doc_id", "doc_a", "doc_b", n = "shared_fps")
+      .filter(col("shared_fps") >= minShared)
+  }
 }

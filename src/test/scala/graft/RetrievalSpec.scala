@@ -255,7 +255,7 @@ class RetrievalSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sf)
     val kernel = Dedup.winnowOverlap(docs, "doc_id", "text")
-    val window = Dedup.winnowOverlapWindow(docs, "doc_id", "text")
+    val window = ReferenceForms.winnowOverlapWindow(docs, "doc_id", "text")
     assert(kernel.exceptAll(window).isEmpty && window.exceptAll(kernel).isEmpty)
     assert(kernel.count() > 0)
     val plan = kernel.queryExecution.executedPlan.toString
