@@ -18,14 +18,47 @@ same oracle semantics decomposed into per-stage (and per-shard)
 DuckDB invocations, each bounded and parquet-committed, then the
 standard exact rows+schema+hash compare on the final stage. Only a
 listed query with NO stage pipeline falls back to a skip.
+
+Without skipCsv, a dump of a scale above sf0.01 (read from the sfDir
+name, e.g. .../sf0.1) runs every query that has a stage pipeline
+through it: winnow_overlap's single-SQL oracle alone outgrew a 15 GB
+host at sf0.1. Pass an empty skipCsv ("") to run every single-SQL
+oracle anyway. DuckDB's memory limits follow the host's MemTotal
+(40% for the main connection, 30% per stage connection;
+GRAFT_STAGE_MEM overrides the latter).
 """
-import sys, json, math, glob, os
+import sys, json, math, glob, os, re
 import duckdb
 
+
+def _host_mem_mb():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise SystemExit("selfcheck: no MemTotal in /proc/meminfo")
+
+
+# DuckDB does not govern all of its memory (list-heavy aggregations
+# overshoot the limit), so the limits stay well under the host's RAM:
+# the main connection may hold its buffers while a stage connection runs
+HOST_MEM_MB = _host_mem_mb()
+MAIN_MEM = f"{max(1024, HOST_MEM_MB * 2 // 5)}MB"
 # fresh-connection defaults for staged-oracle invocations: each stage
 # (shard) gets its own bounded, spill-enabled connection, so the
 # pipeline's peak memory is one shard's working set
-STAGE_MEM = os.environ.get("GRAFT_STAGE_MEM", "48GB")
+STAGE_MEM = os.environ.get("GRAFT_STAGE_MEM", f"{max(1024, HOST_MEM_MB * 3 // 10)}MB")
+# above this scale, queries with a stage pipeline run it by default
+STAGE_ABOVE_SF = 0.01
+
+
+def default_skip(sf_dir, out_dir):
+    """The staged queries of a dump above sf0.01, else none."""
+    m = re.fullmatch(r"sf([0-9.]+)", os.path.basename(os.path.normpath(sf_dir)))
+    stages_path = os.path.join(out_dir, "oracle_stages.json")
+    if not m or float(m.group(1)) <= STAGE_ABOVE_SF or not os.path.exists(stages_path):
+        return ()
+    return tuple(sorted(json.load(open(stages_path))))
 
 
 def _stage_con(sf_dir, views):
@@ -246,7 +279,7 @@ def main(sf_dir, out_dir, skip=()):
     # still climbed past 113 GB), so at sf >= 1 the three heaviest
     # oracles remain single-node-infeasible; verify those structurally
     # (see SURVEY section 7f round 7).
-    con.execute("SET memory_limit = '64GB'")
+    con.execute(f"SET memory_limit = '{MAIN_MEM}'")
     con.execute("SET temp_directory = '/tmp/duckdb_spill'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -358,5 +391,10 @@ def main(sf_dir, out_dir, skip=()):
     return n_fail
 
 if __name__ == "__main__":
-    skip = tuple(sys.argv[3].split(",")) if len(sys.argv) > 3 else ()
+    if len(sys.argv) > 3:
+        skip = tuple(n for n in sys.argv[3].split(",") if n)
+    else:
+        skip = default_skip(sys.argv[1], sys.argv[2])
+        if skip:
+            print(f"  staging by default above sf{STAGE_ABOVE_SF}: {','.join(skip)}")
     sys.exit(1 if main(sys.argv[1], sys.argv[2], skip) else 0)

@@ -10,9 +10,18 @@ import org.apache.spark.sql.SparkSession
   * cluster AQE coalesces the initial (larger) partition count instead.
   */
 object GraftSession {
+  /** The `file:` filesystem of every graft-built session: Hadoop's, with
+    * modes set and links read by syscall instead of a forked `chmod` /
+    * `readlink` per call (see [[graft.sources.LocalFs]]).
+    */
+  val LocalFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.GraftLocalFs].getName)
+
   def builder(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
               shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      : SparkSession.Builder =
+      : SparkSession.Builder = {
+    prewarmCollation
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -37,6 +46,22 @@ object GraftSession {
       // the hot loop.
       .config("spark.rdd.compress", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFsConfs)
+  }
+
+  /** The first `lower()`/`upper()` in a JVM initializes Spark's
+    * `CollationAwareUTF8String`, whose static table title-cases every
+    * code point through ICU (~1.9 s). Loading it once per JVM on a
+    * daemon thread takes that off the first query's path.
+    */
+  private lazy val prewarmCollation: Unit = {
+    val t = new Thread(() =>
+      try Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
+      catch { case _: ClassNotFoundException => },
+      "graft-collation-prewarm")
+    t.setDaemon(true)
+    t.start()
+  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

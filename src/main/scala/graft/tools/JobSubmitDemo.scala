@@ -66,6 +66,7 @@ object JobSubmitDemo {
         MiniCluster.addOpensFlags.mkString(" "))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.LocalFsConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

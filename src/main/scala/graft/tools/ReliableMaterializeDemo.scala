@@ -89,6 +89,7 @@ object ReliableMaterializeDemo {
       // respawns absorb the suicide job — keep the master's
       // consecutive-failure cutoff well clear of that
       .config("spark.deploy.maxExecutorRetries", "100")
+      .config(graft.GraftSession.LocalFsConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

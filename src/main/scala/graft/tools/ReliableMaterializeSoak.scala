@@ -55,6 +55,7 @@ object ReliableMaterializeSoak {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.LocalFsConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

@@ -55,6 +55,7 @@ object SpeculationDemo {
         MiniCluster.addOpensFlags.mkString(" "))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.LocalFsConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

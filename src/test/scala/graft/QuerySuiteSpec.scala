@@ -14,6 +14,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.sources.Tables.NanosAsLong, "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
