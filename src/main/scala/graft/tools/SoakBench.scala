@@ -206,7 +206,7 @@ object SoakBench {
     val secB = (System.nanoTime() - tb) / 1e9
     println(f"""{"metric":"soak_bm25_build","input_mb":$cMb%.0f,"sec":$secB%.1f,"mb_per_sec":${cMb / secB}%.1f}""")
     // warm + timed probe (10 queries, top-10 each)
-    val qs = graft.SparkEntry.Bm25Queries
+    val qs = graft.registry.TextQueries.Bm25Queries
     graft.operators.TextAnalysis.bm25SearchIndexed(spark, idxPath, qs, 10)
       .write.format("noop").mode("overwrite").save()
     val tp = System.nanoTime()

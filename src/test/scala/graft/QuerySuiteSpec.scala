@@ -33,8 +33,23 @@ class QuerySuiteSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  test("every query has an oracle and every staged oracle a query") {
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.oracleStages.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("a record without an oracle does not compile") {
+    assertDoesNotCompile(
+      """graft.registry.Registered("q", (s, d) => graft.sources.Tables.documents(s, d))""")
+  }
+
+  test("a name registered twice fails the registry build") {
+    val r = graft.registry.Registered("q", (s, d) => graft.sources.Tables.documents(s, d), "SELECT 1")
+    assert(graft.registry.Registered.distinct(Seq(r)) == Seq(r))
+    val e = intercept[IllegalArgumentException] {
+      graft.registry.Registered.distinct(Seq(r, r.copy(oracle = "SELECT 2")))
+    }
+    assert(e.getMessage.contains("q"))
   }
 
   test("the sweep pins file covers the full query registry") {
@@ -70,7 +85,7 @@ class QuerySuiteSpec extends AnyFunSuite {
     // the rejection path: a base with a trailing ORDER BY must throw,
     // not yield silently-wrong SQL
     intercept[IllegalArgumentException] {
-      SparkEntry.deriveQuotaOracle(base + "\nORDER BY slot")
+      graft.registry.HtmlQueries.deriveQuotaOracle(base + "\nORDER BY slot")
     }
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Similarity, TextAnalysis}
+import graft.registry.TextQueries
 import graft.sources.Tables
 
 /** C48 bm25_search, C49 semantic_dedup, C50 ngram_novelty. */
@@ -11,11 +12,11 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("bm25 returns at most k docs per query, scores positive and ranked") {
     val got = TextAnalysis.bm25Search(Tables.documents(spark, sf),
-      "doc_id", "text", SparkEntry.Bm25Queries, 10)
+      "doc_id", "text", TextQueries.Bm25Queries, 10)
     val rows = got.collect()
     assert(rows.nonEmpty)
     val byQuery = rows.groupBy(_.getInt(0))
-    assert(byQuery.keySet == SparkEntry.Bm25Queries.map(_._1).toSet)
+    assert(byQuery.keySet == TextQueries.Bm25Queries.map(_._1).toSet)
     byQuery.values.foreach { rs =>
       assert(rs.length <= 10)
       assert(rs.forall(_.getDouble(2) > 0.0))
@@ -37,7 +38,7 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("bm25 plans the per-query cut through TopKPerKey") {
     val got = TextAnalysis.bm25Search(Tables.documents(spark, sf),
-      "doc_id", "text", SparkEntry.Bm25Queries, 10)
+      "doc_id", "text", TextQueries.Bm25Queries, 10)
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"), plan)
   }
@@ -105,9 +106,9 @@ class RetrievalSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("bm25idx").toString
     TextAnalysis.buildBm25Index(docs, "doc_id", "text", path)
     val direct = TextAnalysis.bm25Search(docs, "doc_id", "text",
-      SparkEntry.Bm25Queries, 10)
+      TextQueries.Bm25Queries, 10)
     val probed = TextAnalysis.bm25SearchIndexed(spark, path,
-      SparkEntry.Bm25Queries, 10)
+      TextQueries.Bm25Queries, 10)
     assert(probed.exceptAll(direct).isEmpty && direct.exceptAll(probed).isEmpty)
     // the postings scan must carry a tkey partition filter (directory
     // pruning to the query terms' buckets, not a full index scan)
@@ -126,13 +127,13 @@ class RetrievalSpec extends AnyFunSuite {
     val minScore = 0.05
     // batch truth: every (query, doc) score over the same corpus
     val expected = TextAnalysis.bm25Search(docs, "doc_id", "text",
-      SparkEntry.Bm25Queries, docs.count().toInt)
+      TextQueries.Bm25Queries, docs.count().toInt)
       .filter(col("score") >= minScore)
       .select(col("doc_id"), col("query_id"), col("score"))
     val ms = MemoryStream[(Long, String)]
     val alerts = graft.streaming.DocStreams.bm25Alerts(
       ms.toDF().toDF("doc_id", "text"), "doc_id", "text", path,
-      SparkEntry.Bm25Queries, minScore)
+      TextQueries.Bm25Queries, minScore)
     val q = alerts.writeStream.format("memory").queryName("bm25alerts")
       .outputMode("append").start()
     try {
@@ -158,9 +159,9 @@ class RetrievalSpec extends AnyFunSuite {
     TextAnalysis.appendToBm25Index(docs.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text", path)
     val probed = TextAnalysis.bm25SearchIndexed(spark, path,
-      SparkEntry.Bm25Queries, 10)
+      TextQueries.Bm25Queries, 10)
     val direct = TextAnalysis.bm25Search(docs, "doc_id", "text",
-      SparkEntry.Bm25Queries, 10)
+      TextQueries.Bm25Queries, 10)
     assert(probed.exceptAll(direct).isEmpty && direct.exceptAll(probed).isEmpty)
   }
 
@@ -173,7 +174,7 @@ class RetrievalSpec extends AnyFunSuite {
     val empty = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq.empty[Row], 2), docSchema)
     assert(TextAnalysis.bm25Search(empty, "doc_id", "text",
-      SparkEntry.Bm25Queries, 10).count() == 0)
+      TextQueries.Bm25Queries, 10).count() == 0)
     assert(TextAnalysis.ngramNovelty(empty, "doc_id", "text").count() == 0)
     assert(TextAnalysis.qualityCalibration(empty, "doc_id", "text",
       "source").count() == 0)
