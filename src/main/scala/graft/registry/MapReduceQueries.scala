@@ -15,16 +15,61 @@ object MapReduceQueries {
   private val grepPattern = "stream (join|merge)"
   private val rawGrepPattern = "fox(es)? jump"
 
-  /** The reference's own sample inputs (read-only), ingested through the
-    * raw text/CSV source path — newline-delimited text and a headered
-    * CSV are cooler-MapReduce's native input formats
-    * (reference `src/worker/task_executor.py:103-160`,
-    * `shared/samples/story_medium.txt`, `shared/samples/weather.csv`).
+  /** Every raw and WARC fixture lives under `target/fixtures` of the
+    * working directory (sbt, runMain and the verify recipe all run from
+    * the checkout), made absolute once so the oracle SQL reads the same
+    * files. Each is written on first use by the builder that reads it,
+    * never at object init.
     */
-  private val RawStoryPath   = "/root/reference/shared/samples/story_medium.txt"
-  private val RawWeatherPath = "/root/reference/shared/samples/weather.csv"
+  private val FixtureRoot = java.nio.file.Paths.get("target", "fixtures").toAbsolutePath.toString
+
+  /** Stand-ins for cooler-MapReduce's sample inputs, read through the raw
+    * text/CSV source path — newline-delimited text and a headered CSV are
+    * its native input formats (reference `src/worker/task_executor.py:103-160`).
+    */
+  private val RawStoryPath   = s"$FixtureRoot/story.txt"
+  private val RawWeatherPath = s"$FixtureRoot/weather.csv"
+
+  /** The story: 24,000 non-empty lines (240 distinct 100-line blocks,
+    * each opening with its chapter number — the WARC fixtures' records)
+    * and no trailing newline. Seeded words, with `fox(es)? jump` lines
+    * for raw_grep, some of them repeated verbatim.
+    */
+  private def story(): String = {
+    val words = Seq("the", "a", "of", "and", "stream", "river", "join", "merge",
+      "quick", "brown", "lazy", "dog", "over", "hill", "night", "light", "record",
+      "window", "page", "crawl", "map", "reduce", "key", "value", "worker", "task")
+    val rnd = new scala.util.Random(42)
+    (0 until 24000).map { i =>
+      val line = Seq.fill(5 + rnd.nextInt(9))(words(rnd.nextInt(words.size))).mkString(" ")
+      if (i % 100 == 0) s"chapter ${i / 100} $line"
+      else if (i % 97 == 0) "the quick brown fox jumps over the lazy dog"
+      else if (i % 89 == 0) s"$line and two foxes jump"
+      else line
+    }.mkString("\n")
+  }
+
+  /** The weather CSV: `temperature,humidity,pressure`, 2,000 seeded rows,
+    * no empty cells, at most 2 decimals (the oracle sums at decimal(18,4)).
+    */
+  private def weatherCsv(): String = {
+    val rnd = new scala.util.Random(7)
+    def v(lo: Int, span: Int) = java.math.BigDecimal.valueOf(lo + rnd.nextInt(span).toLong, 2).toPlainString
+    ("temperature,humidity,pressure" +: Seq.fill(2000)(
+      s"${v(-2000, 6000)},${v(1000, 9000)},${v(98000, 6000)}")).mkString("\n")
+  }
+
+  private lazy val storyBuilt: Unit = writeFixtureAtomic(RawStoryPath, story().getBytes("UTF-8"))
+  private def buildStory(): Unit = storyBuilt
+  private lazy val weatherBuilt: Unit = writeFixtureAtomic(RawWeatherPath, weatherCsv().getBytes("UTF-8"))
+
+  private def storyLines(s: SparkSession): DataFrame = {
+    buildStory()
+    graft.sources.Formats.readText(s, RawStoryPath)
+  }
 
   private def rawWeather(s: SparkSession): DataFrame = {
+    weatherBuilt
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("temperature", DoubleType),
@@ -35,7 +80,7 @@ object MapReduceQueries {
         "'pressure', pressure) AS (measurement, value)")
   }
 
-  private val WarcFixturePath = "/root/repo/target/warc_ingest/corpus.warc"
+  private val WarcFixturePath = s"$FixtureRoot/warc_ingest/corpus.warc"
 
   /** Atomically publish a fixture file: write a uniquely-named temp
     * sibling, then ATOMIC_MOVE over the target — Bench's thread pool
@@ -64,15 +109,17 @@ object MapReduceQueries {
     * algebraic 100-line grouping.
     */
   private lazy val rawIngestFixtureBuilt: Unit = {
+    buildStory()
     val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
     val lines = raw.split("\n", -1)
     require(lines.forall(_.nonEmpty),
       s"$RawStoryPath contains blank lines — records would embed the \\n\\n delimiter")
     val recs = lines.grouped(100).map(_.mkString("\n")).toSeq
-    writeFixtureAtomic("target/raw_ingest/corpus.txt",
+    writeFixtureAtomic(RawIngestPath,
       recs.mkString("\n\n").getBytes("UTF-8"))
   }
   private def buildRawIngestFixture(): Unit = rawIngestFixtureBuilt
+  private val RawIngestPath = s"$FixtureRoot/raw_ingest/corpus.txt"
 
   /** Deterministic WARC/1.0 fixture from the reference story: each
     * 100-line record becomes one `response`/`request`/`metadata`
@@ -80,6 +127,7 @@ object MapReduceQueries {
     * byte-accurate Content-Length. Idempotent rebuild.
     */
   private def warcRecords(): Seq[String] = {
+    buildStory()
     val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
     val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
     val types = Seq("response", "request", "metadata")
@@ -100,7 +148,7 @@ object MapReduceQueries {
       warcRecords().mkString("").getBytes("UTF-8"))
   private def buildWarcFixture(): Unit = warcFixtureBuilt
 
-  private val WarcGzFixturePath = "/root/repo/target/warc_gz/corpus.warc.gz"
+  private val WarcGzFixturePath = s"$FixtureRoot/warc_gz/corpus.warc.gz"
 
   /** The SAME records as [[buildWarcFixture]], compressed one gzip
     * MEMBER per record (the Common-Crawl .warc.gz layout) — the gz
@@ -119,7 +167,7 @@ object MapReduceQueries {
   }
   private def buildWarcGzFixture(): Unit = { buildWarcFixture(); warcGzFixtureBuilt }
 
-  private val WarcBFixturePath = "/root/repo/target/warc_revisit/corpus_b.warc"
+  private val WarcBFixturePath = s"$FixtureRoot/warc_revisit/corpus_b.warc"
 
   /** Snapshot B of the WARC fixture — the SAME uris/types/blocks as
     * [[warcRecords]] except: records dropped where i%11==0 (`gone`),
@@ -127,6 +175,7 @@ object MapReduceQueries {
     * (`new`); dates/ids advanced to the February recrawl.
     */
   private lazy val warcBFixtureBuilt: Unit = {
+    buildStory()
     val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
     val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
     val types = Seq("response", "request", "metadata")
@@ -155,7 +204,7 @@ object MapReduceQueries {
   }
   private def buildWarcBFixture(): Unit = warcBFixtureBuilt
 
-  private val WarcRedirectFixturePath = "/root/repo/target/warc_redirect/corpus.warc"
+  private val WarcRedirectFixturePath = s"$FixtureRoot/warc_redirect/corpus.warc"
 
   /** Fetch-log fixture for redirect resolution: 241 HTTP responses at
     * /page/i with a deterministic redirect schedule — i==36 self-loop
@@ -209,7 +258,7 @@ object MapReduceQueries {
   }
   private def buildWarcRedirectFixture(): Unit = warcRedirectFixtureBuilt
 
-  private val WarcHttpFixturePath = "/root/repo/target/warc_http/corpus.warc"
+  private val WarcHttpFixturePath = s"$FixtureRoot/warc_http/corpus.warc"
 
   /** WARC/1.0 fixture whose blocks are real HTTP responses: status
     * line (404 on i%7==3), HTTP headers with a byte-accurate HTTP
@@ -218,6 +267,7 @@ object MapReduceQueries {
     */
   private def buildWarcHttpFixture(): Unit = warcHttpFixtureBuilt
   private lazy val warcHttpFixtureBuilt: Unit = {
+    buildStory()
     val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
     val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
     val recs = blocks.zipWithIndex.map { case (b, i) =>
@@ -358,7 +408,7 @@ object MapReduceQueries {
         |FROM events GROUP BY user_id""".stripMargin),
     // raw-file ingestion: the reference's native input formats end-to-end
     Registered("raw_wordcount", (s, _) =>
-        MapReduceOps.wordCount(graft.sources.Formats.readText(s, RawStoryPath), "value"),
+        MapReduceOps.wordCount(storyLines(s), "value"),
       // whitespace tokenization is line-break agnostic, so tokens over the
       // whole file (read_text) equal Spark's per-line tokens exactly
       s"""SELECT word, count(*) AS cnt
@@ -369,7 +419,7 @@ object MapReduceQueries {
     // matching lines, not documents (reference design.md:276-278);
     // mr_grep above keeps the document-level variant for the tables
     Registered("raw_grep", (s, _) =>
-        MapReduceOps.grep(graft.sources.Formats.readText(s, RawStoryPath),
+        MapReduceOps.grep(storyLines(s),
             "value", rawGrepPattern)
           .select(col("value").as("line")),
       // duplicates matter: identical matching lines appear once per
@@ -403,7 +453,7 @@ object MapReduceQueries {
     // the compare proves the write → delimiter-split → read round trip.
     Registered("raw_corpus_ingest", (s, _) => {
         buildRawIngestFixture()
-        graft.sources.Formats.readRecords(s, "target/raw_ingest/corpus.txt")
+        graft.sources.Formats.readRecords(s, RawIngestPath)
           .select(col("record_id"), col("text"),
             length(col("text")).as("n_chars"),
             size(TextFunctions.tokens(col("text"))).as("n_tokens"))
