@@ -18,17 +18,44 @@ object MapReduceQueries {
   /** Every raw and WARC fixture lives under `target/fixtures` of the
     * working directory (sbt, runMain and the verify recipe all run from
     * the checkout), made absolute once so the oracle SQL reads the same
-    * files. Each is written on first use by the builder that reads it,
+    * files. Each is written on first use by the builders that read it,
     * never at object init.
     */
   private val FixtureRoot = java.nio.file.Paths.get("target", "fixtures").toAbsolutePath.toString
+  private val StoryPath        = s"$FixtureRoot/story.txt"
+  private val WeatherPath      = s"$FixtureRoot/weather.csv"
+  private val RawIngestPath    = s"$FixtureRoot/raw_ingest/corpus.txt"
+  private val WarcPath         = s"$FixtureRoot/warc_ingest/corpus.warc"
+  private val WarcGzPath       = s"$FixtureRoot/warc_gz/corpus.warc.gz"
+  private val WarcBPath        = s"$FixtureRoot/warc_revisit/corpus_b.warc"
+  private val WarcRedirectPath = s"$FixtureRoot/warc_redirect/corpus.warc"
+  private val WarcHttpPath     = s"$FixtureRoot/warc_http/corpus.warc"
 
-  /** Stand-ins for cooler-MapReduce's sample inputs, read through the raw
-    * text/CSV source path — newline-delimited text and a headered CSV are
-    * its native input formats (reference `src/worker/task_executor.py:103-160`).
+  private val built = scala.collection.mutable.Set.empty[String]
+
+  /** The fixture file at `path`, written once per JVM (`bytes` is
+    * evaluated on first use only). One reentrant lock serializes the
+    * builds, so a build may use another fixture. The write publishes a
+    * uniquely-named temp sibling with ATOMIC_MOVE: a JVM reading the
+    * file while another JVM on the same checkout rebuilds it never sees
+    * it torn.
     */
-  private val RawStoryPath   = s"$FixtureRoot/story.txt"
-  private val RawWeatherPath = s"$FixtureRoot/weather.csv"
+  private def fixture(path: String)(bytes: => Array[Byte]): String = built.synchronized {
+    if (!built(path)) {
+      val p = java.nio.file.Paths.get(path)
+      java.nio.file.Files.createDirectories(p.getParent)
+      val tmp = p.resolveSibling(
+        p.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID())
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.move(tmp, p,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      built += path
+    }
+    path
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
 
   /** The story: 24,000 non-empty lines (240 distinct 100-line blocks,
     * each opening with its chapter number — the WARC fixtures' records)
@@ -59,152 +86,84 @@ object MapReduceQueries {
       s"${v(-2000, 6000)},${v(1000, 9000)},${v(98000, 6000)}")).mkString("\n")
   }
 
-  private lazy val storyBuilt: Unit = writeFixtureAtomic(RawStoryPath, story().getBytes("UTF-8"))
-  private def buildStory(): Unit = storyBuilt
-  private lazy val weatherBuilt: Unit = writeFixtureAtomic(RawWeatherPath, weatherCsv().getBytes("UTF-8"))
+  private def storyFile(): String = fixture(StoryPath)(utf8(story()))
+  private def weatherFile(): String = fixture(WeatherPath)(utf8(weatherCsv()))
 
-  private def storyLines(s: SparkSession): DataFrame = {
-    buildStory()
-    graft.sources.Formats.readText(s, RawStoryPath)
-  }
-
-  private def rawWeather(s: SparkSession): DataFrame = {
-    weatherBuilt
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("temperature", DoubleType),
-      StructField("humidity", DoubleType),
-      StructField("pressure", DoubleType)))
-    graft.sources.Formats.readCsv(s, RawWeatherPath, schema)
-      .selectExpr("stack(3, 'temperature', temperature, 'humidity', humidity, " +
-        "'pressure', pressure) AS (measurement, value)")
-  }
-
-  private val WarcFixturePath = s"$FixtureRoot/warc_ingest/corpus.warc"
-
-  /** Atomically publish a fixture file: write a uniquely-named temp
-    * sibling, then ATOMIC_MOVE over the target — Bench's thread pool
-    * runs warc_ingest and warc_gz_ingest concurrently and both
-    * (re)build the shared corpus.warc, so a plain writeString could be
-    * read mid-truncation. The unique temp name keeps two concurrent
-    * builders from interleaving on the SAME temp file; each publishes
-    * a complete byte-identical fixture.
+  /** The story's 100-line blocks, the records of every story-based
+    * fixture. raw_corpus_ingest joins them with \n\n and re-splits on
+    * \n\n, so a blank line inside a block would silently diverge the
+    * Spark split from its oracle's algebraic 100-line grouping.
     */
-  private def writeFixtureAtomic(path: String, bytes: Array[Byte]): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(
-      p.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID())
-    java.nio.file.Files.write(tmp, bytes)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def storyBlocks(): Seq[String] = {
+    val lines = story().split("\n", -1)
+    require(lines.forall(_.nonEmpty), "the story has a blank line")
+    lines.grouped(100).map(_.mkString("\n")).toSeq
   }
 
-  /** Build-once latch for the raw-ingest fixture (lazy val = JVM-wide
-    * synchronized once). The blank-line `require` enforces the split
-    * invariant raw_corpus_ingest's oracle assumes: records are joined
-    * with \n\n and re-split on \n\n, so a blank line INSIDE a record
-    * would silently diverge the Spark split from the oracle's
-    * algebraic 100-line grouping.
-    */
-  private lazy val rawIngestFixtureBuilt: Unit = {
-    buildStory()
-    val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
-    val lines = raw.split("\n", -1)
-    require(lines.forall(_.nonEmpty),
-      s"$RawStoryPath contains blank lines — records would embed the \\n\\n delimiter")
-    val recs = lines.grouped(100).map(_.mkString("\n")).toSeq
-    writeFixtureAtomic(RawIngestPath,
-      recs.mkString("\n\n").getBytes("UTF-8"))
+  /** raw_corpus_ingest's input; its oracle regroups the story file. */
+  private def rawIngestFile(): String = {
+    storyFile()
+    fixture(RawIngestPath)(utf8(storyBlocks().mkString("\n\n")))
   }
-  private def buildRawIngestFixture(): Unit = rawIngestFixtureBuilt
-  private val RawIngestPath = s"$FixtureRoot/raw_ingest/corpus.txt"
 
-  /** Deterministic WARC/1.0 fixture from the reference story: each
-    * 100-line record becomes one `response`/`request`/`metadata`
-    * record (i%3) with uuid-shaped ids, minute-stepped dates, and a
-    * byte-accurate Content-Length. Idempotent rebuild.
+  /** One WARC/1.0 record: uuid-shaped id `group`-`i`, named headers, a
+    * byte-accurate Content-Length and the block.
     */
-  private def warcRecords(): Seq[String] = {
-    buildStory()
-    val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
-    val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
-    val types = Seq("response", "request", "metadata")
-    blocks.zipWithIndex.map { case (b, i) =>
-      s"WARC/1.0\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-${i}%012d>\r\n" +
-        s"WARC-Type: ${types(i % 3)}\r\n" +
-        f"WARC-Date: 2026-01-01T${i / 60}%02d:${i % 60}%02d:00Z\r\n" +
-        s"WARC-Target-URI: https://crawl.example.com/page/$i\r\n" +
-        "Content-Type: text/plain\r\n" +
-        s"Content-Length: ${b.getBytes("UTF-8").length}\r\n" +
-        s"\r\n$b\r\n\r\n"
+  private def warcRecord(group: Int, i: Int, warcType: String, date: String,
+                         uri: String, contentType: String, block: String): String =
+    "WARC/1.0\r\n" +
+      f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-$group%04d-$i%012d>\r\n" +
+      s"WARC-Type: $warcType\r\n" +
+      s"WARC-Date: $date\r\n" +
+      s"WARC-Target-URI: $uri\r\n" +
+      s"Content-Type: $contentType\r\n" +
+      s"Content-Length: ${utf8(block).length}\r\n" +
+      s"\r\n$block\r\n\r\n"
+
+  /** Minute `i` of `day`, as a WARC-Date. */
+  private def minute(day: String, i: Int): String = f"${day}T${i / 60}%02d:${i % 60}%02d:00Z"
+
+  private def page(n: Any): String = s"https://crawl.example.com/page/$n"
+
+  private val WarcTypes = Seq("response", "request", "metadata")
+
+  /** Each story block as one `response`/`request`/`metadata` record (i%3). */
+  private def warcRecords(): Seq[String] = storyBlocks().zipWithIndex.map { case (b, i) =>
+    warcRecord(0, i, WarcTypes(i % 3), minute("2026-01-01", i), page(i), "text/plain", b)
+  }
+
+  private def warcFile(): String = fixture(WarcPath)(utf8(warcRecords().mkString))
+
+  /** The same records as [[warcFile]], compressed one gzip MEMBER per
+    * record (the Common-Crawl .warc.gz layout). Its oracle is the plain
+    * file's, which is written too.
+    */
+  private def warcGzFile(): String = {
+    warcFile()
+    fixture(WarcGzPath) {
+      val bos = new java.io.ByteArrayOutputStream()
+      warcRecords().foreach { r =>
+        val g = new java.util.zip.GZIPOutputStream(bos)
+        g.write(utf8(r))
+        g.finish() // member trailer, underlying stream stays open
+      }
+      bos.toByteArray
     }
   }
-
-  private lazy val warcFixtureBuilt: Unit =
-    writeFixtureAtomic(WarcFixturePath,
-      warcRecords().mkString("").getBytes("UTF-8"))
-  private def buildWarcFixture(): Unit = warcFixtureBuilt
-
-  private val WarcGzFixturePath = s"$FixtureRoot/warc_gz/corpus.warc.gz"
-
-  /** The SAME records as [[buildWarcFixture]], compressed one gzip
-    * MEMBER per record (the Common-Crawl .warc.gz layout) — the gz
-    * reader must produce byte-identical results to the plain reader,
-    * which is exactly what its oracle (the plain file's SQL twin)
-    * checks.
-    */
-  private lazy val warcGzFixtureBuilt: Unit = {
-    val bos = new java.io.ByteArrayOutputStream()
-    warcRecords().foreach { r =>
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(r.getBytes("UTF-8"))
-      g.finish() // member trailer, underlying stream stays open
-    }
-    writeFixtureAtomic(WarcGzFixturePath, bos.toByteArray)
-  }
-  private def buildWarcGzFixture(): Unit = { buildWarcFixture(); warcGzFixtureBuilt }
-
-  private val WarcBFixturePath = s"$FixtureRoot/warc_revisit/corpus_b.warc"
 
   /** Snapshot B of the WARC fixture — the SAME uris/types/blocks as
     * [[warcRecords]] except: records dropped where i%11==0 (`gone`),
     * blocks edited where i%5==0 (`changed`), three fresh uris appended
     * (`new`); dates/ids advanced to the February recrawl.
     */
-  private lazy val warcBFixtureBuilt: Unit = {
-    buildStory()
-    val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
-    val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
-    val types = Seq("response", "request", "metadata")
-    val recs = blocks.zipWithIndex.filter(_._2 % 11 != 0).map { case (b0, i) =>
-      val b = if (i % 5 == 0) b0 + "\n[edited in snapshot B]" else b0
-      s"WARC/1.0\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0003-${i}%012d>\r\n" +
-        s"WARC-Type: ${types(i % 3)}\r\n" +
-        f"WARC-Date: 2026-02-01T${i / 60}%02d:${i % 60}%02d:00Z\r\n" +
-        s"WARC-Target-URI: https://crawl.example.com/page/$i\r\n" +
-        "Content-Type: text/plain\r\n" +
-        s"Content-Length: ${b.getBytes("UTF-8").length}\r\n" +
-        s"\r\n$b\r\n\r\n"
+  private def warcBFile(): String = fixture(WarcBPath)(utf8((
+    storyBlocks().zipWithIndex.filter(_._2 % 11 != 0).map { case (b, i) =>
+      warcRecord(3, i, WarcTypes(i % 3), minute("2026-02-01", i), page(i), "text/plain",
+        if (i % 5 == 0) b + "\n[edited in snapshot B]" else b)
     } ++ (0 until 3).map { j =>
-      val b = s"fresh page $j from snapshot B"
-      "WARC/1.0\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0004-${j}%012d>\r\n" +
-        "WARC-Type: response\r\n" +
-        s"WARC-Date: 2026-02-01T12:0$j:00Z\r\n" +
-        s"WARC-Target-URI: https://crawl.example.com/page/new$j\r\n" +
-        "Content-Type: text/plain\r\n" +
-        s"Content-Length: ${b.getBytes("UTF-8").length}\r\n" +
-        s"\r\n$b\r\n\r\n"
-    }
-    writeFixtureAtomic(WarcBFixturePath, recs.mkString("").getBytes("UTF-8"))
-  }
-  private def buildWarcBFixture(): Unit = warcBFixtureBuilt
-
-  private val WarcRedirectFixturePath = s"$FixtureRoot/warc_redirect/corpus.warc"
+      warcRecord(4, j, "response", minute("2026-02-01", 720 + j), page(s"new$j"),
+        "text/plain", s"fresh page $j from snapshot B")
+    }).mkString))
 
   /** Fetch-log fixture for redirect resolution: 241 HTTP responses at
     * /page/i with a deterministic redirect schedule — i==36 self-loop
@@ -218,10 +177,9 @@ object MapReduceQueries {
     * status cycling 301/302/307/308 by i%16, everything else
     * 200-terminal.
     */
-  private lazy val warcRedirectFixtureBuilt: Unit = {
-    def page(n: Int) = s"https://crawl.example.com/page/$n"
+  private def warcRedirectFile(): String = fixture(WarcRedirectPath) {
     val portVariant = "https://crawl.example.com:443/page/77"
-    val recs = (0 to 240).map { i =>
+    utf8((0 to 240).map { i =>
       val loc: Option[String] =
         if (i == 36) Some(page(36))
         else if (i == 72) Some(page(9999))
@@ -243,50 +201,39 @@ object MapReduceQueries {
       val http = s"HTTP/1.1 $status $reason\r\n" +
         loc.map(l => s"Location: $l\r\n").getOrElse("") +
         "Content-Type: text/plain\r\n" +
-        s"Content-Length: ${b.getBytes("UTF-8").length}\r\n" +
+        s"Content-Length: ${utf8(b).length}\r\n" +
         s"\r\n$b"
-      s"WARC/1.0\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0005-${i}%012d>\r\n" +
-        "WARC-Type: response\r\n" +
-        f"WARC-Date: 2026-01-03T${i / 60}%02d:${i % 60}%02d:00Z\r\n" +
-        s"WARC-Target-URI: ${if (i == 240) portVariant else page(i)}\r\n" +
-        "Content-Type: application/http; msgtype=response\r\n" +
-        s"Content-Length: ${http.getBytes("UTF-8").length}\r\n" +
-        s"\r\n$http\r\n\r\n"
-    }
-    writeFixtureAtomic(WarcRedirectFixturePath, recs.mkString("").getBytes("UTF-8"))
+      warcRecord(5, i, "response", minute("2026-01-03", i),
+        if (i == 240) portVariant else page(i), "application/http; msgtype=response", http)
+    }.mkString)
   }
-  private def buildWarcRedirectFixture(): Unit = warcRedirectFixtureBuilt
-
-  private val WarcHttpFixturePath = s"$FixtureRoot/warc_http/corpus.warc"
 
   /** WARC/1.0 fixture whose blocks are real HTTP responses: status
     * line (404 on i%7==3), HTTP headers with a byte-accurate HTTP
     * Content-Length, blank line, body — the block's internal
-    * `\r\n\r\n` is the point. Idempotent rebuild.
+    * `\r\n\r\n` is the point.
     */
-  private def buildWarcHttpFixture(): Unit = warcHttpFixtureBuilt
-  private lazy val warcHttpFixtureBuilt: Unit = {
-    buildStory()
-    val raw = java.nio.file.Files.readString(java.nio.file.Paths.get(RawStoryPath))
-    val blocks = raw.split("\n", -1).grouped(100).map(_.mkString("\n")).toSeq
-    val recs = blocks.zipWithIndex.map { case (b, i) =>
+  private def warcHttpFile(): String = fixture(WarcHttpPath)(utf8(
+    storyBlocks().zipWithIndex.map { case (b, i) =>
       val (status, reason) = if (i % 7 == 3) (404, "Not Found") else (200, "OK")
       val http = s"HTTP/1.1 $status $reason\r\n" +
         "Content-Type: text/plain; charset=UTF-8\r\n" +
-        s"Content-Length: ${b.getBytes("UTF-8").length}\r\n" +
+        s"Content-Length: ${utf8(b).length}\r\n" +
         "Server: graft-fixture\r\n" +
         s"\r\n$b"
-      s"WARC/1.0\r\n" +
-        f"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0001-${i}%012d>\r\n" +
-        "WARC-Type: response\r\n" +
-        f"WARC-Date: 2026-01-02T${i / 60}%02d:${i % 60}%02d:00Z\r\n" +
-        s"WARC-Target-URI: https://crawl.example.com/page/$i\r\n" +
-        "Content-Type: application/http; msgtype=response\r\n" +
-        s"Content-Length: ${http.getBytes("UTF-8").length}\r\n" +
-        s"\r\n$http\r\n\r\n"
-    }
-    writeFixtureAtomic(WarcHttpFixturePath, recs.mkString("").getBytes("UTF-8"))
+      warcRecord(1, i, "response", minute("2026-01-02", i), page(i),
+        "application/http; msgtype=response", http)
+    }.mkString))
+
+  private def rawWeather(s: SparkSession): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("temperature", DoubleType),
+      StructField("humidity", DoubleType),
+      StructField("pressure", DoubleType)))
+    graft.sources.Formats.readCsv(s, weatherFile(), schema)
+      .selectExpr("stack(3, 'temperature', temperature, 'humidity', humidity, " +
+        "'pressure', pressure) AS (measurement, value)")
   }
 
   /** The WARC split + header-parse chain as a WITH-prefix ending in a
@@ -327,7 +274,7 @@ object MapReduceQueries {
          |    n_hops + CASE WHEN nxt IS NOT NULL THEN 1 ELSE 0 END AS n_hops
          |  FROM r$h LEFT JOIN red ON r$h.nxt = red.ru)""".stripMargin
     }.mkString(",\n")
-    s"""${warcCtes(WarcRedirectFixturePath)},
+    s"""${warcCtes(WarcRedirectPath)},
        |hh AS (SELECT target_uri, block,
        |    CASE WHEN regexp_matches(block, '^HTTP/[0-9.]+ [0-9]{3}')
        |      THEN string_split(block, chr(13)||chr(10)||chr(13)||chr(10))[1]
@@ -354,7 +301,7 @@ object MapReduceQueries {
     * produce exactly the plain reader's records.
     */
   private val warcIngestOracle =
-    s"""${warcCtes(WarcFixturePath)}
+    s"""${warcCtes(WarcPath)}
        |SELECT record_id, warc_type, cast(wd AS timestamp) AS warc_date,
        |  target_uri, content_type, content_length,
        |  (strlen(block) = content_length) AS length_ok, block
@@ -408,18 +355,18 @@ object MapReduceQueries {
         |FROM events GROUP BY user_id""".stripMargin),
     // raw-file ingestion: the reference's native input formats end-to-end
     Registered("raw_wordcount", (s, _) =>
-        MapReduceOps.wordCount(storyLines(s), "value"),
+        MapReduceOps.wordCount(graft.sources.Formats.readText(s, storyFile()), "value"),
       // whitespace tokenization is line-break agnostic, so tokens over the
       // whole file (read_text) equal Spark's per-line tokens exactly
       s"""SELECT word, count(*) AS cnt
          |FROM (SELECT unnest(${TextFunctions.tokensSql("content")}) AS word
-         |      FROM read_text('$RawStoryPath'))
+         |      FROM read_text('$StoryPath'))
          |GROUP BY word""".stripMargin),
     // LINE-level grep — the reference's actual grep contract emits
     // matching lines, not documents (reference design.md:276-278);
     // mr_grep above keeps the document-level variant for the tables
     Registered("raw_grep", (s, _) =>
-        MapReduceOps.grep(storyLines(s),
+        MapReduceOps.grep(graft.sources.Formats.readText(s, storyFile()),
             "value", rawGrepPattern)
           .select(col("value").as("line")),
       // duplicates matter: identical matching lines appear once per
@@ -429,11 +376,11 @@ object MapReduceQueries {
       // must not break parity
       s"""SELECT line FROM (
          |  SELECT unnest(string_split_regex(content, '\\r\\n|\\r|\\n')) AS line
-         |  FROM read_text('$RawStoryPath'))
+         |  FROM read_text('$StoryPath'))
          |WHERE regexp_matches(line, '$rawGrepPattern')""".stripMargin),
     Registered("raw_weather_stats", (s, _) =>
         MapReduceOps.keyStats(rawWeather(s), "measurement", "value"),
-      s"""WITH w AS (SELECT * FROM read_csv('$RawWeatherPath', header = true,
+      s"""WITH w AS (SELECT * FROM read_csv('$WeatherPath', header = true,
          |    columns = {'temperature': 'DOUBLE', 'humidity': 'DOUBLE', 'pressure': 'DOUBLE'})),
          |u AS (
          |  SELECT 'temperature' AS measurement, temperature AS value FROM w
@@ -452,8 +399,7 @@ object MapReduceQueries {
     // oracle recomputes the SAME grouping from the story directly, so
     // the compare proves the write → delimiter-split → read round trip.
     Registered("raw_corpus_ingest", (s, _) => {
-        buildRawIngestFixture()
-        graft.sources.Formats.readRecords(s, RawIngestPath)
+        graft.sources.Formats.readRecords(s, rawIngestFile())
           .select(col("record_id"), col("text"),
             length(col("text")).as("n_chars"),
             size(TextFunctions.tokens(col("text"))).as("n_tokens"))
@@ -465,7 +411,7 @@ object MapReduceQueries {
       // is the same explicit class the Spark side uses (\S differs
       // between engines).
       s"""WITH f AS (SELECT string_split(content, chr(10)) AS ls
-         |  FROM read_text('$RawStoryPath')),
+         |  FROM read_text('$StoryPath')),
          |ln AS (SELECT unnest(list_transform(ls,
          |    (x, i) -> struct_pack(i := i, line := x))) AS s FROM f),
          |rec AS (SELECT array_to_string(list(s.line ORDER BY s.i), chr(10)) AS text
@@ -482,8 +428,7 @@ object MapReduceQueries {
     // + payload per-row, zero shuffle. The oracle re-parses the SAME
     // generated file in SQL, proving the split + header grammar.
     Registered("warc_ingest", (s, _) => {
-        buildWarcFixture()
-        graft.sources.Formats.readWarc(s, WarcFixturePath)
+        graft.sources.Formats.readWarc(s, warcFile())
           .select(col("record_id"), col("warc_type"), col("warc_date"),
             col("target_uri"), col("content_type"), col("content_length"),
             col("length_ok"), col("block"))
@@ -494,8 +439,7 @@ object MapReduceQueries {
     // the oracle is the PLAIN twin's SQL chain, so the compare proves
     // gz path ≡ plain path record for record
     Registered("warc_gz_ingest", (s, _) => {
-        buildWarcGzFixture()
-        graft.sources.Formats.readWarcGz(s, WarcGzFixturePath)
+        graft.sources.Formats.readWarcGz(s, warcGzFile())
           .select(col("record_id"), col("warc_type"), col("warc_date"),
             col("target_uri"), col("content_type"), col("content_length"),
             col("length_ok"), col("block"))
@@ -506,14 +450,13 @@ object MapReduceQueries {
     // response block; the block's own \r\n\r\n exercises warcParse's
     // substring-not-split contract for real
     Registered("warc_http", (s, _) => {
-        buildWarcHttpFixture()
         graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, WarcHttpFixturePath), "block")
+          graft.sources.Formats.readWarc(s, warcHttpFile()), "block")
           .select(col("record_id"), col("target_uri"), col("status"),
             col("http_content_type"), col("http_content_length"),
             col("body_ok"), col("body"))
       },
-      s"""${warcCtes(WarcHttpFixturePath)},
+      s"""${warcCtes(WarcHttpPath)},
          |hh AS (SELECT p.*,
          |    CASE WHEN regexp_matches(block, '^HTTP/[0-9.]+ [0-9]{3}')
          |      THEN string_split(block, chr(13)||chr(10)||chr(13)||chr(10))[1]
@@ -540,9 +483,8 @@ object MapReduceQueries {
     // url_dedup); fixture plants 1/2-hop chains, a 5-hop run, a self
     // loop, and a dangling external target — every resolution class
     Registered("redirect_resolve", (s, _) => {
-        buildWarcRedirectFixture()
         val fetches = graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, WarcRedirectFixturePath), "block")
+          graft.sources.Formats.readWarc(s, warcRedirectFile()), "block")
         Links.redirectResolve(fetches, "target_uri", "status", "http_location")
       },
       s"""$redirectResolveCtes
@@ -555,9 +497,8 @@ object MapReduceQueries {
     // landing page's own fetch for its status and payload size. What
     // a crawler's post-fetch canonicalization actually runs end-to-end
     Registered("fetch_pipeline", (s, _) => {
-        buildWarcRedirectFixture()
         val fetches = graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, WarcRedirectFixturePath), "block")
+          graft.sources.Formats.readWarc(s, warcRedirectFile()), "block")
         val res = Links.redirectResolve(fetches, "target_uri", "status",
           "http_location")
         val landed = res.filter(col("resolution") =!= "exceeded" &&
@@ -605,14 +546,12 @@ object MapReduceQueries {
     // and adds records on a deterministic schedule. The oracle
     // re-parses BOTH generated files with the shared WARC SQL chain.
     Registered("warc_revisit", (s, _) => {
-        buildWarcFixture()
-        buildWarcBFixture()
         graft.sources.Formats.revisitClassify(
-          graft.sources.Formats.readWarc(s, WarcFixturePath),
-          graft.sources.Formats.readWarc(s, WarcBFixturePath))
+          graft.sources.Formats.readWarc(s, warcFile()),
+          graft.sources.Formats.readWarc(s, warcBFile()))
       },
-      s"""${warcCtes(WarcFixturePath, "a")},
-         |${warcCtes(WarcBFixturePath, "b").stripPrefix("WITH ")},
+      s"""${warcCtes(WarcPath, "a")},
+         |${warcCtes(WarcBPath, "b").stripPrefix("WITH ")},
          |pa AS (SELECT target_uri,
          |    max(struct_pack(wd := wd, d := md5(block))) AS m
          |  FROM ap WHERE warc_type = 'response' GROUP BY 1),
