@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators._
@@ -25,6 +25,19 @@ object CurationQueries {
        |SELECT e.doc_id, count(*) AS n_hits
        |FROM ex e JOIN bench b ON e.gk = b.gk
        |WHERE NOT (e.doc_id % 10 = 7 AND e.doc_id < 1000) GROUP BY 1""".stripMargin
+
+  /** A decontamination query over the documents split into train and
+    * the benchmark: a fixture that is genuinely fixed-cardinality (≤100
+    * docs at ANY scale factor) — the contract under which
+    * decontaminate's compile-time broadcast hint of the gram set is
+    * legitimate.
+    */
+  private def benchmarkSplit(op: (DataFrame, DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    val docs = Tables.documents(s, d)
+    val isBench = col("doc_id") % 10 === 7 && col("doc_id") < 1000
+    op(docs.filter(!isBench), docs.filter(isBench))
+  }
 
   val all: Seq[Registered] = Seq(
     Registered("corpus_quota_sample", (s, d) =>
@@ -86,24 +99,13 @@ object CurationQueries {
          |    CASE WHEN p.used + d.n_tokens <= 512 THEN p.used + d.n_tokens ELSE d.n_tokens END
          |  FROM pack p JOIN sized d ON d.stratum = p.stratum AND d.rn = p.rn + 1)
          |SELECT doc_id, stratum, n_tokens, bin FROM pack""".stripMargin),
-    Registered("decontaminate", (s, d) => {
-        // benchmark fixture is genuinely fixed-cardinality (≤100 docs at
-        // ANY scale factor) — the contract under which decontaminate's
-        // compile-time broadcast hint of the gram set is legitimate
-        val docs = Tables.documents(s, d)
-        val isBench = col("doc_id") % 10 === 7 && col("doc_id") < 1000
-        Curation.decontaminate(docs.filter(!isBench), docs.filter(isBench),
-          "doc_id", "text")
-      },
+    Registered("decontaminate",
+      benchmarkSplit((train, bench) => Curation.decontaminate(train, bench, "doc_id", "text")),
       decontaminateSql),
     // bloom-prescreened decontamination: result identical to the exact
     // screen (fp's die in the confirm join) -> same oracle SQL
-    Registered("decontaminate_bloom", (s, d) => {
-        val docs = Tables.documents(s, d)
-        val isBench = col("doc_id") % 10 === 7 && col("doc_id") < 1000
-        Curation.decontaminateBloom(docs.filter(!isBench), docs.filter(isBench),
-          "doc_id", "text")
-      },
+    Registered("decontaminate_bloom",
+      benchmarkSplit((train, bench) => Curation.decontaminateBloom(train, bench, "doc_id", "text")),
       // the bloom prescreen is exact after its confirm join — same oracle
       decontaminateSql),
     Registered("corpus_stats", (s, d) =>
@@ -330,12 +332,9 @@ object CurationQueries {
     // → token gate → exact dedup → shard manifest. Pages wrapped under
     // a CONSTANT title so replicated texts are exact page duplicates
     // and the dedup stage is live at sf >= 0.1 (C82)
-    Registered("crawl_pipeline", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Curation.crawlPipeline(
-          docs.select(col("doc_id"), Html.wrapHtml(lit(0), col("text")).as("html")),
-          "doc_id", "html")
-      },
+    Registered("crawl_pipeline", (s, d) =>
+        Curation.crawlPipeline(wrapped(s, d, Html.wrapHtml(lit(0), col("text")), "html"),
+          "doc_id", "html"),
       s"""${Html.htmlExtractCtes(idExpr = "0")},
          |gated AS (SELECT doc_id, clean_text FROM extracted
          |  WHERE len(${TextFunctions.tokensSql("clean_text")}) BETWEEN 5 AND 10000),

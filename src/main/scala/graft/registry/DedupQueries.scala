@@ -224,13 +224,9 @@ object DedupQueries {
     // CCNet-style corpus-wide line dedup (first-occurrence-wins) on
     // the deterministic multi-line page fixture — the boilerplate-line
     // removal stage between html_extract and document dedup (C78)
-    Registered("line_dedup", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Dedup.lineDedup(
-          docs.select(col("doc_id"),
-            Dedup.wrapLines(col("text"), col("source")).as("text")),
-          "doc_id", "text")
-      },
+    Registered("line_dedup", (s, d) =>
+        Dedup.lineDedup(wrapped(s, d, Dedup.wrapLines(col("text"), col("source")), "text"),
+          "doc_id", "text"),
       s"""WITH $lineOccCtes,
          |keep AS (SELECT doc_id, line_no FROM (
          |  SELECT doc_id, line_no,
@@ -245,9 +241,7 @@ object DedupQueries {
     // digests once, batch lines also first-occurrence-deduped within
     // the batch (C81)
     Registered("line_dedup_incremental", (s, d) => {
-        val fx = Tables.documents(s, d)
-          .select(col("doc_id"),
-            Dedup.wrapLines(col("text"), col("source")).as("text"))
+        val fx = wrapped(s, d, Dedup.wrapLines(col("text"), col("source")), "text")
         Dedup.lineDedupAgainst(fx.filter(col("doc_id") % 3 === 0),
           fx.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
       },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.Tables
+import Shared._
 
 /** §2C crawl front end: [[Html]] (extraction, robots, sitemaps,
   * politeness, URL canonicalization).
@@ -118,24 +119,16 @@ object HtmlQueries {
     // crawl-ingestion stage 0 (C76): HTML → clean text with
     // link-density boilerplate filtering, on the deterministic
     // page fixture around each document
-    Registered("html_extract", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Html.htmlExtract(
-          docs.select(col("doc_id"),
-            Html.wrapHtml(col("doc_id"), col("text")).as("html")),
-          "doc_id", "html")
-      },
+    Registered("html_extract", (s, d) =>
+        Html.htmlExtract(wrapped(s, d, Html.wrapHtml(col("doc_id"), col("text")), "html"),
+          "doc_id", "html"),
       Html.htmlExtractOracleSql()),
     // robots-meta compliance gate (C85): noindex/nofollow/none
     // directives per page on the deterministic meta-tag fixture —
     // the exclusion signal honored before a page enters the corpus
-    Registered("robots_gate", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Html.robotsGate(
-          docs.select(col("doc_id"),
-            Html.wrapRobotsHtml(col("doc_id"), col("text")).as("html")),
-          "doc_id", "html")
-      },
+    Registered("robots_gate", (s, d) =>
+        Html.robotsGate(wrapped(s, d, Html.wrapRobotsHtml(col("doc_id"), col("text")), "html"),
+          "doc_id", "html"),
       Html.robotsGateOracleSql),
     // robots.txt frontier filtering (C86): RFC 9309 parse + most-
     // specific-group / longest-match evaluation of the wrapUrl
@@ -158,13 +151,9 @@ object HtmlQueries {
     // sitemap XML parsing (C88): urlset entries → one row per <url>,
     // loc required, optional fields defaulted (priority 0.5 per the
     // sitemaps.org schema), zero shuffle
-    Registered("sitemap_parse", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Html.sitemapParse(
-          docs.select(col("doc_id"),
-            Html.wrapSitemap(col("doc_id"), col("source")).as("xml")),
-          "doc_id", "xml")
-      },
+    Registered("sitemap_parse", (s, d) =>
+        Html.sitemapParse(wrapped(s, d, Html.wrapSitemap(col("doc_id"), col("source")), "xml"),
+          "doc_id", "xml"),
       Html.sitemapParseOracleSql),
     // sitemap INDEX resolution (C89): parse the per-host sitemapindex,
     // broadcast-join each entry to its fetched child sitemap, parse
@@ -237,13 +226,9 @@ object HtmlQueries {
     // default ports, tracking params, param order, trailing slash,
     // fragments) then one aggregation — the dedup that runs before any
     // content byte is compared, on the deterministic URL fixture (C83)
-    Registered("url_dedup", (s, d) => {
-        val docs = Tables.documents(s, d)
-        Html.urlDedup(
-          docs.select(col("doc_id"),
-            Html.wrapUrl(col("doc_id"), col("source")).as("url")),
-          "doc_id", "url")
-      },
+    Registered("url_dedup", (s, d) =>
+        Html.urlDedup(wrapped(s, d, Html.wrapUrl(col("doc_id"), col("source")), "url"),
+          "doc_id", "url"),
       s"""WITH u AS (SELECT doc_id, ${Html.wrapUrlSql("doc_id", "source")} AS url
          |  FROM documents)
          |SELECT ${Html.urlNormalizeSql("url")} AS canonical_url,
@@ -274,7 +259,8 @@ object HtmlQueries {
     // entry's lastmod against a fixed reference date under its
     // declared frequency; emits the due bit per entry
     Registered("recrawl_schedule", (s, d) =>
-        Html.recrawlSchedule(sitemapEntries(Tables.documents(s, d)), "lastmod", "changefreq", RecrawlAsOf)
+        Html.recrawlSchedule(sitemapEntries(Tables.documents(s, d)), "lastmod", "changefreq",
+            RecrawlAsOf)
           .select(col("host"), col("loc"), col("lastmod"), col("changefreq"),
             col("interval_days"), col("age_days"), col("due")),
       s"""WITH $sitemapEntCtes,

@@ -19,31 +19,33 @@ object LinksQueries {
       Html.wrapUrl(col("doc_id"), col("source")).as("url"),
       Links.wrapLinksHtml(col("doc_id"), col("source")).as("html"))
 
+  private def links(docs: DataFrame): DataFrame =
+    Links.linkExtract(linkPages(docs), "doc_id", "url", "html")
+
+  /** The followed cross-host links as (src, dst) hosts: the host PageRank's edges. */
+  private def hostEdges(docs: DataFrame): DataFrame =
+    links(docs).filter(!col("nofollow") && !col("internal"))
+      .select(col("page_host").as("src"), col("target_host").as("dst"))
+
   val all: Seq[Registered] = Seq(
     // anchor extraction + relative-URL resolution (C92): every <a href>
     // on each page resolved against the page's own URL (absolute /
     // root-relative / document-relative / scheme-relative) and
     // canonicalized — the zero-shuffle map pass the frontier, the host
     // graph, and the anchor corpus all feed from
-    Registered("link_extract", (s, d) => Links.linkExtract(
-        linkPages(Tables.documents(s, d)), "doc_id", "url", "html"),
+    Registered("link_extract", (s, d) => links(Tables.documents(s, d)),
       Links.linkExtractOracleSql),
     // the host→host link graph (C93): followed links aggregated to
     // sparse host adjacency — the shuffle is hosts-sized, pages never move
-    Registered("link_graph", (s, d) => Links.linkGraph(Links.linkExtract(
-        linkPages(Tables.documents(s, d)), "doc_id", "url", "html")),
+    Registered("link_graph", (s, d) => Links.linkGraph(links(Tables.documents(s, d))),
       Links.linkGraphOracleSql),
     // host reputation (C94): directed integer-fixed-point PageRank over
     // the CROSS-host edge set — the crawl-prioritization signal
-    Registered("host_rank", (s, d) => Graph.pagerankDirected(
-        Links.linkExtract(linkPages(Tables.documents(s, d)), "doc_id", "url", "html")
-          .filter(!col("nofollow") && !col("internal"))
-          .select(col("page_host").as("src"), col("target_host").as("dst"))),
+    Registered("host_rank", (s, d) => Graph.pagerankDirected(hostEdges(Tables.documents(s, d))),
       Links.hostRankOracleSql()),
     // anchor-text corpus (C95): per canonical target, the distinct
     // anchor texts pointing at it — retrieval/labeling signal
-    Registered("anchor_corpus", (s, d) => Links.anchorCorpus(Links.linkExtract(
-        linkPages(Tables.documents(s, d)), "doc_id", "url", "html")),
+    Registered("anchor_corpus", (s, d) => Links.anchorCorpus(links(Tables.documents(s, d))),
       Links.anchorCorpusOracleSql),
     // inbound-anchor enrichment (C98): each doc joined with what OTHER
     // pages' anchors say about its canonical URL — label/relevance
@@ -55,7 +57,7 @@ object LinksQueries {
             Html.urlNormalize(Html.wrapUrl(col("doc_id"), col("source")))
               .as("page_url")),
           "doc_id", "page_url",
-          Links.linkExtract(linkPages(docs), "doc_id", "url", "html"))
+          links(docs))
       },
       Links.docAnchorsOracleSql),
     // rel=canonical hints (C102): the page's self-declared canonical
@@ -73,11 +75,7 @@ object LinksQueries {
     // retained mass would skew every downstream budget ratio
     Registered("host_reputation", (s, d) => {
         val docs = Tables.documents(s, d)
-        val rank = Graph.pagerankDirected(
-          Links.linkExtract(linkPages(docs), "doc_id", "url", "html")
-            .filter(!col("nofollow") && !col("internal"))
-            .select(col("page_host").as("src"), col("target_host").as("dst")),
-          redistributeDangling = true)
+        val rank = Graph.pagerankDirected(hostEdges(docs), redistributeDangling = true)
         val q = TextAnalysis.quality(docs, "doc_id", "text")
           .select(col("doc_id"), col("quality_score"))
         val perHost = docs

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{Formats, Tables}
 import Shared._
 
 /** §2A: cooler-MapReduce's shipped workloads over the tables, the
@@ -81,7 +81,8 @@ object MapReduceQueries {
     */
   private def weatherCsv(): String = {
     val rnd = new scala.util.Random(7)
-    def v(lo: Int, span: Int) = java.math.BigDecimal.valueOf(lo + rnd.nextInt(span).toLong, 2).toPlainString
+    def v(lo: Int, span: Int) =
+      java.math.BigDecimal.valueOf(lo + rnd.nextInt(span).toLong, 2).toPlainString
     ("temperature,humidity,pressure" +: Seq.fill(2000)(
       s"${v(-2000, 6000)},${v(1000, 9000)},${v(98000, 6000)}")).mkString("\n")
   }
@@ -231,7 +232,7 @@ object MapReduceQueries {
       StructField("temperature", DoubleType),
       StructField("humidity", DoubleType),
       StructField("pressure", DoubleType)))
-    graft.sources.Formats.readCsv(s, weatherFile(), schema)
+    Formats.readCsv(s, weatherFile(), schema)
       .selectExpr("stack(3, 'temperature', temperature, 'humidity', humidity, " +
         "'pressure', pressure) AS (measurement, value)")
   }
@@ -297,9 +298,13 @@ object MapReduceQueries {
        |  FROM r4 LEFT JOIN (SELECT DISTINCT u FROM m) c ON r4.final_uri = c.u)""".stripMargin
   }
 
-  /** warc_ingest's oracle, and warc_gz_ingest's: the gz reader must
-    * produce exactly the plain reader's records.
+  /** warc_ingest's columns and oracle, and warc_gz_ingest's: the gz
+    * reader must produce exactly the plain reader's records.
     */
+  private def warcIngest(records: DataFrame): DataFrame =
+    records.select(col("record_id"), col("warc_type"), col("warc_date"), col("target_uri"),
+      col("content_type"), col("content_length"), col("length_ok"), col("block"))
+
   private val warcIngestOracle =
     s"""${warcCtes(WarcPath)}
        |SELECT record_id, warc_type, cast(wd AS timestamp) AS warc_date,
@@ -355,7 +360,7 @@ object MapReduceQueries {
         |FROM events GROUP BY user_id""".stripMargin),
     // raw-file ingestion: the reference's native input formats end-to-end
     Registered("raw_wordcount", (s, _) =>
-        MapReduceOps.wordCount(graft.sources.Formats.readText(s, storyFile()), "value"),
+        MapReduceOps.wordCount(Formats.readText(s, storyFile()), "value"),
       // whitespace tokenization is line-break agnostic, so tokens over the
       // whole file (read_text) equal Spark's per-line tokens exactly
       s"""SELECT word, count(*) AS cnt
@@ -366,7 +371,7 @@ object MapReduceQueries {
     // matching lines, not documents (reference design.md:276-278);
     // mr_grep above keeps the document-level variant for the tables
     Registered("raw_grep", (s, _) =>
-        MapReduceOps.grep(graft.sources.Formats.readText(s, storyFile()),
+        MapReduceOps.grep(Formats.readText(s, storyFile()),
             "value", rawGrepPattern)
           .select(col("value").as("line")),
       // duplicates matter: identical matching lines appear once per
@@ -398,12 +403,11 @@ object MapReduceQueries {
     // by blank lines — driver-side, it's a 1 MB fixture build); the
     // oracle recomputes the SAME grouping from the story directly, so
     // the compare proves the write → delimiter-split → read round trip.
-    Registered("raw_corpus_ingest", (s, _) => {
-        graft.sources.Formats.readRecords(s, rawIngestFile())
+    Registered("raw_corpus_ingest", (s, _) =>
+        Formats.readRecords(s, rawIngestFile())
           .select(col("record_id"), col("text"),
             length(col("text")).as("n_chars"),
-            size(TextFunctions.tokens(col("text"))).as("n_tokens"))
-      },
+            size(TextFunctions.tokens(col("text"))).as("n_tokens")),
       // the oracle never reads the generated file: it regroups the story
       // lines with the same 100-line/blank-line-join algebra the query's
       // fixture builder uses, so equality proves the whole
@@ -427,35 +431,25 @@ object MapReduceQueries {
     // at the version-line boundary INSIDE the scan and parses headers
     // + payload per-row, zero shuffle. The oracle re-parses the SAME
     // generated file in SQL, proving the split + header grammar.
-    Registered("warc_ingest", (s, _) => {
-        graft.sources.Formats.readWarc(s, warcFile())
-          .select(col("record_id"), col("warc_type"), col("warc_date"),
-            col("target_uri"), col("content_type"), col("content_length"),
-            col("length_ok"), col("block"))
-      },
+    Registered("warc_ingest", (s, _) => warcIngest(Formats.readWarc(s, warcFile())),
       warcIngestOracle),
     // gzip-member WARC ingestion (A14): the .warc.gz distribution
     // layout — per-file decompression, then the same split + parse;
     // the oracle is the PLAIN twin's SQL chain, so the compare proves
     // gz path ≡ plain path record for record
-    Registered("warc_gz_ingest", (s, _) => {
-        graft.sources.Formats.readWarcGz(s, warcGzFile())
-          .select(col("record_id"), col("warc_type"), col("warc_date"),
-            col("target_uri"), col("content_type"), col("content_length"),
-            col("length_ok"), col("block"))
-      },
+    Registered("warc_gz_ingest", (s, _) =>
+        warcIngest(Formats.readWarcGz(s, warcGzFile())),
       warcIngestOracle),
     // HTTP responses inside WARC blocks (A13): the Common-Crawl payload
     // shape — status line, HTTP headers, body split out of each
     // response block; the block's own \r\n\r\n exercises warcParse's
     // substring-not-split contract for real
-    Registered("warc_http", (s, _) => {
-        graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, warcHttpFile()), "block")
+    Registered("warc_http", (s, _) =>
+        Formats.httpParse(
+          Formats.readWarc(s, warcHttpFile()), "block")
           .select(col("record_id"), col("target_uri"), col("status"),
             col("http_content_type"), col("http_content_length"),
-            col("body_ok"), col("body"))
-      },
+            col("body_ok"), col("body")),
       s"""${warcCtes(WarcHttpPath)},
          |hh AS (SELECT p.*,
          |    CASE WHEN regexp_matches(block, '^HTTP/[0-9.]+ [0-9]{3}')
@@ -483,8 +477,8 @@ object MapReduceQueries {
     // url_dedup); fixture plants 1/2-hop chains, a 5-hop run, a self
     // loop, and a dangling external target — every resolution class
     Registered("redirect_resolve", (s, _) => {
-        val fetches = graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, warcRedirectFile()), "block")
+        val fetches = Formats.httpParse(
+          Formats.readWarc(s, warcRedirectFile()), "block")
         Links.redirectResolve(fetches, "target_uri", "status", "http_location")
       },
       s"""$redirectResolveCtes
@@ -497,8 +491,8 @@ object MapReduceQueries {
     // landing page's own fetch for its status and payload size. What
     // a crawler's post-fetch canonicalization actually runs end-to-end
     Registered("fetch_pipeline", (s, _) => {
-        val fetches = graft.sources.Formats.httpParse(
-          graft.sources.Formats.readWarc(s, warcRedirectFile()), "block")
+        val fetches = Formats.httpParse(
+          Formats.readWarc(s, warcRedirectFile()), "block")
         val res = Links.redirectResolve(fetches, "target_uri", "status",
           "http_location")
         val landed = res.filter(col("resolution") =!= "exceeded" &&
@@ -545,11 +539,10 @@ object MapReduceQueries {
     // (new / unchanged / changed / gone); snapshot B mutates, drops,
     // and adds records on a deterministic schedule. The oracle
     // re-parses BOTH generated files with the shared WARC SQL chain.
-    Registered("warc_revisit", (s, _) => {
-        graft.sources.Formats.revisitClassify(
-          graft.sources.Formats.readWarc(s, warcFile()),
-          graft.sources.Formats.readWarc(s, warcBFile()))
-      },
+    Registered("warc_revisit", (s, _) =>
+        Formats.revisitClassify(
+          Formats.readWarc(s, warcFile()),
+          Formats.readWarc(s, warcBFile())),
       s"""${warcCtes(WarcPath, "a")},
          |${warcCtes(WarcBPath, "b").stripPrefix("WITH ")},
          |pa AS (SELECT target_uri,

@@ -1,8 +1,10 @@
 package graft.registry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.SparkEntry.OracleStage
 import graft.functions.TextFunctions
+import graft.sources.Tables
 
 /** One registered query: the builder the driver runs on a scale-factor
   * directory, the DuckDB SQL that must return the same rows from the
@@ -31,6 +33,10 @@ private[registry] object Shared {
 
   def ph(expr: String): String =
     s"cast('0x' || substr(md5($expr), 1, 15) as bigint)"
+
+  /** The documents' ids with one per-document fixture column, `fixture AS alias`. */
+  def wrapped(s: SparkSession, d: String, fixture: Column, alias: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id"), fixture.as(alias))
 
   // blocked source domains of the blocklist_filter fixture, also the
   // policy column of host_reputation

@@ -147,9 +147,6 @@ object SimilarityQueries {
         Similarity.decontaminateSemantic(emb.filter(!isEval), emb.filter(isEval),
           "vec_id", "embedding")
       },
-      // politeness_schedule_quota's oracle is not listed here: oracleSql
-      // DERIVES it (the unbounded schedule's SQL + "WHERE slot < 7") so
-      // the twins can never drift
       s"""WITH ev AS (SELECT vec_id AS eval_id, embedding AS e
          |  FROM embeddings WHERE vec_id % 50 = 7),
          |tr AS (SELECT vec_id, embedding AS t

@@ -142,13 +142,9 @@ object TextQueries {
     // corpus carries none of the classes, so the wrap is what makes
     // every pattern BITE at driver SFs (same fixture convention as
     // wrapRobotsTxt/wrapUrl)
-    Registered("text_redact", (s, d) => {
-        val docs = Tables.documents(s, d)
-        TextAnalysis.redact(
-          docs.select(col("doc_id"),
-            TextAnalysis.wrapPii(col("doc_id"), col("text")).as("text")),
-          "doc_id", "text")
-      },
+    Registered("text_redact", (s, d) =>
+        TextAnalysis.redact(wrapped(s, d, TextAnalysis.wrapPii(col("doc_id"), col("text")), "text"),
+          "doc_id", "text"),
       s"""WITH t AS (SELECT doc_id,
          |    ${TextAnalysis.wrapPiiSql("doc_id", "text")} AS text
          |  FROM documents)
@@ -168,13 +164,9 @@ object TextQueries {
     // plants every script class on id strides (same convention as
     // wrapPii/wrapRobotsTxt); the %7==2 stride's Han block outweighs
     // the base text so dominance genuinely flips there
-    Registered("script_profile", (s, d) => {
-        val docs = Tables.documents(s, d)
+    Registered("script_profile", (s, d) =>
         TextAnalysis.scriptProfile(
-          docs.select(col("doc_id"),
-            TextAnalysis.wrapScripts(col("doc_id"), col("text")).as("text")),
-          "doc_id", "text")
-      },
+          wrapped(s, d, TextAnalysis.wrapScripts(col("doc_id"), col("text")), "text"), "doc_id", "text"),
       {
         // generated from the SAME ScriptClasses table the Spark kernel
         // reads — ranges, names, and tie-break order cannot drift
@@ -296,13 +288,10 @@ object TextQueries {
     // punctuation/length/javascript filters + page brace/lorem/lexicon
     // gates, on the deterministic multi-line page fixture (every rule
     // class live on an id schedule)
-    Registered("c4_rules", (s, d) => {
-        val docs = Tables.documents(s, d)
+    Registered("c4_rules", (s, d) =>
         TextAnalysis.c4Rules(
-          docs.select(col("doc_id"),
-            TextAnalysis.wrapC4Page(col("doc_id"), col("text")).as("text")),
-          "doc_id", "text", Seq("badterm"))
-      },
+          wrapped(s, d, TextAnalysis.wrapC4Page(col("doc_id"), col("text")), "text"),
+          "doc_id", "text", Seq("badterm")),
       s"""WITH c4fx AS (SELECT doc_id,
          |    ${TextAnalysis.wrapC4PageSql("doc_id", "text")} AS text
          |  FROM documents),
