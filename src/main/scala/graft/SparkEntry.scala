@@ -59,7 +59,7 @@ object SparkEntry {
     */
   final case class OracleStage(name: String, shards: Int, sql: String)
 
-  private val registry = Registered.distinct(
+  private val registry = Registered.requireDistinct(
     MapReduceQueries.all ++ RelationalQueries.all ++ SimilarityQueries.all ++
       DedupQueries.all ++ TextQueries.all ++ ScoringQueries.all ++
       HtmlQueries.all ++ LinksQueries.all ++ CurationQueries.all)

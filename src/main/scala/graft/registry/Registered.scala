@@ -20,7 +20,7 @@ object Registered {
     * the driver's maps are keyed by name, so a repeated name would let
     * one record silently replace another.
     */
-  def distinct(records: Seq[Registered]): Seq[Registered] = {
+  def requireDistinct(records: Seq[Registered]): Seq[Registered] = {
     val repeated = records.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
     require(repeated.isEmpty, s"query names registered twice: ${repeated.toSeq.sorted.mkString(", ")}")
     records

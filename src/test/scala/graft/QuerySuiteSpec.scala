@@ -39,15 +39,17 @@ class QuerySuiteSpec extends AnyFunSuite {
   }
 
   test("a record without an oracle does not compile") {
+    assertCompiles(
+      """graft.registry.Registered("q", (s, d) => graft.sources.Tables.documents(s, d), "SELECT 1")""")
     assertDoesNotCompile(
       """graft.registry.Registered("q", (s, d) => graft.sources.Tables.documents(s, d))""")
   }
 
   test("a name registered twice fails the registry build") {
     val r = graft.registry.Registered("q", (s, d) => graft.sources.Tables.documents(s, d), "SELECT 1")
-    assert(graft.registry.Registered.distinct(Seq(r)) == Seq(r))
+    assert(graft.registry.Registered.requireDistinct(Seq(r)) == Seq(r))
     val e = intercept[IllegalArgumentException] {
-      graft.registry.Registered.distinct(Seq(r, r.copy(oracle = "SELECT 2")))
+      graft.registry.Registered.requireDistinct(Seq(r, r.copy(oracle = "SELECT 2")))
     }
     assert(e.getMessage.contains("q"))
   }
