@@ -40,10 +40,12 @@ object SimilarityQueries {
     * count(*) — the exact thresholds [[Similarity.autoPlanes]] walks,
     * so both engines activate the same planes at every scale factor
     * (float log2 could disagree at exact powers of two; integer
-    * comparisons cannot).
+    * comparisons cannot). 16 tables, a 128-row target bucket, 64 dims;
+    * built once, since it hashes 16,384 plane coordinates and three
+    * oracle texts embed it.
     */
-  private def lshBucketsAutoCte(nTables: Int, targetBucket: Int = 128,
-                                dims: Int = 64): String = {
+  private val lshBucketsAutoCte: String = {
+    val (nTables, targetBucket, dims) = (16, 128, 64)
     val stride = Similarity.AutoPlaneStride
     val rows = for (t <- 0 until nTables; p <- 0 until stride) yield {
       val vec = Similarity.planeVec(t * stride + p, dims)
@@ -106,7 +108,7 @@ object SimilarityQueries {
     // driver SFs, 8 at sf1's 20k vectors, bounded buckets forever
     Registered("dedup_embedding", (s, d) =>
         Similarity.embeddingPairsAuto(Tables.embeddings(s, d), "vec_id", "embedding", 0.3),
-      s"""WITH ${lshBucketsAutoCte(nTables = 16)},
+      s"""WITH $lshBucketsAutoCte,
          |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          |  FROM buckets a JOIN buckets b
          |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
@@ -212,7 +214,7 @@ object SimilarityQueries {
           Similarity.embeddingPairsAuto(Tables.embeddings(s, d), "vec_id", "embedding", 0.4)
             .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
           .select(col("doc_id").as("vec_id"), col("cluster_id")),
-      s"""WITH RECURSIVE ${lshBucketsAutoCte(nTables = 16)},
+      s"""WITH RECURSIVE $lshBucketsAutoCte,
          |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          |  FROM buckets a JOIN buckets b
          |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
@@ -228,7 +230,7 @@ object SimilarityQueries {
          |FROM reach GROUP BY a""".stripMargin,
       stages = Seq(
         OracleStage("sc_buckets", 0,
-          s"""WITH ${lshBucketsAutoCte(nTables = 16)}
+          s"""WITH $lshBucketsAutoCte
              |SELECT vec_id, tbl, bucket FROM buckets""".stripMargin),
         OracleStage("sc_cand", 8,
           // shard on the bucket key: both sides of a colliding pair
