@@ -40,9 +40,8 @@ object SimilarityQueries {
     * count(*) — the exact thresholds [[Similarity.autoPlanes]] walks,
     * so both engines activate the same planes at every scale factor
     * (float log2 could disagree at exact powers of two; integer
-    * comparisons cannot). 16 tables, a 128-row target bucket, 64 dims;
-    * built once, since it hashes 16,384 plane coordinates and three
-    * oracle texts embed it.
+    * comparisons cannot). Built once (16 tables, 128-row target bucket,
+    * 64 dims): it hashes 16,384 plane coordinates for three oracles.
     */
   private val lshBucketsAutoCte: String = {
     val (nTables, targetBucket, dims) = (16, 128, 64)
