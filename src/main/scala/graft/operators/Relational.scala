@@ -43,7 +43,9 @@ object Relational {
         dsum(col("l_quantity")).as("sum_qty"),
         dsum(col("l_extendedprice")).as("sum_base_price"),
         // exact decimal sums, one correctly-rounded double conversion
-        // (Spark's Decimal.toDouble = BigDecimal.doubleValue). The
+        // (Spark's Decimal.toDouble = BigDecimal.doubleValue, for a
+        // long-backed Decimal too — the FixedPointRule kernels emit
+        // those, so equal value and scale give the same double). The
         // ORACLE must convert through a varchar hop for the same
         // single-rounding guarantee — see the oracle SQL note: DuckDB's
         // direct int128→double double-rounds once the scaled sum

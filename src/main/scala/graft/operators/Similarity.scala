@@ -30,9 +30,12 @@ object Similarity {
   private[graft] def planeVec(plane: Int, dims: Int): Array[Double] = {
     val mdI = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(dims) { d =>
-      val hex = mdI.digest(s"plane$plane:$d".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15)
-      (java.lang.Long.parseLong(hex, 16) % 1000000L).toDouble / 1000000.0 - 0.5
+      val md = mdI.digest(s"plane$plane:$d".getBytes("UTF-8"))
+      // the digest's first 15 hex digits: 7 bytes, then byte 8's high nibble
+      var prefix = 0L
+      for (i <- 0 until 7) prefix = (prefix << 8) | (md(i) & 0xff)
+      prefix = (prefix << 4) | ((md(7) & 0xff) >>> 4)
+      (prefix % 1000000L).toDouble / 1000000.0 - 0.5
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -266,32 +267,22 @@ object GraftFunctions {
     }
   }
 
+  /** Register the `graft_*` functions this session does not resolve
+    * yet: a GraftExtensions session already has them, and a repeat call
+    * would replace each one (one registry WARN per function).
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProductF64(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens",
-      exprs => TokensExpr(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => ShinglesExpr(exprs(0), foldableIntArg("graft_shingles", "n", exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmin_by",
-      exprs => KMinByHash(exprs(0), exprs(1),
-        foldableIntArg("graft_kmin_by", "k", exprs(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_chunks",
-      exprs => CdcChunksExpr(exprs(0),
-        foldableIntArg("graft_cdc_chunks", "anchorMod", exprs(1))),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def add(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    add("graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)))
+    add("graft_dot", exprs => DotProductF64(exprs(0), exprs(1)))
+    add("graft_tokens", exprs => TokensExpr(exprs(0)))
+    add("graft_shingles", exprs => ShinglesExpr(exprs(0), foldableIntArg("graft_shingles", "n", exprs(1))))
+    add("graft_kmin_by", exprs => KMinByHash(exprs(0), exprs(1),
+      foldableIntArg("graft_kmin_by", "k", exprs(2))))
+    add("graft_cdc_chunks", exprs => CdcChunksExpr(exprs(0),
+      foldableIntArg("graft_cdc_chunks", "anchorMod", exprs(1))))
   }
 }

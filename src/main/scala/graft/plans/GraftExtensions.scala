@@ -12,8 +12,21 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * // or spark.sql.extensions=graft.plans.GraftExtensions
   * }}}
   *
+  * It injects:
+  *  - the `graft_*` native functions (`graft_cosine`, `graft_dot`,
+  *    `graft_tokens`, `graft_shingles`, `graft_kmin_by`,
+  *    `graft_cdc_chunks`);
+  *  - the [[TopKStrategy]] planner strategy for [[TopKPerKey]];
+  *  - the [[FixedPointRule]] optimizer rule (a pre-CBO rule, after
+  *    operator optimization): double→decimal casts, exact decimal
+  *    products and grouped decimal sums run on unscaled longs, equal to
+  *    Spark's expressions in value, null-ness and error.
+  *    `spark.sql.optimizer.excludedRules=graft.plans.FixedPointRule`
+  *    switches it off for a session, e.g. to bisect a result mismatch.
+  *
   * GraftSession.builder applies it by default; GraftFunctions.register
-  * remains for sessions created elsewhere.
+  * remains for sessions created elsewhere (it skips the names a session
+  * already resolves).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -51,5 +64,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CdcChunksExpr(exprs(0),
           GraftFunctions.foldableIntArg("graft_cdc_chunks", "anchorMod", exprs(1)))))
     e.injectPlannerStrategy(_ => TopKStrategy)
+    e.injectPreCBORule(_ => FixedPointRule)
   }
 }

@@ -7,9 +7,12 @@ object TestSpark {
   lazy val spark: SparkSession = {
     // local[4, 2]: 4 cores, spark.task.maxFailures = 2 — lets
     // FaultToleranceSpec exercise task retry (a first-attempt failure
-    // must recover); retries never trigger for healthy tests
+    // must recover); retries never trigger for healthy tests. The graft
+    // extensions (functions, planner strategy, optimizer rule) are the
+    // ones every GraftSession.builder session runs.
     val s = SparkSession.builder()
       .master("local[4, 2]")
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.sources.Tables.NanosAsLong, "true")

@@ -14,6 +14,18 @@ import graft.Materialize.MaterializeOps
   */
 object ReferenceForms {
 
+  /** The hex-string form of [[Similarity.planeVec]]: each md5 byte
+    * formatted as two hex digits, the first 15 digits parsed back.
+    */
+  def planeVecHex(plane: Int, dims: Int): Array[Double] = {
+    val mdI = java.security.MessageDigest.getInstance("MD5")
+    Array.tabulate(dims) { d =>
+      val hex = mdI.digest(s"plane$plane:$d".getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString.substring(0, 15)
+      (java.lang.Long.parseLong(hex, 16) % 1000000L).toDouble / 1000000.0 - 0.5
+    }
+  }
+
   /** Brute-force all-pairs verifier (quadratic, small tables / specs
     * only — C5 ships [[Similarity.embeddingPairs]]).
     */

@@ -928,4 +928,24 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("dims"), e.getMessage)
   }
+
+  test("planeVec: the byte-built digest prefix gives the hex form's doubles, bit for bit") {
+    // planes 0-511 cover every LSH table layout (registry t·5+p and
+    // t·16+p, lshBucket's planeOffset); 1000+ are randomProject's
+    for (plane <- (0 until 512) ++ (1000 until 1064)) {
+      val got = Similarity.planeVec(plane, 128).map(java.lang.Double.doubleToRawLongBits)
+      val want = ReferenceForms.planeVecHex(plane, 128).map(java.lang.Double.doubleToRawLongBits)
+      assert(got.sameElements(want), s"plane $plane")
+    }
+  }
+
+  test("a repeat kmeans build keeps the session's graft function builders") {
+    val registry = spark.sessionState.functionRegistry
+    val dot = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
+    val emb = Tables.embeddings(spark, sf)
+    Similarity.kmeans(emb, "vec_id", "embedding", k = 4, iters = 1)
+    val first = registry.lookupFunctionBuilder(dot).get
+    Similarity.kmeans(emb, "vec_id", "embedding", k = 4, iters = 1)
+    assert(registry.lookupFunctionBuilder(dot).get eq first)
+  }
 }
