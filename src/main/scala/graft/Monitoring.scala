@@ -3,140 +3,25 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Spark-native job monitoring — the analog of the reference client's
-  * job status/metrics polling (cooler-MapReduce `src/client/monitoring.py`,
-  * `src/client/client.py` job list/status/results): queries are tagged
-  * with `observe()` (a pass-through CollectMetrics node) and a
-  * [[QueryExecutionListener]] records wall time, output rows and
-  * scanned bytes per named query. Bench/Verify dump the snapshot as
-  * JSON next to their results.
+/** Spark-native job control — the analog of the reference client's
+  * job status polling and cancellation (cooler-MapReduce
+  * `src/client/monitoring.py`, `src/client/client.py` job list/status):
+  * queries are tagged with `observe()` (a pass-through CollectMetrics
+  * node) and run inside named job groups that can be cancelled and
+  * polled. [[Profile]] reads both: its per-query records come from the
+  * tags, its job attribution from the groups.
   *
-  * On a real cluster the same listener runs on the driver and sees
-  * every action; nothing here is local-mode specific.
+  * Everything here is SparkContext-native and works the same on a real
+  * cluster.
   */
 object Monitoring {
-  final case class QueryMetrics(name: String, seconds: Double, rows: Long,
-                                scanBytes: Long, status: String)
-
-  private val Prefix = "graft:"
+  private[graft] val Prefix = "graft:"
 
   /** Tag a query with a named observation; the result is unchanged. */
   def tag(df: DataFrame, name: String): DataFrame =
     df.observe(Prefix + name, count(lit(1)).as("rows"))
-
-  final class Listener extends QueryExecutionListener {
-    private val recs = new ConcurrentHashMap[String, QueryMetrics]()
-
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      record(qe, durationNs, "ok")
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      record(qe, 0L, "failed")
-
-    private def record(qe: QueryExecution, durationNs: Long, status: String): Unit =
-      qe.observedMetrics.foreach { case (obsName, row) =>
-        if (obsName.startsWith(Prefix)) {
-          val name = obsName.stripPrefix(Prefix)
-          val rows = if (row.isNullAt(0)) 0L else row.getLong(0)
-          recs.put(name,
-            QueryMetrics(name, durationNs / 1e9, rows, scanBytes(qe.executedPlan), status))
-        }
-      }
-
-    def snapshot: Seq[QueryMetrics] = {
-      import scala.jdk.CollectionConverters._
-      recs.values.asScala.toSeq.sortBy(_.name)
-    }
-
-    def json: String = snapshot.map { m =>
-      s"""{"name":"${m.name}","sec":${"%.3f".format(m.seconds)},"rows":${m.rows},""" +
-        s""""scan_bytes":${m.scanBytes},"status":"${m.status}"}"""
-    }.mkString("[", ",", "]")
-  }
-
-  /** Register a fresh metrics listener on the session. */
-  def install(spark: SparkSession): Listener = {
-    val l = new Listener
-    spark.listenerManager.register(l)
-    l
-  }
-
-  /** Engine-span accumulator: sums the engine duration of EVERY action
-    * on the session, tagged or not. Iterative operators (connected
-    * components, Lloyd training) spend most of their engine time in
-    * per-round collect() actions that carry no observation tag, so the
-    * per-query [[Listener]] under-attributes them; Bench's isolated
-    * pass runs one query at a time and brackets it with reset()/
-    * totalSec to get the query's FULL engine cost.
-    */
-  final class EngineSpans extends QueryExecutionListener {
-    private val ns = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      ns.addAndGet(durationNs)
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    def reset(): Unit = ns.set(0L)
-    def totalSec: Double = ns.get() / 1e9
-  }
-
-  /** Register an engine-span accumulator on the session. */
-  def installSpans(spark: SparkSession): EngineSpans = {
-    val l = new EngineSpans
-    spark.listenerManager.register(l)
-    l
-  }
-
-  /** Per-QUERY engine spans for a CONCURRENT (pooled) run, where the
-    * single [[EngineSpans]] accumulator can't attribute work: each
-    * query runs inside its own [[inGroup]] job group, and this
-    * scheduler listener sums job start→end spans per group name. The
-    * group id is a thread-local property Spark propagates into AQE
-    * stages and broadcast-exchange threads, so untagged per-round
-    * actions of iterative queries (connected components, Lloyd
-    * training) attribute to their query too — the attribution gap the
-    * tagged [[Listener]] has by design. Within one query AQE may run
-    * independent stages as concurrent jobs, so a query's sum can
-    * exceed its wall span; it is a work measure, not a latency.
-    */
-  final class GroupSpans extends org.apache.spark.scheduler.SparkListener {
-    private val starts = new ConcurrentHashMap[Int, (String, Long)]()
-    private val totalMs = new ConcurrentHashMap[String, java.lang.Long]()
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val g = Option(js.properties)
-        .map(_.getProperty("spark.jobGroup.id")).orNull
-      if (g != null && g.startsWith(Prefix))
-        starts.put(js.jobId, (g.stripPrefix(Prefix), js.time))
-    }
-    override def onJobEnd(
-        je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val s = starts.remove(je.jobId)
-      if (s != null) totalMs.merge(s._1, je.time - s._2, (a, b) => a + b)
-    }
-    def snapshotSec: Map[String, Double] = {
-      import scala.jdk.CollectionConverters._
-      totalMs.asScala.map { case (k, v) => k -> v.toDouble / 1e3 }.toMap
-    }
-  }
-
-  /** Register a per-group span listener on the context. */
-  def installGroupSpans(spark: SparkSession): GroupSpans = {
-    val l = new GroupSpans
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  // ---- Job control: cancellation + live progress ---------------------------
-  //
-  // The analog of the reference client's cancel_job / monitor_job_progress
-  // (cooler-MapReduce src/client/monitoring.py): actions run inside a named
-  // job group, so a driver-side controller can cancel the whole query
-  // mid-flight or poll task-level progress while it runs. Both surfaces are
-  // SparkContext-native (cancelJobGroup / statusTracker), so they work
-  // identically on a real cluster.
 
   /** Live task-level progress of one named job group. */
   final case class GroupProgress(name: String, activeJobs: Int,
@@ -220,15 +105,5 @@ object Monitoring {
       tasksCompleted = stages.map(_.numCompletedTasks()).sum,
       tasksActive = stages.map(_.numActiveTasks()).sum,
       tasksFailed = stages.map(_.numFailedTasks()).sum)
-  }
-
-  /** Sum of `filesSize` metrics over every scan in the (adaptive) plan. */
-  private def scanBytes(p: SparkPlan): Long =
-    allNodes(p).flatMap(_.metrics.get("filesSize").map(_.value)).sum
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
-    case q: QueryStageExec        => q +: allNodes(q.plan)
-    case other => other +: (other.children ++ other.subqueries).flatMap(allNodes)
   }
 }

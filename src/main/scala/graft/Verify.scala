@@ -28,7 +28,7 @@ object Verify {
     val spark = GraftSession.builder(master, cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val listener = Monitoring.install(spark)
+    val profile = Profile.install(spark)
     // Independent queries writing to distinct dirs — overlap them so the
     // per-query planning overhead doesn't serialize (4-wide pool).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -79,7 +79,7 @@ object Verify {
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_stages.json"), stages)
     // per-query monitoring snapshot (rows / scanned bytes / time)
-    Files.writeString(Paths.get(s"$outDir/metrics.json"), listener.json)
+    Files.writeString(Paths.get(s"$outDir/metrics.json"), profile.json)
     spark.stop()
     // fail closed: a query that could not be dumped is a failed run
     if (!failed.isEmpty) {

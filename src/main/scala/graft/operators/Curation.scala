@@ -15,7 +15,7 @@ import graft.Materialize.MaterializeOps
   * every run and every engine agree bit-for-bit).
   */
 object Curation {
-  private def phash(c: Column): Column =
+  private[graft] def phash(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Deterministic quota sample: keep at most `quota` docs per stratum,
@@ -27,8 +27,8 @@ object Curation {
     * the window form shuffles and sorts EVERY row per stratum, while
     * TopKPerKey reduces each input partition to ≤ quota rows per
     * stratum before the shuffle — at 100 TB the shuffle carries the
-    * sample, not the corpus. [[quotaSampleWindow]] is the reference
-    * formulation the spec checks equality against.
+    * sample, not the corpus. `ReferenceForms.quotaSampleWindow` is the
+    * reference formulation the spec checks equality against.
     */
   def quotaSample(docs: DataFrame, idCol: String, strataCol: String,
                   quota: Int): DataFrame = {
@@ -36,19 +36,6 @@ object Curation {
       phash(concat(col(strataCol), lit("|"), col(idCol).cast("string"))).as("__h"))
     graft.plans.TopK.perKey(hashed, Seq(strataCol), Seq("__h", idCol),
         quota, descending = false)
-      .select(col(idCol), col(strataCol))
-  }
-
-  /** Built-in-window reference formulation of [[quotaSample]]. */
-  def quotaSampleWindow(docs: DataFrame, idCol: String, strataCol: String,
-                        quota: Int): DataFrame = {
-    val w = Window.partitionBy(col(strataCol))
-      .orderBy(col("__h"), col(idCol))
-    docs
-      .select(col(idCol), col(strataCol),
-        phash(concat(col(strataCol), lit("|"), col(idCol).cast("string"))).as("__h"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= quota)
       .select(col(idCol), col(strataCol))
   }
 

@@ -18,7 +18,7 @@ import graft.Materialize.MaterializeOps
   * DuckDB oracle reproduces them bit-for-bit.
   */
 object Dedup {
-  private def phash(c: Column): Column =
+  private[graft] def phash(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Materialize a small derived table that is about to be self-joined.
@@ -505,8 +505,9 @@ object Dedup {
     * tokens to rows, no doc-keyed window — i.e. the corpus' TOKENS
     * never shuffle; only chunk digests leave the scan stage. (The
     * windowed formulation this replaces shuffled one row per token to
-    * run the running-anchor-count window; [[cdcChunkTableWindowed]]
-    * keeps it as the parity-spec reference.)
+    * run the running-anchor-count window;
+    * `ReferenceForms.cdcChunkTableWindowed` keeps it as the parity-spec
+    * reference.)
     */
   def cdcChunkTable(docs: DataFrame, idCol: String, textCol: String,
                     anchorMod: Int): DataFrame =
@@ -516,30 +517,6 @@ object Dedup {
           tokens(col(textCol)), anchorMod)).as("c"))
       .select(col("doc_id"), col("c.fp").as("chunk_fp"),
         col("c.n").cast("long").as("n_tokens"))
-
-  /** Reference formulation of [[cdcChunkTable]] from built-in
-    * functions (posexplode → running-anchor window → ordered
-    * reassembly) — for the parity spec only; it shuffles every token.
-    */
-  def cdcChunkTableWindowed(docs: DataFrame, idCol: String, textCol: String,
-                            anchorMod: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-    val anchored = toks.withColumn("is_anchor",
-      (phash(concat(lit("cdc|"), col("tok"))) % anchorMod === 0).cast("long"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    anchored.withColumn("chunk", sum(col("is_anchor")).over(w))
-      .groupBy(col("doc_id"), col("chunk"))
-      .agg(
-        md5(concat_ws(" ",
-          transform(sort_array(collect_list(struct(col("pos"), col("tok")))),
-            s => s.getField("tok"))).cast("binary")).as("chunk_fp"),
-        count(lit(1)).as("n_tokens"))
-      .select(col("doc_id"), col("chunk_fp"), col("n_tokens"))
-  }
 
   def cdcChunkDups(docs: DataFrame, idCol: String, textCol: String,
                    anchorMod: Int = 16): DataFrame =

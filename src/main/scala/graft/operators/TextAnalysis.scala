@@ -345,7 +345,7 @@ object TextAnalysis {
     * ZERO shuffle: one native kernel call per row
     * (graft.plans.TokenDiversityExpr — tokenize + sorted-run walk in
     * the scan) instead of the (doc, token) explode→count→re-aggregate
-    * double shuffle ([[tokenDiversityShuffle]], kept as the parity
+    * double shuffle (`ReferenceForms.tokenDiversityShuffle`, the parity
     * reference); docs that tokenize to nothing keep a zero row for
     * free.
     */
@@ -358,32 +358,6 @@ object TextAnalysis {
         s.getField("distinct_tokens").as("distinct_tokens"),
         s.getField("top_share").as("top_share"),
         s.getField("simpson_diversity").as("simpson_diversity"))
-  }
-
-  /** Shuffle formulation of [[tokenDiversity]] — parity reference only
-    * (two exchanges; the kernel form computes the same longs map-side).
-    */
-  def tokenDiversityShuffle(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val pairs = docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-    val agg = pairs.groupBy(col("doc_id")).agg(
-      sum(col("c")).as("__n"),
-      count(lit(1)).as("__d"),
-      max(col("c")).as("__maxc"),
-      sum(col("c") * col("c")).as("__sumc2"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("__n"), lit(0L)).as("n_tokens"),
-        coalesce(col("__d"), lit(0L)).as("distinct_tokens"),
-        when(col("__n").isNull, lit(0.0))
-          .otherwise(col("__maxc").cast("double") / col("__n").cast("double"))
-          .as("top_share"),
-        when(col("__n").isNull, lit(0.0))
-          .otherwise(lit(1.0) - col("__sumc2").cast("double") /
-            (col("__n") * col("__n")).cast("double"))
-          .as("simpson_diversity"))
   }
 
   /** C11: document fingerprint — md5 of whitespace-normalized text,
@@ -1182,7 +1156,7 @@ object TextAnalysis {
     * GraftText.mojibakeFix — a single first-char-dispatched walk;
     * all-ASCII rows short-circuit on byte-vs-char length with zero
     * allocation) instead of the 16 chained replaces + 16 length-census
-    * scans of the HOF form, which is kept as [[encodingRepairChained]]
+    * scans of the HOF form, kept as `ReferenceForms.encodingRepairChained`
     * and pinned bit-identical by EncodingRepairSpec. Zero shuffle,
     * scan-rate at 100 TB.
     */
@@ -1195,24 +1169,5 @@ object TextAnalysis {
         col("__f").getField("repaired").as("repaired"),
         col("__f").getField("n_artifacts").as("n_artifacts"),
         (col("__f").getField("n_artifacts") > 0L).as("changed"))
-  }
-
-  /** Reference implementation of [[encodingRepair]] from built-in
-    * chained replaces — for the parity spec only (32 full-string scans
-    * per row; NOT for hot paths).
-    */
-  def encodingRepairChained(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val nArtifacts = MojibakeRepairs.map { case (bad, _) =>
-      ((length(t) - length(replace(t, lit(bad), lit("")))) / bad.length)
-        .cast("long")
-    }.reduce(_ + _)
-    val repaired = MojibakeRepairs.foldLeft(t) { case (c, (bad, good)) =>
-      replace(c, lit(bad), lit(good))
-    }
-    docs.select(col(idCol).as("doc_id"),
-      repaired.as("repaired"),
-      nArtifacts.as("n_artifacts"),
-      (repaired =!= t).as("changed"))
   }
 }

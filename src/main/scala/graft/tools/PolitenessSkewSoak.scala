@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     the C97 composition) THEN politenessSchedule.
   *
   * Reports per variant the straggler factor of the heaviest stage
-  * (max/median task ms — [[SkewSoak.TaskMeter]]) plus wall seconds and
+  * (max/median task ms — [[SkewSoak.heaviest]]) plus wall seconds and
   * output rows. The quota variant's straggler factor collapsing toward
   * 1 is the SURVEY §6 evidence row for "mega-host skew is bounded
   * upstream with a per-host quota".
@@ -35,8 +35,6 @@ object PolitenessSkewSoak {
     val quota = args.lift(2).map(_.toInt).getOrElse(10000)
     val spark = graft.GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new SkewSoak.TaskMeter
-    spark.sparkContext.addSparkListener(meter)
 
     // mega-host frontier, materialized so generation cost never rides
     // inside a variant's measurement
@@ -65,14 +63,12 @@ object PolitenessSkewSoak {
 
     def variant(name: String)(body: => DataFrame): Unit = {
       body.write.format("noop").mode("overwrite").save() // warm
-      meter.reset()
-      val t0 = System.nanoTime()
       val out = body
-      out.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val m = graft.Profile.measure(spark, s"politeness_$name")(
+        out.write.format("noop").mode("overwrite").save()).orThrow
+      val sec = m.wallSec
       val n = out.count()
-      Thread.sleep(2000) // listener events drain asynchronously
-      val (mx, med) = meter.heaviest()
+      val (mx, med) = SkewSoak.heaviest(m.stages)
       println(f"""{"metric":"politeness_$name%s","rows":$rows,"out_rows":$n,"sec":$sec%.1f,"max_task_ms":$mx,"median_task_ms":$med,"straggler_ratio":${mx.toDouble / math.max(med, 1)}%.1f}""")
     }
 

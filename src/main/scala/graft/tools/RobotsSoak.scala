@@ -32,7 +32,6 @@ object RobotsSoak {
       else Seq("native", "composed")
     val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val spans = graft.Monitoring.installSpans(spark)
 
     // fixture robots over `hosts` sources — the same wrapRobotsTxt
     // rules (wildcards/anchors that bite) the oracle queries use
@@ -89,18 +88,11 @@ object RobotsSoak {
     }
 
     forms.foreach { form =>
-      val secs = (1 to reps).map { _ =>
-        org.apache.spark.sql.classic.GraftPlanFactory.flushListeners(spark)
-        spans.reset()
-        val t0 = System.nanoTime()
-        gate(form).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.classic.GraftPlanFactory.flushListeners(spark)
-        (wall, spans.totalSec)
-      }
-      val best = secs.map(_._2).min
+      val runs = (1 to reps).map(_ => graft.Profile.measure(spark, s"robots_$form")(
+        gate(form).write.format("noop").mode("overwrite").save()).orThrow)
+      val best = runs.map(_.engineSec).min
       println(f"[robots-soak] $form%-9s nUrls=$nUrls hosts=$hosts " +
-        f"engine=$best%.3f s  wall_min=${secs.map(_._1).min}%.3f s  " +
+        f"engine=$best%.3f s  wall_min=${runs.map(_.wallSec).min}%.3f s  " +
         f"${nUrls / best / 1e6}%.2f M urls/s  ${best / nUrls * 1e9}%.0f ns/url")
       // decision parity across forms — the soak is only meaningful if
       // every implementation gates identically

@@ -1,19 +1,19 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions.col
 
 /** Heavy-tail benchmark at sf1 (10× the driver's bench SF) — where the
   * linear-vs-quadratic claims get graded at scale: correctness is
   * proven at sf1 by the sweep (CORRECTNESS_sf1.json), this main
   * measures the top isolated ENGINE spans there, each min-of-2 in a
-  * fresh-enough session with per-query SHUFFLE WRITE volume from a
-  * stage listener (the number that decides whether a shape survives a
-  * 100× scale-up: a digest-shuffle stays ≪ input, a pair explosion
-  * does not).
+  * fresh-enough session, with the warm run's jobs, stages and SHUFFLE
+  * WRITE volume from [[graft.Profile]] (the number that decides
+  * whether a shape survives a 100× scale-up: a digest-shuffle stays
+  * ≪ input, a pair explosion does not). With a query list it is also
+  * the quick per-query probe at any scale (`sfDir q1,q2`).
   *
   * Usage: runjava.sh graft.tools.Sf1Bench [sfDir] [q1,q2,...]
-  * Writes BENCH_sf1.json (repo root) + prints the same line.
+  * Writes target/bench_sf1.json + prints the same line.
   */
 object Sf1Bench {
   // the default pin set: the 15 heaviest isolated engine spans of the
@@ -26,16 +26,6 @@ object Sf1Bench {
     "line_dedup_incremental", "source_overlap", "split_leakage",
     "exact_substr_dedup", "corpus_dedup_best", "bm25_search",
     "crawl_pipeline", "curation_pipeline", "dedup_pagerank")
-
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      total.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      ()
-    }
-    def reset(): Unit = total.set(0L)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/testdata/sf1")
@@ -53,73 +43,45 @@ object Sf1Bench {
       .config("spark.network.timeout", "600s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val spans = graft.Monitoring.installSpans(spark)
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // the same deterministic calibration span Bench uses, so sf1
     // engine numbers are machine-relative comparable across rounds
-    def calibrate(): Double = {
-      import org.apache.spark.sql.functions.{sum => fsum, xxhash64, pmod, lit}
-      val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1L, 32)
-        .select(fsum(pmod(xxhash64(col("id")), lit(1000000L)))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate() // JIT/codegen warm-up; discard
-    // min-of-3 as in Bench: cal is deterministic, its truth is the
-    // lower envelope — single-shot cal jittered 0.53-0.74 s and sf1
-    // engine_cal_units are compared across rounds (round-14 ADVICE)
-    val cal = (1 to 3).map(_ => calibrate()).min
+    val cal = graft.Bench.calibrate(spark, 32)
     System.err.println(f"[sf1bench] calibration span $cal%.3fs")
     val rows = names.map { name =>
-      val attempts = (1 to 2).map { i =>
-        org.apache.spark.sql.classic.GraftPlanFactory.flushListeners(spark)
-        spans.reset()
-        if (i == 2) meter.reset() // volume reported from the warm run
-        val t0 = System.nanoTime()
-        try {
-          graft.Monitoring.tag(
-              graft.SparkEntry.queries(name)(spark, sfDir), name)
-            .write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.classic.GraftPlanFactory.flushListeners(spark)
-          Some((wall, Some(spans.totalSec).filter(_ > 0.0)))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[sf1bench] FAILED $name: " +
-              s"${e.getClass.getName}: ${e.getMessage}")
-            None
-        }
-      }
+      val attempts = (1 to 2).map(_ =>
+        graft.Bench.attempt(spark, sfDir, name, "[sf1bench]")())
       // give the next query a clean footprint: dead shuffle files and
       // cached blocks from this one must not inflate its successor
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
-      val okRuns = attempts.flatten
-      val wall = okRuns.map(_._1).minOption
-      val eng = okRuns.flatMap(_._2).minOption
-      val shufMb = meter.total.get / 1e6
+      val okRuns = attempts.filter(_.ok)
+      val wall = okRuns.map(_.wallSec).minOption
+      val eng = okRuns.flatMap(graft.Bench.engine).minOption
+      val warm = attempts.last // volume and counts reported from the warm run
+      val shufMb = warm.shuffleWriteBytes / 1e6
       System.err.println(f"[sf1bench] $name%-26s wall " +
         s"${wall.fold("FAILED")(s => f"$s%7.2fs")} engine " +
         s"${eng.fold("n/a")(s => f"$s%7.2fs")} " +
-        f"shuffle ${shufMb}%9.1f MB")
-      (name, wall, eng, shufMb, okRuns.size == attempts.size)
+        f"shuffle ${shufMb}%9.1f MB jobs ${warm.jobs.size}%4d stages ${warm.stages.size}%4d")
+      (name, wall, eng, warm, okRuns.size == attempts.size)
     }
     def optNum(v: Option[Double]): String = v.fold("null")(fmt)
-    val qjson = rows.map { case (k, w, e, s, _) =>
+    val qjson = rows.map { case (k, w, e, warm, _) =>
       "\"" + k + "\":{\"wall\":" + optNum(w) + ",\"engine\":" + optNum(e) +
         ",\"engine_cal_units\":" +
         e.fold("null")(x => fmt(x / cal)) +
-        ",\"shuffle_write_mb\":" + fmt(s) + "}"
+        ",\"shuffle_write_mb\":" + fmt(warm.shuffleWriteBytes / 1e6) +
+        ",\"jobs\":" + warm.jobs.size + ",\"stages\":" + warm.stages.size + "}"
     }.mkString("{", ",", "}")
     val failed = rows.collect { case (k, _, _, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val json =
       s"""{"metric":"sf1_heavy_tail","sf":"$sfDir","n":${rows.size},"cal_sec":${fmt(cal)},"queries":$qjson,"failed":$failed}"""
-    try Files.writeString(Paths.get("BENCH_sf1.json"), json + "\n")
-    catch { case _: Exception => () }
+    val out = Paths.get("target/bench_sf1.json")
+    Files.createDirectories(out.toAbsolutePath.getParent)
+    Files.writeString(out, json + "\n")
     println(json)
     spark.stop()
   }

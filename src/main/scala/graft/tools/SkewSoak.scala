@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,33 +32,17 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.SkewSoak [rows] [nSources] [salt]"
   */
 object SkewSoak {
-  /** Per-stage task durations; report the stage with the largest total
-    * (the join stage dominates every variant here).
+  /** (max, median) task ms of the stage holding the LONGEST task —
+    * that's where the straggler lives (picking by stage total would
+    * favor a wide uniform map stage over a reduce stage that is one
+    * giant task plus thirty-one trivial ones, hiding exactly the
+    * pathology this tool measures).
     */
-  final class TaskMeter extends SparkListener {
-    val byStage = new ConcurrentHashMap[Int, java.util.List[Long]]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      byStage.computeIfAbsent(te.stageId,
-        _ => java.util.Collections.synchronizedList(new java.util.ArrayList[Long]()))
-        .add(te.taskInfo.duration)
-    }
-    def reset(): Unit = byStage.clear()
-    /** (max, median) task ms of the stage holding the LONGEST task —
-      * that's where the straggler lives (picking by stage total would
-      * favor a wide uniform map stage over a reduce stage that is one
-      * giant task plus thirty-one trivial ones, hiding exactly the
-      * pathology this tool measures).
-      */
-    def heaviest(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val stages = byStage.asScala.map { case (_, l) => l.asScala.toVector }
-        .filter(_.nonEmpty)
-      if (stages.isEmpty) return (0L, 0L)
-      val h = stages.maxBy(_.max)
+  def heaviest(stages: Seq[graft.Profile.Stage]): (Long, Long) =
+    stages.map(_.taskMs).filter(_.nonEmpty).maxByOption(_.max).fold((0L, 0L)) { h =>
       val sorted = h.sorted
       (sorted.last, sorted(sorted.size / 2))
     }
-  }
 
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(100000000L)
@@ -68,8 +50,6 @@ object SkewSoak {
     val salt = args.lift(2).map(_.toInt).getOrElse(32)
     val spark = graft.GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new TaskMeter
-    spark.sparkContext.addSparkListener(meter)
 
     // hot source (id 0) owns 50% of rows; the rest uniform
     val factPath = "target/soak_skew_fact"
@@ -95,12 +75,10 @@ object SkewSoak {
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       body.write.format("noop").mode("overwrite").save() // warm
-      meter.reset()
-      val t0 = System.nanoTime()
-      body.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // listener events drain asynchronously
-      val (mx, med) = meter.heaviest()
+      val m = graft.Profile.measure(spark, s"skew_$name")(
+        body.write.format("noop").mode("overwrite").save()).orThrow
+      val sec = m.wallSec
+      val (mx, med) = heaviest(m.stages)
       println(f"""{"metric":"skew_$name","rows":$rows,"sec":$sec%.1f,"max_task_ms":$mx,"median_task_ms":$med,"straggler_ratio":${mx.toDouble / math.max(med, 1)}%.1f}""")
     }
 

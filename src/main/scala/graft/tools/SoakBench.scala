@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -33,28 +31,6 @@ import graft.sources.Tables
   * Run: sbt "runMain graft.tools.SoakBench [targetTextMB] [vecMult]"
   */
 object SoakBench {
-  final class ShuffleMeter extends SparkListener {
-    val total = new AtomicLong(0L)
-    val peak = new AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-      total.addAndGet(w)
-      peak.updateAndGet(m => math.max(m, w))
-    }
-    def reset(): Unit = { total.set(0); peak.set(0) }
-  }
-
-  /** Bytes actually READ from files — post dir-pruning, post
-    * row-group skip: the honest measure of how much of an index a
-    * probe touches.
-    */
-  final class InputMeter extends SparkListener {
-    val bytes = new AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
-    def reset(): Unit = bytes.set(0)
-  }
-
   private def dirBytes(path: String): Long = {
     val root = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(root)) return 0L
@@ -69,8 +45,6 @@ object SoakBench {
     val vecMult = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
 
     val docs = Tables.documents(spark, "/root/testdata/sf0.1")
     val baseMb = docs.agg(sum(length(col("text")))).collect()(0).getLong(0) / 1e6
@@ -95,11 +69,11 @@ object SoakBench {
       // disk at once)
       body.write.format("noop").mode("overwrite").save()
       System.gc()
-      meter.reset()
-      val t0 = System.nanoTime()
-      body.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"metric":"soak_$name","input_mb":$inputMb%.0f,"sec":$sec%.1f,"mb_per_sec":${inputMb / sec}%.1f,"shuffle_write_mb":${meter.total.get / 1e6}%.1f,"peak_stage_shuffle_mb":${meter.peak.get / 1e6}%.1f}""")
+      val m = graft.Profile.measure(spark, s"soak_$name")(
+        body.write.format("noop").mode("overwrite").save()).orThrow
+      val sec = m.wallSec
+      val peakMb = m.stages.map(_.shuffleWrite).maxOption.getOrElse(0L) / 1e6
+      println(f"""{"metric":"soak_$name","input_mb":$inputMb%.0f,"sec":$sec%.1f,"mb_per_sec":${inputMb / sec}%.1f,"shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,"peak_stage_shuffle_mb":$peakMb%.1f}""")
       // multi-GB axes in one JVM: shuffle files outlive their stage
       // until the ContextCleaner's weak refs collect — with a mostly
       // idle 8 GB heap that never happens on its own, and the disk
@@ -258,19 +232,16 @@ object SoakBench {
     // discriminative band real queries live in)
     val zQs = (1 to 10).map(q =>
       (q, Seq(s"t${100 + q}", s"t${1000 + q * 7}", s"t${10000 + q * 97}")))
-    val inMeter = new InputMeter
-    spark.sparkContext.addSparkListener(inMeter)
     def zProbe() = graft.operators.TextAnalysis
       .bm25SearchIndexed(spark, zIdx, zQs, 10)
       .write.format("noop").mode("overwrite").save()
     zProbe() // warm
-    inMeter.reset()
-    val tzp = System.nanoTime()
-    zProbe()
-    val secZp = (System.nanoTime() - tzp) / 1e9
-    Thread.sleep(2000) // listener events drain asynchronously
+    // bytes actually READ from files — post dir-pruning, post row-group
+    // skip: the honest measure of how much of an index a probe touches
+    val zm = graft.Profile.measure(spark, "soak_bm25_zipf_probe")(zProbe()).orThrow
+    val secZp = zm.wallSec
     val postingsMb = dirBytes(s"$zIdx/postings") / 1e6
-    val readMb = inMeter.bytes.get / 1e6
+    val readMb = zm.inputBytes / 1e6
     val dirsTouched = zQs.flatMap(_._2).distinct
       .map(t => graft.operators.TextAnalysis.tkeyOf(t, zBuckets)).distinct.size
     println(f"""{"metric":"soak_bm25_zipf_probe","indexed_mb":$zMb%.0f,"queries":${zQs.size},"sec":$secZp%.2f,"postings_mb":$postingsMb%.1f,"read_mb":$readMb%.1f,"read_fraction":${readMb / math.max(postingsMb, 1e-9)}%.4f,"dirs_touched":$dirsTouched,"dirs_total":$zBuckets}""")
@@ -607,18 +578,13 @@ object SoakBench {
     val probeQ = bigEmb.filter(col("vec_id") < 10)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val pqMeter = new InputMeter
-    spark.sparkContext.addSparkListener(pqMeter)
     def pqProbe(): Unit = graft.operators.Similarity
       .knnProbe(spark, pqIdx, probeQ, "vec_id", "embedding", 10)
       .write.format("noop").mode("overwrite").save()
     pqProbe() // warm
-    pqMeter.reset()
-    val tpp = System.nanoTime()
-    pqProbe()
-    val secPp = (System.nanoTime() - tpp) / 1e9
-    Thread.sleep(2000) // listener events drain asynchronously
-    val pqReadMb = pqMeter.bytes.get / 1e6
+    val pm = graft.Profile.measure(spark, "soak_pq_probe")(pqProbe()).orThrow
+    val secPp = pm.wallSec
+    val pqReadMb = pm.inputBytes / 1e6
     println(f"""{"metric":"soak_pq_probe","vectors":$nVec,"sec":$secPp%.2f,"codes_mb":$codesMb%.1f,"read_mb":$pqReadMb%.1f,"vectors_mb":$vecMb%.0f}""")
     }
 
@@ -1090,22 +1056,6 @@ object SoakBench {
       val pages = chainCorpus()
       val pagesMb = pages.agg(sum(length(col("html")))).collect()(0).getLong(0) / 1e6
       val shardPath = "target/soak_chain_shards"
-      // per-stage footprint diagnostics (WARN stream): where the bytes
-      // go when the chain runs — shuffle write + disk spill per stage
-      val stageLog = new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m.shuffleWriteMetrics.bytesWritten > 100e6 || m.diskBytesSpilled > 100e6)
-            System.err.println(f"[chain] stage ${sc.stageInfo.stageId}%4d " +
-              f"shuffleWrite ${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.0fMB " +
-              f"diskSpill ${m.diskBytesSpilled / 1e6}%8.0fMB  ${sc.stageInfo.name}%s")
-        }
-      }
-      spark.sparkContext.addSparkListener(stageLog)
-      // scope the listener to THIS axis: it is registered on the
-      // shared SparkContext and would keep emitting [chain] lines for
-      // any job run after the axis otherwise
-      try {
       System.gc() // release the generation shuffle before the timed run
       // STAGE-COMMITTED pipeline, the production architecture: each
       // stage durably writes its output (crawl corpus, curated corpus)
@@ -1128,31 +1078,42 @@ object SoakBench {
       // finished stage's shuffle/cache blocks before the next begins.
       val crawlPath = "target/soak_chain_crawled"
       val cutPath = "target/soak_chain_curated"
-      meter.reset()
-      val t0 = System.nanoTime()
-      // stage A (crawl): HTML → clean text → token gate → exact dedup.
-      // Stage bodies live in FullChain (shared with ChainResumeSpec's
-      // kill-and-resume proof); the survivor-id cut inside broadcasts
-      // only while its measured count fits (the id set is
-      // corpus-proportional — hundreds of MB as a hash relation at the
-      // 16.6 GB run's 11.2M survivors — so the gate keeps larger soaks
-      // a measurement, not an OOM).
-      FullChain.stageCrawl(pages, crawlPath)
-      val tA = System.nanoTime()
-      System.gc()
-      // stage B (curation): quality gate → corpus near-dup → quota.
-      // maxBucket=300: the uncurated-crawl flood cap (axis header) —
-      // the planted TRUE near-dup cliques are ~35 docs, an order of
-      // magnitude under the cap, so capped buckets cost no measured
-      // recall; above it only the ~b² flood families live.
-      FullChain.stageCurate(spark, crawlPath, cutPath,
-        minQuality = 0.3, quota = 2000, maxBucket = 300)
-      val tB = System.nanoTime()
-      System.gc()
-      // stage C (sink): token-budgeted shards + committed manifest
-      val (nShards, totTokens) =
-        FullChain.stageSink(spark, cutPath, shardPath, 200000L)
-      val tC = System.nanoTime()
+      var t0, tA, tB, tC = 0L
+      var sink = (0L, 0L)
+      val chain = graft.Profile.measure(spark, "soak_fullchain") {
+        t0 = System.nanoTime()
+        // stage A (crawl): HTML → clean text → token gate → exact dedup.
+        // Stage bodies live in FullChain (shared with ChainResumeSpec's
+        // kill-and-resume proof); the survivor-id cut inside broadcasts
+        // only while its measured count fits (the id set is
+        // corpus-proportional — hundreds of MB as a hash relation at the
+        // 16.6 GB run's 11.2M survivors — so the gate keeps larger soaks
+        // a measurement, not an OOM).
+        FullChain.stageCrawl(pages, crawlPath)
+        tA = System.nanoTime()
+        System.gc()
+        // stage B (curation): quality gate → corpus near-dup → quota.
+        // maxBucket=300: the uncurated-crawl flood cap (axis header) —
+        // the planted TRUE near-dup cliques are ~35 docs, an order of
+        // magnitude under the cap, so capped buckets cost no measured
+        // recall; above it only the ~b² flood families live.
+        FullChain.stageCurate(spark, crawlPath, cutPath,
+          minQuality = 0.3, quota = 2000, maxBucket = 300)
+        tB = System.nanoTime()
+        System.gc()
+        // stage C (sink): token-budgeted shards + committed manifest
+        sink = FullChain.stageSink(spark, cutPath, shardPath, 200000L)
+        tC = System.nanoTime()
+      }
+      // per-stage footprint diagnostics (WARN stream): where the bytes
+      // went when the chain ran — shuffle write + disk spill per stage
+      chain.stages.filter(st => st.shuffleWrite > 100e6 || st.spillBytes > 100e6)
+        .foreach(st => System.err.println(f"[chain] stage ${st.id}%4d " +
+          f"shuffleWrite ${st.shuffleWrite / 1e6}%8.0fMB " +
+          f"diskSpill ${st.spillBytes / 1e6}%8.0fMB  ${st.name}%s"))
+      chain.orThrow
+      val (nShards, totTokens) = sink
+      val shuffleMb = chain.shuffleWriteBytes / 1e6
       val crawled = spark.read.parquet(crawlPath)
       val finalDocs = spark.read.parquet(cutPath)
       val sec = (tC - t0) / 1e9
@@ -1161,8 +1122,7 @@ object SoakBench {
       val nFinal = finalDocs.count()
       val (vShards, vBad) = graft.sources.Layouts.verifyTrainingShards(
         spark, shardPath, "doc_id", "clean_text")
-      println(f"""{"metric":"soak_fullchain","input_mb":$pagesMb%.0f,"sec":$sec%.1f,"mb_per_sec":${pagesMb / sec}%.1f,"crawl_sec":${(tA - t0) / 1e9}%.1f,"curation_sec":${(tB - tA) / 1e9}%.1f,"sink_sec":${(tC - tB) / 1e9}%.1f,"shuffle_write_mb":${meter.total.get / 1e6}%.1f,"shuffle_over_input":${meter.total.get / 1e6 / pagesMb}%.3f,"pages":$nPages,"crawl_survivors":$nCrawled,"final_docs":$nFinal,"shards":$nShards,"tokens":$totTokens,"manifest_shards_verified":$vShards,"manifest_mismatches":$vBad}""")
-      } finally spark.sparkContext.removeSparkListener(stageLog)
+      println(f"""{"metric":"soak_fullchain","input_mb":$pagesMb%.0f,"sec":$sec%.1f,"mb_per_sec":${pagesMb / sec}%.1f,"crawl_sec":${(tA - t0) / 1e9}%.1f,"curation_sec":${(tB - tA) / 1e9}%.1f,"sink_sec":${(tC - tB) / 1e9}%.1f,"shuffle_write_mb":$shuffleMb%.1f,"shuffle_over_input":${shuffleMb / pagesMb}%.3f,"pages":$nPages,"crawl_survivors":$nCrawled,"final_docs":$nFinal,"shards":$nShards,"tokens":$totTokens,"manifest_shards_verified":$vShards,"manifest_mismatches":$vBad}""")
     }
 
     // Measured restart proof for the stage-committed chain at soak

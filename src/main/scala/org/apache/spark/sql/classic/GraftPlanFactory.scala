@@ -51,10 +51,11 @@ object GraftPlanFactory {
     Dataset.ofRows(spark, lr)
   }
 
-  /** Drain the shared listener bus so QueryExecutionListener callbacks
-    * (async by design) have fired before a caller reads their state —
-    * Bench reads per-query engine spans from graft.Monitoring.Listener
-    * immediately after an action returns.
+  /** Drain the listener bus so listener callbacks (async by design)
+    * have fired before a caller reads their state: every job, stage and
+    * task event and every query-execution callback posted before this
+    * call. `graft.Profile.measure` calls it before and after its body,
+    * and Bench before reading the pooled per-query spans.
     */
   def flushListeners(spark: SparkSession, timeoutMs: Long = 10000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)

@@ -22,7 +22,7 @@ class CurationSpec extends AnyFunSuite {
   test("quota sample equals the window formulation but plans through TopKPerKey") {
     val docs = Tables.documents(spark, sf)
     val topk = Curation.quotaSample(docs, "doc_id", "source", 7)
-    val win = Curation.quotaSampleWindow(docs, "doc_id", "source", 7)
+    val win = ReferenceForms.quotaSampleWindow(docs, "doc_id", "source", 7)
     assert(topk.exceptAll(win).isEmpty && win.exceptAll(topk).isEmpty)
     val plan = topk.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"), plan)

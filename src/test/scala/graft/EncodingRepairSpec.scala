@@ -65,7 +65,7 @@ class EncodingRepairSpec extends AnyFunSuite {
     val df = dirty.toDF("doc_id", "text")
     val kernel = TextAnalysis.encodingRepair(df, "doc_id", "text")
       .orderBy("doc_id").collect()
-    val chained = TextAnalysis.encodingRepairChained(df, "doc_id", "text")
+    val chained = ReferenceForms.encodingRepairChained(df, "doc_id", "text")
       .orderBy("doc_id").collect()
     kernel.zip(chained).foreach { case (k, c) =>
       assert(k.getAs[String]("repaired") == c.getAs[String]("repaired"),
@@ -110,7 +110,7 @@ class EncodingRepairSpec extends AnyFunSuite {
           .otherwise(col("text")).as("text"))
     val kernel = TextAnalysis.encodingRepair(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
-    val chained = TextAnalysis.encodingRepairChained(docs, "doc_id", "text")
+    val chained = ReferenceForms.encodingRepairChained(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
     assert(kernel.length == chained.length)
     kernel.zip(chained).foreach { case (k, c) =>

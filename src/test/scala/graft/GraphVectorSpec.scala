@@ -142,7 +142,7 @@ class GraphVectorSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val kernel = Dedup.cdcChunkTable(docs, "doc_id", "text", 16)
       .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val windowed = Dedup.cdcChunkTableWindowed(docs, "doc_id", "text", 16)
+    val windowed = ReferenceForms.cdcChunkTableWindowed(docs, "doc_id", "text", 16)
       .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
     assert(kernel == windowed)
     // and the kernel build never shuffles tokens: no window, and the

@@ -1,21 +1,23 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.classic.GraftPlanFactory
 import graft.sources.Tables
 
 class MonitoringSpec extends AnyFunSuite {
   import TestSpark._
 
   test("listener records rows, scan bytes and duration per tagged query") {
-    val listener = Monitoring.install(spark)
-    val df = Monitoring.tag(Tables.orders(spark, sf).select("o_orderkey"), "probe_orders")
-    df.write.format("noop").mode("overwrite").save()
-    // listener bus is async — poll for delivery
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (listener.snapshot.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    val m = listener.snapshot.find(_.name == "probe_orders")
-    assert(m.isDefined, s"metrics missing: ${listener.snapshot}")
-    assert(m.get.rows > 0 && m.get.scanBytes > 0 && m.get.status == "ok")
-    assert(listener.json.contains("probe_orders"))
+    val profile = Profile.install(spark)
+    try {
+      val df = Monitoring.tag(Tables.orders(spark, sf).select("o_orderkey"), "probe_orders")
+      df.write.format("noop").mode("overwrite").save()
+      GraftPlanFactory.flushListeners(spark)
+      val m = profile.snapshot.find(_.name == "probe_orders")
+      assert(m.isDefined, s"metrics missing: ${profile.snapshot}")
+      assert(m.get.rows > 0 && m.get.scanBytes > 0 && m.get.status == "ok")
+      assert(m.get.seconds > 0.0)
+      assert(profile.json.contains("probe_orders"))
+    } finally profile.close()
   }
 }

@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
-import graft.operators.Similarity
+import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
 import graft.plans.GraftFunctions
 import graft.Materialize.MaterializeOps
 
-/** Parity-only reference forms of the similarity kernels: the composed
-  * expression or join formulations each native kernel / scan shape
-  * replaced. Specs pin the shipped operators against them; nothing on
-  * a query path uses them.
+/** Parity-only reference forms of graft's kernels: the composed
+  * expression, window or join formulations each native kernel / scan
+  * shape replaced. Specs pin the shipped operators against them;
+  * nothing on a query path uses them.
   */
 object ReferenceForms {
 
@@ -289,5 +289,89 @@ object ReferenceForms {
     PairMiner.selfPairs(PairMiner.cap(fps, Seq("h"), maxDf).materialized, Seq("h"),
         "doc_id", "doc_a", "doc_b", n = "shared_fps")
       .filter(col("shared_fps") >= minShared)
+  }
+
+  /** Reference formulation of [[Dedup.cdcChunkTable]] from built-in
+    * functions (posexplode → running-anchor window → ordered
+    * reassembly); it shuffles every token.
+    */
+  def cdcChunkTableWindowed(docs: DataFrame, idCol: String, textCol: String,
+                            anchorMod: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TextFunctions.tokens
+    val toks = docs
+      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
+    val anchored = toks.withColumn("is_anchor",
+      (Dedup.phash(concat(lit("cdc|"), col("tok"))) % anchorMod === 0).cast("long"))
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    anchored.withColumn("chunk", sum(col("is_anchor")).over(w))
+      .groupBy(col("doc_id"), col("chunk"))
+      .agg(
+        md5(concat_ws(" ",
+          transform(sort_array(collect_list(struct(col("pos"), col("tok")))),
+            s => s.getField("tok"))).cast("binary")).as("chunk_fp"),
+        count(lit(1)).as("n_tokens"))
+      .select(col("doc_id"), col("chunk_fp"), col("n_tokens"))
+  }
+
+  /** Built-in-window reference formulation of [[Curation.quotaSample]]. */
+  def quotaSampleWindow(docs: DataFrame, idCol: String, strataCol: String,
+                        quota: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(strataCol))
+      .orderBy(col("__h"), col(idCol))
+    docs
+      .select(col(idCol), col(strataCol),
+        Curation.phash(concat(col(strataCol), lit("|"), col(idCol).cast("string"))).as("__h"))
+      .withColumn("__rank", row_number().over(w))
+      .filter(col("__rank") <= quota)
+      .select(col(idCol), col(strataCol))
+  }
+
+  /** Shuffle formulation of [[TextAnalysis.tokenDiversity]] (two
+    * exchanges; the kernel form computes the same longs map-side).
+    */
+  def tokenDiversityShuffle(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    import graft.functions.TextFunctions.tokens
+    val pairs = docs
+      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
+    val agg = pairs.groupBy(col("doc_id")).agg(
+      sum(col("c")).as("__n"),
+      count(lit(1)).as("__d"),
+      max(col("c")).as("__maxc"),
+      sum(col("c") * col("c")).as("__sumc2"))
+    docs.select(col(idCol).as("doc_id"))
+      .join(agg, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("__n"), lit(0L)).as("n_tokens"),
+        coalesce(col("__d"), lit(0L)).as("distinct_tokens"),
+        when(col("__n").isNull, lit(0.0))
+          .otherwise(col("__maxc").cast("double") / col("__n").cast("double"))
+          .as("top_share"),
+        when(col("__n").isNull, lit(0.0))
+          .otherwise(lit(1.0) - col("__sumc2").cast("double") /
+            (col("__n") * col("__n")).cast("double"))
+          .as("simpson_diversity"))
+  }
+
+  /** Reference implementation of [[TextAnalysis.encodingRepair]] from
+    * built-in chained replaces (32 full-string scans per row).
+    */
+  def encodingRepairChained(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val t = col(textCol)
+    val nArtifacts = TextAnalysis.MojibakeRepairs.map { case (bad, _) =>
+      ((length(t) - length(replace(t, lit(bad), lit("")))) / bad.length)
+        .cast("long")
+    }.reduce(_ + _)
+    val repaired = TextAnalysis.MojibakeRepairs.foldLeft(t) { case (c, (bad, good)) =>
+      replace(c, lit(bad), lit(good))
+    }
+    docs.select(col(idCol).as("doc_id"),
+      repaired.as("repaired"),
+      nArtifacts.as("n_artifacts"),
+      (repaired =!= t).as("changed"))
   }
 }

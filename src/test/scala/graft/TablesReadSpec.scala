@@ -1,11 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.types.LongType
@@ -13,41 +12,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
 
-/** Spark jobs launched on the calling thread while `body` runs.
-  *
-  * A listener records each job's group; after `body`, a marker job in
-  * its own group goes through the same listener queue, so once the
-  * marker is seen every earlier job start has been delivered too.
+/** Spark jobs launched while `body` runs: a view of [[Profile.measure]],
+  * which runs `body` in its own job group and drains the listener bus
+  * before and after it.
   */
 object JobCount {
   def during(spark: SparkSession)(body: => Unit): Int = jobsAndShuffleStages(spark)(body)._1
 
-  /** The jobs, and the shuffle-map stages among their stages. */
+  /** The jobs, and the shuffle-map stages among their stages (every
+    * stage of a job but its result stage).
+    */
   def jobsAndShuffleStages(spark: SparkSession)(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
-    def group(p: java.util.Properties): String =
-      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (group(js.properties) == "graft-job-count") // all but the result stage
-          shuffleStages.addAndGet(js.stageInfos.length - 1)
-        groups.add(group(js.properties))
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("graft-job-count", "jobs counted by JobCount")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-job-count-marker", "JobCount queue marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!groups.contains("graft-job-count-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("graft-job-count-marker"), "listener never saw the marker job")
-      (groups.asScala.count(_ == "graft-job-count"), shuffleStages.get)
-    } finally sc.removeSparkListener(l)
+    val m = Profile.measure(spark, "job-count")(body).orThrow
+    (m.jobs.size, m.jobs.map(_.stageIds.size - 1).sum)
   }
 }
 

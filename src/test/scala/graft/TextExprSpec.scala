@@ -97,7 +97,7 @@ class TextExprSpec extends AnyFunSuite {
     val corpus = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     for (df <- Seq(edge, corpus)) {
       val native = TextAnalysis.tokenDiversity(df, "doc_id", "text")
-      val shuffled = TextAnalysis.tokenDiversityShuffle(df, "doc_id", "text")
+      val shuffled = ReferenceForms.tokenDiversityShuffle(df, "doc_id", "text")
       val joined = native.alias("n").join(shuffled.alias("h"), Seq("doc_id"))
       val mismatches = joined.filter(not(
         col("n.n_tokens") <=> col("h.n_tokens") &&
