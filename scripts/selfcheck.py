@@ -3,7 +3,8 @@
 graft.Verify's queries.json, run the matching oracleSql in DuckDB over
 the same sf parquet tables and compare row count, schema width, and
 exact values (rows sorted, columns sorted by name — like the driver).
-A named query with no dump is a FAIL, and any FAIL exits 1.
+A named query with no dump is a FAIL, and any FAIL exits 1, as does a
+run that checked no query (skipped ones aside).
 
 Usage: python3 scripts/selfcheck.py <sfDir> <verifyOutDir> [skipCsv]
 
@@ -388,6 +389,11 @@ def main(sf_dir, out_dir, skip=()):
     if jout:
         with open(jout, "w") as f:
             json.dump(results, f, indent=1, sort_keys=True)
+    # fail closed: a run that checked nothing (skipped queries aside)
+    # proves nothing
+    if n_pass + n_fail == 0:
+        print("== FAIL: no query was checked")
+        return 1
     return n_fail
 
 if __name__ == "__main__":

@@ -1,71 +1,48 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.SparkSession
+import Json.dec
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = session(cpus)
-    // per-query records (rows / scanned bytes / execution time) and
-    // per-query ENGINE spans for the pooled pass: each query runs in
-    // its own job group, and the profile sums its group's job spans,
-    // untagged per-round jobs of iterative queries included
-    val profile = Profile.install(spark)
+    val spark = GraftSession.getOrCreate()
     // Queries are independent; run them on a small pool so planning/
     // codegen overheads overlap (Spark schedules the jobs fairly).
     // Per-query numbers are each query's own span; "value" is the
-    // wall-clock of the whole run.
+    // wall-clock of the whole run. Each query runs in its own job
+    // group, so its measure's ENGINE span sums the group's job spans,
+    // untagged per-round jobs of iterative queries included.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "6").toInt)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val wall0 = System.nanoTime()
-    val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      scala.concurrent.Future {
-        val t0 = System.nanoTime()
-        // noop sink: every output column is fully evaluated — a count()
-        // would let Catalyst prune the projected work (regex/md5/token
-        // compute) out of map-only queries and under-measure them.
-        val err =
-          try { Monitoring.inGroup(spark, name) {
-                  Monitoring.tag(fn(spark, sfDir), name)
-                    .write.format("noop").mode("overwrite").save() }; None }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
-            Some(e) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-22s $sec%8.2fs")
-        (name, sec, err.isEmpty)
-      }
-    }
     val results = scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
+      scala.concurrent.Future.traverse(SparkEntry.queries.keys.toSeq) { name =>
+        scala.concurrent.Future {
+          val m = logged("[bench]", name, Run(spark, sfDir, name)(Run.noop))
+          System.err.println(f"[bench] $name%-22s ${m.wallSec}%8.2fs")
+          name -> m
+        }
+      },
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
     val total = (System.nanoTime() - wall0) / 1e9
     // "queries" stays name->sec (the driver's contract); failures are
     // reported in a separate list so a crashing query can't masquerade
-    // as a normal timing.
-    // per-query secs at 3 decimals (ms precision): the harness
-    // tail-captures stdout, and a 140-entry full-precision map
+    // as a normal timing. Seconds at 3 decimals (ms precision): the
+    // harness tail-captures stdout, and a 140-entry full-precision map
     // overran the tail in round 8 (BENCH_r08 parsed:null) — shorter
-    // line, whole line survives
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // drain the scheduler bus so every job-end has landed, then emit
-    // the pooled per-query engine spans next to the wall map
-    org.apache.spark.sql.classic.GraftPlanFactory.flushListeners(spark)
-    val pooledEngine = profile.engineSpans
-    val qsEngine = results.map { case (k, _, _) =>
-      "\"" + k + "\":" + pooledEngine.get(k).fold("null")(fmt)
-    }.mkString("{", ",", "}")
-    // per-query engine metrics (rows / scanned bytes / listener time)
-    Files.writeString(Paths.get("target/bench_metrics.json"), profile.json)
-    System.err.println("[bench] metrics: " + profile.json)
+    // line, whole line survives.
+    val qs = ListMap.from(results.map { case (k, m) => k -> dec(m.wallSec) })
+    val qsEngine = ListMap.from(results.map { case (k, m) => k -> engine(m).map(dec(_)) })
+    // per-query records (rows / scanned bytes / engine span)
+    val metrics = Profile.json(results.flatMap(_._2.record).sortBy(_.name))
+    Files.writeString(Paths.get("target/bench_metrics.json"), metrics)
+    System.err.println("[bench] metrics: " + metrics)
     // Isolated pass over the slowest pooled spans: pooled numbers carry
     // up-to-6-way pool contention (doc_fingerprint measured 4.4 s
     // pooled vs 0.22 s isolated in round 10), so the artifact records
@@ -92,7 +69,7 @@ object Bench {
     // pinned query that CRASHES isolated is a breach too (ADVICE:
     // timing the failed attempt read as a speedup).
     spark.stop()
-    val iSpark = session(cpus)
+    val iSpark = GraftSession.getOrCreate()
     val cal = calibrate(iSpark, 32)
     System.err.println(f"[bench] calibration span $cal%.3fs")
     // Round 15 retired the legacy zero-slack hard pins (22×cal /
@@ -127,7 +104,7 @@ object Bench {
       "knn_pq_trained", "q21_sole_late_supplier", "robots_txt_filter",
       "doc_anchors", "dedup_embedding", "semantic_dedup", "exact_substr_dedup")
     val topN = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "8").toInt
-    val ok = results.filter(_._3)
+    val ok = results.collect { case (k, m) if m.ok => k -> m.wallSec }
     // core set = historical top-8-pooled + unconditional pins: the
     // cross-round `isolated`/`engine` maps keep exactly this
     // membership (and the final stdout line stays within the tail)
@@ -135,18 +112,14 @@ object Bench {
       alwaysIsolate.filter(k => ok.exists(_._1 == k))).distinct
     val isoNames = (coreIsoNames ++
       fixedReport.filter(k => ok.exists(_._1 == k))).distinct
-    val isolated = isoNames.map { name =>
-      // a failed attempt must never be timed as the query's "real cost"
-      val attempts = (1 to 2).map(_ => attempt(iSpark, sfDir, name, "[bench] isolated")())
-      val okRuns = attempts.filter(_.ok)
-      val sec = okRuns.map(_.wallSec).minOption
-      val eng = okRuns.flatMap(engine).minOption
+    val isolated = ListMap.from(isoNames.map { name =>
+      val b = minOf2(iSpark, sfDir, name, "[bench] isolated")
       System.err.println(f"[bench] isolated $name%-22s " +
-        s"${sec.fold("FAILED")(s => f"$s%8.2fs")} engine " +
-        s"${eng.fold("n/a")(s => f"$s%.2fs")} " +
-        s"(runs: ${attempts.map(m => if (m.ok) f"${m.wallSec}%.2f" else "fail").mkString("/")})")
-      (name, sec, eng, okRuns.size == attempts.size)
-    }
+        s"${b.wall.fold("FAILED")(s => f"$s%8.2fs")} engine " +
+        s"${b.engine.fold("n/a")(s => f"$s%.2fs")} " +
+        s"(runs: ${b.runs.map(m => if (m.ok) f"${m.wallSec}%.2f" else "fail").mkString("/")})")
+      name -> b
+    })
     // Full-registry isolated ENGINE sweep at sf0.01 — the per-query
     // cross-round regression basis. The pooled queries_engine map is
     // contention-dominated (measured 37× inflation on ngram_lm_backoff:
@@ -170,8 +143,8 @@ object Bench {
       Files.isDirectory(Paths.get(sweepDir))
     val SweepCores = 8
     iSpark.stop()
-    var swSpark = session(SweepCores)
-    def recycleSweepSession(): Unit = { swSpark.stop(); swSpark = session(SweepCores) }
+    var swSpark = GraftSession.getOrCreate(SweepCores)
+    def recycleSweepSession(): Unit = { swSpark.stop(); swSpark = GraftSession.getOrCreate(SweepCores) }
     val sweepCal = if (!sweepOn) cal else {
       val c = calibrate(swSpark, SweepCores)
       System.err.println(f"[bench] sweep calibration span $c%.3fs (local[$SweepCores])")
@@ -190,12 +163,7 @@ object Bench {
         val p = Paths.get("bench_pins_sf001.json")
         val txt = try Files.readString(p) catch { case e: java.io.IOException =>
           throw new IllegalStateException(s"[bench] pins file $p unreadable: $e", e) }
-        val slack = "\"slack\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble).getOrElse(2.5)
-        val entry = "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
-        val units = entry.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter { case (k, _) => k != "slack" && !k.startsWith("_") }.toMap
+        val (units, slack) = parsePins(txt)
         if (units.isEmpty)
           throw new IllegalStateException(s"[bench] pins file $p holds no pins")
         (units, slack)
@@ -217,9 +185,10 @@ object Bench {
     val sweep = sweepNames.zipWithIndex.map { case (name, i) =>
       if (i > 0 && i % 45 == 0) recycleSweepSession()
       def sweepAttempt(): Option[Double] = {
-        val m = attempt(swSpark, sweepDir, name, "[bench] sweep") {
+        val m = logged("[bench] sweep", name, Run(swSpark, sweepDir, name) { df =>
+          Run.noop(df)
           if (canary.contains(name)) calibrationSpan(swSpark, 3 * CalRows, SweepCores)
-        }
+        })
         if (m.ok) engine(m) else None
       }
       var attempts = (1 to 2).map(_ => sweepAttempt()).toVector
@@ -264,13 +233,11 @@ object Bench {
       (name, eng, attempts.forall(_.isDefined))
     }
     val sweepRegressions = sweep.collect {
-      case (k, e, okAll) if sweepPins.contains(k) &&
-          (!okAll || e.isEmpty ||
-            e.exists(_ / sweepCal > math.max(sweepPins(k) * sweepSlack, sweepFloor))) =>
+      case (k, e, okAll) if sweepThreshold(k).exists(t => !okAll || e.forall(_ / sweepCal > t)) =>
         System.err.println(f"[bench] SWEEP REGRESSION $k engine " +
           s"${e.fold("FAILED")(s => f"${s / sweepCal}%.2f cal-units")} vs pin " +
           f"${sweepPins(k)}%.2f × $sweepSlack%.1f (floor $sweepFloor%.1f)")
-        "\"sweep:" + k + "\""
+        "sweep:" + k
     }
     if (sweepOn) {
       // the observed cal-units, ready to become next round's pins
@@ -278,41 +245,31 @@ object Bench {
       // silently reset any tuned slack on the documented copy-over
       // refresh — round-14 ADVICE)
       val emitSlack = if (sweepPins.isEmpty) 2.5 else sweepSlack
-      val unitsJson = sweep.collect { case (k, Some(e), _) =>
-        "\"" + k + "\":" + fmt(e / sweepCal) }.mkString(
-        "{\"slack\":" + fmt(emitSlack) + ",", ",", "}")
+      val units = sweep.collect { case (k, Some(e), _) => k -> dec(e / sweepCal) }
       Files.createDirectories(Paths.get("target"))
-      Files.writeString(Paths.get("target/bench_sweep_calunits.json"), unitsJson + "\n")
+      Files.writeString(Paths.get("target/bench_sweep_calunits.json"),
+        Json(ListMap("slack" -> dec(emitSlack)) ++ units) + "\n")
     }
-    val sweepJson = sweep.map { case (k, e, _) =>
-      "\"" + k + "\":" + e.fold("null")(fmt) }.mkString("{", ",", "}")
-    val sweepFailed = sweep.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-
-    def optNum(v: Option[Double]): String = v.fold("null")(fmt)
+    val sweepSecs = ListMap.from(sweep.map { case (k, e, _) => k -> e.map(dec(_)) })
+    val sweepFailed = sweep.collect { case (k, _, false) => k }
     // cross-round continuity maps: core membership only (the final
     // stdout line must fit the tail; the fixed-set numbers ride the
     // `queries` map there, and everything lands in the file artifact)
-    val isolatedCore = isolated.filter(r => coreIsoNames.contains(r._1))
-    val iso = isolatedCore.map { case (k, v, _, _) => "\"" + k + "\":" + optNum(v) }
-      .mkString("{", ",", "}")
-    val engJson = isolatedCore.map { case (k, _, e, _) => "\"" + k + "\":" + optNum(e) }
-      .mkString("{", ",", "}")
-    val isoFailedNames = isolated.collect { case (k, _, _, false) => k }
+    def isoMap(names: Iterable[String], f: MinOf2 => Option[Double]) =
+      ListMap.from(names.map(k => k -> f(isolated(k)).map(dec(_))))
+    val isoFailedNames = isolated.collect { case (k, b) if !b.allOk => k }
     // the sweep is the ONE regression system (round 15): every
     // registered query pinned with explicit slack on one calibration
     // basis; an isolated-pass crash still fails loudly via `failed`
-    val regressions = sweepRegressions.mkString("[", ",", "]")
-    val failedAll = (results.collect { case (k, _, false) => k } ++ isoFailedNames)
-      .distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedAll = (results.collect { case (k, m) if !m.ok => k } ++ isoFailedNames).distinct
     // file artifact carries the COMPLETE isolated maps (core + fixed
     // report set); the stdout lines carry the tail-sized subsets
-    val isoAll = isolated.map { case (k, v, _, _) => "\"" + k + "\":" + optNum(v) }
-      .mkString("{", ",", "}")
-    val engAll = isolated.map { case (k, _, e, _) => "\"" + k + "\":" + optNum(e) }
-      .mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_engine":$qsEngine,"isolated":$isoAll,"engine":$engAll,"queries_engine_isolated":$sweepJson,"sweep_sf":"${if (sweepOn) sweepDir else ""}","sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir"}"""
+    val json = Json(ListMap("metric" -> "total", "value" -> dec(total), "unit" -> "sec",
+      "queries" -> qs, "queries_engine" -> qsEngine,
+      "isolated" -> isoMap(isolated.keys, _.wall), "engine" -> isoMap(isolated.keys, _.engine),
+      "queries_engine_isolated" -> sweepSecs, "sweep_sf" -> (if (sweepOn) sweepDir else ""),
+      "sweep_failed" -> sweepFailed, "sweep_cal_sec" -> dec(sweepCal), "cal_sec" -> dec(cal),
+      "regressions" -> sweepRegressions, "failed" -> failedAll, "sf" -> sfDir))
     // durable copies of the SAME line: one under target/, one at the
     // repo root (BENCH_full_latest.json) so every per-query timing is
     // machine-readable even if the stdout capture truncates
@@ -331,11 +288,12 @@ object Bench {
     // survive the harness tail — round 8); the full map lives in the
     // file artifact next to queries_engine
     val sweepOk = sweep.flatMap(_._2)
-    val sweepSummary = if (!sweepOn) "null" else {
+    val sweepSummary = Option.when(sweepOn) {
       val units = sweepOk.map(_ / sweepCal).sorted
       def pct(q: Double) =
         if (units.isEmpty) 0.0 else units(((units.size - 1) * q).toInt)
-      s"""{"n":${sweep.size},"n_ok":${sweepOk.size},"p50_cal_units":${fmt(pct(0.5))},"p99_cal_units":${fmt(pct(0.99))},"pinned":${sweepPins.size}}"""
+      ListMap("n" -> sweep.size, "n_ok" -> sweepOk.size, "p50_cal_units" -> dec(pct(0.5)),
+        "p99_cal_units" -> dec(pct(0.99)), "pinned" -> sweepPins.size)
     }
     // `queries` on the FINAL line (the one the driver parses): the
     // fixed report set's ISOLATED wall seconds at 2 decimals —
@@ -344,12 +302,14 @@ object Bench {
     // round 8's full-map truncation). Names absent here crashed
     // isolated and are listed in `failed`; the full 182-entry pooled
     // map still lives in BENCH_full_latest.json / the earlier line.
-    def fmt2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val isoByName = isolated.map(r => r._1 -> r._2).toMap
-    val fixedQs = fixedReport.flatMap(k => isoByName.get(k).flatten.map(v =>
-      "\"" + k + "\":" + fmt2(v))).mkString("{", ",", "}")
-    val finalLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fixedQs,"n_queries":${results.size},"isolated":$iso,"engine":$engJson,"sweep":$sweepSummary,"sweep_failed":$sweepFailed,"sweep_cal_sec":${fmt(sweepCal)},"cal_sec":${fmt(cal)},"regressions":$regressions,"failed":$failedAll,"sf":"$sfDir","queries_file":"BENCH_full_latest.json"}"""
+    val fixedQs = ListMap.from(fixedReport.flatMap(k =>
+      isolated.get(k).flatMap(_.wall).map(v => k -> dec(v, 2))))
+    val finalLine = Json(ListMap("metric" -> "total", "value" -> dec(total), "unit" -> "sec",
+      "queries" -> fixedQs, "n_queries" -> results.size,
+      "isolated" -> isoMap(coreIsoNames, _.wall), "engine" -> isoMap(coreIsoNames, _.engine),
+      "sweep" -> sweepSummary, "sweep_failed" -> sweepFailed, "sweep_cal_sec" -> dec(sweepCal),
+      "cal_sec" -> dec(cal), "regressions" -> sweepRegressions, "failed" -> failedAll,
+      "sf" -> sfDir, "queries_file" -> "BENCH_full_latest.json"))
     swSpark.stop()
     // the parsed line must fit the ~2000-char stdout tail whole: an
     // overflow (fixedReport or the core maps growing) fails loudly
@@ -365,30 +325,36 @@ object Bench {
   /** Exclusive length bound of Bench's driver-parsed final stdout line. */
   private val FinalLineMaxChars = 1800
 
-  /** The tuned library session (AQE, bloom-filter pruning, UTC,
-    * nanosAsLong, GraftExtensions): benchmark what users run.
+  /** A pins file's per-query pins and its slack (2.5 when absent);
+    * "slack" and "_"-prefixed keys are file metadata, never pins.
     */
-  private def session(cores: Int): SparkSession = {
-    val s = GraftSession.builder(s"local[$cores]", cores).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private[graft] def parsePins(text: String): (Map[String, Double], Double) = {
+    val pins = Json.readObject(text)
+    (pins.collect { case (k, v: Number) if k != "slack" && !k.startsWith("_") => k -> v.doubleValue },
+      pins.get("slack").fold(2.5)(_.toString.toDouble))
   }
 
-  /** One measured run of registered query `name` into a noop sink
-    * (every output column evaluated), followed by `extra` inside the
-    * same measure; a failure is logged under `label`.
-    */
-  private[graft] def attempt(spark: SparkSession, sfDir: String, name: String,
-                             label: String)(extra: => Unit = ()): Profile.Measure = {
-    val m = Profile.measure(spark, name) {
-      Monitoring.tag(SparkEntry.queries(name)(spark, sfDir), name)
-        .write.format("noop").mode("overwrite").save()
-      extra
-    }
+  /** `m`, its failure logged under `label`. */
+  private def logged(label: String, name: String, m: Profile.Measure): Profile.Measure = {
     m.error.foreach(e =>
       System.err.println(s"$label FAILED $name: ${e.getClass.getName}: ${e.getMessage}"))
     m
   }
+
+  /** Two noop-sink runs of registered query `name`, the second warm. A
+    * failed run is logged under `label` and never timed as the query's
+    * cost: `wall` and `engine` are the least over the runs that succeeded.
+    */
+  private[graft] final case class MinOf2(runs: Seq[Profile.Measure]) {
+    def wall: Option[Double] = runs.filter(_.ok).map(_.wallSec).minOption
+    def engine: Option[Double] = runs.filter(_.ok).flatMap(Bench.engine).minOption
+    def warm: Profile.Measure = runs.last
+    def allOk: Boolean = runs.forall(_.ok)
+  }
+
+  private[graft] def minOf2(spark: SparkSession, sfDir: String, name: String,
+                            label: String): MinOf2 =
+    MinOf2((1 to 2).map(_ => logged(label, name, Run(spark, sfDir, name)(Run.noop))))
 
   /** A measure's engine span; a run with no finished job has none. */
   private[graft] def engine(m: Profile.Measure): Option[Double] =

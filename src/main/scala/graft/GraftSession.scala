@@ -18,9 +18,10 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[graft.sources.GraftLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.GraftLocalFs].getName)
 
-  def builder(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      : SparkSession.Builder = {
+  /** A session's cores: `SPARK_GRAFT_CPUS`, or else this JVM's processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     prewarmCollation
     SparkSession.builder()
       .master(master)
@@ -63,8 +64,13 @@ object GraftSession {
     t.start()
   }
 
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
+  /** graft's one session rule: the tuned [[builder]] on
+    * `SPARK_GRAFT_MASTER`, or else `local[cores]`, with `cores` shuffle
+    * partitions, plus `confs`, logging at WARN.
+    */
+  def getOrCreate(cores: Int = cpus, confs: Map[String, String] = Map.empty): SparkSession = {
+    val s = builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"), cores)
+      .config(confs).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

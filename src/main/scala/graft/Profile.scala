@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -26,7 +27,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    and GC time. Jobs outside a graft group are not kept.
   *  - Queries tagged by [[Monitoring.tag]] get one [[Profile.QueryMetrics]]
   *    record each: output rows, scanned bytes, execution seconds and
-  *    status ([[snapshot]], [[json]]).
+  *    status ([[snapshot]], [[Profile.json]]); [[Profile.measure]] returns the
+  *    record of the query tagged with its group's name.
   *
   * A query's ENGINE span is the sum of its group's job spans. AQE may
   * run independent stages as concurrent jobs, so the sum can exceed
@@ -92,19 +94,8 @@ final class Profile private (spark: SparkSession) extends SparkListener
     (js, js.flatMap(_.stageIds).distinct.sorted.flatMap(stages.get))
   }
 
-  /** Engine seconds per group with at least one finished job. */
-  def engineSpans: Map[String, Double] = synchronized {
-    jobs.values.filter(_.endMs >= 0).groupBy(_.group)
-      .map { case (g, js) => g -> js.map(_.spanMs).sum / 1e3 }
-  }
-
   /** Per-tagged-query records, by name. */
   def snapshot: Seq[QueryMetrics] = tags.values.asScala.toSeq.sortBy(_.name)
-
-  def json: String = snapshot.map { m =>
-    s"""{"name":"${m.name}","sec":${"%.3f".format(m.seconds)},"rows":${m.rows},""" +
-      s""""scan_bytes":${m.scanBytes},"status":"${m.status}"}"""
-  }.mkString("[", ",", "]")
 
   /** Unregisters both listeners; the recorded data stays readable. */
   override def close(): Unit = {
@@ -130,15 +121,23 @@ object Profile {
                          shuffleWrite: Long = 0L, shuffleRead: Long = 0L,
                          inputBytes: Long = 0L, spillBytes: Long = 0L, gcMs: Long = 0L)
 
+  /** The records as one JSON array (`sec` at 3 decimals). */
+  def json(records: Seq[QueryMetrics]): String = Json(records.map(m => ListMap(
+    "name" -> m.name, "sec" -> Json.dec(m.seconds), "rows" -> m.rows,
+    "scan_bytes" -> m.scanBytes, "status" -> m.status)))
+
   /** One measured body: its wall seconds, its group's jobs and stages,
-    * and the exception it threw, if any.
+    * the record of the query tagged with the group's name (if the body
+    * ran one), and the exception it threw, if any.
     */
   final case class Measure(wallSec: Double, jobs: Seq[Job], stages: Seq[Stage],
-                           error: Option[Throwable]) {
+                           query: Option[QueryMetrics], error: Option[Throwable]) {
     def ok: Boolean = error.isEmpty
     def engineSec: Double = jobs.map(_.spanMs).sum / 1e3
     def shuffleWriteBytes: Long = stages.map(_.shuffleWrite).sum
     def inputBytes: Long = stages.map(_.inputBytes).sum
+    /** The tagged record with `seconds` as the engine span. */
+    def record: Option[QueryMetrics] = query.map(_.copy(seconds = engineSec))
     /** This measure, or the body's exception rethrown. */
     def orThrow: Measure = { error.foreach(e => throw e); this }
   }
@@ -167,7 +166,7 @@ object Profile {
       val wall = (System.nanoTime() - t0) / 1e9
       GraftPlanFactory.flushListeners(spark)
       val (js, ss) = p.group(name)
-      Measure(wall, js, ss, error)
+      Measure(wall, js, ss, Option(p.tags.get(name)), error)
     } finally p.close()
   }
 

@@ -1,7 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{GraftSession, Monitoring, SparkEntry}
+import scala.collection.immutable.ListMap
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Try
+
+import graft.{GraftSession, Json, Monitoring, Run, SparkEntry}
 
 /** One user-facing command surface for the library — the Spark-native
   * analog of the reference client (cooler-MapReduce
@@ -42,7 +46,7 @@ object Cli {
     case "sql" :: stmt :: rest                       => sql(stmt, rest.headOption.getOrElse(DefaultSf))
     case "status" :: _                               => status()
     case "bench" :: rest                             => graft.Bench.main(rest.toArray)
-    case "verify" :: sfDir :: outDir :: _            => graft.Verify.main(Array(sfDir, outDir))
+    case "verify" :: sfDir :: outDir :: rest         => graft.Verify.main((sfDir :: outDir :: rest.take(1)).toArray)
     case "index" :: kind :: sfDir :: path :: _       => index(kind, sfDir, path)
     case "shards" :: sfDir :: path :: rest           =>
       shards(sfDir, path, rest.headOption.map(_.toLong).getOrElse(1000000L))
@@ -62,30 +66,21 @@ object Cli {
     */
   private def audit(sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
     val stats = q("corpus_stats")
       .filter(col("source").isNull && col("lang").isNull).collect()(0)
-    println(s"""{"audit":"composition","n_docs":${stats.getAs[Long]("n_docs")},"n_tokens":${stats.getAs[Long]("n_tokens")},"dup_rate":${stats.getAs[Double]("dup_rate")}}""")
-    // source is free text from the corpus — escape it (a quote or
-    // backslash in a source name must not produce an invalid JSON line)
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def line(audit: String, kvs: (String, Any)*): Unit = println(Json(ListMap("audit" -> audit) ++ kvs))
+    line("composition", "n_docs" -> stats.getAs[Long]("n_docs"),
+      "n_tokens" -> stats.getAs[Long]("n_tokens"), "dup_rate" -> stats.getAs[Double]("dup_rate"))
     q("source_divergence").orderBy(col("kl_nats").desc).collect().foreach { r =>
-      println(s"""{"audit":"source_divergence","source":${js(r.getString(0))},"n_tokens":${r.getLong(1)},"kl_nats":${r.getDouble(3)}}""")
+      line("source_divergence", "source" -> r.getString(0), "n_tokens" -> r.getLong(1),
+        "kl_nats" -> r.getDouble(3))
     }
-    val leaks = q("split_leakage").count()
-    println(s"""{"audit":"split_leakage","leaked_heldout_docs":$leaks}""")
+    line("split_leakage", "leaked_heldout_docs" -> q("split_leakage").count())
     val keep = q("gopher_rules").agg(
       sum(when(col("keep"), 1L).otherwise(0L)).cast("double") / count(lit(1))).collect()(0).getDouble(0)
-    println(s"""{"audit":"gopher_keep_rate","rate":$keep}""")
+    line("gopher_keep_rate", "rate" -> keep)
     spark.stop()
   }
 
@@ -108,7 +103,7 @@ object Cli {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = true))))
@@ -183,7 +178,7 @@ object Cli {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = true),
@@ -255,7 +250,7 @@ object Cli {
     * .writeTrainingShards), the output stage of the pipeline.
     */
   private def shards(sfDir: String, path: String, budget: Long): Unit = {
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val t0 = System.nanoTime()
     val (nShards, totalTokens) = graft.sources.Layouts.writeTrainingShards(
       graft.sources.Tables.documents(spark, sfDir), "doc_id", "text",
@@ -267,7 +262,7 @@ object Cli {
 
   private def index(kind: String, sfDir: String, path: String): Unit = {
     import graft.operators.AnnSpec, AnnSpec.{Code, Coarse}
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val t0 = System.nanoTime()
     def annIndex(spec: AnnSpec): Unit = graft.operators.Similarity.buildAnnIndex(
       graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding", path, spec)
@@ -328,7 +323,7 @@ object Cli {
         |  sql <statement> [sfDir]                 ad-hoc SQL over the registered tables
         |  status                                  executor / resource snapshot
         |  bench [sfDir]                           the benchmark main
-        |  verify <sfDir> <outDir>                 the correctness-dump main
+        |  verify <sfDir> <outDir> [q1,q2]         the correctness-dump main
         |  index <minhash|lsh|cdc|bm25|pq|ivfpq|ivfpq-trained|line|nbmodel|lmmodel|frontier>
         |        <sfDir> <path>                    build a persisted index/model
         |  shards <sfDir> <path> [budgetTokens]    write the corpus as token-budgeted
@@ -361,7 +356,7 @@ object Cli {
     val kvs = pos.filter(_.contains("=")).map { s =>
       val i = s.indexOf('='); s.substring(0, i) -> s.substring(i + 1)
     }.toMap
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val df = graft.JobRunner.submit(spark, jarPath, className,
       Map("dir" -> sfDir) ++ kvs)
     flags.headOption.map(_.stripPrefix("--out=")) match {
@@ -370,13 +365,6 @@ object Cli {
         println(s"wrote ${spark.read.parquet(out).count()} rows to $out")
       case None => df.show(20, false)
     }
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   private def bar(done: Int, total: Int, width: Int = 40): String = {
@@ -391,57 +379,49 @@ object Cli {
     val name = a.head
     val sfDir = a.lift(1).getOrElse(DefaultSf)
     val outDir = a.lift(2)
-    SparkEntry.queries.get(name) match {
-      case None =>
-        System.err.println(s"unknown query '$name' — see `list`"); sys.exit(1)
-      case Some(fn) =>
-        val spark = session()
-        val t0 = System.nanoTime()
-        val result = new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
-        val failure = new java.util.concurrent.atomic.AtomicReference[Option[Throwable]](None)
-        val runner = new Thread(() =>
-          try Monitoring.inGroup(spark, name) {
-            val df: DataFrame = Monitoring.tag(fn(spark, sfDir), name)
-            outDir match {
-              case Some(dir) =>
-                df.write.mode("overwrite").parquet(dir)
-                result.set(Some(spark.read.parquet(dir).count()))
-              case None =>
-                // one execution: cache, count, print the first 20 from
-                // the cached blocks (no second run of the query)
-                df.persist()
-                try {
-                  result.set(Some(df.count()))
-                  df.limit(20).collect().foreach(r => println(r.mkString("\t")))
-                } finally df.unpersist()
-            }
-          } catch { case t: Throwable => failure.set(Some(t)) })
-        runner.start()
-        // the reference client's watch mode: poll the coordinator for
-        // task counts and redraw a progress bar — here the
-        // "coordinator" is the session's status tracker
-        while (runner.isAlive) {
-          if (watch) {
-            val p = Monitoring.progress(spark, name)
-            System.err.print(s"\r${bar(p.tasksCompleted, math.max(p.tasksTotal, 1))}")
-          }
-          runner.join(500)
-        }
-        if (watch) System.err.println()
-        val sec = (System.nanoTime() - t0) / 1e9
-        failure.get() match {
-          case Some(t) =>
-            // a failed query must read as one: print the cause, exit 1
-            System.err.println(f"query=$name FAILED after $sec%.2f s")
-            t.printStackTrace()
-            spark.stop()
-            sys.exit(1)
-          case None =>
-            println(f"query=$name rows=${result.get().getOrElse(-1L)} sec=$sec%.2f" +
-              outDir.map(d => s" output=$d").getOrElse(""))
-            spark.stop()
-        }
+    if (!SparkEntry.queries.contains(name)) {
+      System.err.println(s"unknown query '$name' — see `list`"); sys.exit(1)
     }
+    val spark = GraftSession.getOrCreate()
+    var rows = -1L
+    val run = Future(Run(spark, sfDir, name) { df =>
+      rows = outDir match {
+        case Some(dir) =>
+          df.write.mode("overwrite").parquet(dir)
+          spark.read.parquet(dir).count()
+        case None =>
+          // one execution: cache, count, print the first 20 from
+          // the cached blocks (no second run of the query)
+          df.persist()
+          try {
+            val n = df.count()
+            df.limit(20).collect().foreach(r => println(r.mkString("\t")))
+            n
+          } finally df.unpersist()
+      }
+    })(ExecutionContext.global)
+    // the reference client's watch mode: poll the coordinator for
+    // task counts and redraw a progress bar — here the
+    // "coordinator" is the session's status tracker
+    while (!run.isCompleted) {
+      if (watch) {
+        val p = Monitoring.progress(spark, name)
+        System.err.print(s"\r${bar(p.tasksCompleted, math.max(p.tasksTotal, 1))}")
+      }
+      Try(Await.ready(run, 500.millis))
+    }
+    if (watch) System.err.println()
+    val m = run.value.get.get
+    spark.stop()
+    // a failed query must read as one: print the cause, exit 1
+    m.error.foreach { t =>
+      System.err.println(f"query=$name FAILED after ${m.wallSec}%.2f s")
+      t.printStackTrace()
+      sys.exit(1)
+    }
+    println(f"query=$name rows=$rows sec=${m.wallSec}%.2f engine=${m.engineSec}%.2f " +
+      f"jobs=${m.jobs.size} stages=${m.stages.size} shuffle_mb=${m.shuffleWriteBytes / 1e6}%.1f" +
+      outDir.map(d => s" output=$d").getOrElse(""))
   }
 
   /** Every query is oracle-checked; the column names the ones that also
@@ -461,20 +441,20 @@ object Cli {
     SparkEntry.queries.get(name) match {
       case None => System.err.println(s"unknown query '$name' — see `list`"); sys.exit(1)
       case Some(fn) =>
-        val spark = session()
+        val spark = GraftSession.getOrCreate()
         fn(spark, sfDir).explain("formatted")
         spark.stop()
     }
 
   private def sql(stmt: String, sfDir: String): Unit = {
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     graft.sources.Tables.registerAll(spark, sfDir)
     spark.sql(stmt).show(50, truncate = false)
     spark.stop()
   }
 
   private def status(): Unit = {
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     println(f"${"HOST"}%-24s TASKS  CACHED  STORAGE_USED")
     Monitoring.executors(spark).foreach { e =>
       println(f"${e.host}%-24s ${e.numRunningTasks}%5d  ${e.cacheSize}%6d  ${e.usedOnHeapStorage}%12d")

@@ -34,7 +34,6 @@ object PolitenessSkewSoak {
     val nHosts = args.lift(1).map(_.toInt).getOrElse(100000)
     val quota = args.lift(2).map(_.toInt).getOrElse(10000)
     val spark = graft.GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // mega-host frontier, materialized so generation cost never rides
     // inside a variant's measurement

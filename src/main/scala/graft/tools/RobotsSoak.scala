@@ -30,8 +30,7 @@ object RobotsSoak {
     val reps = if (args.length > 2) args(2).toInt else 3
     val forms = if (args.length > 3) args(3).split(',').toSeq
       else Seq("native", "composed")
-    val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate(8)
 
     // fixture robots over `hosts` sources — the same wrapRobotsTxt
     // rules (wildcards/anchors that bite) the oracle queries use

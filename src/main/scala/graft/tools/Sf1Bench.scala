@@ -2,6 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
+import graft.Json
+import graft.Json.dec
+
 /** Heavy-tail benchmark at sf1 (10× the driver's bench SF) — where the
   * linear-vs-quadratic claims get graded at scale: correctness is
   * proven at sf1 by the sweep (CORRECTNESS_sf1.json), this main
@@ -32,53 +37,39 @@ object Sf1Bench {
     val names = args.lift(1).map(_.split(',').toSeq).getOrElse(DefaultQueries)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    // 16 cores, not 32: the iterative heavies (semantic_clusters' CC
+    // at most 16 cores: the iterative heavies (semantic_clusters' CC
     // rounds) at sf1 drive long full-GC pauses when 32 concurrent
     // tasks share the heap — a >200 s pause trips the local-mode
     // heartbeat receiver (120 s default) and it KILLS the executor,
     // shutting the context down mid-measurement (observed first run);
     // the widened network timeout covers the residual pauses
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = graft.GraftSession.getOrCreate(math.min(graft.GraftSession.cpus, 16),
+      Map("spark.network.timeout" -> "600s"))
     // the same deterministic calibration span Bench uses, so sf1
     // engine numbers are machine-relative comparable across rounds
     val cal = graft.Bench.calibrate(spark, 32)
     System.err.println(f"[sf1bench] calibration span $cal%.3fs")
     val rows = names.map { name =>
-      val attempts = (1 to 2).map(_ =>
-        graft.Bench.attempt(spark, sfDir, name, "[sf1bench]")())
+      val b = graft.Bench.minOf2(spark, sfDir, name, "[sf1bench]")
       // give the next query a clean footprint: dead shuffle files and
       // cached blocks from this one must not inflate its successor
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
-      val okRuns = attempts.filter(_.ok)
-      val wall = okRuns.map(_.wallSec).minOption
-      val eng = okRuns.flatMap(graft.Bench.engine).minOption
-      val warm = attempts.last // volume and counts reported from the warm run
-      val shufMb = warm.shuffleWriteBytes / 1e6
+      val warm = b.warm // volume and counts reported from the warm run
       System.err.println(f"[sf1bench] $name%-26s wall " +
-        s"${wall.fold("FAILED")(s => f"$s%7.2fs")} engine " +
-        s"${eng.fold("n/a")(s => f"$s%7.2fs")} " +
-        f"shuffle ${shufMb}%9.1f MB jobs ${warm.jobs.size}%4d stages ${warm.stages.size}%4d")
-      (name, wall, eng, warm, okRuns.size == attempts.size)
+        s"${b.wall.fold("FAILED")(s => f"$s%7.2fs")} engine " +
+        s"${b.engine.fold("n/a")(s => f"$s%7.2fs")} " +
+        f"shuffle ${warm.shuffleWriteBytes / 1e6}%9.1f MB jobs ${warm.jobs.size}%4d stages ${warm.stages.size}%4d")
+      name -> b
     }
-    def optNum(v: Option[Double]): String = v.fold("null")(fmt)
-    val qjson = rows.map { case (k, w, e, warm, _) =>
-      "\"" + k + "\":{\"wall\":" + optNum(w) + ",\"engine\":" + optNum(e) +
-        ",\"engine_cal_units\":" +
-        e.fold("null")(x => fmt(x / cal)) +
-        ",\"shuffle_write_mb\":" + fmt(warm.shuffleWriteBytes / 1e6) +
-        ",\"jobs\":" + warm.jobs.size + ",\"stages\":" + warm.stages.size + "}"
-    }.mkString("{", ",", "}")
-    val failed = rows.collect { case (k, _, _, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"sf1_heavy_tail","sf":"$sfDir","n":${rows.size},"cal_sec":${fmt(cal)},"queries":$qjson,"failed":$failed}"""
+    val json = Json(ListMap("metric" -> "sf1_heavy_tail", "sf" -> sfDir, "n" -> rows.size,
+      "cal_sec" -> dec(cal),
+      "queries" -> ListMap.from(rows.map { case (k, b) => k -> ListMap(
+        "wall" -> b.wall.map(dec(_)), "engine" -> b.engine.map(dec(_)),
+        "engine_cal_units" -> b.engine.map(e => dec(e / cal)),
+        "shuffle_write_mb" -> dec(b.warm.shuffleWriteBytes / 1e6),
+        "jobs" -> b.warm.jobs.size, "stages" -> b.warm.stages.size) }),
+      "failed" -> rows.collect { case (k, b) if !b.allOk => k }))
     val out = Paths.get("target/bench_sf1.json")
     Files.createDirectories(out.toAbsolutePath.getParent)
     Files.writeString(out, json + "\n")

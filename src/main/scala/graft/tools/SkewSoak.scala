@@ -49,7 +49,6 @@ object SkewSoak {
     val nSources = args.lift(1).map(_.toInt).getOrElse(1000)
     val salt = args.lift(2).map(_.toInt).getOrElse(32)
     val spark = graft.GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // hot source (id 0) owns 50% of rows; the rest uniform
     val factPath = "target/soak_skew_fact"

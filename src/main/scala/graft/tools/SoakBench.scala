@@ -44,7 +44,6 @@ object SoakBench {
     val targetMb = args.headOption.map(_.toInt).getOrElse(2000)
     val vecMult = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, "/root/testdata/sf0.1")
     val baseMb = docs.agg(sum(length(col("text")))).collect()(0).getLong(0) / 1e6

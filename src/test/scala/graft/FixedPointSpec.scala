@@ -42,10 +42,10 @@ class FixedPointSpec extends AnyFunSuite {
   private def outcome(df: DataFrame): Either[(String, String), Seq[String]] =
     try Right(df.collect().map(_.toString).toSeq.sorted)
     catch {
-      case e: SparkThrowable => Left((e.getCondition, e.getMessage))
       case e: org.apache.spark.SparkException if e.getCause.isInstanceOf[SparkThrowable] =>
         val c = e.getCause.asInstanceOf[SparkThrowable]
         Left((c.getCondition, e.getCause.getMessage))
+      case e: SparkThrowable => Left((e.getCondition, e.getMessage))
     }
 
   /** `build()`'s outcome with the rule (which must place `kernel`) and

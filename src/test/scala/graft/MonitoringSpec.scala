@@ -17,7 +17,7 @@ class MonitoringSpec extends AnyFunSuite {
       assert(m.isDefined, s"metrics missing: ${profile.snapshot}")
       assert(m.get.rows > 0 && m.get.scanBytes > 0 && m.get.status == "ok")
       assert(m.get.seconds > 0.0)
-      assert(profile.json.contains("probe_orders"))
+      assert(Profile.json(profile.snapshot).contains("probe_orders"))
     } finally profile.close()
   }
 }

@@ -64,6 +64,18 @@ class ProfileSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(probe)
   }
 
+  test("json renders sec in Locale.ROOT under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val text = Profile.json(Seq(Profile.QueryMetrics("q \"x\"", 1.5, 3L, 10L, "ok")))
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text).get(0)
+      assert(node.get("name").asText == "q \"x\"")
+      assert(node.get("sec").isNumber && node.get("sec").asDouble == 1.5)
+      assert(text.contains("\"sec\":1.500"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("close() unregisters both listeners") {
     val p = Profile.install(spark)
     assert(ListenerRegistry.onBus(spark, p) && ListenerRegistry.onManager(spark, p))

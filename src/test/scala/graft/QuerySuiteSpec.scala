@@ -66,10 +66,8 @@ class QuerySuiteSpec extends AnyFunSuite {
     assert(java.nio.file.Files.isRegularFile(p), "pins file missing")
     val txt = java.nio.file.Files.readString(p)
     // "slack" and "_"-prefixed keys are file metadata (e.g. the
-    // round-16 `_sensitivity` note), not pins — Bench's numeric-entry
-    // parser skips them the same way
-    val keys = "\"([A-Za-z0-9_]+)\"\\s*:".r.findAllMatchIn(txt)
-      .map(_.group(1)).filter(k => k != "slack" && !k.startsWith("_")).toSet
+    // round-16 `_sensitivity` note), not pins: Bench's parser skips them
+    val keys = Bench.parsePins(txt)._1.keySet
     val missing = SparkEntry.queries.keySet.diff(keys)
     val stale = keys.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"unpinned queries: ${missing.mkString(", ")}")
