@@ -17,23 +17,15 @@ object TextFunctions {
   val PunctSql = ".,!?;:\"''-"
 
   /** Lowercased, punctuation-trimmed, non-empty token array — a native
-    * codegen'd expression (graft.plans.TokensExpr); [[tokensHof]] is the
-    * composed SQL-function form it must stay bit-identical to.
+    * codegen'd expression (graft.plans.TokensExpr); the test tree's
+    * `graft.ReferenceForms` keeps the composed SQL-function form it
+    * must stay bit-identical to.
     */
   def tokens(c: Column): Column = {
     import org.apache.spark.sql.classic.GraftPlanFactory
     GraftPlanFactory.column(
       graft.plans.TokensExpr(GraftPlanFactory.expression(c)))
   }
-
-  /** Reference implementation of [[tokens]] from built-in HOFs —
-    * kept for the parity spec; NOT for hot paths (interpreted lambdas,
-    * CollapseProject can inline projections into them).
-    */
-  def tokensHof(c: Column): Column =
-    filter(
-      transform(split(lower(c), "\\s+"), t => trim(t, PunctChars)),
-      t => t =!= lit(""))
 
   /** DuckDB fragment computing the identical token list. */
   def tokensSql(expr: String): String =
@@ -138,15 +130,6 @@ object TextFunctions {
     GraftPlanFactory.column(
       graft.plans.GramStatsExpr(GraftPlanFactory.expression(tokensCol)))
   }
-
-  /** Reference implementation of [[shingles]] from built-in HOFs — for
-    * the parity spec only.
-    */
-  def shinglesHof(tokensCol: Column, n: Int): Column =
-    when(size(tokensCol) < n, array().cast("array<string>"))
-      .otherwise(
-        transform(sequence(lit(1), size(tokensCol) - lit(n - 1)),
-          i => concat_ws(" ", slice(tokensCol, i, lit(n)))))
 
   /** DuckDB fragment for the same shingle list over a token-list expr. */
   def shinglesSql(tokensExpr: String, n: Int): String =

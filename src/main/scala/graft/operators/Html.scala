@@ -495,27 +495,13 @@ object Html {
     * rule matches. One native kernel call per frontier URL
     * (graft.plans.RobotsWinnerExpr) since round 15 — the
     * filter/transform/array_max HOF composition it replaces
-    * ([[robotsWinnerComposed]], the spec-pinned parity reference) ran
-    * INTERPRETED per URL: per-rule lambda dispatch plus a filtered
-    * array and a struct allocation per matching rule, on the one scan
-    * that touches every frontier row.
+    * (kept in the test tree's `graft.ReferenceForms` as the
+    * spec-pinned parity reference) ran INTERPRETED per URL: per-rule
+    * lambda dispatch plus a filtered array and a struct allocation per
+    * matching rule, on the one scan that touches every frontier row.
     */
   def robotsWinner(path: Column, rulesArr: Column): Column =
     graft.functions.TextFunctions.robotsWinner(path, rulesArr)
-
-  /** The HOF-composed winner — parity reference for the native kernel
-    * (HtmlSpec pins native ≡ composed on fixture and adversarial
-    * rules); NOT on the query path.
-    */
-  private[graft] def robotsWinnerComposed(path: Column, rulesArr: Column): Column =
-    array_max(transform(
-      filter(rulesArr, r =>
-        graft.functions.TextFunctions.robotsMatch(path, r.getField("rpath"))),
-      r => struct(
-        length(r.getField("rpath")).as("l"),
-        when(r.getField("rtype") === "allow", 1).otherwise(0).as("pref"),
-        r.getField("rpath").as("rpath"),
-        r.getField("rtype").as("rtype"))))
 
   /** Persist a crawl-frontier index: the distinct canonical URLs
     * already fetched, the left-anti reference [[graft.streaming.DocStreams.frontierAdmission]]

@@ -119,9 +119,10 @@ object Similarity {
     * join emits ~n²/2^nPlanes pairs per table — at the 5-plane default
     * (32 buckets, sized for the sf oracle tables) a 40k-vector corpus
     * already generates hundreds of millions of candidates
-    * (SoakBench-measured). Pick `nPlanes ≈ log2(n / B)` for target
-    * bucket size B (64-256), trading worst-pair recall (compounded
-    * back via nTables) for bounded candidates; `maxBucket` is the
+    * (measured by the soak, `graft.soak.Soak`). Pick
+    * `nPlanes ≈ log2(n / B)` for target bucket size B (64-256), trading
+    * worst-pair recall (compounded back via nTables) for bounded
+    * candidates; `maxBucket` is the
     * [[PairMiner.cap]] that drops degenerate hot buckets
     * (identical/correlated vector floods) the plane count can't predict.
     */
@@ -266,7 +267,7 @@ object Similarity {
     * one cheap count() picks `nPlanes = max(5, ceil(log2(n / targetBucket)))`
     * so the expected bucket holds ~targetBucket vectors no matter the
     * corpus size — the production entry point for ad-hoc near-dup
-    * scans (SoakBench measured the fixed 5-plane default melting down
+    * scans (the soak measured the fixed 5-plane default melting down
     * 8× in shuffle volume at 40k vectors; the oracle-pinned queries
     * keep the fixed default because their twin SQL bakes the plane
     * literals). maxBucket still guards degenerate floods.
@@ -1000,21 +1001,6 @@ object Similarity {
     cbs
   }
 
-  /** Nearest codebook entry for one subspace slice as a (score, code)
-    * struct — `least()` over (‖c‖² − 2·v_m·c, j) structs, the exact
-    * [[kmeansAssignExpr]] argmin shape (score omits the constant
-    * ‖v_m‖²; ties break on the lower code).
-    */
-  private def pqMinStruct(vm: Column, codebook: Array[Array[Double]]): Column = {
-    val structs = codebook.zipWithIndex.map { case (c, j) =>
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as dotSql
-      struct(
-        (lit(cc) - lit(2.0) * call_function("graft_dot", vm, typedLit(c.toSeq))).as("s"),
-        lit(j).as("c"))
-    }
-    if (structs.length == 1) structs.head else least(structs.toIndexedSeq: _*)
-  }
-
   /** C55: PQ encoding of the corpus — every vector compressed to `m`
     * small codes (m bytes at ksub ≤ 256 vs dims×4 float bytes: 32× for
     * 64-dim/m=8) plus the per-vector reconstruction error the
@@ -1040,8 +1026,9 @@ object Similarity {
     * the composed form's 16 `least()` trees of 32 dot-product structs
     * inline past janino's 64 KB method limit, so the whole ENCODE
     * STAGE fell out of whole-stage codegen into interpreted eval —
-    * measured and replaced; [[pqEncodeExprForm]] keeps the composed
-    * form as the bit-parity reference (SimilaritySpec pins equality).
+    * measured and replaced; the test tree's `graft.ReferenceForms`
+    * keeps the composed form as the bit-parity reference
+    * (SimilaritySpec pins equality).
     */
   private[graft] def pqEncodeWith(emb: DataFrame, idCol: String, vecCol: String,
                                   cbs: Array[Array[Array[Double]]]): DataFrame = {
@@ -1052,36 +1039,6 @@ object Similarity {
       .select(col("vec_id"),
         col("__e").getField("codes").as("codes"),
         col("__e").getField("recon_err").as("recon_err"))
-  }
-
-  /** Expression-composed reference form of [[pqEncode]] — parity spec
-    * only (it compiles to >64 KB of generated Java and runs
-    * interpreted; NOT for hot paths).
-    */
-  private[graft] def pqEncodeExprForm(emb: DataFrame, idCol: String, vecCol: String,
-                                      cbs: Array[Array[Array[Double]]]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val m = cbs.length
-    val dsub = cbs.head.head.length
-    val staged = emb.select(col(idCol).as("vec_id") +: (0 until m).map { mi =>
-      slice(col(vecCol), mi * dsub + 1, dsub).as(s"__v$mi")
-    }: _*)
-    val encoded = staged.select(col("vec_id") +:
-      ((0 until m).map(mi => col(s"__v$mi")) ++
-        (0 until m).map(mi => pqMinStruct(col(s"__v$mi"), cbs(mi)).as(s"__st$mi"))): _*)
-      .select(col("vec_id") +: (0 until m).flatMap { mi =>
-        // graft_dot is float-left × double-right (embeddingOutliers
-        // precedent) — the self-dot needs the explicit double cast
-        Seq(col(s"__st$mi").getField("c").as(s"__c$mi"),
-          round(col(s"__st$mi").getField("s") +
-            call_function("graft_dot", col(s"__v$mi"),
-              col(s"__v$mi").cast("array<double>")), 6)
-            .cast("decimal(18,6)").as(s"__e$mi"))
-      }: _*)
-    encoded.select(col("vec_id"),
-      array((0 until m).map(mi => col(s"__c$mi")): _*).as("codes"),
-      (0 until m).map(mi => col(s"__e$mi").cast("decimal(28,6)"))
-        .reduce(_ + _).cast("decimal(28,6)").as("recon_err"))
   }
 
   // ---- ANN family: one spec, one query path, one index ----------------------

@@ -48,10 +48,10 @@ object TextAnalysis {
     * (graft.plans.QualityStatsExpr → GraftText.qualityStats): tokenize,
     * token-length sum, stopword count and punct count fused into a
     * single flat loop — the interpreted `aggregate`/`filter` HOF form
-    * it replaces is kept as [[qualityHof]] and pinned bit-identical by
-    * TextExprSpec. The six field extractions below are GetStructField
-    * over one subexpression — subexpression elimination runs the
-    * kernel once per row.
+    * it replaces is kept in the test tree's `graft.ReferenceForms`,
+    * pinned bit-identical by TextExprSpec. The six field extractions
+    * below are GetStructField over one subexpression — subexpression
+    * elimination runs the kernel once per row.
     */
   def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val q = col("__q")
@@ -64,29 +64,6 @@ object TextAnalysis {
         q.getField("punct_ratio").as("punct_ratio"),
         q.getField("stopword_ratio").as("stopword_ratio"),
         q.getField("quality_score").as("quality_score"))
-  }
-
-  /** Reference implementation of [[quality]] from built-in HOFs — for
-    * the parity spec only (interpreted lambdas; NOT for hot paths).
-    */
-  def qualityHof(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = col("__toks")
-    docs.select(col(idCol), col(textCol), tokensHof(col(textCol)).as("__toks")).select(
-      col(idCol).as("doc_id"),
-      length(col(textCol)).as("n_chars"),
-      size(toks).as("n_tokens"),
-      (aggregate(toks, lit(0), (acc, t) => acc + length(t)).cast("double") /
-        greatest(size(toks), lit(1))).as("avg_token_len"),
-      ((length(col(textCol)) -
-        length(regexp_replace(col(textCol), "[.,!?;:]", ""))).cast("double") /
-        greatest(length(col(textCol)), lit(1))).as("punct_ratio"),
-      (size(filter(toks, t => Stopwords.map(s => t === s).reduce(_ || _))).cast("double") /
-        greatest(size(toks), lit(1))).as("stopword_ratio"))
-      .withColumn("quality_score",
-        (when(col("n_tokens") >= 5, lit(4)).otherwise(lit(0)) +
-          when(col("stopword_ratio") > 0.05, lit(3)).otherwise(lit(0)) +
-          when(col("avg_token_len") >= 3.0 && col("avg_token_len") <= 10.0, lit(3))
-            .otherwise(lit(0))).cast("double") / 10.0)
   }
 
   /** BPE-ish token regex: letter runs, digit runs, or single symbols —
@@ -892,8 +869,8 @@ object TextAnalysis {
     * (graft.plans.GramStatsExpr — shingle + sort + run-walk in the
     * scan) replaces the explode → (doc, n, gram) count shuffle →
     * TopKPerKey formulation, which is kept as the spec-pinned parity
-    * reference ([[gopherRepetitionShuffle]]; it was the #2 tail of the
-    * sf0.1 bench at 7.6 s — the kernel form runs at scan speed). Ties
+    * reference (in the test tree's `graft.ReferenceForms`; it was the
+    * #2 tail of the sf0.1 bench at 7.6 s — the kernel form runs at scan speed). Ties
     * for the top gram break on the lexicographically smaller gram
     * (binary UTF-8 order on both engines). Every share is an IEEE
     * division of exact integers — bit-portable.
@@ -912,50 +889,6 @@ object TextAnalysis {
         s.getField("top3_count").as("top3_count"),
         share(s.getField("top3_count"), s.getField("top3_gram")).as("top3_share"),
         (s.getField("dup5_chars").cast("double") /
-          greatest(col("n_chars"), lit(1))).as("dup5_char_mass"))
-  }
-
-  /** Shuffle formulation of [[gopherRepetition]] — parity reference
-    * only (explode + count shuffle + TopKPerKey; the kernel computes
-    * the same values map-side).
-    */
-  def gopherRepetitionShuffle(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val counts = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
-      .select(col("doc_id"),
-        explode(concat(shingles(col("__toks"), 2), shingles(col("__toks"), 3),
-          shingles(col("__toks"), 5))).as("gram"))
-      .withColumn("n",
-        (length(col("gram")) - length(replace(col("gram"), lit(" "), lit(""))) + 1)
-          .cast("int"))
-      .groupBy(col("doc_id"), col("n"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-      .materialized // feeds the top-1 cut AND the dup-5 aggregation
-    val top = graft.plans.TopK.perKey(
-        counts.filter(col("n").isin(2, 3)).withColumn("__neg", -col("c")),
-        Seq("doc_id", "n"), Seq("__neg", "gram"), 1, descending = false)
-      .groupBy(col("doc_id"))
-      .agg(
-        max(when(col("n") === 2, col("gram"))).as("top2_gram"),
-        max(when(col("n") === 2, col("c"))).as("__c2"),
-        max(when(col("n") === 3, col("gram"))).as("top3_gram"),
-        max(when(col("n") === 3, col("c"))).as("__c3"))
-    val dup5 = counts.filter(col("n") === 5 && col("c") >= 2)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c") * length(col("gram"))).as("__dup5"))
-    docs.select(col(idCol).as("doc_id"), length(col(textCol)).as("n_chars"))
-      .join(top, Seq("doc_id"), "left")
-      .join(dup5, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("top2_gram"), lit("")).as("top2_gram"),
-        coalesce(col("__c2"), lit(0L)).as("top2_count"),
-        ((coalesce(col("__c2"), lit(0L)) * length(coalesce(col("top2_gram"), lit(""))))
-          .cast("double") / greatest(col("n_chars"), lit(1))).as("top2_share"),
-        coalesce(col("top3_gram"), lit("")).as("top3_gram"),
-        coalesce(col("__c3"), lit(0L)).as("top3_count"),
-        ((coalesce(col("__c3"), lit(0L)) * length(coalesce(col("top3_gram"), lit(""))))
-          .cast("double") / greatest(col("n_chars"), lit(1))).as("top3_share"),
-        (coalesce(col("__dup5"), lit(0L)).cast("double") /
           greatest(col("n_chars"), lit(1))).as("dup5_char_mass"))
   }
 

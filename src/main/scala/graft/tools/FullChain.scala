@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The stage-committed crawl → curation → shards chain — the
-  * production architecture the ≥10 GB fullchain soak measures
-  * (SoakBench) and the resume proof pins (ChainResumeSpec).
+  * production architecture the ≥10 GB fullchain soak measures (the
+  * test tree's `graft.soak.Soak`) and the resume proof pins
+  * (ChainResumeSpec).
   *
   * Each stage durably commits its output as parquet and the next
   * stage reads ONLY the committed files: a lineage cut at every

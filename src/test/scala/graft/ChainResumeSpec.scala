@@ -7,7 +7,7 @@ import graft.sources.{Layouts, Tables}
 import graft.tools.FullChain
 
 /** Restart proof for the stage-committed crawl → curation → shards
-  * chain (graft.tools.FullChain — the same stage bodies SoakBench's
+  * chain (graft.tools.FullChain — the same stage bodies the soak's
   * ≥10 GB fullchain axis times): a run killed after the crawl stage's
   * commit, resumed from the committed parquet alone, must reproduce
   * the uninterrupted run's artifacts exactly — shard manifest

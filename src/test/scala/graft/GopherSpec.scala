@@ -90,14 +90,14 @@ class GopherSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     // ...and the shuffle reference must cut through TopKPerKey
-    val refPlan = TextAnalysis.gopherRepetitionShuffle(
+    val refPlan = ReferenceForms.gopherRepetitionShuffle(
         Seq((1L, "a b c a b")).toDF("doc_id", "text"), "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(refPlan.contains("TopKPerKey") && !refPlan.contains("Window"), refPlan)
     // bit-parity on the real corpus (counts, tie-breaks, shares)
     val docs = graft.sources.Tables.documents(spark, sf)
     val k = TextAnalysis.gopherRepetition(docs, "doc_id", "text")
-    val s = TextAnalysis.gopherRepetitionShuffle(docs, "doc_id", "text")
+    val s = ReferenceForms.gopherRepetitionShuffle(docs, "doc_id", "text")
     assert(k.exceptAll(s).isEmpty && s.exceptAll(k).isEmpty,
       "gram-stats kernel diverged from the shuffle formulation")
   }

@@ -278,7 +278,7 @@ class HtmlSpec extends AnyFunSuite {
       .join(broadcast(rules), col("host") === col("__rhost"), "left")
     val both = u.select(col("doc_id"),
       Html.robotsWinner(col("path"), col("__rules")).as("n"),
-      Html.robotsWinnerComposed(col("path"), col("__rules")).as("c"))
+      ReferenceForms.robotsWinnerComposed(col("path"), col("__rules")).as("c"))
     assert(both.filter(!(col("n") <=> col("c"))).count() == 0,
       "native winner diverged from composed form on the fixture frontier")
 
@@ -303,7 +303,7 @@ class HtmlSpec extends AnyFunSuite {
         .as("__rules"))
     val advBoth = adv.select(col("path"),
       Html.robotsWinner(col("path"), col("__rules")).as("n"),
-      Html.robotsWinnerComposed(col("path"), col("__rules")).as("c"))
+      ReferenceForms.robotsWinnerComposed(col("path"), col("__rules")).as("c"))
     val bad = advBoth.filter(!(col("n") <=> col("c"))).collect()
     assert(bad.isEmpty, s"adversarial divergence: ${bad.mkString("; ")}")
   }

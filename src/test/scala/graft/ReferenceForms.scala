@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
 import graft.plans.GraftFunctions
 import graft.Materialize.MaterializeOps
 
 /** Parity-only reference forms of graft's kernels: the composed
   * expression, window or join formulations each native kernel / scan
-  * shape replaced. Specs pin the shipped operators against them;
-  * nothing on a query path uses them.
+  * shape replaced. Specs pin the shipped operators against them and
+  * the soak's A/B rows time them; nothing on a query path uses them.
   */
 object ReferenceForms {
 
@@ -374,4 +374,141 @@ object ReferenceForms {
       nArtifacts.as("n_artifacts"),
       (repaired =!= t).as("changed"))
   }
+
+  /** [[TextFunctions.tokens]] from built-in HOFs (interpreted lambdas;
+    * CollapseProject can inline projections into them).
+    */
+  def tokensHof(c: Column): Column =
+    filter(
+      transform(split(lower(c), "\\s+"), t => trim(t, TextFunctions.PunctChars)),
+      t => t =!= lit(""))
+
+  /** [[TextFunctions.shingles]] from built-in HOFs. */
+  def shinglesHof(tokensCol: Column, n: Int): Column =
+    when(size(tokensCol) < n, array().cast("array<string>"))
+      .otherwise(
+        transform(sequence(lit(1), size(tokensCol) - lit(n - 1)),
+          i => concat_ws(" ", slice(tokensCol, i, lit(n)))))
+
+  /** [[TextAnalysis.quality]] from built-in HOFs (interpreted lambdas). */
+  def qualityHof(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = col("__toks")
+    docs.select(col(idCol), col(textCol), tokensHof(col(textCol)).as("__toks")).select(
+      col(idCol).as("doc_id"),
+      length(col(textCol)).as("n_chars"),
+      size(toks).as("n_tokens"),
+      (aggregate(toks, lit(0), (acc, t) => acc + length(t)).cast("double") /
+        greatest(size(toks), lit(1))).as("avg_token_len"),
+      ((length(col(textCol)) -
+        length(regexp_replace(col(textCol), "[.,!?;:]", ""))).cast("double") /
+        greatest(length(col(textCol)), lit(1))).as("punct_ratio"),
+      (size(filter(toks, t => TextFunctions.Stopwords.map(s => t === s).reduce(_ || _)))
+        .cast("double") / greatest(size(toks), lit(1))).as("stopword_ratio"))
+      .withColumn("quality_score",
+        (when(col("n_tokens") >= 5, lit(4)).otherwise(lit(0)) +
+          when(col("stopword_ratio") > 0.05, lit(3)).otherwise(lit(0)) +
+          when(col("avg_token_len") >= 3.0 && col("avg_token_len") <= 10.0, lit(3))
+            .otherwise(lit(0))).cast("double") / 10.0)
+  }
+
+  /** Shuffle formulation of [[TextAnalysis.gopherRepetition]] (explode +
+    * count shuffle + TopKPerKey; the kernel computes the same values
+    * map-side).
+    */
+  def gopherRepetitionShuffle(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val counts = docs
+      .select(col(idCol).as("doc_id"), TextFunctions.tokens(col(textCol)).as("__toks"))
+      .select(col("doc_id"),
+        explode(concat(TextFunctions.shingles(col("__toks"), 2),
+          TextFunctions.shingles(col("__toks"), 3), TextFunctions.shingles(col("__toks"), 5))).as("gram"))
+      .withColumn("n",
+        (length(col("gram")) - length(replace(col("gram"), lit(" "), lit(""))) + 1)
+          .cast("int"))
+      .groupBy(col("doc_id"), col("n"), col("gram"))
+      .agg(count(lit(1)).as("c"))
+      .materialized // feeds the top-1 cut AND the dup-5 aggregation
+    val top = graft.plans.TopK.perKey(
+        counts.filter(col("n").isin(2, 3)).withColumn("__neg", -col("c")),
+        Seq("doc_id", "n"), Seq("__neg", "gram"), 1, descending = false)
+      .groupBy(col("doc_id"))
+      .agg(
+        max(when(col("n") === 2, col("gram"))).as("top2_gram"),
+        max(when(col("n") === 2, col("c"))).as("__c2"),
+        max(when(col("n") === 3, col("gram"))).as("top3_gram"),
+        max(when(col("n") === 3, col("c"))).as("__c3"))
+    val dup5 = counts.filter(col("n") === 5 && col("c") >= 2)
+      .groupBy(col("doc_id"))
+      .agg(sum(col("c") * length(col("gram"))).as("__dup5"))
+    docs.select(col(idCol).as("doc_id"), length(col(textCol)).as("n_chars"))
+      .join(top, Seq("doc_id"), "left")
+      .join(dup5, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_chars"),
+        coalesce(col("top2_gram"), lit("")).as("top2_gram"),
+        coalesce(col("__c2"), lit(0L)).as("top2_count"),
+        ((coalesce(col("__c2"), lit(0L)) * length(coalesce(col("top2_gram"), lit(""))))
+          .cast("double") / greatest(col("n_chars"), lit(1))).as("top2_share"),
+        coalesce(col("top3_gram"), lit("")).as("top3_gram"),
+        coalesce(col("__c3"), lit(0L)).as("top3_count"),
+        ((coalesce(col("__c3"), lit(0L)) * length(coalesce(col("top3_gram"), lit(""))))
+          .cast("double") / greatest(col("n_chars"), lit(1))).as("top3_share"),
+        (coalesce(col("__dup5"), lit(0L)).cast("double") /
+          greatest(col("n_chars"), lit(1))).as("dup5_char_mass"))
+  }
+
+  /** Nearest codebook entry for one subspace slice as a (score, code)
+    * struct — `least()` over (‖c‖² − 2·v_m·c, j) structs, the exact
+    * [[Similarity.kmeansAssignExpr]] argmin shape (score omits the
+    * constant ‖v_m‖²; ties break on the lower code).
+    */
+  private def pqMinStruct(vm: Column, codebook: Array[Array[Double]]): Column = {
+    val structs = codebook.zipWithIndex.map { case (c, j) =>
+      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as dotSql
+      struct(
+        (lit(cc) - lit(2.0) * call_function("graft_dot", vm, typedLit(c.toSeq))).as("s"),
+        lit(j).as("c"))
+    }
+    if (structs.length == 1) structs.head else least(structs.toIndexedSeq: _*)
+  }
+
+  /** Expression-composed form of [[Similarity.pqEncode]] (it compiles to
+    * >64 KB of generated Java and runs interpreted).
+    */
+  def pqEncodeExprForm(emb: DataFrame, idCol: String, vecCol: String,
+                       cbs: Array[Array[Array[Double]]]): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    val m = cbs.length
+    val dsub = cbs.head.head.length
+    val staged = emb.select(col(idCol).as("vec_id") +: (0 until m).map { mi =>
+      slice(col(vecCol), mi * dsub + 1, dsub).as(s"__v$mi")
+    }: _*)
+    val encoded = staged.select(col("vec_id") +:
+      ((0 until m).map(mi => col(s"__v$mi")) ++
+        (0 until m).map(mi => pqMinStruct(col(s"__v$mi"), cbs(mi)).as(s"__st$mi"))): _*)
+      .select(col("vec_id") +: (0 until m).flatMap { mi =>
+        // graft_dot is float-left × double-right (embeddingOutliers
+        // precedent) — the self-dot needs the explicit double cast
+        Seq(col(s"__st$mi").getField("c").as(s"__c$mi"),
+          round(col(s"__st$mi").getField("s") +
+            call_function("graft_dot", col(s"__v$mi"),
+              col(s"__v$mi").cast("array<double>")), 6)
+            .cast("decimal(18,6)").as(s"__e$mi"))
+      }: _*)
+    encoded.select(col("vec_id"),
+      array((0 until m).map(mi => col(s"__c$mi")): _*).as("codes"),
+      (0 until m).map(mi => col(s"__e$mi").cast("decimal(28,6)"))
+        .reduce(_ + _).cast("decimal(28,6)").as("recon_err"))
+  }
+
+  /** The HOF-composed robots winner (HtmlSpec pins native ≡ composed on
+    * fixture and adversarial rules).
+    */
+  def robotsWinnerComposed(path: Column, rulesArr: Column): Column =
+    array_max(transform(
+      filter(rulesArr, r =>
+        graft.functions.TextFunctions.robotsMatch(path, r.getField("rpath"))),
+      r => struct(
+        length(r.getField("rpath")).as("l"),
+        when(r.getField("rtype") === "allow", 1).otherwise(0).as("pref"),
+        r.getField("rpath").as("rpath"),
+        r.getField("rtype").as("rtype"))))
 }

@@ -52,26 +52,13 @@ class ReliableMaterializeSpec extends AnyFunSuite {
   }
 
   test("on a two-host cluster, killed executors: reliable survives, local fails") {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cmd = Seq(javaBin) ++ graft.tools.MiniCluster.addOpensFlags ++ Seq(
-      "-Xmx2g", "-cp", System.getProperty("java.class.path"),
-      "graft.tools.ReliableMaterializeDemo")
-    val log = java.io.File.createTempFile("reliable-mat-demo", ".log")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_HOME", "/opt/spark")
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(log)
-    val proc = pb.start()
-    val finished = proc.waitFor(420, java.util.concurrent.TimeUnit.SECONDS)
-    if (!finished) proc.destroyForcibly()
-    val out = java.nio.file.Files.readString(log.toPath)
-    val verdict = out.linesIterator.find(_.startsWith("RELIABLE_MAT"))
-    assert(finished, s"reliable-materialize demo timed out\n${out.takeRight(2000)}")
+    val run = graft.tools.MiniCluster.runMain("graft.tools.ReliableMaterializeDemo", 420)
+    val verdict = run.out.linesIterator.find(_.startsWith("RELIABLE_MAT"))
+    assert(run.exit.nonEmpty, s"reliable-materialize demo timed out\n${run.tail}")
     assert(verdict.exists(_.contains("reliable_ok=true")),
-      s"reliable materialize did not survive executor loss: $verdict\n${out.takeRight(2000)}")
+      s"reliable materialize did not survive executor loss: $verdict\n${run.tail}")
     assert(verdict.exists(_.contains("local_failed=true")),
-      s"localCheckpoint unexpectedly survived executor loss (defect not demonstrated): $verdict\n${out.takeRight(2000)}")
-    assert(proc.exitValue() == 0, s"demo exit ${proc.exitValue()}: $verdict")
+      s"localCheckpoint unexpectedly survived executor loss (defect not demonstrated): $verdict\n${run.tail}")
+    assert(run.exit.contains(0), s"demo exit ${run.exit}: $verdict")
   }
 }

@@ -156,7 +156,7 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding")
     val kEnc = Similarity.pqEncodeWith(emb, "vec_id", "embedding", cbs)
-    val eEnc = Similarity.pqEncodeExprForm(emb, "vec_id", "embedding", cbs)
+    val eEnc = ReferenceForms.pqEncodeExprForm(emb, "vec_id", "embedding", cbs)
     assert(kEnc.exceptAll(eEnc).isEmpty && eEnc.exceptAll(kEnc).isEmpty,
       "pqEncode kernel diverged from the expression form")
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)

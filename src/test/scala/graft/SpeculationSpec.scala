@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * never places a backup on the host that runs the original attempt —
   * so the demo child JVM spins up a real standalone master plus two
   * single-core workers on distinct loopback hosts (127.0.0.2/.3); this
-  * spec forks it with this test JVM's own classpath and JDK17 opens
-  * and asserts its one-line verdict: a speculative backup attempt
-  * launched AND the answer stayed exact.
+  * spec forks it through `MiniCluster.runMain` (this test JVM's class
+  * path and JDK17 opens) and asserts its one-line verdict: a
+  * speculative backup attempt launched AND the answer stayed exact.
   * Sibling of FaultToleranceSpec (task failure → retry → same answer);
   * here the task is slow, not failing, and mitigation is a backup
   * copy, not a retry.
@@ -21,37 +21,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class SpeculationSpec extends AnyFunSuite {
 
   test("a straggler task gets a speculative backup; the answer is unchanged") {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED")
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-cp", System.getProperty("java.class.path"),
-      "graft.tools.SpeculationDemo")
-    val log = java.io.File.createTempFile("speculation-demo", ".log")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_HOME", "/opt/spark")
-    // the in-process Worker builds the executor command through the
-    // launcher, which needs the scala version when not under spark-submit
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(log)
-    val proc = pb.start()
-    val finished = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
-    if (!finished) proc.destroyForcibly()
-    val out = java.nio.file.Files.readString(log.toPath)
-    val verdict = out.linesIterator.find(_.startsWith("SPECULATION"))
-    assert(finished, s"speculation demo timed out\n${out.takeRight(2000)}")
+    val run = graft.tools.MiniCluster.runMain("graft.tools.SpeculationDemo", 300)
+    val verdict = run.out.linesIterator.find(_.startsWith("SPECULATION"))
+    assert(run.exit.nonEmpty, s"speculation demo timed out\n${run.tail}")
     assert(verdict.exists(v => v.contains("sum_ok=true")),
-      s"straggler run did not produce the exact answer: $verdict\n${out.takeRight(2000)}")
+      s"straggler run did not produce the exact answer: $verdict\n${run.tail}")
     assert(verdict.exists(v => !v.contains("speculative=0")),
-      s"no speculative backup attempt launched: $verdict\n${out.takeRight(2000)}")
-    assert(proc.exitValue() == 0, s"demo exit ${proc.exitValue()}: $verdict")
+      s"no speculative backup attempt launched: $verdict\n${run.tail}")
+    assert(run.exit.contains(0), s"demo exit ${run.exit}: $verdict")
   }
 }

@@ -31,7 +31,7 @@ class TextExprSpec extends AnyFunSuite {
     for (df <- Seq(edge, corpus)) {
       val both = df.select(
         TextFunctions.tokens(col("text")).as("native"),
-        TextFunctions.tokensHof(col("text")).as("hof"))
+        ReferenceForms.tokensHof(col("text")).as("hof"))
       assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
     }
   }
@@ -42,7 +42,7 @@ class TextExprSpec extends AnyFunSuite {
     for (n <- Seq(2, 3, 5)) {
       val both = df.select(
         TextFunctions.shingles(TextFunctions.tokens(col("text")), n).as("native"),
-        TextFunctions.shinglesHof(TextFunctions.tokensHof(col("text")), n).as("hof"))
+        ReferenceForms.shinglesHof(ReferenceForms.tokensHof(col("text")), n).as("hof"))
       assert(both.filter(not(col("native") <=> col("hof"))).count() == 0, s"n=$n")
     }
   }
@@ -75,7 +75,7 @@ class TextExprSpec extends AnyFunSuite {
     val corpus = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     for (df <- Seq(edge, corpus)) {
       val native = TextAnalysis.quality(df, "doc_id", "text")
-      val hof = TextAnalysis.qualityHof(df, "doc_id", "text")
+      val hof = ReferenceForms.qualityHof(df, "doc_id", "text")
       // <=> on every column, joined on doc_id: bit-level double equality
       val joined = native.alias("n").join(hof.alias("h"), Seq("doc_id"))
       val mismatches = joined.filter(not(

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Cluster-shipping proof for runtime job submission: the local-mode
   * JobRunnerSpec proves classloader isolation but never forces the job
   * class across a JVM boundary — in `local[n]` the executor IS the
@@ -18,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   * cluster.
   *
   * Prints `JOBSUBMIT shipped_ok=… sum_ok=…`; exit 0 iff the submitted
-  * UDF evaluated executor-side with the right result.
+  * UDF evaluated executor-side with the right result. JobSubmitSpec
+  * runs this as a child JVM and asserts on that line.
   */
 object JobSubmitDemo {
   private val jobSource =
@@ -53,22 +52,12 @@ object JobSubmitDemo {
   }
 
   private def run(masterUrl: String): Int = {
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .appName("jobsubmit-demo")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.executor.memory", "512m")
-      // executor classpath = THIS JVM's classpath (spark + graft) — the
-      // job jar lives in a temp dir outside it, so only addJar can
-      // deliver the UDF class to the workers' executor JVMs
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        MiniCluster.addOpensFlags.mkString(" "))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config(graft.GraftSession.LocalFsConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // executor classpath = THIS JVM's classpath (spark + graft) — the
+    // job jar lives in a temp dir outside it, so only addJar can
+    // deliver the UDF class to the workers' executor JVMs
+    val spark = MiniCluster.session(masterUrl, "jobsubmit-demo", Map(
+      "spark.executor.memory" -> "512m",
+      "spark.sql.shuffle.partitions" -> "4"))
     try {
       val work = Files.createTempDirectory("graft-cluster-job")
       val jar = graft.JobRunner.compileJavaJob(jobSource, "GraftClusterUdfJob", work)
@@ -77,12 +66,14 @@ object JobSubmitDemo {
         .submit(spark, jar.toString, "GraftClusterUdfJob", Map("n" -> n.toString))
         .head().getLong(0)
       val want = (0L until n).map(x => (x * 2654435761L) % 1000L).sum
-      // two executors actually ran tasks (the cluster is real)
+      // the job ran on executors in the workers' JVMs (a standalone
+      // driver runs no tasks), so they loaded the jar-only UDF class
       val execs = spark.sparkContext.statusTracker.getExecutorInfos
         .count(_.host() != "127.0.0.1")
-      println(s"JOBSUBMIT shipped_ok=${got == want} sum=$got want=$want " +
-        s"remote_executors=$execs")
-      if (got == want) 0 else 1
+      val shipped = execs > 0
+      println(s"JOBSUBMIT shipped_ok=$shipped sum_ok=${got == want} sum=$got " +
+        s"want=$want remote_executors=$execs")
+      if (shipped && got == want) 0 else 1
     } finally spark.stop()
   }
 }

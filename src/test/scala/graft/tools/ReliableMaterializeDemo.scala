@@ -74,24 +74,13 @@ object ReliableMaterializeDemo {
   private def run(masterUrl: String): Int = {
     val t0 = System.nanoTime()
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .appName("reliable-materialize-demo")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.executor.memory", "512m")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        MiniCluster.addOpensFlags.mkString(" "))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = MiniCluster.session(masterUrl, "reliable-materialize-demo", Map(
+      "spark.executor.memory" -> "512m",
+      "spark.sql.shuffle.partitions" -> "8",
       // each phase deliberately kills both executors plus whatever
       // respawns absorb the suicide job — keep the master's
       // consecutive-failure cutoff well clear of that
-      .config("spark.deploy.maxExecutorRetries", "100")
-      .config(graft.GraftSession.LocalFsConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.deploy.maxExecutorRetries" -> "100"))
     try {
       waitForExecutors(spark, 2)
 

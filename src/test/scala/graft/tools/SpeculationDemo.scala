@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 
 /** Straggler mitigation demo — the reference coordinator's backup-task
   * story (cooler-MapReduce WEEK2_SUMMARY.md:11: slow workers get
@@ -39,25 +38,13 @@ object SpeculationDemo {
   }
 
   private def run(masterUrl: String): Int = {
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .appName("speculation-demo")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "100ms")
-      .config("spark.speculation.multiplier", "2")
-      .config("spark.speculation.quantile", "0.5")
-      .config("spark.executor.memory", "512m")
-      // executor JVMs are launched by the workers: give them this
-      // JVM's classpath (spark jars + graft classes) and JDK17 opens
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        MiniCluster.addOpensFlags.mkString(" "))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config(graft.GraftSession.LocalFsConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MiniCluster.session(masterUrl, "speculation-demo", Map(
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "100ms",
+      "spark.speculation.multiplier" -> "2",
+      "spark.speculation.quantile" -> "0.5",
+      "spark.executor.memory" -> "512m",
+      "spark.sql.shuffle.partitions" -> "4"))
     import spark.implicits._
 
     val speculative = new java.util.concurrent.atomic.AtomicInteger(0)
